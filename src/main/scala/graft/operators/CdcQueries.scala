@@ -459,13 +459,12 @@ object CdcQueries {
 
     // 100×-blob demo (VERDICT r9 #6): ONE multi-MB blob — the corpus
     // concatenated in doc_id order, repeated and truncated to a FIXED
-    // LargeBlobChars characters — through segmentedChunkTable with
-    // spreadSegments=true, so the per-byte scan parallelizes WITHIN the
-    // blob (8 segment tasks shuffled apart; the per-segment task spread is
-    // pinned in ChunkingSpec) and the overlap merge reconciles at a size
-    // where segmentation matters. Contract shape mirrors cdc_segmented_ae
-    // at 8 KiB expected chunks, plus a chunk-count band implied by the AE
-    // length clamps.
+    // LargeBlobChars characters — through segmentedChunkTable, so the
+    // 8-segment overlap merge reconciles at a size where segmentation
+    // matters. One task chunks the one blob: spreadSegments moves whole
+    // blobs, so here it would only add a shuffle. Contract shape mirrors
+    // cdc_segmented_ae at 8 KiB expected chunks, plus a chunk-count band
+    // implied by the AE length clamps.
     "cdc_segmented_large" -> ((s, dir) => {
       val d = docs(s, dir)
       val w = 8192 - 256L // AE repo-variant window at 8 KiB expected
@@ -476,7 +475,7 @@ object CdcQueries {
           expr(s"substr(repeat(t0, CAST(ceil($LargeBlobChars / (length(t0) * 1.0)) AS INT)), " +
             s"1, $LargeBlobChars)").as("blob"))
       val chunks = Chunking.segmentedChunkTable(
-        blob, "blob_id", "blob", "ae", 8192, segments = 8, spreadSegments = true)
+        blob, "blob_id", "blob", "ae", 8192, segments = 8)
         .select(col("id").as("blob_id"), col("chunk_idx"),
           col("offset").cast("long").as("offset"), col("length").cast("long").as("length"))
       val runBefore = Window.partitionBy(col("blob_id")).orderBy(col("chunk_idx"))

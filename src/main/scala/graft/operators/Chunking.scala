@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{AeChunker, RabinChunker}
 import graft.operators.Portable.round
 
 /** Spark lift of the CDC chunkers: blob/text columns → a distributed chunk
@@ -22,9 +21,12 @@ import graft.operators.Portable.round
   *  - Chunk identity is `xxhash64` (deterministic) — a documented deviation
   *    from the reference's process-seeded SipHash (`ae.rs:76-78`), required for
   *    reproducible results (SURVEY.md §7.4).
-  *  - For blobs far larger than a task (multi-GB), [[segmentedChunkTable]]
-  *    explodes each blob into overlapped byte ranges first (strategy A of
-  *    SURVEY.md §2.3), so the per-byte scan parallelizes *within* a blob.
+  *  - [[segmentedChunkTable]] (strategy A of SURVEY.md §2.3) has the same
+  *    shape through the native `cdc_segmented_chunks` Generator
+  *    ([[graft.plans.CdcSegmentedChunks]]), which scans a blob's overlapped
+  *    segments and merges their cuts in one call. Parallelism is across
+  *    blobs: its spread option moves whole blobs between tasks, never the
+  *    segments of one blob.
   */
 object Chunking {
 
@@ -45,12 +47,8 @@ object Chunking {
       expectedSize: Int,
       seed: Long = 0L): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    val payload: Column =
-      if (df.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
-        encode(col(payloadCol), "UTF-8")
-      else col(payloadCol)
-    df.select(col(idCol).as("id"),
-        call_function("cdc_chunks", payload, lit(algo), lit(expectedSize), lit(seed)))
+    df.select(col(idCol).as("id"), call_function("cdc_chunks",
+        payloadBytes(df, payloadCol), lit(algo), lit(expectedSize), lit(seed)))
       .withColumn("hash", xxhash64(col("chunk")))
   }
 
@@ -97,22 +95,30 @@ object Chunking {
         round(col("unique_bytes") / col("total_bytes"), 6).as("dedup_coeff"),
         round(col("total_bytes") / col("distinct_chunks"), 2).as("avg_chunk_size"))
 
-  /** Scale path for huge blobs (SURVEY.md §7.4): explode each blob into
-    * `segments` byte ranges, run the batch boundary scan (with its built-in
-    * `window` lookback) per range — this is the distributable step — then merge
-    * candidate cuts per blob with the reference's min-distance filter
-    * (`ae.rs:72-74`). The merge is a narrow per-blob pass over a few hundred
-    * offsets (KBs), done in `flatMap` after a per-blob grouping; the heavy
-    * byte-scan work is spread across `segments × blobs` tasks.
+  /** Strategy A of SURVEY.md §7.4, the reference's `parallel_chunking`:
+    * each blob is split into `segments` byte ranges, each range is scanned
+    * with the chunker's `window` lookback, and the candidate cuts are merged
+    * with the reference's min-distance filter (`ae.rs:72-74`) — one
+    * [[graft.core.ParallelChunking.overlapMergedBoundaries]] call per blob
+    * inside the `cdc_segmented_chunks` Generator. The plan is
+    * [[chunkTable]]'s: scan → generator → `xxhash64`, with the same
+    * output columns.
     *
     * Supports the two algorithms the reference gives batch forms for:
-    * "ae" (`ae.rs:31-53`) and "rabin" (`rabin.rs:61-90`).
+    * "ae" (`ae.rs:31-53`) and "rabin" (`rabin.rs:61-90`); any other algo
+    * fails when the frame is analysed.
     *
-    * Scale note: here each (blob, segment) row carries the whole payload, which
-    * is the in-row analogue of the reference cloning the input per thread
-    * (`rabin.rs:99`). On a real cluster with multi-GB objects the same two-stage
-    * shape applies, but stage 1 should read *byte ranges* straight from storage
-    * (e.g. binaryFile offsets / ranged GETs) instead of carrying blob rows.
+    * `spreadSegments`: a few huge blobs read into ONE input partition would
+    * otherwise all be chunked by one task. `true` hash-repartitions the blob
+    * rows on id, so each payload ships once and the blobs spread over the
+    * shuffle partitions; the segments of one blob still run in one task. Leave
+    * it false for many-blob corpora, where the input partitions already
+    * spread the work and the extra payload shuffle is pure cost.
+    *
+    * Scale note: one task holds a whole blob, as the reference holds the
+    * whole input in memory (`rabin.rs:99`). For objects larger than a task
+    * can hold, read byte ranges straight from storage (binaryFile offsets,
+    * ranged GETs) and merge cuts per object instead of carrying blob rows.
     */
   def segmentedChunkTable(
       df: DataFrame,
@@ -124,94 +130,25 @@ object Chunking {
       segments: Int = 4,
       spreadSegments: Boolean = false): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
-    val window = algo match {
-      case "ae" => AeChunker(expectedSize).window
-      case "rabin" => RabinChunker(expectedSize, seed.toInt).windowSize
-      case other => throw new IllegalArgumentException(s"no batch bounds form for algo: $other")
-    }
-    val payload: Column =
-      if (df.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
-        encode(col(payloadCol), "UTF-8")
-      else col(payloadCol)
-
-    val candidates =
-      segmentCandidates(df, idCol, payload, algo, expectedSize, seed, segments, spreadSegments)
-
-    // Stage 2 (narrow): per-blob ordered merge with the min-distance filter
-    // (`ae.rs:72-74`) over a few hundred offsets — sort_array on (seg, cuts)
-    // structs orders segments, then pure higher-order functions walk the
-    // flattened cut list once (VERDICT r9 #3: no ScalaUDF in the plan). The
-    // fold keeps cut `e` iff `e - last_kept >= window`; chunk i then spans
-    // (prev_kept + 1, kept[i] - prev_kept), with prev_kept = -1 for i = 0 —
-    // exactly the old merge UDF's walk.
-    val merged = candidates
-      .groupBy(col("id"))
-      .agg(sort_array(collect_list(struct(col("seg"), col("cuts")))).as("segs"))
-      .select(col("id"), flatten(col("segs").getField("cuts")).as("cuts"))
-      .select(col("id"), expr(
-        s"""aggregate(cuts, named_struct('last', -1, 'kept', CAST(array() AS ARRAY<INT>)),
-           |  (acc, e) -> IF(e - acc.last >= $window,
-           |    named_struct('last', e, 'kept', array_append(acc.kept, e)),
-           |    acc)).kept""".stripMargin).as("kept"))
-      .select(col("id"), explode(expr(
-        """transform(kept, (e, i) -> named_struct(
-          |  'chunk_idx', i,
-          |  'offset', IF(i = 0, -1, element_at(kept, i)) + 1,
-          |  'length', e - IF(i = 0, -1, element_at(kept, i))))""".stripMargin)).as("b"))
-      .select(col("id"), col("b.chunk_idx").as("chunk_idx"),
-        col("b.offset").as("offset"), col("b.length").as("length"))
-
-    merged
-      .join(df.select(col(idCol).as("id"), payload.as("payload")), "id")
-      .select(
-        col("id"),
-        col("chunk_idx"),
-        col("offset"),
-        col("length"),
-        substring(col("payload"), col("offset") + lit(1), col("length")).as("chunk"))
-      .withColumn("hash", xxhash64(col("chunk")))
-  }
-
-  /** Stage 1 of strategy A: per (blob, segment) candidate cut offsets
-    * through the native `cdc_segment_bounds` expression (the per-byte
-    * scan). The id column keeps its ORIGINAL type throughout — a silent
-    * cast("long") here turned non-numeric ids (e.g. binaryFile paths) into
-    * null and collapsed every blob into one merge group (ADVICE r1).
-    *
-    * `spread`: exploded segment rows inherit the parent row's partition, so
-    * a corpus of a FEW huge blobs would scan all segments of a blob in one
-    * task — no within-blob parallelism. `spread = true` hash-repartitions
-    * on (id, seg), shipping the payload once per segment (the distributed
-    * analogue of the reference cloning the input per thread,
-    * `rabin.rs:99`), so the per-byte scans fan across the cluster. Leave it
-    * false for many-blob corpora, where cross-blob parallelism already
-    * saturates and the extra payload shuffle is pure cost.
-    */
-  private[operators] def segmentCandidates(
-      df: DataFrame,
-      idCol: String,
-      payload: Column,
-      algo: String,
-      expectedSize: Int,
-      seed: Long,
-      segments: Int,
-      spread: Boolean): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
-    val exploded = df
-      .select(col(idCol).as("id"), payload.as("payload"))
-      .select(col("id"), col("payload"), explode(sequence(lit(0), lit(segments - 1))).as("seg"))
+    val blobs = df.select(col(idCol).as("id"), payloadBytes(df, payloadCol).as("payload"))
     // Explicit partition count: with a bare repartition(cols), AQE sees a
     // few multi-MB rows as "small" by row stats and coalesces the exchange
     // back to one partition — exactly the serialization spread exists to
     // avoid. A user-specified count is exempt from AQE coalescing.
-    val placed = if (spread) {
-      val n = df.sparkSession.sessionState.conf.numShufflePartitions
-      exploded.repartition(n, col("id"), col("seg"))
-    } else exploded
-    placed.select(col("id"), col("seg"),
-      call_function("cdc_segment_bounds", col("payload"), lit(algo),
-        lit(expectedSize), lit(seed), col("seg"), lit(segments)).as("cuts"))
+    val placed =
+      if (spreadSegments)
+        blobs.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("id"))
+      else blobs
+    placed.select(col("id"), call_function("cdc_segmented_chunks", col("payload"),
+        lit(algo), lit(expectedSize), lit(seed), lit(segments)))
+      .withColumn("hash", xxhash64(col("chunk")))
   }
+
+  /** A payload column as bytes: BINARY as is, STRING encoded UTF-8. */
+  private def payloadBytes(df: DataFrame, payloadCol: String): Column =
+    if (df.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
+      encode(col(payloadCol), "UTF-8")
+    else col(payloadCol)
 
   /** JVM twin of the `xxhash64` Column expression (seed 42) for chunk
     * identities computed inside fused loops/UDFs.
@@ -249,15 +186,11 @@ object Chunking {
       parts: Int = 4): DataFrame = {
     graft.plans.GraftExtensions.register(df.sparkSession)
     val nParts = parts
-    val payload: Column =
-      if (df.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
-        encode(col(payloadCol), "UTF-8")
-      else col(payloadCol)
     // Degenerate payloads (< one byte per slice) would produce an empty
     // slice whose cs.last/cs.head has no element — skip them instead of
     // failing the whole job (ADVICE r2); the reference's slicing carries the
     // same precondition implicitly.
-    val base = df.select(col(idCol).as("id"), payload.as("payload"))
+    val base = df.select(col(idCol).as("id"), payloadBytes(df, payloadCol).as("payload"))
       .filter(length(col("payload")) >= nParts)
 
     // Stage 1: per (blob, slice) → locally-distinct interior (hash, len)

@@ -33,24 +33,11 @@ case class CdcChunks(payload: Expression, algo: Expression, expectedSize: Expres
 
   override def children: Seq[Expression] = Seq(payload, algo, expectedSize, seed)
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!Seq(algo, expectedSize, seed).forall(_.foldable))
-      TypeCheckResult.TypeCheckFailure("cdc_chunks(payload, algo, expected_size, seed): config arguments must be constants")
-    else if (payload.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(s"cdc_chunks payload must be BINARY, got ${payload.dataType.simpleString}")
-    else if (algo.dataType != StringType)
-      TypeCheckResult.TypeCheckFailure("cdc_chunks algo must be STRING")
-    else if (!Seq(expectedSize.dataType, seed.dataType).forall(t =>
-        t == IntegerType || t == LongType || t == ShortType || t == ByteType))
-      TypeCheckResult.TypeCheckFailure("cdc_chunks expected_size and seed must be integral")
-    else TypeCheckResult.TypeCheckSuccess
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    CdcChunks.checkArgs("cdc_chunks(payload, algo, expected_size, seed)",
+      payload, algo, Seq(expectedSize, seed))
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("chunk_idx", IntegerType, nullable = false),
-    StructField("offset", IntegerType, nullable = false),
-    StructField("length", IntegerType, nullable = false),
-    StructField("chunk", BinaryType, nullable = false)))
+  override def elementSchema: StructType = CdcChunks.elementSchema
 
   @transient private lazy val chunker: Chunker = Chunker(
     algo.eval().toString,
@@ -59,15 +46,57 @@ case class CdcChunks(payload: Expression, algo: Expression, expectedSize: Expres
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val bytes = payload.eval(input).asInstanceOf[Array[Byte]]
-    if (bytes == null || bytes.isEmpty) Iterator.empty
-    else chunker.chunks(bytes).iterator.zipWithIndex.map { case ((off, len), i) =>
-      InternalRow(i, off, len, java.util.Arrays.copyOfRange(bytes, off, off + len))
-    }
+    if (bytes == null) Iterator.empty else CdcChunks.rows(bytes, chunker.boundaries(bytes))
   }
 
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): CdcChunks =
     copy(payload = newChildren(0), algo = newChildren(1),
       expectedSize = newChildren(2), seed = newChildren(3))
+}
+
+object CdcChunks {
+
+  /** Row shape of every chunk-emitting CDC generator. */
+  val elementSchema: StructType = StructType(Seq(
+    StructField("chunk_idx", IntegerType, nullable = false),
+    StructField("offset", IntegerType, nullable = false),
+    StructField("length", IntegerType, nullable = false),
+    StructField("chunk", BinaryType, nullable = false)))
+
+  /** Analysis-time argument check shared by the CDC generators: `algo` and
+    * `config` are constants, the payload is BINARY, `algo` a STRING, and
+    * `config` plus the per-row `integral` arguments are integral.
+    */
+  private[plans] def checkArgs(signature: String, payload: Expression, algo: Expression,
+      config: Seq[Expression], integral: Seq[Expression] = Nil): TypeCheckResult = {
+    def fail(msg: String) = TypeCheckResult.TypeCheckFailure(s"$signature: $msg")
+    if (!(algo +: config).forall(_.foldable)) fail("config arguments must be constants")
+    else if (payload.dataType != BinaryType)
+      fail(s"payload must be BINARY, got ${payload.dataType.simpleString}")
+    else if (algo.dataType != StringType) fail("algo must be STRING")
+    else if (!(config ++ integral).forall(e => Seq(IntegerType, LongType, ShortType, ByteType).contains(e.dataType)))
+      fail("numeric arguments must be integral")
+    else TypeCheckResult.TypeCheckSuccess
+  }
+
+  /** One `(chunk_idx, offset, length, chunk)` row per exclusive chunk end
+    * offset in `ends`, chunk i spanning `[ends(i - 1), ends(i))` with
+    * `ends(-1) = 0`. Bytes after the last end (a strategy-A tail that failed
+    * the min-distance merge) are not emitted.
+    */
+  private[plans] def rows(bytes: Array[Byte], ends: Array[Int]): Iterator[InternalRow] =
+    new Iterator[InternalRow] {
+      private var i = 0
+      private var start = 0
+      override def hasNext: Boolean = i < ends.length
+      override def next(): InternalRow = {
+        val end = ends(i)
+        val row = InternalRow(i, start, end - start, java.util.Arrays.copyOfRange(bytes, start, end))
+        i += 1
+        start = end
+        row
+      }
+    }
 }
 
 /** Session extension: `spark.sql.extensions=graft.plans.GraftExtensions`
@@ -77,7 +106,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectFunction(GraftExtensions.cdcChunksDescriptor)
     ext.injectFunction(GraftExtensions.vecDotDescriptor)
-    ext.injectFunction(GraftExtensions.cdcSegmentBoundsDescriptor)
+    ext.injectFunction(GraftExtensions.cdcSegmentedChunksDescriptor)
     ext.injectFunction(GraftExtensions.cdcSliceChunksDescriptor)
     ext.injectFunction(GraftExtensions.bloomContainsDescriptor)
     ext.injectFunction(GraftExtensions.minhashBandsDescriptor)
@@ -102,12 +131,12 @@ object GraftExtensions {
       VecDot(args(0), args(1))
     })
 
-  private[plans] val cdcSegmentBoundsDescriptor = (
-    FunctionIdentifier("cdc_segment_bounds"),
-    new ExpressionInfo(classOf[CdcSegmentBounds].getName, "cdc_segment_bounds"),
+  private[plans] val cdcSegmentedChunksDescriptor = (
+    FunctionIdentifier("cdc_segmented_chunks"),
+    new ExpressionInfo(classOf[CdcSegmentedChunks].getName, "cdc_segmented_chunks"),
     (args: Seq[Expression]) => {
-      require(args.length == 6, "cdc_segment_bounds(payload, algo, expected_size, seed, part, n_parts)")
-      CdcSegmentBounds(args(0), args(1), args(2), args(3), args(4), args(5))
+      require(args.length == 5, "cdc_segmented_chunks(payload, algo, expected_size, seed, n_parts)")
+      CdcSegmentedChunks(args(0), args(1), args(2), args(3), args(4))
     })
 
   private[plans] val cdcSliceChunksDescriptor = (
@@ -145,7 +174,7 @@ object GraftExtensions {
   /** Imperative registration for an existing session. */
   def register(spark: SparkSession): Unit =
     Seq(cdcChunksDescriptor, vecDotDescriptor,
-      cdcSegmentBoundsDescriptor, cdcSliceChunksDescriptor,
+      cdcSegmentedChunksDescriptor, cdcSliceChunksDescriptor,
       bloomContainsDescriptor, minhashBandsDescriptor,
       vecLshSigsDescriptor).foreach {
       case (id, info, builder) =>

@@ -83,20 +83,39 @@ class ChunkingSpec extends AnyFunSuite {
 
   test("segmentedChunkTable (strategy A) matches the core overlap-merge ground truth") {
     import spark.implicits._
-    val data = rndBytes(40000, 21)
-    val docs = Seq((7L, data)).toDF("doc_id", "content")
-    for (algo <- Seq("ae", "rabin")) {
-      val got = Chunking.segmentedChunkTable(docs, "doc_id", "content", algo, 1024, 5L, segments = 4)
-        .orderBy("chunk_idx").select("offset", "length").as[(Int, Int)].collect().toSeq
-
-      val (window, bounds): (Int, (Array[Byte], Int, Int) => Array[Int]) = algo match {
-        case "ae"    => val c = AeChunker(1024); (c.window, c.boundsInRange)
-        case "rabin" => val c = RabinChunker(1024, 5); (c.windowSize, c.boundsInRange)
+    def oracle(algo: String, segments: Int): Array[Byte] => Array[Int] = algo match {
+      case "ae" => val c = AeChunker(1024); ParallelChunking.overlapMergedBoundaries(_, segments, c.boundsInRange, c.window)
+      case "rabin" => val c = RabinChunker(1024, 5); ParallelChunking.overlapMergedBoundaries(_, segments, c.boundsInRange, c.windowSize)
+    }
+    // (offset, length, bytes) per chunk of one blob, in chunk_idx order
+    def spans(rows: Seq[(Int, Int, Int, Array[Byte])]): Seq[(Int, Int, Seq[Byte])] =
+      rows.sortBy(_._1).map(r => (r._2, r._3, r._4.toSeq))
+    def expected(data: Array[Byte], ends: Array[Int]): Seq[(Int, Int, Seq[Byte])] =
+      ends.indices.map { i =>
+        val off = if (i == 0) 0 else ends(i - 1)
+        (off, ends(i) - off, data.slice(off, ends(i)).toSeq)
       }
-      val ends = ParallelChunking.overlapMergedBoundaries(data, 4, bounds, window)
-      var last = 0
-      val want = ends.map { e => val r = (last, e - last); last = e; r }.toSeq
-      assert(got == want, algo)
+    val text = "gr\u00fc\u00dfe \u2603 chunk " * 3000 // multi-byte UTF-8
+    for (algo <- Seq("ae", "rabin"); segments <- Seq(1, 2, 3, 4, 8); spread <- Seq(false, true)) {
+      val lengths = Seq(0, 1, segments - 1, segments * 5000, 40001, 1 << 20).distinct
+      val blobs = lengths.map(n => (s"blob-$n", rndBytes(n, 21L + n)))
+      val df = (blobs.map { case (id, b) => (id, Option(b)) } :+ (("blob-null", None)))
+        .toDF("path", "content")
+      val got = Chunking.segmentedChunkTable(df, "path", "content", algo, 1024, 5L,
+          segments = segments, spreadSegments = spread)
+        .select($"id", $"chunk_idx", $"offset", $"length", $"chunk")
+        .as[(String, Int, Int, Int, Array[Byte])].collect()
+        .groupBy(_._1).view.mapValues(rs => spans(rs.map(r => (r._2, r._3, r._4, r._5)))).toMap
+      val ctx = s"$algo segments=$segments spread=$spread"
+      assert(!got.contains("blob-null"), s"$ctx: a null payload yields no chunks")
+      for ((id, data) <- blobs)
+        assert(got.getOrElse(id, Nil) == expected(data, oracle(algo, segments)(data)), s"$ctx $id")
+
+      val textGot = Chunking.segmentedChunkTable(Seq(("t", text)).toDF("path", "text"),
+          "path", "text", algo, 1024, 5L, segments = segments, spreadSegments = spread)
+        .select($"chunk_idx", $"offset", $"length", $"chunk").as[(Int, Int, Int, Array[Byte])].collect()
+      val utf8 = text.getBytes("UTF-8")
+      assert(spans(textGot.toSeq) == expected(utf8, oracle(algo, segments)(utf8)), s"$ctx string payload")
     }
   }
 
@@ -165,24 +184,23 @@ class ChunkingSpec extends AnyFunSuite {
       s"segmented ${chunks.length} vs sequential $seqCount")
   }
 
-  test("segmentedChunkTable spreadSegments: one huge blob fans across tasks, cuts unchanged") {
+  test("segmentedChunkTable spreadSegments: large blobs in one input partition land on several tasks, cuts unchanged") {
     import spark.implicits._
     val data = rndBytes(4 << 20, 7) // 4 MiB single blob
     val df = Seq((1L, data)).toDF("doc_id", "content")
 
-    // stage 1 actually spreads: the 8 segment rows of ONE blob land on
-    // multiple shuffle partitions (without spread they share the parent
-    // row's single partition — zero within-blob parallelism)
-    val candidates = Chunking.segmentCandidates(
-      df, "doc_id", $"content", "ae", 8192, 0L, segments = 8, spread = true)
-    val partsUsed = candidates
-      .select(org.apache.spark.sql.functions.spark_partition_id().as("pid"))
-      .distinct().count()
-    assert(partsUsed >= 2, s"8 segments should occupy several tasks, got $partsUsed partition(s)")
-    val unspread = Chunking.segmentCandidates(
-      df, "doc_id", $"content", "ae", 8192, 0L, segments = 8, spread = false)
+    // Four 1 MiB blobs read into ONE input partition: without spread a
+    // single task chunks them all; spread hash-repartitions whole blob rows
+    // on id, so the blobs fan across tasks (each payload ships once).
+    val blobs = (1L to 4L).map(i => (i, rndBytes(1 << 20, 70 + i))).toDF("doc_id", "content")
+      .coalesce(1)
+    def tasks(spreadOn: Boolean) = Chunking.segmentedChunkTable(
+      blobs, "doc_id", "content", "ae", 8192, segments = 8, spreadSegments = spreadOn)
       .select(org.apache.spark.sql.functions.spark_partition_id()).distinct().count()
-    assert(unspread == 1L, s"control: unspread segments of one blob share one partition, got $unspread")
+    val spreadTasks = tasks(spreadOn = true)
+    assert(spreadTasks >= 2, s"4 blobs should occupy several tasks, got $spreadTasks partition(s)")
+    val unspread = tasks(spreadOn = false)
+    assert(unspread == 1L, s"control: unspread blobs of one input partition share one task, got $unspread")
 
     // and the spread path produces byte-identical chunks
     def cuts(spreadOn: Boolean) = Chunking.segmentedChunkTable(

@@ -66,11 +66,11 @@ class PlanQualitySpec extends AnyFunSuite {
     for (q <- Seq("cdc_segmented_ae", "cdc_segmented_rabin", "cdc_edge_rechunk_metrics")) {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)
       assert(!PlanStats.hasScalaUdf(df),
-        s"$q must plan the cdc_segment_bounds/cdc_slice_chunks native path, not a UDF")
+        s"$q must plan the cdc_segmented_chunks/cdc_slice_chunks native path, not a UDF")
     }
     // and the two native entry points actually appear where expected
-    assert(executedPlan("cdc_segmented_ae").contains("cdc_segment_bounds"),
-      "cdc_segmented_ae must scan through CdcSegmentBounds")
+    assert(executedPlan("cdc_segmented_ae").contains("cdc_segmented_chunks"),
+      "cdc_segmented_ae must chunk through the CdcSegmentedChunks generator")
     assert(executedPlan("cdc_edge_rechunk_metrics").contains("cdc_slice_chunks"),
       "cdc_edge_rechunk_metrics must slice through the CdcSliceChunks generator")
   }

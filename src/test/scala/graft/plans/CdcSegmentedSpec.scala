@@ -1,14 +1,14 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.AeChunker
 
-/** Direct coverage of the two segment-parallel native expressions
+/** Direct coverage of the two segment-parallel native generators
   * (ChunkingSpec pins their end-to-end equality to the core ground truth;
   * this spec pins the SQL surface, argument validation, and the emission
-  * contract of each expression in isolation).
+  * contract of each generator in isolation).
   */
 class CdcSegmentedSpec extends AnyFunSuite {
 
@@ -31,20 +31,21 @@ class CdcSegmentedSpec extends AnyFunSuite {
     a
   }
 
-  test("cdc_segment_bounds from SQL equals the core boundsInRange per segment") {
+  test("cdc_segmented_chunks from SQL emits cdc_chunks rows over the core overlap merge") {
     import spark.implicits._
     val data = bytes(100000, 5)
     Seq((1L, data)).toDF("id", "payload").createOrReplaceTempView("seg_v")
     val got = spark.sql(
-      """SELECT seg, cdc_segment_bounds(payload, 'ae', 8192, 0, seg, 4) AS cuts
-        |FROM seg_v LATERAL VIEW explode(sequence(0, 3)) AS seg""".stripMargin)
-      .as[(Int, Array[Int])].collect().sortBy(_._1)
+      """SELECT c.chunk_idx, c.offset, c.length, c.chunk
+        |FROM seg_v LATERAL VIEW cdc_segmented_chunks(payload, 'ae', 8192, 0, 4) c""".stripMargin)
+      .as[(Int, Int, Int, Array[Byte])].collect().sortBy(_._1)
     val c = AeChunker(8192)
-    for ((seg, cuts) <- got) {
-      val left = seg * data.length / 4
-      val right = (seg + 1) * data.length / 4
-      assert(cuts.toSeq == c.boundsInRange(data, left, right).toSeq, s"segment $seg")
-    }
+    val ends = graft.core.ParallelChunking.overlapMergedBoundaries(data, 4, c.boundsInRange, c.window)
+    assert(got.map(_._1).toSeq == ends.indices)
+    assert(got.map(_._2).toSeq == (0 +: ends.init).toSeq)
+    assert(got.map(r => r._2 + r._3).toSeq == ends.toSeq)
+    for ((_, off, len, chunk) <- got)
+      assert(java.util.Arrays.equals(chunk, java.util.Arrays.copyOfRange(data, off, off + len)))
   }
 
   test("cdc_slice_chunks emits locally-distinct interiors plus exactly one edge per slice") {
@@ -80,16 +81,42 @@ class CdcSegmentedSpec extends AnyFunSuite {
     }
   }
 
-  test("both expressions reject non-constant config and non-binary payload") {
+  test("cdc_slice_chunks rejects non-constant config and non-binary payload") {
     import spark.implicits._
     Seq(("x", 1)).toDF("s", "n").createOrReplaceTempView("segbad_v")
-    for (fn <- Seq("cdc_segment_bounds", "cdc_slice_chunks")) {
-      val e1 = intercept[Exception](spark.sql(
-        s"SELECT $fn(encode(s,'utf-8'), 'ae', 8192, 0, 0, n) FROM segbad_v").collect())
-      assert(e1.getMessage.toLowerCase.contains("constant"), fn)
-      val e2 = intercept[Exception](spark.sql(
-        s"SELECT $fn(s, 'ae', 8192, 0, 0, 4) FROM segbad_v").collect())
-      assert(e2.getMessage.toLowerCase.contains("binary"), fn)
-    }
+    val fn = "cdc_slice_chunks"
+    val e1 = intercept[Exception](spark.sql(
+      s"SELECT $fn(encode(s,'utf-8'), 'ae', 8192, 0, 0, n) FROM segbad_v").collect())
+    assert(e1.getMessage.toLowerCase.contains("constant"), fn)
+    val e2 = intercept[Exception](spark.sql(
+      s"SELECT $fn(s, 'ae', 8192, 0, 0, 4) FROM segbad_v").collect())
+    assert(e2.getMessage.toLowerCase.contains("binary"), fn)
+  }
+
+  // cdc_segmented_chunks config errors surface from checkInputDataTypes when
+  // the query is analysed: spark.sql analyses eagerly, so no action is run.
+  private def analysisError(args: String): String = {
+    import spark.implicits._
+    Seq(("x", 1)).toDF("s", "n").createOrReplaceTempView("segcfg_v")
+    intercept[AnalysisException](spark.sql(
+      s"SELECT c.* FROM segcfg_v LATERAL VIEW cdc_segmented_chunks($args) c")).getMessage
+  }
+
+  test("cdc_segmented_chunks rejects a non-constant n_parts at analysis") {
+    assert(analysisError("encode(s, 'utf-8'), 'ae', 8192, 0, n").contains("must be constants"))
+  }
+
+  test("cdc_segmented_chunks rejects n_parts <= 0 at analysis") {
+    for (n <- Seq(0, -2))
+      assert(analysisError(s"encode(s, 'utf-8'), 'ae', 8192, 0, $n").contains("n_parts must be > 0"))
+  }
+
+  test("cdc_segmented_chunks rejects an algo without a batch bounds form at analysis") {
+    for (algo <- Seq("fastcdc", "fixed", "AE"))
+      assert(analysisError(s"encode(s, 'utf-8'), '$algo', 8192, 0, 4").contains("must be 'ae' or 'rabin'"))
+  }
+
+  test("cdc_segmented_chunks rejects a non-binary payload at analysis") {
+    assert(analysisError("s, 'ae', 8192, 0, 4").contains("payload must be BINARY"))
   }
 }
