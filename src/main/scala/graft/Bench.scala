@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
@@ -18,33 +17,9 @@ object Bench {
     // Driver contract: local[32]. Round 1 defaulted this to 4 and ran the
     // whole bench on 4 threads — the single biggest perf lever on this box.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // AQE on, matching GraftSession's recommended scale config: coalesces
-    // the 32-way shuffles most of these sub-second queries don't need
-    // (biggest effect on iterative/multi-stage plans) and re-plans skew.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE for CACHED plans too (r18, guide §2.4): default-false only for
-      // compatibility; without it every .cache()/.persist() materializes at
-      // the full pre-AQE shuffle width (32 here) and every downstream read
-      // of the cache scans that many partitions — measured 375→30 tasks on
-      // text_bpe_apply (1.81→1.31 s) and 426→234 on dedup_lsh_recall
-      // (2.80→2.21 s). Partitioning-only: results are unaffected.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // Manifest-addressed reads pass explicit LEAF-FILE paths (already
-      // resolved from snapshot metadata, never a directory tree). The
-      // default threshold (32) schedules a distributed listing job to stat
-      // them — ~0.4 s of pure scheduling per read at any scale, since each
-      // path is one getFileStatus. Driver-side stat up to 512 such paths
-      // is strictly cheaper on a cluster too (Iceberg/Delta readers never
-      // run listing jobs for manifest-resolved files); real directory
-      // discovery above 512 paths still parallelizes. Guide §6/§7.3.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // GraftSession's scale config: AQE coalesces the 32-way shuffles most
+    // of these sub-second queries don't need and re-plans skew.
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     def r3(v: Double): Double = math.round(v * 1000) / 1000.0
     // Chunker cores are measured BEFORE the query sweep: after ~120 queries

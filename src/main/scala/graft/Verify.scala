@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -15,20 +14,7 @@ object Verify {
     def keep(name: String): Boolean =
       nameFilter.forall(_.exists(name.contains))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE for cached plans (see Bench.scala): partitioning-only, results
-      // unaffected — keeps cache reads from scanning pre-AQE shuffle width.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // explicit-leaf-file reads skip the distributed listing job (see
-      // the Bench.scala comment for the full rationale)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(e => keep(e._1)).foreach { case (name, fn) =>

@@ -2337,11 +2337,12 @@ object PipelineOps {
     // month-window report over the chain tip, PLANNED through the
     // manifest-list layer — the list's partition-range stats prune
     // whole manifest groups before any file is listed, so plan I/O is
-    // |groups| + |matching entries|, flat in total file count (priced by
-    // graft.tools.TimeManifestList; see BASELINE.md). The serve reads
-    // exactly the planned files; the oracle recomputes the window from
-    // raw, so a group pruned wrongly (lost months), a stale list row, or
-    // an over-wide plan leaking a neighboring month all hash-mismatch.
+    // |groups| + |matching entries|, flat in total file count (priced in
+    // BASELINE.md, "Round 15: two-level manifest planning priced"). The
+    // serve reads exactly the planned files; the oracle recomputes the
+    // window from raw, so a group pruned wrongly (lost months), a stale
+    // list row, or an over-wide plan leaking a neighboring month all
+    // hash-mismatch.
     ("pipeline_manifest_list", (s, d) => {
       import s.implicits._
       val (files, _, _) = planViaManifestList(s, d, "1995-01", "1995-12")
@@ -5274,8 +5275,9 @@ object PipelineOps {
     * any probe, total file count). Metadata-scale — one row per data file
     * — and PRICED, not hand-waved (VERDICT r12 #8): on a synthetic
     * replica of the sf0.1 sidecars the whole planning step (index read +
-    * bloom probe + matched-name collect, `graft.operators.TimeIndexPlan`)
-    * measures 0.55 s at 10 000 files and 1.2 s at 100 000 files — linear
+    * bloom probe + matched-name collect; BASELINE.md, "Round-13:
+    * driver-side file-list planning priced") measures 0.55 s at 10 000
+    * files and 1.2 s at 100 000 files — linear
     * in file count with a tiny constant, the same driver-side planning
     * I/O a Delta log replay or Iceberg manifest scan pays. A table would
     * need millions of files before this collect dominates, at which point
@@ -5290,7 +5292,7 @@ object PipelineOps {
 
   /** [[matchedFilesInIndex]] without the total-file-count job (r18, guide
     * §1.2 "don't compute things you throw away"): every QUERY-path caller
-    * discarded the count — only diagnostics tests and TimeIndexPlan read it
+    * discarded the count — only the diagnostics and index-replica tests read it
     * — yet each call paid one extra index-scan job (~25 ms and one full
     * index read at any scale) for the number.
     */
@@ -6298,8 +6300,9 @@ object PipelineOps {
     // month it touches (32 tasks × ~84 months ⇒ a merge wave ballooned
     // the 100× manifest 367 → 5 701 files, and every manifest-addressed
     // read of that snapshot paid ~13-19 s of per-file open overhead —
-    // measured, graft.operators.TimeBranch); with it each month lands as
-    // ceil(monthRows/target) files (ONE at every rehearsed SF), capped
+    // measured, BASELINE.md "Mutation-writer file-size targeting"); with
+    // it each month lands as ceil(monthRows/target) files (ONE at every
+    // rehearsed SF), capped
     // per file by maxRecordsPerFile so a real giant month splits instead
     // of becoming one giant file. One extra shuffle + count of
     // |matched| + |batch| rows — the mutation's own working set, never

@@ -1,5 +1,7 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -103,81 +105,41 @@ object CdcChunks {
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cdcChunksDescriptor)
-    ext.injectFunction(GraftExtensions.vecDotDescriptor)
-    ext.injectFunction(GraftExtensions.cdcSegmentedChunksDescriptor)
-    ext.injectFunction(GraftExtensions.cdcSliceChunksDescriptor)
-    ext.injectFunction(GraftExtensions.bloomContainsDescriptor)
-    ext.injectFunction(GraftExtensions.minhashBandsDescriptor)
-    ext.injectFunction(GraftExtensions.vecLshSigsDescriptor)
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach(ext.injectFunction)
 }
 
 object GraftExtensions {
-  private[plans] val cdcChunksDescriptor = (
-    FunctionIdentifier("cdc_chunks"),
-    new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
+  private type Descriptor =
+    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  private def fn[E <: Expression](name: String, params: String*)(
+      build: Seq[Expression] => E)(implicit cls: ClassTag[E]): Descriptor = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.runtimeClass.getName, name),
     (args: Seq[Expression]) => {
-      require(args.length == 4, "cdc_chunks(payload, algo, expected_size, seed)")
-      CdcChunks(args(0), args(1), args(2), args(3))
+      require(args.length == params.length, s"$name(${params.mkString(", ")})")
+      build(args)
     })
 
-  private[plans] val vecDotDescriptor = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VecDot].getName, "vec_dot"),
-    (args: Seq[Expression]) => {
-      require(args.length == 2, "vec_dot(array<double>, array<double>)")
-      VecDot(args(0), args(1))
-    })
-
-  private[plans] val cdcSegmentedChunksDescriptor = (
-    FunctionIdentifier("cdc_segmented_chunks"),
-    new ExpressionInfo(classOf[CdcSegmentedChunks].getName, "cdc_segmented_chunks"),
-    (args: Seq[Expression]) => {
-      require(args.length == 5, "cdc_segmented_chunks(payload, algo, expected_size, seed, n_parts)")
-      CdcSegmentedChunks(args(0), args(1), args(2), args(3), args(4))
-    })
-
-  private[plans] val cdcSliceChunksDescriptor = (
-    FunctionIdentifier("cdc_slice_chunks"),
-    new ExpressionInfo(classOf[CdcSliceChunks].getName, "cdc_slice_chunks"),
-    (args: Seq[Expression]) => {
-      require(args.length == 6, "cdc_slice_chunks(payload, algo, expected_size, seed, part, n_parts)")
-      CdcSliceChunks(args(0), args(1), args(2), args(3), args(4), args(5))
-    })
-
-  private[plans] val bloomContainsDescriptor = (
-    FunctionIdentifier("bloom_contains"),
-    new ExpressionInfo(classOf[BloomContains].getName, "bloom_contains"),
-    (args: Seq[Expression]) => {
-      require(args.length == 3, "bloom_contains(bloom, hash, k)")
-      BloomContains(args(0), args(1), args(2))
-    })
-
-  private[plans] val minhashBandsDescriptor = (
-    FunctionIdentifier("minhash_bands"),
-    new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands"),
-    (args: Seq[Expression]) => {
-      require(args.length == 1, "minhash_bands(text)")
-      MinhashBands(args(0))
-    })
-
-  private[plans] val vecLshSigsDescriptor = (
-    FunctionIdentifier("vec_lsh_sigs"),
-    new ExpressionInfo(classOf[VecLshSigs].getName, "vec_lsh_sigs"),
-    (args: Seq[Expression]) => {
-      require(args.length == 1, "vec_lsh_sigs(emb)")
-      VecLshSigs(args(0))
-    })
+  /** Every SQL function of the engine. Both registration paths — the
+    * session extension and [[register]] — read this one list.
+    */
+  private[plans] val functions: Seq[Descriptor] = Seq(
+    fn("cdc_chunks", "payload", "algo", "expected_size", "seed")(
+      a => CdcChunks(a(0), a(1), a(2), a(3))),
+    fn("vec_dot", "array<double>", "array<double>")(a => VecDot(a(0), a(1))),
+    fn("cdc_segmented_chunks", "payload", "algo", "expected_size", "seed", "n_parts")(
+      a => CdcSegmentedChunks(a(0), a(1), a(2), a(3), a(4))),
+    fn("cdc_slice_chunks", "payload", "algo", "expected_size", "seed", "part", "n_parts")(
+      a => CdcSliceChunks(a(0), a(1), a(2), a(3), a(4), a(5))),
+    fn("bloom_contains", "bloom", "hash", "k")(a => BloomContains(a(0), a(1), a(2))),
+    fn("minhash_bands", "text")(a => MinhashBands(a(0))),
+    fn("vec_lsh_sigs", "emb")(a => VecLshSigs(a(0))))
 
   /** Imperative registration for an existing session. */
   def register(spark: SparkSession): Unit =
-    Seq(cdcChunksDescriptor, vecDotDescriptor,
-      cdcSegmentedChunksDescriptor, cdcSliceChunksDescriptor,
-      bloomContainsDescriptor, minhashBandsDescriptor,
-      vecLshSigsDescriptor).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
 }

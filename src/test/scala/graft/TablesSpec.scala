@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,15 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * `Tables.events` surfaces the SAME session-tz TimestampType column with
   * the SAME wall-clock instants.
   */
-class TablesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("TablesSpec")
-    .getOrCreate()
+class TablesSpec extends AnyFunSuite with SharedSpark {
 
   // one whole-microsecond instant, expressed per layout
   private val usInstants = Seq(1700000000000000L, 1700000123456789L, 0L)

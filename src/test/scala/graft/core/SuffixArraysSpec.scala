@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the k-gram group enumeration against a naive position map — over random
   * strings, repeat-heavy strings, and adversarial small cases.
   */
-class SuffixArraysSpec extends AnyFunSuite {
+class SuffixArraysSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def naiveSa(s: String): Array[Int] =
     s.indices.toArray.sortBy(s.substring(_))
@@ -58,13 +58,6 @@ class SuffixArraysSpec extends AnyFunSuite {
   }
 
   test("exact-substring query certifies full duplication for planted copies and tails") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("SuffixArraysSpec")
-      .getOrCreate()
     import spark.implicits._
     val rows = graft.operators.Dedup.queries("dedup_exact_substrings")(
         spark, "/root/testdata/sf0.001")

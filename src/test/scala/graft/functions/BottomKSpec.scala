@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * partitioning (merge-order independence) and through the lazy-compaction
   * path (inputs well past 4k trigger in-buffer truncation).
   */
-class BottomKSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("BottomKSpec")
-    .getOrCreate()
+class BottomKSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("equals sort+limit for any partitioning, with compaction exercised") {
     import spark.implicits._

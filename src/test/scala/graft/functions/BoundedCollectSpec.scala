@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,14 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * to element order, for any partitioning (merge-order independence) —
   * including groups landing precisely ON the cap and one past it.
   */
-class BoundedCollectSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("BoundedCollectSpec")
-    .getOrCreate()
+class BoundedCollectSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("matches collect_list + size filter as a multiset, any partitioning") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Portable
@@ -10,14 +9,7 @@ import graft.operators.Portable
   * undercount, and the total overcount mass per row equals N (every item
   * lands in exactly one bucket per row).
   */
-class CountMinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("CountMinSpec")
-    .getOrCreate()
+class CountMinSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("sketch is partition-invariant, never undercounts, rows each sum to N") {
     import spark.implicits._

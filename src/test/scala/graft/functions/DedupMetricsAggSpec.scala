@@ -1,19 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Chunking
 
-class DedupMetricsAggSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("DedupMetricsAggSpec")
-    .getOrCreate()
+class DedupMetricsAggSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("single-pass typed aggregator equals the two-step relational metrics") {
     import spark.implicits._

@@ -1,20 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The Misra-Gries mergeable-summary guarantees, checked on skewed seeded
   * streams under real distributed partial/final aggregation (8 partitions
   * force nontrivial merge trees).
   */
-class MisraGriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("MisraGriesSpec")
-    .getOrCreate()
+class MisraGriesSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("estimates never overcount and undercount by at most N/(k+1), any merge order") {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Quality contracts for the approximate operators: the DuckDB oracles pin
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * invariants of the hashing schemes (exact duplicates can never be missed
   * by MinHash-LSH or SimHash, because identical inputs hash identically).
   */
-class AnnQualitySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("AnnQualitySpec")
-    .getOrCreate()
+class AnnQualitySpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 

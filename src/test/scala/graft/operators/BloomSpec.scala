@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,15 +12,7 @@ import graft.plans.BloomUtil
   * point of the prefilter — that it passes every truly contaminated doc
   * while pruning most of the corpus before the exact join.
   */
-class BloomSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("BloomSpec")
-    .getOrCreate()
+class BloomSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val M = 1 << 14
   private val K = 4
@@ -83,5 +75,31 @@ class BloomSpec extends AnyFunSuite {
       .select(col("doc_id")).as[Long].collect().toSet
     assert(viaBloom == viaExact,
       s"bloom-prefiltered and direct decontamination diverge: ${viaBloom.diff(viaExact)} / ${viaExact.diff(viaBloom)}")
+  }
+
+  // The counting form of the sidecar probe prices driver-side planning at
+  // file counts far beyond the driver SFs (BASELINE.md, "Round-13:
+  // driver-side file-list planning priced"): the sf0.001 index replicated
+  // N-fold under distinct paths must report exactly N times the real file
+  // total and N times the real matched files, each replica of a matched
+  // file matched.
+  test("bloom index replicated N-fold plans exactly N times the files and matches") {
+    import spark.implicits._
+    val d = "/root/testdata/sf0.001"
+    val reps = 3
+    val (realMatched, realTotal) = PipelineOps.bloomIdxMatchedFiles(spark, d)
+    assert(realMatched.nonEmpty && realMatched.length < realTotal)
+    val realIdx = PipelineOps.bloomIdxDataDir(spark, d).stripSuffix("/data") + "/index"
+    val synth = graft.Fixtures.tempDir("graft_synthidx").resolve("index").toString
+    spark.read.parquet(realIdx)
+      .crossJoin(spark.range(reps).select($"id".as("rep")))
+      .withColumn("file", concat($"file", lit("#rep"), $"rep"))
+      .drop("rep")
+      .write.parquet(synth)
+    val (matched, total) = PipelineOps.matchedFilesInIndex(spark, synth,
+      PipelineOps.BloomIdxKeys.toDF("k"))
+    assert(total == reps * realTotal)
+    assert(matched.length == reps * realMatched.length)
+    assert(matched.toSet == (for (f <- realMatched; r <- 0 until reps) yield s"$f#rep$r").toSet)
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,15 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * i+2, so the NEXT possible match starts at pair (i+3, i+4) — e.g.
   * [e r e r e r] → [er, e, r, er], not canonical BPE's [er, er, er].
   */
-class BpeLearnSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("BpeLearnSpec")
-    .getOrCreate()
+class BpeLearnSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def naiveMerges(
       vocab: Seq[(String, Long)], k: Int): Seq[(Long, String, String, Long)] = {

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Large-star/small-star connected components (ccBigStar) behind
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * propagation is guaranteed to trip its bound, converges fine under the
   * O(log n) star alternation.
   */
-class CcBigStarSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("CcBigStarSpec")
-    .getOrCreate()
+class CcBigStarSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def edges(pairs: Seq[(Long, Long)]) = {
     import spark.implicits._

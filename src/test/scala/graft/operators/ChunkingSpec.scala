@@ -1,19 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core._
 
-class ChunkingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ChunkingSpec")
-    .getOrCreate()
+class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def rndBytes(n: Int, seed: Long): Array[Byte] = {
     val r = new scala.util.Random(seed)

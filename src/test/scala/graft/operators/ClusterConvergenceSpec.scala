@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Convergence guarantees for the connected-components fixpoint behind
@@ -10,15 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * carry the same component label — the property one more propagation
   * round would have to preserve).
   */
-class ClusterConvergenceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ClusterConvergenceSpec")
-    .getOrCreate()
+class ClusterConvergenceSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def edges(pairs: (Long, Long)*) = {
     import spark.implicits._

@@ -1,21 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariant contracts for the deterministic k-means and SemDeDup operators
   * (the DuckDB oracle pins outputs bit-for-bit at sf0.01; these pin the
   * semantics at spec scale and the properties the oracle can't express).
   */
-class ClusteringSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ClusteringSpec")
-    .getOrCreate()
+class ClusteringSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

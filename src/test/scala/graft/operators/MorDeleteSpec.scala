@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - compaction rewrites ONLY files that carry delete positions — every
   *    other file carries over by hard link (same inode).
   */
-class MorDeleteSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("MorDeleteSpec")
-    .getOrCreate()
+class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -22,15 +22,7 @@ private[operators] case class MutR(k: Long, qty: Long, cents: Long, day: String)
   def month: String = day.substring(0, 7)
 }
 
-class MutationModelSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("MutationModelSpec")
-    .getOrCreate()
+class MutationModelSpec extends AnyFunSuite with graft.SharedSpark {
 
   private type R = MutR
   private def R(k: Long, qty: Long, cents: Long, day: String): MutR =

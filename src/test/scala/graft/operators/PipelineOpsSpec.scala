@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Invariants of the corpus-preparation operators that the bit-exact DuckDB
@@ -8,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * arithmetic, redaction completeness, and the bloom filter's no-false-
   * negative guarantee (checked against the exact semi-join).
   */
-class PipelineOpsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("PipelineOpsSpec")
-    .getOrCreate()
+class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 

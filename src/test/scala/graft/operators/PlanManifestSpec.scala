@@ -2,7 +2,6 @@ package graft.operators
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-snapshot regression guard over EVERY driver query (VERDICT r9 #5):
@@ -26,15 +25,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Building a stream_*_replay query's frame runs its (cached-per-JVM)
   * replay once — their manifest rows cover the downstream judging query.
   */
-class PlanManifestSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("PlanManifestSpec")
-    .getOrCreate()
+class PlanManifestSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val manifestPath = Paths.get("src/test/resources/plan_manifest.tsv")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * its manifest is the target snapshot's file list verbatim — nothing
   * the state oracle can observe.
   */
-class RollbackSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("RollbackSpec")
-    .getOrCreate()
+class RollbackSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

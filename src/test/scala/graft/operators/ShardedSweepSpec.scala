@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q59 (sharded sweep-line) must equal q53 (single-window sweep) on ANY
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * events exactly on bucket boundaries, bursts inside one bucket, and peaks
   * that straddle bucket edges (nonzero carried offset).
   */
-class ShardedSweepSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ShardedSweepSpec")
-    .getOrCreate()
+class ShardedSweepSpec extends AnyFunSuite with graft.SharedSpark {
 
   /** Write a synthetic events table (generator layout: ts = int64 nanos,
     * read via Tables.events' nanosAsLong path) and return its dir.

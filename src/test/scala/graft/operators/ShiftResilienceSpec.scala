@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Chunker
@@ -12,15 +11,7 @@ import graft.core.Chunker
   * and pins the measured bands, plus the per-document resync property the
   * corpus-level numbers summarize.
   */
-class ShiftResilienceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ShiftResilienceSpec")
-    .getOrCreate()
+class ShiftResilienceSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
   private val Prefix = "SHIFTED::"

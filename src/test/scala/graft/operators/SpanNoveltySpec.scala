@@ -1,21 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics contracts for the substring-level dedup operators — the planted
   * corpus gives known ground truth: an exact copy's every span/gram already
   * exists in its source doc.
   */
-class SpanNoveltySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("SpanNoveltySpec")
-    .getOrCreate()
+class SpanNoveltySpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

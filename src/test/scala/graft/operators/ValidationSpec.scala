@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,15 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * round 10 (confusion matrix, schema evolution, expectations, stage
   * funnel) — the oracles pin outputs bit-for-bit; these pin the meanings.
   */
-class ValidationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ValidationSpec")
-    .getOrCreate()
+class ValidationSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 

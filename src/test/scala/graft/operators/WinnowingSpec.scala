@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Contracts for text_winnowing (Schleimer–Wilkerson–Aiken winnowing):
@@ -13,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     length ≥ W+K−1 shares a fingerprint (pinned both on the corpus and
   *     on a synthetic pair sharing exactly one long substring).
   */
-class WinnowingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("WinnowingSpec")
-    .getOrCreate()
+class WinnowingSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
   private val K = TextOps.WinnowK

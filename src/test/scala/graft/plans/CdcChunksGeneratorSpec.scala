@@ -1,27 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Chunking
 
-class CdcChunksGeneratorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    // getOrCreate may return a session another suite built (shared JVM), in
-    // which case builder-time withExtensions is ignored — register
-    // imperatively, which is also the documented path for live sessions.
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName("CdcChunksGeneratorSpec")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+class CdcChunksGeneratorSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("cdc_chunks generator from SQL equals the DataFrame chunkTable lift") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.AnalysisException
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.AeChunker
@@ -10,20 +10,7 @@ import graft.core.AeChunker
   * this spec pins the SQL surface, argument validation, and the emission
   * contract of each generator in isolation).
   */
-class CdcSegmentedSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .appName("CdcSegmentedSpec")
-      .getOrCreate()
-    GraftExtensions.register(s)
-    s
-  }
+class CdcSegmentedSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def bytes(n: Int, seed: Long): Array[Byte] = {
     val a = new Array[Byte](n)

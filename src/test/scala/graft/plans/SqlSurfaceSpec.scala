@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The SQL table-valued surface (VERDICT r11 #7): three operator families
@@ -12,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * bit-identical results to the Scala API, because the Generators call the
   * same JVM cores.
   */
-class SqlSurfaceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("SqlSurfaceSpec")
-    .getOrCreate()
+class SqlSurfaceSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 

@@ -1,17 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class VecDotSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .appName("VecDotSpec")
-    .getOrCreate()
+class VecDotSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("vec_dot matches the interpreted HOF fold and the JVM left fold bit-for-bit") {
     GraftExtensions.register(spark)

@@ -2,20 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Chunker
 
-class BinaryFilesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("BinaryFilesSpec")
-    .getOrCreate()
+class BinaryFilesSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def writeCorpus(): Path = {
     val dir = Files.createTempDirectory("graft_corpus")

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,15 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the text files (the same writer-neutral convention the oracle queries use)
   * so format-specific timestamp parsing can't corrupt the round-trip.
   */
-class TextFormatsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("TextFormatsSpec")
-    .getOrCreate()
+class TextFormatsSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def fingerprint(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
     import spark.implicits._

@@ -2,7 +2,6 @@ package graft.sources.lake
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In, LessThanOrEqual}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -18,15 +17,7 @@ import graft.operators.{LakeFixture, PipelineOps}
   * seq-ignorant reader would over-delete), and old footers staying
   * byte-identical under the column-ID mapping.
   */
-class LakeConnectorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("LakeConnectorSpec")
-    .getOrCreate()
+class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 

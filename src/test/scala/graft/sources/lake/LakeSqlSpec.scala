@@ -2,6 +2,7 @@ package graft.sources.lake
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PipelineOps
@@ -14,20 +15,12 @@ import graft.operators.PipelineOps
   * copy-on-write through the row-level-operation API — every mutation
   * one CAS pointer advance, history immutable.
   */
-class LakeSqlSpec extends AnyFunSuite {
+class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSpark {
 
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("LakeSqlSpec")
-      .getOrCreate()
-    s.conf.set("spark.sql.catalog.graft_lake",
+  override def beforeAll(): Unit = {
+    spark.conf.set("spark.sql.catalog.graft_lake",
       classOf[GraftLakeCatalog].getName)
-    s.conf.set("spark.sql.catalog.graft_lake.catalogDir", scratchCatalog(s))
-    s
+    spark.conf.set("spark.sql.catalog.graft_lake.catalogDir", scratchCatalog(spark))
   }
 
   private val sfDir = "/root/testdata/sf0.001"

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,15 +12,7 @@ case class Blob(id: Long, text: String, ts: Timestamp)
 case class Ev(user_id: Long, event_type: String, value: Double, ts: Timestamp)
 case class Doc(doc_id: Long, text: String, ts: Timestamp)
 
-class StreamingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("StreamingSpec")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def ts(minutes: Long): Timestamp = new Timestamp(minutes * 60000L)
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale-rehearsal dataset builder must preserve the invariants the
@@ -9,15 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * referential integrity within each replica, constant dup density (replica
   * texts never collide), and norm-preserving embedding perturbation.
   */
-class ScaleUpSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .appName("ScaleUpSpec")
-    .getOrCreate()
+class ScaleUpSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("2x scale-up of sf0.001 preserves the bench invariants") {
     import org.apache.spark.sql.functions._
