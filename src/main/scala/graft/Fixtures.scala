@@ -1,17 +1,22 @@
 package graft
 
 /** Per-JVM on-disk fixtures (persisted indexes, derived corpora, ingest
-  * feeds). Two jobs:
+  * feeds, replayed streams). Three jobs:
   *
   *  1. `tempDir` hands out temp directories that are REGISTERED for a
   *     best-effort recursive delete at JVM exit — fixture dirs must never
   *     outlive the session that wrote them (previously each call site
   *     leaked its `Files.createTempDirectory` result).
   *  2. `dirKey` fingerprints a source-data directory (relative file names +
-  *     sizes + mtimes, order-free XOR fold) so once-per-JVM fixture caches
+  *     sizes + mtimes, order-free fold) so once-per-JVM fixture caches
   *     can key on WHAT the data is, not just where it lives: if the parquet
   *     under a path is regenerated mid-JVM, the fingerprint changes and the
   *     fixture rebuilds instead of serving a stale index.
+  *  3. `memo` is the one once-per-JVM fixture cache: keyed on the fixture's
+  *     name plus `dirKey` of its source data, built into a fresh `tempDir`
+  *     named after the fixture, built once even under concurrent first
+  *     touches, and a build that throws leaves neither an entry nor its
+  *     directory behind, so the next call rebuilds.
   *
   * At 100 TB the same pattern holds with a durable store in place of /tmp:
   * the fixture is an owned artifact keyed by a snapshot id, rebuilt when the
@@ -19,6 +24,7 @@ package graft
   */
 object Fixtures {
   import java.nio.file.{Files, Path, Paths}
+  import scala.jdk.CollectionConverters._
 
   private val registered =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
@@ -27,6 +33,38 @@ object Fixtures {
   // so exit-time sweep cost is negligible.
   sys.addShutdownHook {
     registered.forEach(p => deleteRecursively(p))
+  }
+
+  /** One memoized build. `computeIfAbsent` only inserts the cell; the
+    * build runs in the `lazy val`, outside the map's lock, so a build may
+    * call [[memo]] for other fixtures (a mapping function that updated its
+    * own map would throw "Recursive update") while concurrent callers of
+    * the same key still wait for the one build. The build closure is
+    * dropped once it has run, so the cell keeps only the value.
+    */
+  private[graft] final class Cell(name: String, private var build: Path => Any) {
+    lazy val value: Any = {
+      val dir = tempDir(name)
+      val v = try build(dir)
+        catch { case e: Throwable => deleteRecursively(dir); throw e }
+      build = null
+      v
+    }
+  }
+
+  private[graft] val memos =
+    new java.util.concurrent.ConcurrentHashMap[String, Cell]()
+
+  /** The fixture `name` over the source data under `d`: built once per
+    * (name, content of `d`) into a fresh `tempDir(name)` passed to `build`,
+    * and rebuilt into a new directory when the data under `d` changes. A
+    * build that throws records no entry and has its directory deleted.
+    */
+  def memo[T](name: String, d: String)(build: Path => T): T = {
+    val key = name + "|" + dirKey(d)
+    val cell = memos.computeIfAbsent(key, _ => new Cell(name, build))
+    try cell.value.asInstanceOf[T]
+    catch { case e: Throwable => memos.remove(key, cell); throw e }
   }
 
   /** A temp directory slated for deletion at JVM exit. */
@@ -76,27 +114,27 @@ object Fixtures {
     */
   def dirKey(dir: String): String = {
     val root = Paths.get(dir)
-    var acc = 0L
-    var nFiles = 0L
-    var totBytes = 0L
-    if (Files.exists(root)) {
-      val it = Files.walk(root)
-      try {
-        it.forEach { p =>
-          if (Files.isRegularFile(p)) {
-            val sz = Files.size(p)
-            val h = scala.util.hashing.MurmurHash3.stringHash(
-              root.relativize(p).toString + "|" + sz + "|" +
-                Files.getLastModifiedTime(p).toMillis)
-            acc += mix64(h.toLong)
-            nFiles += 1
-            totBytes += sz
-          }
-        }
-      } finally it.close()
-    }
-    dir + "#" + java.lang.Long.toHexString(acc) +
-      "-" + nFiles + "-" + java.lang.Long.toHexString(totBytes)
+    val files =
+      if (!Files.exists(root)) Vector.empty
+      else {
+        val it = Files.walk(root)
+        try it.iterator.asScala.filter(Files.isRegularFile(_)).map(p =>
+          (root.relativize(p).toString, Files.size(p),
+            Files.getLastModifiedTime(p).toMillis)).toVector
+        finally it.close()
+      }
+    dir + "#" + fingerprint(files)
+  }
+
+  /** The fold behind [[dirKey]] over (relative path, size, mtime) triples,
+    * in any order: a wrapping sum of mixed hashes, then count and bytes.
+    */
+  private[graft] def fingerprint(files: Seq[(String, Long, Long)]): String = {
+    val acc = files.iterator.map { case (rel, sz, mtime) =>
+      mix64(scala.util.hashing.MurmurHash3.stringHash(s"$rel|$sz|$mtime").toLong)
+    }.sum
+    java.lang.Long.toHexString(acc) + "-" + files.size + "-" +
+      java.lang.Long.toHexString(files.iterator.map(_._2).sum)
   }
 
   /** SplitMix64 finalizer — full-avalanche 64-bit mix. */
@@ -107,9 +145,12 @@ object Fixtures {
     x ^ (x >>> 31)
   }
 
-  /** Best-effort recursive delete (same retry contract as the streaming
-    * replay sweep: async writers may still be flushing — retry briefly,
-    * then give up; cleanup must never throw).
+  /** Best-effort recursive delete: async writers may still be flushing —
+    * `q.stop()` does not join the state store's maintenance thread, which
+    * can still be writing `.snapshot` files under a streaming replay's run
+    * dir, so a single pass races (DirectoryNotEmptyException / files
+    * reappearing). Retry a few times with a short pause, then give up;
+    * cleanup must never throw.
     */
   def deleteRecursively(root: Path): Unit = {
     var attempt = 0
@@ -121,7 +162,7 @@ object Fixtures {
       } catch {
         case _: java.io.IOException | _: java.io.UncheckedIOException => // retry
       }
-      if (Files.exists(root)) Thread.sleep(100L)
+      if (Files.exists(root)) Thread.sleep(200L)
       attempt += 1
     }
   }

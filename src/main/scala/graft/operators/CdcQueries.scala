@@ -58,13 +58,9 @@ object CdcQueries {
     * local mode every task shares /tmp, the exact analogue of tasks writing
     * a DFS directory. Keyed on the dataset fingerprint; swept at JVM exit.
     */
-  private val fileCorpusCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def fileCorpusDir(s: SparkSession, dir: String): String =
-    fileCorpusCache.computeIfAbsent(graft.Fixtures.dirKey(dir), _ => {
-      val root = graft.Fixtures.tempDir("graft_filecorpus").resolve("docs")
-      java.nio.file.Files.createDirectories(root)
+    graft.Fixtures.memo("graft_filecorpus", dir) { fx =>
+      val root = java.nio.file.Files.createDirectories(fx.resolve("docs"))
       val rootStr = root.toString
       docs(s, dir).select(col("doc_id").cast("long"), col("text"))
         .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -75,7 +71,7 @@ object CdcQueries {
           }
         }
       rootStr
-    })
+    }
 
   private def chunkCols(df: DataFrame): DataFrame =
     df.select(

@@ -652,9 +652,6 @@ object Clustering {
     semanticDropFlags(asg.select($"vec_id", $"emb", $"qv", $"cid"), SemDedupShardCap)
   }
 
-  private val semVerdictDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM persisted SemDeDup verdict (vec_id, cid, dropped) —
     * the fixture pattern of Dedup's verified edge list and the ER member
     * table, applied to the semantic chain that dedup_semantic and
@@ -664,12 +661,11 @@ object Clustering {
     * clustering changes, and every report reads it.
     */
   private[operators] def semanticVerdictDir(s: SparkSession, d: String): String =
-    semVerdictDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_semverdict")
-        .resolve("verdict").toString
+    graft.Fixtures.memo("graft_semverdict", d) { dir =>
+      val root = dir.resolve("verdict").toString
       semanticVerdictFrame(s, d).write.mode("overwrite").parquet(root)
       root
-    })
+    }
 
   /** Capped SemDeDup drop flags (see the dedup_semantic comment): stage-1
     * exact-duplicate resolution on the quantized vectors, stage-2 sharded

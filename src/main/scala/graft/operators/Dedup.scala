@@ -293,13 +293,10 @@ object Dedup {
     * FINGERPRINT (names+sizes+mtimes), so regenerated data rebuilds the
     * edge list instead of serving stale pairs.
     */
-  private val pairsDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def verifiedPairsDir(s: SparkSession, d: String): String =
-    pairsDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_nddedges", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_nddedges").resolve("pairs").toString
+      val root = dir.resolve("pairs").toString
       val arrays = shingleStringArrays(corpus(s, d)).cache()
       minhashCandidates(bandTable(arrays))
         .join(arrays.select($"doc_id".as("id1"), $"ts".as("ts1")), "id1")
@@ -315,7 +312,7 @@ object Dedup {
         .write.mode("overwrite").parquet(root)
       arrays.unpersist()
       root
-    })
+    }
 
   /** The persisted verified edge list with its 4-decimal-quantized Jaccard
     * weight (w = round(jaccard·10⁴), exact integer on both engines).

@@ -49,14 +49,10 @@ import org.apache.spark.sql.functions._
   */
 object LakeFixture {
 
-  private val lakeMetaDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   def lakeMetaDir(s: SparkSession, d: String): String =
-    lakeMetaDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_lake", d) { root =>
       import s.implicits._
       import PipelineOps._
-      val root = graft.Fixtures.tempDir("graft_lake")
       val dataBase = normPath(bloomIdxDataDir(s, d))
       val dataFiles = s.read.parquet(dataBase).inputFiles.map(normPath).toSeq
 
@@ -100,10 +96,7 @@ object LakeFixture {
         .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
       root.toString
-    })
-
-  private val lakeStreamDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The STREAMING lineage world (VERDICT r16 #5 / the 24th replay
     * contract): snapshot 0 is the inherited pre-branch table state
@@ -117,10 +110,9 @@ object LakeFixture {
     * by that oracle verbatim.
     */
   def lakeStreamDir(s: SparkSession, d: String): String =
-    lakeStreamDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_lakestream", d) { root =>
       import s.implicits._
       import PipelineOps.normPath
-      val root = graft.Fixtures.tempDir("graft_lakestream")
       val branchRoot = PipelineOps.branchMetaDir(s, d)
       val inherited = s.read.parquet(s"$branchRoot/manifests")
         .filter($"snap_id" === 2L).select($"file", $"base")
@@ -156,5 +148,5 @@ object LakeFixture {
         .toDF("snap_id", "op", "parent_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
       root.toString
-    })
+    }
 }

@@ -25,9 +25,6 @@ object LakeQueries {
     */
   private def lake(s: SparkSession) = s.read.format("graft-lake")
 
-  private val ctasCatalogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once per JVM: bootstrap an EMPTY catalog (zero-row pointer log),
     * register it as `graft_ctas`, and run the full SQL lifecycle —
     * CREATE TABLE … AS SELECT (partitioned) over documents, a
@@ -35,9 +32,9 @@ object LakeQueries {
     * invocation of lake_ctas_roundtrip just reads the table back.
     */
   private def ctasFixture(s: SparkSession, d: String): Unit =
-    ctasCatalogCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_ctascat", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_ctascat").toString
+      val root = dir.toString
       Seq.empty[(Long, String, String, Long)]
         .toDF("version", "table_name", "meta_root", "snap_id")
         .coalesce(1).write.parquet(s"$root/catalog_log")
@@ -69,7 +66,7 @@ object LakeQueries {
         case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
       }
       root
-    })
+    }
 
   private val defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 

@@ -4293,22 +4293,15 @@ object PipelineOps {
   private val BloomBits = 1 << 17
   private val BloomK = 4
 
-  /** Once-per-JVM lang-partitioned parquet layout of the documents table
-    * (hive-style lang=xx/ dirs) for pipeline_partitioned_prune. Setup, not
-    * query work — the jsonIngestDir pattern.
-    */
-  private val partitionedDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
   /** Once-per-JVM two-release parquet fixture for pipeline_schema_evolution:
     * release=r1 (even doc_ids) writes (doc_id, lang, n_chars); release=r2
     * (odd doc_ids) ADDS a quality_tier column — the additive schema change
     * a long-lived lakehouse table accumulates. Directory layout uses
     * release=<v> partition dirs so discovery yields the release column.
     */
-  private val schemaEvoDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def schemaEvoDir(s: SparkSession, d: String): String =
-    schemaEvoDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_schevo").toString
+    graft.Fixtures.memo("graft_schevo", d) { dir =>
+      val root = dir.toString
       val doc = Tables.documents(s, d)
       doc.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("lang"), col("n_chars"))
@@ -4318,10 +4311,7 @@ object PipelineOps {
           (col("n_chars") / lit(100)).cast("long").as("quality_tier"))
         .write.mode("overwrite").parquet(s"$root/release=r2")
       root
-    })
-
-  private val schemaIdDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM COLUMN-ID schema-evolution fixture — the Iceberg field-ID
     * model that makes rename/drop/type-widen METADATA operations (the
@@ -4344,9 +4334,9 @@ object PipelineOps {
     * reader sees.
     */
   private[graft] def schemaIdDir(s: SparkSession, d: String): String =
-    schemaIdDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_schid", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_schid").toString
+      val root = dir.toString
       val doc = Tables.documents(s, d)
       doc.filter($"doc_id" % 2 === 0)
         .select($"doc_id", $"lang", $"n_chars".cast("long").as("n_chars"),
@@ -4381,10 +4371,7 @@ object PipelineOps {
       Seq(("r1", 1L), ("r2", 2L)).toDF("release", "version").coalesce(1)
         .write.mode("overwrite").parquet(s"$root/releases")
       root
-    })
-
-  private val schemaPromoDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** TYPE-PROMOTION fixture (VERDICT r15 #7) — the widening matrix beyond
     * [[schemaIdDir]]'s int→bigint case, plus BOTH default kinds of
@@ -4412,9 +4399,9 @@ object PipelineOps {
     * INT32 types surviving); zero bytes rewrite for the whole matrix.
     */
   private[graft] def schemaPromoDir(s: SparkSession, d: String): String =
-    schemaPromoDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_schpromo", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_schpromo").toString
+      val root = dir.toString
       val doc = Tables.documents(s, d)
       doc.filter($"doc_id" % 2 === 0)
         .select($"doc_id",
@@ -4452,7 +4439,7 @@ object PipelineOps {
       Seq(("p1", 1L), ("p2", 2L)).toDF("release", "version").coalesce(1)
         .write.mode("overwrite").parquet(s"$root/releases")
       root
-    })
+    }
 
   /** ID-mapped scan of one promo release at schema v2 — the same
     * field-id indirection as [[idMappedRelease]] over the promotion
@@ -4568,17 +4555,14 @@ object PipelineOps {
     * dataset fingerprint, the backing files live in swept temp dirs
     * (option("path") keeps them out of the repo's warehouse dir).
     */
-  private val bucketedTablesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def bucketedTables(s: SparkSession, d: String): (String, String) =
-    bucketedTablesCache.computeIfAbsent(graft.Fixtures.dirKey(d), key => {
+    graft.Fixtures.memo("graft_bkt", d) { dir =>
       import s.implicits._
-      val tag = java.lang.Integer.toHexString(
-        scala.util.hashing.MurmurHash3.stringHash(key)).replace('-', 'm')
+      val tag = java.lang.Integer.toHexString(scala.util.hashing.MurmurHash3
+        .stringHash(graft.Fixtures.dirKey(d))).replace('-', 'm')
       val (lt, ot) = (s"lineitem_bkt_$tag", s"orders_bkt_$tag")
-      val lroot = graft.Fixtures.tempDir("graft_bktl").resolve("t").toString
-      val oroot = graft.Fixtures.tempDir("graft_bkto").resolve("t").toString
+      val lroot = dir.resolve("lineitem").toString
+      val oroot = dir.resolve("orders").toString
       Tables.lineitem(s, d)
         .select($"l_orderkey", $"l_extendedprice", $"l_discount")
         .repartition(16, $"l_orderkey")
@@ -4592,10 +4576,7 @@ object PipelineOps {
         .bucketBy(16, "o_orderkey").sortBy("o_orderkey")
         .option("path", oroot).saveAsTable(ot)
       (lt, ot)
-    })
-
-  private val mvDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM materialized daily-rollup view of lineitem, partitioned by
     * ship month, INCREMENTALLY REFRESHED: the base build covers everything
@@ -4613,9 +4594,9 @@ object PipelineOps {
     * (correctly) refuses to overwrite a path that feeds the running plan.
     */
   private[operators] def mvRollupDir(s: SparkSession, d: String): String =
-    mvDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_mv", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_mv").resolve("mv").toString
+      val root = dir.resolve("mv").toString
       val li = Tables.lineitem(s, d)
       def daily(src: DataFrame): DataFrame = src
         .groupBy(date_format($"l_shipdate", "yyyy-MM").as("ship_month"),
@@ -4644,10 +4625,7 @@ object PipelineOps {
         .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
         .partitionBy("ship_month").parquet(root)
       root
-    })
-
-  private val bloomIdxDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM bloom data-skipping index (the Delta/Iceberg bloom-index
     * sidecar pattern — the fourth storage-layout lever: zorder kills scan
@@ -4664,10 +4642,9 @@ object PipelineOps {
     * query's exact DuckDB oracle works at all.
     */
   private def bloomIdxDir(s: SparkSession, d: String): String =
-    bloomIdxDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_bloomidx", d) { root =>
       import s.implicits._
       graft.plans.GraftExtensions.register(s)
-      val root = graft.Fixtures.tempDir("graft_bloomidx")
       val dataDir = root.resolve("data").toString
       val li = Tables.lineitem(s, d)
       li.select($"l_orderkey", $"l_partkey",
@@ -4690,7 +4667,7 @@ object PipelineOps {
         .agg(bloomAgg($"h").as("bloom"), count(lit(1)).as("n_rows"))
         .write.mode("overwrite").parquet(root.resolve("index").toString)
       root.toString
-    })
+    }
 
   /** The naive fact-table monthly aggregate — BOTH the MV-rewrite template
     * registered with [[graft.plans.MvRewrite.install]] and the query
@@ -4751,20 +4728,17 @@ object PipelineOps {
       .orderBy($"ship_month", $"l_returnflag")
   }
 
-  private val mvFlagDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM (ship_month, l_returnflag) rollup — the multi-key MV the
     * wide-navigation queries serve from, month-partitioned so translated
     * month predicates still prune at the file index.
     */
   private[operators] def mvFlagDir(s: SparkSession, d: String): String =
-    mvFlagDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_mvflag").resolve("mv").toString
+    graft.Fixtures.memo("graft_mvflag", d) { dir =>
+      val root = dir.resolve("mv").toString
       mvFlagTemplate(s, d).write.mode("overwrite")
         .partitionBy("ship_month").parquet(root)
       root
-    })
+    }
 
   /** The naive STAR-SCHEMA aggregate — fact ⋈ dim (lineitem ⋈ orders on
     * the PK-FK key) grouped by a fact-derived key × a DIM attribute — the
@@ -4787,24 +4761,18 @@ object PipelineOps {
       .orderBy($"ship_month", $"o_orderpriority")
   }
 
-  private val mvJoinDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM (ship_month, o_orderpriority) DENORMALIZED rollup — the
     * star-schema MV the join-navigation query serves from,
     * month-partitioned so translated month predicates still prune at the
     * file index.
     */
   private[operators] def mvJoinDir(s: SparkSession, d: String): String =
-    mvJoinDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_mvjoin").resolve("mv").toString
+    graft.Fixtures.memo("graft_mvjoin", d) { dir =>
+      val root = dir.resolve("mv").toString
       mvJoinTemplate(s, d).write.mode("overwrite")
         .partitionBy("ship_month").parquet(root)
       root
-    })
-
-  private val compactedDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM compacted rewrite of [[bloomIdxDir]]'s ship-month data
     * tree: repartition on the partition column so each month is written by
@@ -4812,13 +4780,13 @@ object PipelineOps {
     * spec-pinned structure in DiagnosticsSpec).
     */
   private[operators] def compactedDir(s: SparkSession, d: String): String =
-    compactedDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_compact").resolve("data").toString
+    graft.Fixtures.memo("graft_compact", d) { dir =>
+      val root = dir.resolve("data").toString
       graft.Tables.readCached(s, bloomIdxDataDir(s, d))
         .repartition(col("ship_month"))
         .write.mode("overwrite").partitionBy("ship_month").parquet(root)
       root
-    })
+    }
 
   /** Shared oracle of pipeline_bloom_index and pipeline_compaction_lookup
     * — the same seven point lookups served through two physical layouts
@@ -5007,9 +4975,6 @@ object PipelineOps {
        |  WHERE levenshtein(c_name, r_name) <= 2 AND abs(cents - r_cents) <= 1)""".stripMargin
   }
 
-  private val erGoldenMembersCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM CLUSTER-MEMBER table for golden-record survivorship:
     * the three-pass ER matching + log-round connected components run once
     * and persist one row per record in a matched cluster
@@ -5019,10 +4984,9 @@ object PipelineOps {
     * query and runs over this metadata-scale table.
     */
   private[operators] def erGoldenMembersDir(s: SparkSession, d: String): String =
-    erGoldenMembersCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_ergolden", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_ergolden")
-        .resolve("members").toString
+      val root = dir.resolve("members").toString
       val cust = erCustomers(s, d)
       val reg = erRegistry(s, d)
       val cc = Dedup.ccBigStar(erMatchedPairs(s, d)
@@ -5037,7 +5001,7 @@ object PipelineOps {
             $"r_cents".as("cents")))
         .write.mode("overwrite").parquet(root)
       root
-    })
+    }
 
   /** 16-bit × 16-bit Morton (Z-order) bit interleave over the normalized
     * coordinates `px`/`sy` — shared by the layout-statistics report, the
@@ -5196,9 +5160,6 @@ object PipelineOps {
       .agg(bloomAgg($"h").as("bloom"), count(lit(1)).as("n_rows"))
   }
 
-  private val compactedIdxDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM bloom sidecars for the COMPACTED tree — the index
     * maintenance a real OPTIMIZE pass performs: compaction rewrites every
     * file, so the pre-compaction sidecars describe dead paths and the
@@ -5206,12 +5167,11 @@ object PipelineOps {
     * re-index. DiagnosticsSpec pins index rows ↔ compacted files 1:1.
     */
   private[operators] def compactedIdxDir(s: SparkSession, d: String): String =
-    compactedIdxDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val idx = graft.Fixtures.tempDir("graft_compactidx")
-        .resolve("index").toString
+    graft.Fixtures.memo("graft_compactidx", d) { dir =>
+      val idx = dir.resolve("index").toString
       writeBloomIndex(s, compactedDir(s, d), idx)
       idx
-    })
+    }
 
   /** Data-skipping plan step for pipeline_bloom_index: probe every file's
     * bloom sidecar with the seven lookup keys and return (files that might
@@ -5241,19 +5201,16 @@ object PipelineOps {
     * resolution) — running them on the global pool overlaps those waits.
     * Results are position-stable and each frame is identical to a serial
     * build; only driver wall-clock changes. Spark job submission from
-    * multiple driver threads is a documented, supported pattern.
+    * multiple driver threads is a documented, supported pattern. The
+    * concurrent build is the only path: 3 alternating serial/concurrent
+    * profile pairs showed it faster on every readout cell (e.g.
+    * time_travel_serve 1.23/1.23/1.28 s serial vs 0.80/1.05/1.00 s
+    * concurrent).
     */
   private[graft] def parallelFrames(thunks: (() => DataFrame)*): Seq[DataFrame] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    // -Dgraft.serialFrames=true is the measured A/B escape hatch (and a
-    // debug aid if a threading suspicion ever arises): 3 alternating
-    // profile pairs showed the concurrent build faster on every readout
-    // cell (e.g. time_travel_serve 1.23/1.23/1.28 s serial vs
-    // 0.80/1.05/1.00 s parallel).
-    if (java.lang.Boolean.getBoolean("graft.serialFrames")) thunks.map(_()).toSeq
-    else Await.result(
-      Future.sequence(thunks.map(t => Future(t())).toSeq),
+    Await.result(Future.sequence(thunks.map(t => Future(t())).toSeq),
       scala.concurrent.duration.Duration.Inf)
   }
 
@@ -5392,9 +5349,6 @@ object PipelineOps {
   private[graft] def eraseOrderKeys(s: SparkSession, d: String): DataFrame =
     orderKeysOfCustomersMod(s, d, 271)
 
-  private val deleteExecDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM GDPR delete EXECUTION over the bloom-indexed ship-month
     * layout — the rewrite pass `pipeline_delete_plan` only plans, run to
     * completion with full metadata reconciliation (the lakehouse
@@ -5425,13 +5379,9 @@ object PipelineOps {
     * table size — the whole point of the sidecar-planned rewrite.
     */
   private[graft] def deleteExecDir(s: SparkSession, d: String): String =
-    deleteExecDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ =>
-      applyMutation(s, "graft_delexec", bloomIdxDataDir(s, d),
-        s"${bloomIdxDir(s, d)}/index", normPath(mvRollupDir(s, d)),
-        eraseOrderKeys(s, d)))
-
-  private val morDeleteDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    graft.Fixtures.memo("graft_delexec", d)(applyMutation(s, _,
+      bloomIdxDataDir(s, d), s"${bloomIdxDir(s, d)}/index",
+      normPath(mvRollupDir(s, d)), eraseOrderKeys(s, d)))
 
   /** Once-per-JVM MERGE-ON-READ delete of erase wave 1 (customers
     * c % 271 == 0) over the bloom-indexed ship-month layout — the
@@ -5456,9 +5406,8 @@ object PipelineOps {
     * `data_base.txt` (the pointer at the untouched data tree).
     */
   private[operators] def morDeleteDir(s: SparkSession, d: String): String =
-    morDeleteDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_mor", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_mor")
       val dataDir = normPath(bloomIdxDataDir(s, d))
       val keys = eraseOrderKeys(s, d)
       val matched =
@@ -5474,7 +5423,7 @@ object PipelineOps {
         .write.mode("overwrite").parquet(root.resolve("deletes").toString)
       java.nio.file.Files.writeString(root.resolve("data_base.txt"), dataDir)
       root.toString
-    })
+    }
 
   /** Merge-on-read SCAN of the [[morDeleteDir]] snapshot: the data tree
     * streamed through a BROADCAST anti-join against the position-delete
@@ -5592,9 +5541,6 @@ object PipelineOps {
              true)"""))
       .drop("bits")
 
-  private val dvDeleteDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** DELETION VECTORS — the FOURTH delete form (Delta deletion vectors /
     * Iceberg v3 DVs), closing the taxonomy beside copy-on-write
     * ([[deleteExecDir]]), position-delete files ([[morDeleteDir]]) and
@@ -5613,9 +5559,8 @@ object PipelineOps {
     * zero data-file writes.
     */
   private[graft] def dvDeleteDir(s: SparkSession, d: String): String =
-    dvDeleteDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_dv", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_dv")
       val dataDir = normPath(bloomIdxDataDir(s, d))
       val dv1 = dvFromPositions(s,
         purgePositions(s, d, eraseOrderKeys(s, d)))
@@ -5628,7 +5573,7 @@ object PipelineOps {
         .parquet(root.resolve("dv").toString)
       java.nio.file.Files.writeString(root.resolve("data_base.txt"), dataDir)
       root.toString
-    })
+    }
 
   /** The WHOLE DV read path over a parquet tree: scan with the
     * normalized physical file path + row_index projected, apply the
@@ -5659,9 +5604,6 @@ object PipelineOps {
     dvApplyOverBase(s, base, graft.Tables.readCached(s, s"$root/$sidecar"))
   }
 
-  private val dvCompactDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** DELETION-VECTOR COMPACTION — folds the merged sidecar (`dv/`) into
     * the tree and RETIRES it, completing the DV lifecycle (write →
     * merge → serve → fold). Unlike the equality-delete compaction there
@@ -5674,7 +5616,7 @@ object PipelineOps {
     * sidecar (`live_dv/`) is empty. DvSpec pins all of it.
     */
   private[operators] def dvCompactDir(s: SparkSession, d: String): String =
-    dvCompactDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_dvcompact", d) { root =>
       import s.implicits._
       val dvRoot = dvDeleteDir(s, d)
       val base = java.nio.file.Files.readString(
@@ -5683,7 +5625,6 @@ object PipelineOps {
       val dv = graft.Tables.readCached(s, s"$dvRoot/dv")
       val touched = dv.select($"file").as[String].collect()
         .map(normPath).toSet
-      val root = graft.Fixtures.tempDir("graft_dvcompact")
       val newData = root.resolve("data")
       graft.Tables.readCached(s, base).inputFiles.map(normPath)
         .filterNot(touched.contains).foreach { f =>
@@ -5700,10 +5641,7 @@ object PipelineOps {
       dv.filter(lit(false)).coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("live_dv").toString)
       root.toString
-    })
-
-  private val morCompactDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Compaction that FOLDS the position-delete sidecar in and retires it:
     * only files that actually carry delete positions are rewritten minus
@@ -5715,7 +5653,7 @@ object PipelineOps {
     * equivalence; the serving oracle here is the VERBATIM CoW oracle.
     */
   private[operators] def morCompactDir(s: SparkSession, d: String): String =
-    morCompactDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_morcompact", d) { root =>
       import s.implicits._
       val morRoot = morDeleteDir(s, d)
       val base = java.nio.file.Files.readString(
@@ -5724,7 +5662,6 @@ object PipelineOps {
       val del = graft.Tables.readCached(s, s"$morRoot/deletes").select($"file", $"pos")
       // metadata-scale: one path per file that has at least one delete
       val delFiles = del.select($"file").distinct().as[String].collect().toSet
-      val root = graft.Fixtures.tempDir("graft_morcompact")
       val newData = root.resolve("data")
       graft.Tables.readCached(s, base).inputFiles.map(normPath)
         .filterNot(delFiles.contains).foreach { f =>
@@ -5742,10 +5679,7 @@ object PipelineOps {
         .write.mode("append").partitionBy("ship_month")
         .parquet(newData.toString)
       root.toString
-    })
-
-  private val morMergeDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** MERGE-ON-READ upsert — the MOR twin of [[mergeExecDir]]'s
     * copy-on-write MERGE, completing the MOR story (delete AND upsert;
@@ -5767,9 +5701,8 @@ object PipelineOps {
     * WRITE — the merge a 100 TB table wants for a small upsert.
     */
   private[operators] def morMergeDir(s: SparkSession, d: String): String =
-    morMergeDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_mormerge", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_mormerge")
       val dataDir = normPath(bloomIdxDataDir(s, d))
       val batch = mergeUpsertRows(s, d)
       val keys = batch.select($"l_orderkey".as("k")).distinct()
@@ -5788,7 +5721,7 @@ object PipelineOps {
         .write.mode("overwrite").partitionBy("ship_month")
         .parquet(root.resolve("batch").toString)
       root.toString
-    })
+    }
 
   /** Merge-on-read scan of the composed snapshot: original tree minus
     * (wave-1 erase positions ∪ merge-replaced positions) — ONE unioned
@@ -5815,9 +5748,6 @@ object PipelineOps {
       .unionByName(graft.Tables.readCached(s, s"$mg/batch"))
   }
 
-  private val eqDeleteDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** EQUALITY-DELETE write of erase wave 1 — the THIRD delete strategy
     * beside copy-on-write ([[deleteExecDir]]) and position deletes
     * ([[morDeleteDir]]), completing the Iceberg v2 delete-file taxonomy:
@@ -5838,19 +5768,15 @@ object PipelineOps {
     * copy-on-write result row-for-row.
     */
   private[operators] def eqDeleteDir(s: SparkSession, d: String): String =
-    eqDeleteDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_eqdel", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_eqdel")
       eraseOrderKeys(s, d).select($"k", lit(1L).as("seq_del"))
         .coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("eq_deletes").toString)
       java.nio.file.Files.writeString(root.resolve("data_base.txt"),
         normPath(bloomIdxDataDir(s, d)))
       root.toString
-    })
-
-  private val eqMergeDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Equality-delete MERGE wave on top of [[eqDeleteDir]]: the same
     * insert-or-replace batch as [[mergeExecDir]]/[[morMergeDir]], done
@@ -5867,9 +5793,8 @@ object PipelineOps {
     * counterfactual.
     */
   private[operators] def eqMergeDir(s: SparkSession, d: String): String =
-    eqMergeDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_eqmerge", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_eqmerge")
       // land the batch first, then derive the delete manifest from the
       // FILES THAT LANDED — one evaluation of the upsert dataflow instead
       // of two, and the delete file is provably consistent with the batch
@@ -5883,7 +5808,7 @@ object PipelineOps {
         .coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("eq_deletes").toString)
       root.toString
-    })
+    }
 
   /** Apply equality deletes under Iceberg's sequence rule: a delete
     * committed at sequence s kills a key's rows only in data files with
@@ -5944,9 +5869,6 @@ object PipelineOps {
     eqApply(legs, dels).drop("seq_data")
   }
 
-  private val eqCompactDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** EQUALITY-DELETE COMPACTION — the lifecycle step that completes the
     * third delete strategy: without it the live delete set (and every
     * reader's broadcast probe) grows forever. Folds BOTH equality-delete
@@ -5980,13 +5902,12 @@ object PipelineOps {
     * row per source file: leg, action) is what the spec pins against.
     */
   private[operators] def eqCompactDir(s: SparkSession, d: String): String =
-    eqCompactDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_eqcompact", d) { root =>
       import s.implicits._
       val w1 = eqDeleteDir(s, d)
       val mg = eqMergeDir(s, d)
       val delsDf = graft.Tables.readCached(s, s"$w1/eq_deletes")
         .unionByName(graft.Tables.readCached(s, s"$mg/eq_deletes"))
-      val root = graft.Fixtures.tempDir("graft_eqcompact")
       val newData = root.resolve("data")
       val oldData = java.nio.file.Paths.get(normPath(bloomIdxDataDir(s, d)))
       val batchDir = java.nio.file.Paths.get(normPath(s"$mg/batch"))
@@ -6029,10 +5950,7 @@ object PipelineOps {
         .toDF("file", "leg", "action").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("plan").toString)
       root.toString
-    })
-
-  private val concurrentCommitDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** OPTIMISTIC CONCURRENCY CONTROL — two writers race a commit from the
     * SAME base snapshot, the loser detects the conflict and REBASES (the
@@ -6068,21 +5986,7 @@ object PipelineOps {
     * file overlaps pay the replan.
     */
   private[operators] def concurrentCommitDir(s: SparkSession, d: String): String =
-    concurrentCommitDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_occ")
-      // a failed degeneracy require below (e.g. a future fixture-parameter
-      // change producing no file conflict) must not leave a half-built race
-      // on disk: the failed computeIfAbsent records no mapping, so a retry
-      // would find orphan staging + a stale commit log under this root
-      try concurrentCommitBuild(s, d, root)
-      catch { case e: Throwable =>
-        graft.Fixtures.deleteRecursively(root); throw e
-      }
-    })
-
-  private def concurrentCommitBuild(
-      s: SparkSession, d: String, root: java.nio.file.Path): String = {
+    graft.Fixtures.memo("graft_occ", d) { root =>
       import s.implicits._
       val baseData = normPath(bloomIdxDataDir(s, d))
       val baseIdx = s"${bloomIdxDir(s, d)}/index"
@@ -6099,7 +6003,8 @@ object PipelineOps {
         .parquet(stagedA.toString)
       val nStaged = graft.Tables.readCached(s, stagedA.toString).inputFiles.length
       // 2. writer B commits first: T0 → T1
-      val t1 = applyMutation(s, "graft_occ_b", baseData, baseIdx, baseMv, kB)
+      val t1 = applyMutation(s, graft.Fixtures.tempDir("graft_occ_b"),
+        baseData, baseIdx, baseMv, kB)
       // 3. A validates: manifest diff on relative path — files of T0 that
       // did not carry into T1 are the ones B rewrote away
       val t0Path = java.nio.file.Paths.get(baseData)
@@ -6114,7 +6019,7 @@ object PipelineOps {
         "degenerate OCC fixture: the race produced no file conflict")
       // 4. discard the stale staging wholesale, rebase against T1
       graft.Fixtures.deleteRecursively(stagedA)
-      val t2 = applyMutation(s, "graft_occ_a",
+      val t2 = applyMutation(s, graft.Fixtures.tempDir("graft_occ_a"),
         s"$t1/data", s"$t1/index", s"$t1/mv", kA)
       Seq(
         (0L, "B", "T0", "committed", 0L, 0L, "T1"),
@@ -6126,10 +6031,7 @@ object PipelineOps {
         .write.mode("overwrite").parquet(root.resolve("commit_log").toString)
       java.nio.file.Files.writeString(root.resolve("tip.txt"), t2)
       root.toString
-  }
-
-  private val mergeExecDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** The CDC upsert feed for the MERGE wave — the "changed rows" batch a
     * change-capture pipeline would hand a lakehouse writer, derived
@@ -6183,17 +6085,14 @@ object PipelineOps {
     * each mutation planning via the previous one's reconciled index.
     */
   private[operators] def mergeExecDir(s: SparkSession, d: String): String =
-    mergeExecDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_mergeexec", d) { root =>
       import s.implicits._
       val w1 = deleteExecDir(s, d)
       val batch = mergeUpsertRows(s, d)
-      applyMutation(s, "graft_mergeexec", s"$w1/data", s"$w1/index",
+      applyMutation(s, root, s"$w1/data", s"$w1/index",
         s"$w1/mv", batch.select($"l_orderkey".as("k")).distinct(),
         Some(batch))
-    })
-
-  private val deleteExec2DirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** SECOND erase wave (customers c % 337 == 0) applied ON TOP of the
     * MERGE snapshot — the full interleaved chain delete w1 → upsert →
@@ -6206,12 +6105,11 @@ object PipelineOps {
     * synthetic insert keys are in no erase set and must survive.
     */
   private[operators] def deleteExec2Dir(s: SparkSession, d: String): String =
-    deleteExec2DirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      import s.implicits._
+    graft.Fixtures.memo("graft_delexec2", d) { root =>
       val m = mergeExecDir(s, d)
-      applyMutation(s, "graft_delexec2", s"$m/data", s"$m/index", s"$m/mv",
+      applyMutation(s, root, s"$m/data", s"$m/index", s"$m/mv",
         orderKeysOfCustomersMod(s, d, 337))
-    })
+    }
 
   /** One copy-on-write MUTATION over a (data, sidecar index, daily MV)
     * snapshot triple — DELETE when `upsert` is empty, MERGE
@@ -6219,8 +6117,8 @@ object PipelineOps {
     * copy-on-write `MERGE INTO`) when it carries a batch. The engine of
     * [[deleteExecDir]] (wave 1 over the original bloom layout),
     * [[mergeExecDir]] (the upsert wave over wave 1's output) and
-    * [[deleteExec2Dir]] (wave 2 over the merge's output), returning a new
-    * snapshot root with `data/`, `index/`, `mv/`:
+    * [[deleteExec2Dir]] (wave 2 over the merge's output), writing the new
+    * snapshot under `root` (`data/`, `index/`, `mv/`) and returning it:
     *
     *  1. probe the sidecars — only MATCHED files can hold rows of the
     *     mutation's key set (purge keys, or the batch's upsert keys);
@@ -6270,7 +6168,8 @@ object PipelineOps {
       .partitionBy("ship_month").parquet(path)
   }
 
-  private[operators] def applyMutation(s: SparkSession, prefix: String, srcDataDir: String,
+  private[operators] def applyMutation(s: SparkSession,
+      root: java.nio.file.Path, srcDataDir: String,
       srcIdxPath: String, srcMvDir: String,
       keys0: org.apache.spark.sql.DataFrame,
       upsert: Option[org.apache.spark.sql.DataFrame] = None,
@@ -6278,7 +6177,6 @@ object PipelineOps {
     import s.implicits._
     graft.plans.GraftExtensions.register(s)
     val keys = keys0
-    val root = graft.Fixtures.tempDir(prefix)
     val newData = root.resolve("data")
     val oldData = java.nio.file.Paths.get(normPath(srcDataDir))
 
@@ -6383,9 +6281,6 @@ object PipelineOps {
     root.toString
   }
 
-  private val partEvoDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM PARTITION EVOLUTION fixture (Iceberg's spec evolution:
     * a table changes its partition transform and OLD data is not
     * rewritten): the ship fact is month-partitioned up to the 1998-01
@@ -6399,9 +6294,8 @@ object PipelineOps {
     * data without paying a historical rewrite.
     */
   private[operators] def partEvoDir(s: SparkSession, d: String): String =
-    partEvoDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_partevo", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_partevo")
       val slim = Tables.lineitem(s, d).select(
         $"l_orderkey",
         $"l_quantity".cast("long").as("qty"),
@@ -6417,10 +6311,7 @@ object PipelineOps {
         .write.mode("overwrite").partitionBy("ship_week")
         .parquet(root.resolve("new").toString)
       root.toString
-    })
-
-  private val wapDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM WRITE-AUDIT-PUBLISH run (the Iceberg WAP / Delta
     * staging pattern — a mutation lands as an UNCOMMITTED snapshot, an
@@ -6448,16 +6339,15 @@ object PipelineOps {
     * abandon is unlink.
     */
   private[operators] def wapDir(s: SparkSession, d: String): String =
-    wapDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_wap", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_wap")
       val w1 = deleteExecDir(s, d)
       val good = mergeExecDir(s, d)
       val badBatch = mergeUpsertRows(s, d).withColumn("qty",
         when($"l_orderkey" % 7 === 0, -$"qty").otherwise($"qty"))
-      val bad = applyMutation(s, "graft_wapbad", s"$w1/data", s"$w1/index",
-        s"$w1/mv", badBatch.select($"l_orderkey".as("k")).distinct(),
-        Some(badBatch))
+      val bad = applyMutation(s, graft.Fixtures.tempDir("graft_wapbad"),
+        s"$w1/data", s"$w1/index", s"$w1/mv",
+        badBatch.select($"l_orderkey".as("k")).distinct(), Some(badBatch))
       def audit(base: String): (Long, Long) = {
         val r = graft.Tables.readCached(s, s"$base/data")
           .agg(count(lit(1)), sum(when($"qty" <= 0L, 1L).otherwise(0L)))
@@ -6479,10 +6369,7 @@ object PipelineOps {
           java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
       root.toString
-    })
-
-  private val snapshotMetaDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM PERSISTED snapshot metadata for the ship-month fact's
     * mutation chain — the Iceberg `snapshots` + `manifests` metadata pair
@@ -6496,7 +6383,7 @@ object PipelineOps {
     * both tables are metadata-scale: one row per snapshot / per file.
     */
   private[graft] def snapshotMetaDir(s: SparkSession, d: String): String =
-    snapshotMetaDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_snapmeta", d) { root =>
       import s.implicits._
       val snaps = Seq(
         (0L, "original", -1L, normPath(bloomIdxDataDir(s, d)),
@@ -6509,7 +6396,6 @@ object PipelineOps {
           s"${mergeExecDir(s, d)}/index"),
         (4L, "delete_w2", 3L, s"${deleteExec2Dir(s, d)}/data",
           s"${deleteExec2Dir(s, d)}/index"))
-      val root = graft.Fixtures.tempDir("graft_snapmeta")
       snaps.map { case (id, _, _, base, _) =>
         graft.Tables.readCached(s, base).inputFiles.map(normPath).toSeq
           .toDF("file").select(lit(id).as("snap_id"), $"file")
@@ -6521,10 +6407,7 @@ object PipelineOps {
       snaps.toDF("snap_id", "op", "parent_id", "base", "idx").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
       root.toString
-    })
-
-  private val zorderExecDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM EXECUTED Z-order rewrite of the fact rows (OPTIMIZE
     * ZORDER BY (l_partkey, l_suppkey)) plus an arrival-order twin for the
@@ -6550,9 +6433,8 @@ object PipelineOps {
     * files — the bucket arithmetic is scale-free.
     */
   private[operators] def zorderExecDir(s: SparkSession, d: String): String =
-    zorderExecDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_zexec", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_zexec")
       val li = Tables.lineitem(s, d).select(
         $"l_orderkey".cast("long").as("o"),
         $"l_partkey".cast("long").as("p"),
@@ -6597,10 +6479,7 @@ object PipelineOps {
       writeLayout("lbkt", "ldata", Seq("o"))
       t.unpersist()
       root.toString
-    })
-
-  private val gcExpireDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM SNAPSHOT EXPIRATION + ORPHAN-FILE GC — the lifecycle
     * step [[snapshotMetaDir]]'s monotone lineage was missing (Iceberg's
@@ -6630,7 +6509,7 @@ object PipelineOps {
     * the live snapshots still serving their exact pre-GC state.
     */
   private[operators] def gcExpireDir(s: SparkSession, d: String): String =
-    gcExpireDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_gc", d) { root =>
       import s.implicits._
       val meta = snapshotMetaDir(s, d)
       val snaps = graft.Tables.readCached(s, s"$meta/snapshots")
@@ -6638,7 +6517,6 @@ object PipelineOps {
         .as[(Long, String, Long, String)].collect().sortBy(_._1)
       val manifests = graft.Tables.readCached(s, s"$meta/manifests")
         .select($"snap_id", $"file").as[(Long, String)].collect()
-      val root = graft.Fixtures.tempDir("graft_gc")
       val filesDir = root.resolve("files")
       val baseOf = snaps.map(t => t._1 -> java.nio.file.Paths.get(normPath(t._4))).toMap
       def linkInto(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
@@ -6680,10 +6558,7 @@ object PipelineOps {
         .toDF("snap_id", "op", "parent_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
       root.toString
-    })
-
-  private val rollbackMetaDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Once-per-JVM SNAPSHOT ROLLBACK — the recovery half of the snapshot
     * lifecycle (Iceberg `rollback_to_snapshot`): the table's current
@@ -6697,10 +6572,9 @@ object PipelineOps {
     * original delete-wave oracle.
     */
   private[operators] def rollbackMetaDir(s: SparkSession, d: String): String =
-    rollbackMetaDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_rollback", d) { root =>
       import s.implicits._
       val meta = snapshotMetaDir(s, d)
-      val root = graft.Fixtures.tempDir("graft_rollback")
       val snaps = graft.Tables.readCached(s, s"$meta/snapshots")
       val tip = snaps.agg(max($"snap_id")).as[Long].head()
       val src = snaps.filter($"op" === "delete_w1")
@@ -6717,7 +6591,7 @@ object PipelineOps {
         .coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("manifests").toString)
       root.toString
-    })
+    }
 
   // Key offset for the branch append batch: disjoint from every real
   // orderkey AND from the merge wave's synthetic inserts
@@ -6742,9 +6616,6 @@ object PipelineOps {
         to_date($"o_orderdate").as("ship_day"),
         date_format($"o_orderdate", "yyyy-MM").as("ship_month"))
   }
-
-  private val branchMetaDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** BRANCHES, TAGS and CHERRY-PICK over the snapshot lineage — the
     * multi-ref metadata layer (Iceberg refs / `cherrypick_snapshot`)
@@ -6773,10 +6644,9 @@ object PipelineOps {
     * WHEN; history snapshots 0-4 are copied verbatim, never rewritten.
     */
   private[graft] def branchMetaDir(s: SparkSession, d: String): String =
-    branchMetaDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_branch", d) { root =>
       import s.implicits._
       val meta = snapshotMetaDir(s, d)
-      val root = graft.Fixtures.tempDir("graft_branch")
       val bfDir = root.resolve("branch_files").toString
       branchBatchRows(s, d)
         .repartition(col("ship_month")) // file-size targeting, see applyMutation step 3
@@ -6827,7 +6697,7 @@ object PipelineOps {
         .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
       root.toString
-    })
+    }
 
   /** Current (ref → ref_type, snap_id) heads: the latest refs_log row
     * per ref. Metadata-scale — a handful of rows.
@@ -6895,9 +6765,6 @@ object PipelineOps {
     (main -- branchRemoved) ++ branchAdded
   }
 
-  private val branchMergeDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** BRANCH MERGE-BACK — the missing multi-ref verb after branch/tag/
     * cherry-pick: two diverged branches fold back into main through
     * [[mergeManifests]], and the result is ORDER-INDEPENDENT:
@@ -6922,13 +6789,12 @@ object PipelineOps {
     * oracle recomputing the merged state from raw.
     */
   private[operators] def branchMergeDir(s: SparkSession, d: String): String =
-    branchMergeDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_brmerge", d) { root =>
       import s.implicits._
       val broot = branchMetaDir(s, d)
       val w2 = deleteExec2Dir(s, d)
-      val root = graft.Fixtures.tempDir("graft_brmerge")
-      val hx = applyMutation(s, "graft_hotfix", s"$w2/data", s"$w2/index",
-        s"$w2/mv", orderKeysOfCustomersMod(s, d, 163))
+      val hx = applyMutation(s, graft.Fixtures.tempDir("graft_hotfix"),
+        s"$w2/data", s"$w2/index", s"$w2/mv", orderKeysOfCustomersMod(s, d, 163))
       val hxBase = normPath(s"$hx/data")
       val mans = graft.Tables.readCached(s, s"$broot/manifests")
         .select($"snap_id", $"file", $"base")
@@ -6979,7 +6845,7 @@ object PipelineOps {
         .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
       root.toString
-    })
+    }
 
   /** Manifest-addressed read of one snapshot of the MERGE world — the
     * [[readBranchSnapshot]] planning shape over [[branchMergeDir]]'s
@@ -7058,9 +6924,6 @@ object PipelineOps {
         abs($"diff").as("n"))
   }
 
-  private val changelogDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM PERSISTED 2→4 changelog — the wide-plan-diet pattern
     * ([[graft.operators.Clustering]]'s verdict-table precedent) applied
     * to [[snapshotChangelog]]: the changed-file scan + full-outer
@@ -7072,14 +6935,13 @@ object PipelineOps {
     * way a real CDF topic is materialized once and consumed many times.
     */
   private[graft] def changelogDir(s: SparkSession, d: String): String =
-    changelogDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_cdflog")
+    graft.Fixtures.memo("graft_cdflog", d) { root =>
       snapshotChangelog(s, d, 2L, 4L)
         .coalesce(4)
         .write.mode("overwrite")
         .parquet(root.resolve("changelog").toString)
       root.resolve("changelog").toString
-    })
+    }
 
   /** Manifest-addressed read of one LIVE snapshot of the post-GC clone —
     * same planning shape as [[readSnapshot]] but resolving through the
@@ -7093,9 +6955,6 @@ object PipelineOps {
       .filter($"snap_id" === id).select($"file").as[String].collect()
     readMatchedFiles(s, s"$root/files", files.toSeq)
   }
-
-  private val refsGcDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Once-per-JVM REF-AWARE SNAPSHOT EXPIRATION + ORPHAN GC over the
     * BRANCHED metadata world — [[gcExpireDir]]'s lifecycle generalized
@@ -7128,7 +6987,7 @@ object PipelineOps {
     * pins sharing, survival and deletion file-by-file.
     */
   private[operators] def refsGcDir(s: SparkSession, d: String): String =
-    refsGcDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_refsgc", d) { root =>
       import s.implicits._
       val broot = branchMetaDir(s, d)
       val refs = currentRefs(s, d)
@@ -7138,7 +6997,6 @@ object PipelineOps {
       val mans = graft.Tables.readCached(s, s"$broot/manifests")
         .select($"snap_id", $"file", $"base")
         .as[(Long, String, String)].collect()
-      val root = graft.Fixtures.tempDir("graft_refsgc")
       val filesDir = root.resolve("files")
       def linkInto(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
         graft.Fixtures.linkOrCopy(src, dst)
@@ -7181,7 +7039,7 @@ object PipelineOps {
       refs.toDF("ref", "ref_type", "snap_id").coalesce(1)
         .write.mode("overwrite").parquet(root.resolve("refs").toString)
       root.toString
-    })
+    }
 
   /** Manifest-addressed read of one LIVE snapshot of the post-GC branched
     * clone — [[readBranchSnapshot]]'s planning shape resolving through the
@@ -7226,9 +7084,6 @@ object PipelineOps {
     readMatchedFiles(s, base, files.toSeq)
   }
 
-  private val catalogDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** THE CATALOG — the last indirection of the lakehouse stack (HMS /
     * Nessie / the Iceberg catalog's `current-metadata` pointer): an
     * append-only `catalog_log` of (version, table, metadata root,
@@ -7244,9 +7099,8 @@ object PipelineOps {
     * Metadata-scale throughout: the log is one row per commit.
     */
   private[graft] def catalogDir(s: SparkSession, d: String): String =
-    catalogDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_catalog", d) { root =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_catalog")
       Seq(
         (0L, "ship_fact", snapshotMetaDir(s, d), 4L),
         (1L, "ship_fact", rollbackMetaDir(s, d), 5L))
@@ -7254,7 +7108,7 @@ object PipelineOps {
         .write.mode("overwrite")
         .parquet(root.resolve("catalog_log").toString)
       root.toString
-    })
+    }
 
   /** Per-log monitor serializing the read-validate-append sequence of
     * [[catalogCommit]]/[[catalogCommitAll]] within this JVM — without it
@@ -7334,9 +7188,6 @@ object PipelineOps {
     */
   private[graft] val ManifestGroupMonths = 12
 
-  private val manifestListDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** TWO-LEVEL MANIFEST METADATA — Iceberg's manifest-list layer, the
     * piece that keeps PLAN time flat at real-100 TB file counts: the
     * chain tip's flat manifest (one row per file) regroups by partition
@@ -7353,10 +7204,9 @@ object PipelineOps {
     * 100k files) said a single-level sidecar would eventually need.
     */
   private[operators] def manifestListDir(s: SparkSession, d: String): String =
-    manifestListDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_manlist", d) { root =>
       import s.implicits._
       val meta = snapshotMetaDir(s, d)
-      val root = graft.Fixtures.tempDir("graft_manlist")
       val tip = graft.Tables.readCached(s, s"$meta/snapshots")
         .agg(max($"snap_id")).as[Long].head()
       val files = graft.Tables.readCached(s, s"$meta/manifests")
@@ -7388,7 +7238,7 @@ object PipelineOps {
         graft.Tables.readCached(s, s"$meta/snapshots")
           .filter($"snap_id" === tip).select($"base").as[String].head())
       root.toString
-    })
+    }
 
   /** Month-window scan planning through the manifest list: (files to
     * read, manifest groups opened, groups total). Only range-intersecting
@@ -7412,24 +7262,18 @@ object PipelineOps {
     (files.toSeq, hit.length.toLong, list.length.toLong)
   }
 
+  /** Once-per-JVM lang-partitioned parquet layout of the documents table
+    * (hive-style lang=xx/ dirs) for pipeline_partitioned_prune. Setup, not
+    * query work — the jsonIngestDir pattern.
+    */
   private[operators] def partitionedCorpus(s: SparkSession, d: String): String =
-    partitionedDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_part")
-        .resolve("docs").toString
+    graft.Fixtures.memo("graft_part", d) { dir =>
+      val root = dir.resolve("docs").toString
       Tables.documents(s, d)
         .select(col("doc_id"), col("n_chars"), col("lang"))
         .write.mode("overwrite").partitionBy("lang").parquet(root)
       root
-    })
-
-  /** Once-per-JVM json-lines feed for pipeline_json_ingest: the documents
-    * table as to_json lines, every 97th record truncated by two chars (the
-    * closing quote/brace) into a deterministically malformed line. Setup,
-    * not query work — the same once-per-JVM temp-dir pattern as the
-    * streaming replay wave files.
-    */
-  private val jsonDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val csvDirCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** CSV twin of [[jsonIngestDir]]: doc_id,lang,n_chars lines with every
     * doc_id % 89 == 0 row's n_chars made non-numeric — a type-level
@@ -7437,22 +7281,27 @@ object PipelineOps {
     * PERMISSIVE mode must catch a different failure class.
     */
   private def csvIngestDir(s: SparkSession, d: String): String =
-    csvDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_csv", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_csv")
-        .resolve("data").toString
+      val root = dir.resolve("data").toString
       Tables.documents(s, d)
         .select(concat_ws(",", $"doc_id", $"lang",
           when($"doc_id" % 89 === 0, concat($"n_chars", lit("x")))
             .otherwise($"n_chars".cast("string"))).as("value"))
         .coalesce(4).write.mode("overwrite").text(root)
       root
-    })
+    }
+
+  /** Once-per-JVM json-lines feed for pipeline_json_ingest: the documents
+    * table as to_json lines, every 97th record truncated by two chars (the
+    * closing quote/brace) into a deterministically malformed line. Setup,
+    * not query work — the same once-per-JVM temp-dir pattern as the
+    * streaming replay wave files.
+    */
   private def jsonIngestDir(s: SparkSession, d: String): String =
-    jsonDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_json", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_json")
-        .resolve("data").toString
+      val root = dir.resolve("data").toString
       val j = to_json(struct($"doc_id", $"lang", $"n_chars"))
       Tables.documents(s, d)
         .select($"doc_id", $"lang", $"n_chars")
@@ -7460,7 +7309,7 @@ object PipelineOps {
           .otherwise(j).as("value"))
         .coalesce(4).write.mode("overwrite").text(root)
       root
-    })
+    }
 
   private def decontamSqlTail(cat: String => String): String =
     s"""WITH tr AS (

@@ -222,17 +222,13 @@ object Similarity {
     * on-disk inverted-list layout. Same fixture pattern as the
     * partitioned-prune corpus.
     */
-  private val ivfIndexDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ivfIndexDir(s: SparkSession, d: String): String =
     // Keyed on the dataset FINGERPRINT (not the path): regenerated data
     // rebuilds the index instead of serving stale lists. Dir is swept at
     // JVM exit by the Fixtures shutdown hook.
-    ivfIndexDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_ivfidx", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_ivfidx")
-        .resolve("index").toString
+      val root = dir.resolve("index").toString
       val v = vectors(s, d)
       val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
         .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
@@ -243,7 +239,7 @@ object Similarity {
         .select($"vec_id", $"emb", $"cid")
         .write.mode("overwrite").partitionBy("cid").parquet(root)
       root
-    })
+    }
 
   /** INCREMENTALLY-MAINTAINED persisted IVF index (VERDICT r10 #7): built
     * on a base slice (vec_id % 10 != 9), then the remaining tenth is
@@ -258,14 +254,10 @@ object Similarity {
     * deltas append cid-partitioned files, and a periodic compaction rewrites
     * hot partitions — none of which changes served results.
     */
-  private val ivfIncrDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def ivfIncrementalDir(s: SparkSession, d: String): String =
-    ivfIncrDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    graft.Fixtures.memo("graft_ivfincr", d) { dir =>
       import s.implicits._
-      val root = graft.Fixtures.tempDir("graft_ivfincr")
-        .resolve("index").toString
+      val root = dir.resolve("index").toString
       val v = vectors(s, d)
       val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
         .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
@@ -282,7 +274,7 @@ object Similarity {
       assign(v.filter($"vec_id" % 10 === 9))
         .write.mode("append").partitionBy("cid").parquet(root)
       root
-    })
+    }
 
   /** Once-per-JVM persisted kNN serve graph (the build-once/serve-many
     * layout the IVF index already has, applied to the graph-ANN family):
@@ -295,11 +287,8 @@ object Similarity {
     * graph is an owned artifact beside the vectors, rebuilt on snapshot
     * change, and the beam search opens only the edge partitions its
     * frontier touches.
-    */
-  private val knnGraphDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Root containing `l0/` (the full degree-16 base graph) and `l1/` (the
+    *
+    * Root containing `l0/` (the full degree-16 base graph) and `l1/` (the
     * sparse upper layer: edges whose BOTH endpoints sit in the vec_id % 4
     * subsample, top-[[HnswL1Degree]] per source) — HNSW's layer structure,
     * both cut from ONE candidate-generation pass. The upper layer routes a
@@ -307,12 +296,11 @@ object Similarity {
     * the base layer refines locally (sim_hnsw_topk).
     */
   private[graft] def knnGraphDir(s: SparkSession, d: String): String =
-    knnGraphDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_knngraph")
-        .resolve("graph").toString
+    graft.Fixtures.memo("graft_knngraph", d) { dir =>
+      val root = dir.resolve("graph").toString
       writeGraphLayers(vectors(s, d), root)
       root
-    })
+    }
 
   // Clustered-twin corpus for sim_hnsw_clustered: the corpus embeddings
   // are near-isotropic (no structure for a hierarchy to exploit — the
@@ -364,19 +352,15 @@ object Similarity {
       .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
   }
 
-  private val clusteredGraphDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Once-per-JVM two-layer serve graph over the PLANTED clustered corpus
     * — same build as [[knnGraphDir]], different vector set.
     */
   private[operators] def clusteredGraphDir(s: SparkSession, d: String): String =
-    clusteredGraphDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
-      val root = graft.Fixtures.tempDir("graft_clusgraph")
-        .resolve("graph").toString
+    graft.Fixtures.memo("graft_clusgraph", d) { dir =>
+      val root = dir.resolve("graph").toString
       writeGraphLayers(clusteredVectors(s, d), root)
       root
-    })
+    }
 
   /** Build and write both layers of the serve graph for vector set `v0`
     * under `root` (`l0`: full degree-[[GraphDegree]]; `l1`: the mod-4
@@ -420,20 +404,14 @@ object Similarity {
     }
   }
 
-  private val knnIncrDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Per-dataset record of whether [[knnIncrementalDir]] took its
     * full-rebuild fallback instead of the delta upsert (keyed by dataset
     * fingerprint — a JVM-global flag would let one dataset's fallback
     * poison assertions about another). Specs assert the upsert path
     * actually ran at the driver SFs.
     */
-  private val knnIncrFellBackByKey =
-    new java.util.concurrent.ConcurrentHashMap[String, Boolean]()
-
-  private[graft] def knnIncrFellBack(d: String): Boolean =
-    knnIncrFellBackByKey.getOrDefault(graft.Fixtures.dirKey(d), false)
+  private[graft] def knnIncrFellBack(s: SparkSession, d: String): Boolean =
+    knnIncremental(s, d)._2
 
   /** INCREMENTALLY-MAINTAINED serve graph: built on the base slice
     * (vec_id % 10 != 9 — the same batch split as the IVF incremental
@@ -457,17 +435,20 @@ object Similarity {
     * corpus-wide rebuild.
     */
   private[operators] def knnIncrementalDir(s: SparkSession, d: String): String =
-    knnIncrDirCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ => {
+    knnIncremental(s, d)._1
+
+  /** (graph root, whether the build fell back to a full rebuild). */
+  private def knnIncremental(s: SparkSession, d: String): (String, Boolean) =
+    graft.Fixtures.memo("graft_knnincr", d) { dir =>
       import s.implicits._
       graft.plans.GraftExtensions.register(s)
-      val root = graft.Fixtures.tempDir("graft_knnincr")
-        .resolve("graph").toString
+      val root = dir.resolve("graph").toString
       val v = vectors(s, d)
       val sigsAll = lshSignatures(v).cache()
       val maxBucket = sigsAll.groupBy($"tbl", $"sig").agg(count(lit(1)).as("cnt"))
         .agg(max($"cnt")).head().getLong(0)
-      if (maxBucket > BucketAllPairsMax) {
-        knnIncrFellBackByKey.put(graft.Fixtures.dirKey(d), true)
+      val fellBack = maxBucket > BucketAllPairsMax
+      if (fellBack) {
         try writeGraphLayers(v, root, Some(sigsAll)) // documented fallback
         finally sigsAll.unpersist()
       } else {
@@ -513,8 +494,8 @@ object Similarity {
           sigsAll.unpersist()
         }
       }
-      root
-    })
+      (root, fellBack)
+    }
 
   // ---- STREAMING GRAPH MAINTENANCE hooks (the 23rd replay contract,
   // graft.streaming.Streaming stream_graph_replay): the SAME base-build /

@@ -1681,11 +1681,8 @@ object TextOps {
       c2: Map[(String, String), Long], c1l: Map[String, Long], v: Long,
       droppedBigrams: Long, droppedUnigrams: Long)
 
-  private val pplModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PplModel]()
-
   private[graft] def pplModel(s: SparkSession, d: String): PplModel =
-    pplModelCache.computeIfAbsent(graft.Fixtures.dirKey(d), _ =>
+    graft.Fixtures.memo("graft_pplmodel", d)(_ =>
       buildPplModel(s, d, MaxModelBigrams, MaxModelUnigrams))
 
   /** Uncached builder behind [[pplModel]], caps as parameters so specs can

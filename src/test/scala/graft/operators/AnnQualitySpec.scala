@@ -331,7 +331,7 @@ class AnnQualitySpec extends AnyFunSuite with graft.SharedSpark {
   test("incremental kNN graph upsert is edge-for-edge identical to a fresh rebuild") {
     val fresh = Similarity.knnGraphDir(spark, sfDir)
     val incr = Similarity.knnIncrementalDir(spark, sfDir)
-    assert(!Similarity.knnIncrFellBack(sfDir),
+    assert(!Similarity.knnIncrFellBack(spark, sfDir),
       "incremental graph build took the rebuild fallback at spec SF")
     for (layer <- Seq("l0", "l1")) {
       val a = spark.read.parquet(s"$fresh/$layer")

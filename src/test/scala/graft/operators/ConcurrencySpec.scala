@@ -69,10 +69,10 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     val base = PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
     // replay the race with A winning: A commits from base, B rebases on A
-    val tA = PipelineOps.applyMutation(spark, "graft_occ_alt_a", base,
+    val tA = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_a"), base,
       base.stripSuffix("/data") + "/index",
       PipelineOps.normPath(PipelineOps.mvRollupDir(spark, sfDir)), keysOf(383))
-    val tAB = PipelineOps.applyMutation(spark, "graft_occ_alt_b",
+    val tAB = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_b"),
       s"$tA/data", s"$tA/index", s"$tA/mv", keysOf(389))
     val root = PipelineOps.concurrentCommitDir(spark, sfDir)
     val tip = java.nio.file.Files.readString(

@@ -105,7 +105,7 @@ class MutationModelSpec extends AnyFunSuite with graft.SharedSpark {
         }
       val mutKeys = delKeys ++ batch.map(_.k)
       val (dataDir, idxDir, mvDir) = writeSnapshot(base)
-      val out = PipelineOps.applyMutation(spark, "graft_mutout",
+      val out = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_mutout"),
         dataDir, idxDir, mvDir, mutKeys.toSeq.toDF("k"),
         if (batch.isEmpty) None else Some(toDf(batch)))
 

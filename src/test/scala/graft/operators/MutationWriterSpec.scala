@@ -20,7 +20,7 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
     val bloom = PipelineOps.bloomIdxDataDir(spark, sfDir)
     val idx = bloom.stripSuffix("/data") + "/index"
     val w1 = PipelineOps.deleteExecDir(spark, sfDir)
-    PipelineOps.applyMutation(spark, "graft_tinytarget", bloom, idx,
+    PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_tinytarget"), bloom, idx,
       s"$w1/mv", PipelineOps.eraseOrderKeys(spark, sfDir),
       targetRows = Target)
   }

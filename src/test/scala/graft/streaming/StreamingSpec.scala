@@ -956,7 +956,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
   test("streamed graph maintenance lands on the fresh rebuild's layers exactly") {
     val d = "/root/testdata/sf0.01"
     val streamed = Streaming.graphStreamGraphDir(spark, d)
-    assert(!Streaming.graphStreamFellBack(d),
+    assert(!Streaming.graphStreamFellBack(spark, d),
       "mega-bucket fallback fired at the test SF — the upsert path went untested")
     val fresh = graft.operators.Similarity.knnGraphDir(spark, d)
     Seq("l0", "l1").foreach { layer =>
