@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Benchmark main (driver contract): one JSON line with per-query seconds.
   *
   * Each query runs once as warmup (whole-stage codegen compilation + JVM JIT
@@ -39,11 +41,14 @@ object Bench {
     // failures are recorded as -1 and excluded from the total.
     val results = SparkEntry.queries.toSeq.sortBy(_._1).filter(e => selected(e._1))
       .map { case (name, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () } // warmup
+      try fn(spark, sfDir).count() // warmup
+      catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name warmup failed: ${e.getMessage}")
+      }
       val passes = (1 to 3).map { _ =>
         spark.sharedState.cacheManager.clearCache()
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+        val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
         if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
       }
       val v = if (passes.exists(_ < 0)) -1.0 else passes.sorted.apply(1) // median

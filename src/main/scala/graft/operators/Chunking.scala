@@ -52,6 +52,32 @@ object Chunking {
       .withColumn("hash", xxhash64(col("chunk")))
   }
 
+  /** Chunk every file under `path` ([[graft.sources.BinaryFiles.load]])
+    * into the canonical chunk table, keyed by file path — the exact
+    * pipeline of the reference's `main.rs:16-24` lifted to a distributed
+    * corpus.
+    */
+  def chunkFiles(
+      spark: SparkSession,
+      path: String,
+      algo: String,
+      expectedSize: Int,
+      seed: Long = 0L,
+      glob: Option[String] = None): DataFrame =
+    chunkTable(graft.sources.BinaryFiles.load(spark, path, glob),
+      "path", "content", algo, expectedSize, seed)
+
+  /** Corpus-level dedup metrics over a file tree (TIME/COEFF/AVG
+    * experiment, `main.rs:23`).
+    */
+  def dedupMetrics(
+      spark: SparkSession,
+      path: String,
+      algo: String,
+      expectedSize: Int,
+      seed: Long = 0L): DataFrame =
+    dedupMetrics(chunkFiles(spark, path, algo, expectedSize, seed))
+
   /** Reference metrics A1-A4 over a chunk table, in ONE distributed pass:
     * dedup coefficient (`unique_bytes / total_bytes`, `ae.rs:91`), average
     * chunk size (`total_bytes / distinct_chunks`, `ae.rs:84`), exact distinct

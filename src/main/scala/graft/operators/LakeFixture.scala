@@ -53,6 +53,7 @@ object LakeFixture {
     graft.Fixtures.memo("graft_lake", d) { root =>
       import s.implicits._
       import PipelineOps._
+      import graft.sources.lake.LakeIndex.normPath
       val dataBase = normPath(bloomIdxDataDir(s, d))
       val dataFiles = s.read.parquet(dataBase).inputFiles.map(normPath).toSeq
 
@@ -112,7 +113,7 @@ object LakeFixture {
   def lakeStreamDir(s: SparkSession, d: String): String =
     graft.Fixtures.memo("graft_lakestream", d) { root =>
       import s.implicits._
-      import PipelineOps.normPath
+      import graft.sources.lake.LakeIndex.normPath
       val branchRoot = PipelineOps.branchMetaDir(s, d)
       val inherited = s.read.parquet(s"$branchRoot/manifests")
         .filter($"snap_id" === 2L).select($"file", $"base")

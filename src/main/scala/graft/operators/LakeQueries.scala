@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   */
 object LakeQueries {
   import PipelineOps.{mergeStateCtes, snapshotMetaDir, branchMetaDir,
-    catalogDir, schemaIdDir, BloomIdxKeys, BranchBatchOffset}
+    catalogDir, schemaIdDir, BloomIdxKeys}
 
   /** `spark.read.format("graft-lake")` — resolved via the META-INF
     * services registration; the spec pins the short name resolves.
@@ -90,21 +90,7 @@ object LakeQueries {
           (coalesce($"n2", lit(0L)) - coalesce($"n1", lit(0L))).as("rows_delta"),
           (coalesce($"c2", lit(0L)) - coalesce($"c1", lit(0L))).as("cents_delta"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes,
-         |w1 AS (SELECT ship_month, CAST(count(*) AS BIGINT) AS n1,
-         |    CAST(sum(net_cents) AS BIGINT) AS c1
-         |  FROM base WHERE o_custkey % 271 <> 0 GROUP BY 1),
-         |w2 AS (SELECT ship_month, CAST(count(*) AS BIGINT) AS n2,
-         |    CAST(sum(net_cents) AS BIGINT) AS c2
-         |  FROM merged WHERE o_custkey % 337 <> 0 GROUP BY 1)
-         |SELECT COALESCE(w1.ship_month, w2.ship_month) AS ship_month,
-         |  CAST(COALESCE(n1, 0) AS BIGINT) AS n_rows_w1,
-         |  CAST(COALESCE(n2, 0) AS BIGINT) AS n_rows_w2,
-         |  CAST(COALESCE(n2, 0) - COALESCE(n1, 0) AS BIGINT) AS rows_delta,
-         |  CAST(COALESCE(c2, 0) - COALESCE(c1, 0) AS BIGINT) AS cents_delta
-         |FROM w1 FULL OUTER JOIN w2 ON w1.ship_month = w2.ship_month
-         |ORDER BY ship_month""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_time_travel"))),
 
     // ---- BRANCH POINT LOOKUPS through the connector:
     // `option("ref", "audit")` resolves the refs_log head, and the
@@ -127,26 +113,7 @@ object LakeQueries {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"l_orderkey")
-    }, Some(
-      s"""WITH audit AS (
-         |  SELECT l_orderkey, CAST(l_quantity AS BIGINT) AS qty,
-         |    CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT) AS net_cents
-         |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         |  WHERE o_custkey % 271 <> 0
-         |  UNION ALL
-         |  SELECT o_orderkey + $BranchBatchOffset, CAST(2 AS BIGINT),
-         |    (o_orderkey % 991) * 100 + 7
-         |  FROM orders WHERE o_custkey % 499 = 0)
-         |SELECT l_orderkey,
-         |  CAST(count(*) AS BIGINT) AS n_items,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM audit
-         |WHERE l_orderkey IN (${BloomIdxKeys.mkString(", ")})
-         |   OR l_orderkey IN (
-         |     SELECT o_orderkey + $BranchBatchOffset FROM orders
-         |     WHERE o_custkey % 499 = 0 ORDER BY o_orderkey LIMIT 2)
-         |GROUP BY 1 ORDER BY l_orderkey""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_branch_lookup"))),
 
     // ---- DELETION VECTORS through the connector: the `stable` TAG of the
     // lake world pins the DV-only snapshot; its manifest's content=dv
@@ -162,14 +129,7 @@ object LakeQueries {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_dv_serve"))),
 
     // ---- The COMPOSED MULTI-DELETE-FORM read (VERDICT r15 #2): the lake
     // world's tip snapshot carries a DV (wave 271, seq 1), a position
@@ -282,21 +242,7 @@ object LakeQueries {
         .select(lit(v).as("version"), $"n_rows", $"n_orders",
           $"sum_qty", $"revenue_cents")
       at(0L).unionByName(at(1L)).orderBy($"version")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT CAST(0 AS BIGINT) AS version,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged WHERE o_custkey % 337 <> 0
-         |UNION ALL
-         |SELECT CAST(1 AS BIGINT),
-         |  CAST(count(*) AS BIGINT),
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT),
-         |  CAST(sum(qty) AS BIGINT), CAST(sum(net_cents) AS BIGINT)
-         |FROM base WHERE o_custkey % 271 <> 0
-         |ORDER BY version""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_catalog_time_travel"))),
 
     // ---- COLUMN-ID SCHEMA EVOLUTION through the connector: both
     // releases served at schema v2 — rename (n_chars→char_count), widen
@@ -314,16 +260,7 @@ object LakeQueries {
           sum(when($"quality_tier".isNull, 1L).otherwise(0L)).as("n_null_tier"),
           countDistinct($"quality_tier").as("n_tiers"))
         .orderBy($"release")
-    }, Some(
-      """SELECT CASE WHEN doc_id % 2 = 0 THEN 'r1' ELSE 'r2' END AS release,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN doc_id % 1000
-        |    ELSE doc_id % 1000 + 3000000000 END) AS BIGINT) AS sum_score,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_tier,
-        |  CAST(count(DISTINCT CASE WHEN doc_id % 2 = 1 THEN n_chars // 100 END) AS BIGINT) AS n_tiers
-        |FROM documents
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_schema_rename"))),
 
     // ---- INITIAL DEFAULTS through the connector (schema v3): rows
     // written before region_code existed serve 99 from the reader's
@@ -342,14 +279,7 @@ object LakeQueries {
           sum(when($"quality_tier".isNull, 1L).otherwise(0L))
             .as("n_null_tier"))
         .orderBy($"release")
-    }, Some(
-      """SELECT CASE WHEN doc_id % 2 = 0 THEN 'r1' ELSE 'r2' END AS release,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(*) * 99 AS BIGINT) AS sum_region,
-        |  CAST(0 AS BIGINT) AS n_null_region,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_null_tier
-        |FROM documents
-        |GROUP BY 1 ORDER BY 1""".stripMargin)),
+    }, Some(PipelineOps.oracleSql("pipeline_schema_default"))),
 
     // ---- the TYPE-PROMOTION matrix through the connector: the partition
     // readers widen float→double, decimal(9,2)→decimal(18,4) (unscaled
@@ -369,20 +299,7 @@ object LakeQueries {
           sum($"score").as("sum_score"),
           sum($"flag".cast("long")).as("sum_flag"))
         .orderBy($"release")
-    }, Some(
-      """SELECT CASE WHEN doc_id % 2 = 0 THEN 'p1' ELSE 'p2' END AS release,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  round(sum(CASE WHEN doc_id % 2 = 0 THEN CAST(n_chars AS DOUBLE) / 16
-        |    ELSE CAST(n_chars AS DOUBLE) / 8 END), 4) AS sum_weight,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0
-        |    THEN CAST(n_chars || '.' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') AS DECIMAL(18,4))
-        |    ELSE CAST(n_chars || '.' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS DECIMAL(18,4))
-        |    END) AS DOUBLE) AS sum_price,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN doc_id % 1000
-        |    ELSE doc_id % 1000 + 3000000000 END) AS BIGINT) AS sum_score,
-        |  CAST(sum(CASE WHEN doc_id % 2 = 0 THEN 7 ELSE 5 END) AS BIGINT) AS sum_flag
-        |FROM documents
-        |GROUP BY 1 ORDER BY 1""".stripMargin))
+    }, Some(PipelineOps.oracleSql("pipeline_schema_promote")))
   )
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =

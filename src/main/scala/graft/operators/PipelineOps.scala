@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.lake.LakeIndex.{BloomK, matchedFilesOnly, normPath}
 
 /** Corpus-preparation operators a training-data pipeline needs around the
   * dedup/similarity/text stages (builder mandate, beyond the reference's
@@ -1903,14 +1904,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- the MV after the delete: the daily rollup incremental-refreshed
     // through the mutation (untouched months linked over, lost-row months
@@ -2012,14 +2006,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- MERGE-ON-READ delete, step 3: COMPACTION folds the sidecar in
     // and retires it ([[morCompactDir]]) — only files that actually carry
@@ -2036,14 +2023,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- MERGE-ON-READ upsert ([[morMergeDir]]): the MOR twin of the
     // copy-on-write MERGE below, composing with wave 1's position-delete
@@ -2064,14 +2044,7 @@ object PipelineOps {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT ship_month,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(mergedStateOracleSql)),
 
     // ---- DELETION VECTORS, serve ([[dvDeleteDir]]): the FOURTH delete
     // form (Delta DVs / Iceberg v3) — wave 1 as ONE bitmap per touched
@@ -2087,14 +2060,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- DELETION VECTORS, update ([[dvMergeBitmaps]]): wave 2 arrives
     // and each touched file's vector is REPLACED by the OR of old and new
@@ -2196,14 +2162,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- EQUALITY DELETE, step 3: the composed MERGE serve
     // ([[eqMergeServe]]) — wave-1 delete (seq 1) + merge batch and its
@@ -2223,14 +2182,7 @@ object PipelineOps {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT ship_month,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(mergedStateOracleSql)),
 
     // ---- EQUALITY DELETE, step 4: COMPACTION ([[eqCompactDir]]) — the
     // monthly report over the FOLDED tree, scanned with NO delete probe
@@ -2252,14 +2204,7 @@ object PipelineOps {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT ship_month,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(mergedStateOracleSql)),
 
     // ---- OPTIMISTIC CONCURRENCY serve ([[concurrentCommitDir]]): the
     // monthly report through the tip AFTER the race — writer B's delete
@@ -2390,14 +2335,7 @@ object PipelineOps {
           countDistinct($"l_orderkey").as("n_orders"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(wave1ServeOracleSql)),
 
     // ---- CATALOG time travel ([[catalogDir]]): the state summary of
     // EVERY catalog version of ship_fact — v0 resolves to the chain's
@@ -2767,14 +2705,7 @@ object PipelineOps {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT ship_month,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(mergedStateOracleSql)),
 
     // ---- copy-on-write MERGE (upsert) EXECUTION on top of delete wave 1
     // ([[mergeExecDir]]): the CDC change-detection → APPLY loop run to
@@ -2797,14 +2728,7 @@ object PipelineOps {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"ship_month")
-    }, Some(
-      s"""$mergeStateCtes
-         |SELECT ship_month,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         |  CAST(sum(qty) AS BIGINT) AS sum_qty,
-         |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
-         |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+    }, Some(mergedStateOracleSql)),
 
     // ---- the MV after the merge: the daily rollup incremental-refreshed
     // through an upsert — months that lost OR gained rows recomputed from
@@ -4291,7 +4215,6 @@ object PipelineOps {
     * whole point is that benchmark suites don't grow with the corpus.
     */
   private val BloomBits = 1 << 17
-  private val BloomK = 4
 
   /** Once-per-JVM two-release parquet fixture for pipeline_schema_evolution:
     * release=r1 (even doc_ids) writes (doc_id, lang, n_chars); release=r2
@@ -5082,6 +5005,34 @@ object PipelineOps {
       |    (o_orderkey % 997) * 100 + 1, CAST(-1 AS BIGINT)
       |  FROM orders WHERE o_custkey % 293 = 0)""".stripMargin
 
+  /** Shared oracle of every monthly report over the delete-wave-1 state
+    * (customer %271 erased): the copy-on-write delete and each strategy
+    * that must converge to it — MOR serve and compaction, deletion
+    * vectors, equality deletes, the snapshot rollback.
+    */
+  private def wave1ServeOracleSql: String =
+    """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
+      |  CAST(count(*) AS BIGINT) AS n_rows,
+      |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+      |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
+      |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
+      |WHERE o_custkey % 271 <> 0
+      |GROUP BY 1 ORDER BY ship_month""".stripMargin
+
+  /** Shared oracle of every monthly report over the post-MERGE state
+    * ([[mergeStateCtes]]): the copy-on-write merge and each strategy that
+    * must converge to it — MOR merge, equality-delete merge serve and
+    * compaction, the published write-audit-publish branch.
+    */
+  private def mergedStateOracleSql: String =
+    s"""$mergeStateCtes
+       |SELECT ship_month,
+       |  CAST(count(*) AS BIGINT) AS n_rows,
+       |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
+       |  CAST(sum(qty) AS BIGINT) AS sum_qty,
+       |  CAST(sum(net_cents) AS BIGINT) AS revenue_cents
+       |FROM merged GROUP BY 1 ORDER BY ship_month""".stripMargin
+
   /** Shared oracle of pipeline_snapshot_branch AND pipeline_refs_expire —
     * every CURRENT ref's state recomputed from raw: the audit branch head
     * (snapshot 6) = wave-1 survivors + the branch batch, main's head
@@ -5215,7 +5166,7 @@ object PipelineOps {
   }
 
   /** Count-free twins of the two probes above for query paths that never
-    * read the total (see [[matchedFilesOnly]]).
+    * read the total (see [[graft.sources.lake.LakeIndex.matchedFilesOnly]]).
     */
   private[operators] def bloomIdxMatchedFilesOnly(
       s: SparkSession, d: String): Array[String] = {
@@ -5246,25 +5197,6 @@ object PipelineOps {
       probes: DataFrame): (Array[String], Long) =
     (matchedFilesOnly(s, idxPath, probes),
       graft.Tables.readCached(s, idxPath).count())
-
-  /** [[matchedFilesInIndex]] without the total-file-count job (r18, guide
-    * §1.2 "don't compute things you throw away"): every QUERY-path caller
-    * discarded the count — only the diagnostics and index-replica tests read it
-    * — yet each call paid one extra index-scan job (~25 ms and one full
-    * index read at any scale) for the number.
-    */
-  private[graft] def matchedFilesOnly(
-      s: SparkSession, idxPath: String,
-      probes: DataFrame): Array[String] = {
-    import s.implicits._
-    graft.plans.GraftExtensions.register(s)
-    val idx = graft.Tables.readCached(s, idxPath)
-    val matched = idx.crossJoin(broadcast(probes)) // |files| × |keys|, metadata-scale
-      .filter(call_function("bloom_contains",
-        $"bloom", xxhash64($"k"), lit(BloomK)))
-      .select($"file").distinct().as[String].collect()
-    matched.sorted
-  }
 
   private[graft] def bloomIdxDataDir(s: SparkSession, d: String): String =
     s"${bloomIdxDir(s, d)}/data"
@@ -5310,17 +5242,8 @@ object PipelineOps {
       s.read.option("basePath", base).schema(schema).parquet(files: _*)
     }
 
-  /** `input_file_name()` / `DataFrame.inputFiles` URI → plain local path
-    * (`file:///tmp/x` and `file:/tmp/x` both → `/tmp/x`); identity for a
-    * path that carries no scheme. Lets file sets from different listing
-    * APIs compare and feed `spark.read.parquet` uniformly.
-    */
-  private[graft] def normPath(f: String): String =
-    if (f.startsWith("file:")) "/" + f.stripPrefix("file:").dropWhile(_ == '/')
-    else f
-
   /** The `_metadata.file_path` virtual column normalized to a plain local
-    * path — the Column twin of [[normPath]], shared by every consumer of
+    * path — the Column twin of [[graft.sources.lake.LakeIndex.normPath]], shared by every consumer of
     * parquet physical positions (MOR sidecars, the z-order envelope
     * build) so the URI-normalization rule lives in exactly two places
     * (one per representation) instead of drifting per call site.
@@ -7089,8 +7012,9 @@ object PipelineOps {
     * append-only `catalog_log` of (version, table, metadata root,
     * snapshot id) rows, where a table's CURRENT state is its
     * highest-version row and every commit is one appended row guarded by
-    * compare-and-swap ([[catalogCommit]] — a writer that lost a race
-    * must re-resolve, never blind-append). Two versions of `ship_fact`:
+    * compare-and-swap ([[graft.sources.lake.LakeCommit.catalogCommit]] —
+    * a writer that lost a race must re-resolve, never blind-append). Two
+    * versions of `ship_fact`:
     * v0 pins the mutation chain's tip (the wave-2 state), v1 is the
     * ROLLBACK commit repointing at the wave-1 snapshot — a catalog swap
     * is how a rollback actually reaches readers. Readers resolve by
@@ -7108,76 +7032,6 @@ object PipelineOps {
         .write.mode("overwrite")
         .parquet(root.resolve("catalog_log").toString)
       root.toString
-    }
-
-  /** Per-log monitor serializing the read-validate-append sequence of
-    * [[catalogCommit]]/[[catalogCommitAll]] within this JVM — without it
-    * two same-process writers can both pass the CAS check and append
-    * duplicate versions. Across processes a real catalog gets this from
-    * the store (conditional PUT / rename-if-absent); the monitor is the
-    * single-JVM stand-in for that primitive, same as the rest of the
-    * fixture layer.
-    */
-  private val catalogLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  /** Append one catalog commit under COMPARE-AND-SWAP: the commit names
-    * the version it expects to be current; a stale expectation (another
-    * writer won the race) REFUSES so the loser re-resolves and retries —
-    * the atomic-swap contract every catalog implements. Returns the new
-    * version. Metadata-scale: reads |log| rows, appends one.
-    */
-  private[graft] def catalogCommit(
-      s: SparkSession, logDir: String, table: String,
-      expectedVersion: Long, metaRoot: String, snapId: Long): Long =
-    catalogLocks.computeIfAbsent(logDir, _ => new Object).synchronized {
-      import s.implicits._
-      val cur = graft.Tables.readCached(s, logDir)
-        .filter($"table_name" === table)
-        .agg(max($"version")).as[Option[Long]].head()
-        .getOrElse(-1L)
-      require(cur == expectedVersion,
-        s"catalog CAS failed for $table: expected v$expectedVersion, " +
-          s"current is v$cur — re-resolve and retry")
-      val v = cur + 1L
-      Seq((v, table, metaRoot, snapId))
-        .toDF("version", "table_name", "meta_root", "snap_id")
-        .coalesce(1).write.mode("append").parquet(logDir)
-      v
-    }
-
-  /** MULTI-TABLE ATOMIC COMMIT — the cross-table transaction a derived-
-    * table refresh needs (fact + its rollup must move together):
-    * validate EVERY table's CAS expectation first, then append all rows
-    * as ONE parquet file (coalesce(1)), so log readers observe every
-    * table's new version or none. Any stale expectation refuses the
-    * whole transaction before a byte is written — CatalogSpec pins
-    * both-or-neither.
-    */
-  private[graft] def catalogCommitAll(
-      s: SparkSession, logDir: String,
-      commits: Seq[(String, Long, String, Long)]): Seq[Long] =
-    catalogLocks.computeIfAbsent(logDir, _ => new Object).synchronized {
-      import s.implicits._
-      // a table may move only ONCE per transaction — duplicate names
-      // would append two rows at the same new version
-      val dup = commits.groupBy(_._1).collect { case (t, cs) if cs.size > 1 => t }
-      require(dup.isEmpty,
-        s"duplicate tables in one transaction: ${dup.mkString(", ")}")
-      val cur = graft.Tables.readCached(s, logDir)
-        .groupBy($"table_name").agg(max($"version").as("v"))
-        .as[(String, Long)].collect().toMap
-      commits.foreach { case (t, exp, _, _) =>
-        val c = cur.getOrElse(t, -1L)
-        require(c == exp,
-          s"catalog CAS failed for $t: expected v$exp, current is v$c " +
-            "— re-resolve and retry (no table committed)")
-      }
-      val rows = commits.map { case (t, exp, root, snap) =>
-        (exp + 1L, t, root, snap) }
-      rows.toDF("version", "table_name", "meta_root", "snap_id")
-        .coalesce(1).write.mode("append").parquet(logDir)
-      rows.map(_._1)
     }
 
   /** Months per manifest group in the two-level layout: ~1 group per

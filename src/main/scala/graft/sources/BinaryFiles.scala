@@ -1,9 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-
-import graft.operators.Chunking
 
 /** File-corpus source: the reference's whole-file scan (`chunker.rs:31-37`,
   * `Chunker::read_file`) as Spark's `binaryFile` format — one row per file
@@ -13,6 +10,7 @@ import graft.operators.Chunking
   * Scale notes: `binaryFile` caps a single blob at 2 GB (whole-blob rows);
   * for larger objects use `Chunking.segmentedChunkTable` over ranged reads
   * (SURVEY.md §7.4). `pathGlobFilter` pushes file pruning into listing.
+  * `Chunking.chunkFiles` chunks a corpus loaded here.
   */
 object BinaryFiles {
 
@@ -20,28 +18,4 @@ object BinaryFiles {
     val r = spark.read.format("binaryFile")
     glob.fold(r)(g => r.option("pathGlobFilter", g)).load(path)
   }
-
-  /** Chunk every file under `path` into the canonical chunk table, keyed by
-    * file path — the exact pipeline of the reference's `main.rs:16-24` lifted
-    * to a distributed corpus.
-    */
-  def chunkFiles(
-      spark: SparkSession,
-      path: String,
-      algo: String,
-      expectedSize: Int,
-      seed: Long = 0L,
-      glob: Option[String] = None): DataFrame =
-    Chunking.chunkTable(load(spark, path, glob), "path", "content", algo, expectedSize, seed)
-
-  /** Corpus-level dedup metrics over a file tree (TIME/COEFF/AVG experiment,
-    * `main.rs:23`).
-    */
-  def dedupMetrics(
-      spark: SparkSession,
-      path: String,
-      algo: String,
-      expectedSize: Int,
-      seed: Long = 0L): DataFrame =
-    Chunking.dedupMetrics(chunkFiles(spark, path, algo, expectedSize, seed))
 }

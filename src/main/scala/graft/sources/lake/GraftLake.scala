@@ -92,9 +92,7 @@ private[lake] case class ResolvedLakeTable(
     indexCol: String) extends Serializable
 
 private[lake] object LakeResolver {
-  import graft.operators.PipelineOps.{matchedFilesOnly, normPath}
-
-  private[lake] def normLocal(f: String): String = normPath(f)
+  import LakeIndex.{matchedFilesOnly, normPath}
 
   private val cache =
     new java.util.concurrent.ConcurrentHashMap[Map[String, String], ResolvedLakeTable]()
@@ -130,20 +128,13 @@ private[lake] object LakeResolver {
       case Some(cat) =>
         val table = opt("table").getOrElse(
           sys.error("graft-lake: option 'table' required with 'catalog'"))
-        val rows = s.read.parquet(s"$cat/catalog_log")
-          .filter($"table_name" === table)
-          .select($"version", $"meta_root", $"snap_id")
-          .as[(Long, String, Long)].collect()
-        require(rows.nonEmpty, s"graft-lake: unknown table $table in $cat")
-        val asOf = opt("asOfVersion").map(_.toLong).getOrElse(rows.map(_._1).max)
-        val hit = rows.filter(_._1 <= asOf)
-        require(hit.nonEmpty,
-          s"graft-lake: $table has no version ≤ $asOf (have ${rows.map(_._1).sorted.mkString(",")})")
-        val r = hit.maxBy(_._1)
-        require(r._2.nonEmpty,
-          s"graft-lake: $table is dropped at version ${r._1} " +
+        val r = LakeCommit.catalogPointer(s, cat, table,
+            opt("asOfVersion").map(_.toLong))
+          .getOrElse(sys.error(s"graft-lake: unknown table $table in $cat"))
+        require(!r.dropped,
+          s"graft-lake: $table is dropped at version ${r.version} " +
             "(empty meta_root tombstone) — time-travel below it to read history")
-        (r._2, Some(r._3))
+        (r.metaRoot, Some(r.snapId))
       case None =>
         (opt("metaRoot").getOrElse(sys.error(
           "graft-lake: one of 'metaRoot' or 'catalog' is required")), None)
@@ -153,12 +144,7 @@ private[lake] object LakeResolver {
     //    catalog pin, else the lineage tip
     val snaps = s.read.parquet(s"$metaRoot/snapshots")
     val snapId = opt("ref") match {
-      case Some(ref) =>
-        val heads = s.read.parquet(s"$metaRoot/refs_log")
-          .filter($"ref" === ref).select($"step", $"snap_id")
-          .as[(Long, Long)].collect()
-        require(heads.nonEmpty, s"graft-lake: unknown ref $ref in $metaRoot")
-        heads.maxBy(_._1)._2
+      case Some(ref) => refHead(s, metaRoot, ref)
       case None => opt("snapshot").map(_.toLong)
         .orElse(catalogSnap)
         .getOrElse(snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
@@ -269,8 +255,21 @@ private[lake] object LakeResolver {
       files.toIndexedSeq, eqKeyCol, eqKeys, eqSeqs, idxPath, indexCol)
   }
 
-  /** The column-ID world ([[graft.operators.PipelineOps#schemaIdDir]]'s
-    * layout): resolve the CURRENT schema at `schemaVersion`, map each
+  /** Head snapshot of `ref` in the world at `metaRoot`: its latest
+    * refs_log step.
+    */
+  private[lake] def refHead(
+      s: SparkSession, metaRoot: String, ref: String): Long = {
+    import s.implicits._
+    val heads = s.read.parquet(s"$metaRoot/refs_log")
+      .filter($"ref" === ref).select($"step", $"snap_id")
+      .as[(Long, Long)].collect()
+    require(heads.nonEmpty, s"graft-lake: unknown ref $ref in $metaRoot")
+    heads.maxBy(_._1)._2
+  }
+
+  /** The column-ID world (the layout of the library's `schemaIdDir`
+    * fixture): resolve the CURRENT schema at `schemaVersion`, map each
     * release's files through their write-time schema by field id —
     * rename/widen are per-file physical-name indirections, drops are
     * never requested, absent fields serve the field's initial default or
@@ -444,11 +443,7 @@ private[lake] class GraftLakeTable(
       }
 
       override def build(): org.apache.spark.sql.connector.write.Write =
-        mode match {
-          case LakeWriteMode.Append =>
-            new LakeAppendWrite(resolved, c, info.schema())
-          case m => new LakeOverwriteWrite(resolved, c, info.schema(), m)
-        }
+        new LakeWrite(resolved, c, info.schema(), mode)
     }
   }
 
@@ -487,33 +482,15 @@ private[lake] class GraftLakeTable(
   override def truncateTable(): Boolean = {
     val c = ctx.getOrElse(sys.error(
       "graft-lake: TRUNCATE needs a catalog-resolved table"))
-    val s = SparkSession.active
-    import s.implicits._
-    import org.apache.spark.sql.functions.lit
     // an empty snapshot can only resolve through a DECLARED schema — a
     // footer-schema world would have no file left to infer from
     require(java.nio.file.Files.isDirectory(
         java.nio.file.Paths.get(s"${c.metaRoot}/tableschema")),
       "graft-lake: TRUNCATE needs a declared-schema table (CREATE TABLE " +
         "/ CTAS worlds); use INSERT OVERWRITE or DELETE on this table")
-    val snaps = s.read.parquet(s"${c.metaRoot}/snapshots")
-    val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-      .as[Long].head() + 1L
-    val root = graft.Fixtures.tempDir("graft_laketruncate")
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(root, c.metaRoot)
-    snaps.select($"snap_id", $"op", $"parent_id")
-      .unionByName(Seq((newSnap, "truncate", c.snapId))
-        .toDF("snap_id", "op", "parent_id"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-    LakeFilters.carryTableSchema(s, c.metaRoot, root)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"${c.catalogLogDir}/catalog_log", c.table,
-      expectedVersion = c.version, metaRoot = root.toString, snapId = newSnap)
+    LakeCommit.commitSnapshot(SparkSession.active, c,
+      graft.Fixtures.tempDir("graft_laketruncate"), "truncate",
+      keep = None, add = _ => Seq.empty)
     true
   }
 
@@ -550,40 +527,16 @@ private[lake] class GraftLakeTable(
     val keys = filters.toSeq
       .flatMap(f => LakeFilters.keyKeys(f, resolved.indexCol)).flatten.distinct
     require(keys.nonEmpty, "graft-lake: DELETE without key predicates")
-    val man = LakeFilters.normalizedManifests(s, c.metaRoot)
-    val tip = man.filter($"snap_id" === c.snapId)
-    val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-      .as[Option[Long]].head().getOrElse(0L) + 1L
-    // max over the WORLD's snapshots, not loaded-pin+1: a pointer-only
-    // rollback pins a snap_id below the world's max, and pin+1 would
-    // collide with an existing snapshot (duplicate id = merged manifests)
-    val snaps = s.read.parquet(s"${c.metaRoot}/snapshots")
-    val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-      .as[Long].head() + 1L
     val root = graft.Fixtures.tempDir("graft_lakecommit")
-    import org.apache.spark.sql.functions.lit
-    keys.toDF("k").select($"k", lit(newSeq).as("seq_del")).coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("eq").toString)
-    val eqFiles = s.read.parquet(root.resolve("eq").toString)
-      .inputFiles.map(LakeResolver.normLocal).toSeq
-    // ONLY the new snapshot's rows — history stays in the parent chain
-    tip.withColumn("snap_id", lit(newSnap))
-      .unionByName(eqFiles.toDF("file").select(
-        lit(newSnap).as("snap_id"), lit("eq_del").as("content"), $"file",
-        lit(root.resolve("eq").toString).as("base"), lit(newSeq).as("seq"),
-        lit(resolved.indexCol).as("key_col")))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(root, c.metaRoot)
-    snaps.select($"snap_id", $"op", $"parent_id")
-      .unionByName(Seq((newSnap, "eq_delete", c.snapId))
-        .toDF("snap_id", "op", "parent_id"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-    LakeFilters.carryTableSchema(s, c.metaRoot, root)
-    graft.operators.PipelineOps.catalogCommit(
-      s, s"${c.catalogLogDir}/catalog_log", c.table,
-      expectedVersion = c.version, metaRoot = root.toString, snapId = newSnap)
+    val eqDir = root.resolve("eq").toString
+    LakeCommit.commitSnapshot(s, c, root, "eq_delete", keep = Some(_ => true),
+      add = { seq =>
+        keys.toDF("k")
+          .select($"k", org.apache.spark.sql.functions.lit(seq).as("seq_del"))
+          .coalesce(1).write.mode("overwrite").parquet(eqDir)
+        s.read.parquet(eqDir).inputFiles.map(LakeIndex.normPath).toSeq
+          .map(LakeEntry("eq_del", _, eqDir, seq, resolved.indexCol))
+      })
   }
 }
 
@@ -716,107 +669,47 @@ private[lake] object LakeFilters {
   }
 }
 
-/** The append Write: clustered by the partition columns (so a task holds
-  * one open file per partition it owns — the write shape a real table
-  * format requests at 100 TB), executed by parquet writers on the
-  * executors, committed as one CAS metadata snapshot on the driver.
+/** Which snapshot a write's commit authors — which tip data files the
+  * written files replace:
+  *
+  *  - [[LakeWriteMode.Append]]: none — every tip entry carries;
+  *  - [[LakeWriteMode.Truncate]]: all, and nothing carries (data AND
+  *    delete entries — a truncated table has nothing left for deletes to
+  *    apply to);
+  *  - [[LakeWriteMode.OverwriteWhere]]: data files whose Hive partition
+  *    tuple matches the static PARTITION spec;
+  *  - [[LakeWriteMode.DynamicOverwrite]]: data files in exactly the
+  *    partition tuples the WRITTEN files landed in;
+  *  - [[LakeWriteMode.CopyOnWrite]]: exactly the data files the
+  *    row-level operation's scan planned (MERGE / UPDATE / non-key
+  *    DELETE swap the scanned groups for the rewritten ones).
+  *
+  * Outside Truncate, delete entries always carry: still live against the
+  * carried data, inert against the new files by the strictly-older
+  * sequence rule (Iceberg keeps them until maintenance the same way).
   */
-private[lake] class LakeAppendWrite(
-    resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.connector.distributions.Distributions
-  import org.apache.spark.sql.connector.expressions.Expressions
-
-  override def description(): String =
-    s"graft-lake append to ${ctx.table}@v${ctx.version}"
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    if (resolved.partitionCols.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      resolved.partitionCols.map(c => Expressions.identity(c)).toArray)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array.empty
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakeappend")
-    private val dataDir = root.resolve("data").toString
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory =
-      new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
-      val files = messages.flatMap {
-        case m: LakeCommitMessage => m.files
-      }.toSeq
-      // zero files is a legal append (an empty INSERT/CTAS SELECT still
-      // commits a snapshot, like Iceberg's empty-append commits)
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      // world-max + 1, not pin + 1 — see deleteWhere
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      tip.withColumn("snap_id", lit(newSnap))
-        .unionByName(files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, "append", ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      graft.Fixtures.deleteRecursively(root)
-  }
-}
-
-/** Which replacement semantics an `INSERT OVERWRITE` commit applies. */
 private[lake] sealed trait LakeWriteMode
 private[lake] object LakeWriteMode {
   case object Append extends LakeWriteMode
   case object Truncate extends LakeWriteMode
   case class OverwriteWhere(filters: Array[Filter]) extends LakeWriteMode
   case object DynamicOverwrite extends LakeWriteMode
+  /** `scanned` is read at COMMIT time: runtime group filtering shrinks
+    * the scan's file set after build. `command` names the op
+    * (`cow_<command>`).
+    */
+  case class CopyOnWrite(scanned: () => Seq[String], command: String)
+      extends LakeWriteMode
 }
 
-/** The OVERWRITE write: same executor-side parquet writers as the
-  * append, but the commit REPLACES part or all of the tip —
-  *
-  *  - [[LakeWriteMode.Truncate]]: nothing carries (data AND delete
-  *    entries — a truncated table has nothing left for deletes to
-  *    apply to);
-  *  - [[LakeWriteMode.OverwriteWhere]]: data files whose Hive partition
-  *    tuple matches the static PARTITION spec are dropped; everything
-  *    else (including delete files — still live against the carried
-  *    data, inert against the new files by the sequence rule) carries;
-  *  - [[LakeWriteMode.DynamicOverwrite]]: the replaced set is exactly
-  *    the partition tuples the WRITTEN files landed in.
-  *
-  * One CAS snapshot either way; history stays time-travelable.
+/** The one lake Write: clustered by the partition columns (so a task holds
+  * one open file per partition it owns — the write shape a real table
+  * format requests at 100 TB), executed by parquet writers on the
+  * executors, committed on the driver as ONE CAS snapshot
+  * ([[LakeCommit.commitSnapshot]]) shaped by `mode`. History stays
+  * time-travelable.
   */
-private[lake] class LakeOverwriteWrite(
+private[lake] class LakeWrite(
     resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType,
     mode: LakeWriteMode)
     extends org.apache.spark.sql.connector.write.Write
@@ -825,8 +718,16 @@ private[lake] class LakeOverwriteWrite(
   import org.apache.spark.sql.connector.distributions.Distributions
   import org.apache.spark.sql.connector.expressions.Expressions
 
+  private val op = mode match {
+    case LakeWriteMode.Append => "append"
+    case LakeWriteMode.Truncate => "truncate_overwrite"
+    case _: LakeWriteMode.OverwriteWhere => "overwrite"
+    case LakeWriteMode.DynamicOverwrite => "dynamic_overwrite"
+    case LakeWriteMode.CopyOnWrite(_, command) => s"cow_$command"
+  }
+
   override def description(): String =
-    s"graft-lake $mode on ${ctx.table}@v${ctx.version}"
+    s"graft-lake $op on ${ctx.table}@v${ctx.version}"
 
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
@@ -838,7 +739,7 @@ private[lake] class LakeOverwriteWrite(
     Array.empty
 
   override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakeoverwrite")
+    private val root = graft.Fixtures.tempDir("graft_lakewrite")
     private val dataDir = root.resolve("data").toString
 
     override def createBatchWriterFactory(
@@ -846,72 +747,30 @@ private[lake] class LakeOverwriteWrite(
       new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
+      // zero files is a legal commit (an empty INSERT/CTAS SELECT still
+      // commits a snapshot, like Iceberg's empty-append commits)
       val files = messages.flatMap {
         case m: LakeCommitMessage => m.files
       }.toSeq
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      // metadata-scale: one row per tip entry, partition tuples parsed
-      // from the paths exactly as the reader parses them
-      val tipRows = tip
-        .select($"content", $"file", $"base", $"seq", $"key_col")
-        .as[(String, String, String, Long, String)].collect()
-      val dynParts: Set[Map[String, String]] =
-        if (mode == LakeWriteMode.DynamicOverwrite)
-          files.map(f => LakeResolver.partValuesOf(dataDir, f)).toSet
-        else Set.empty
-      def replaced(file: String, base: String): Boolean = mode match {
-        case LakeWriteMode.Truncate => true
+      // partition tuples parsed from the paths exactly as the reader does
+      def partOf(e: LakeEntry) = LakeResolver.partValuesOf(e.base, e.file)
+      // the tip DATA entries the written files replace (None: the whole
+      // tip, delete entries included)
+      val replaced: Option[LakeEntry => Boolean] = mode match {
+        case LakeWriteMode.Append => Some(_ => false)
+        case LakeWriteMode.Truncate => None
         case LakeWriteMode.OverwriteWhere(fs) =>
-          val pv = LakeResolver.partValuesOf(base, file)
-          fs.forall(LakeFilters.evalPartitionFilter(_, pv))
+          Some(e => fs.forall(LakeFilters.evalPartitionFilter(_, partOf(e))))
         case LakeWriteMode.DynamicOverwrite =>
-          dynParts.contains(LakeResolver.partValuesOf(base, file))
-        case LakeWriteMode.Append => false
+          val written = files.map(LakeResolver.partValuesOf(dataDir, _)).toSet
+          Some(e => written.contains(partOf(e)))
+        case LakeWriteMode.CopyOnWrite(scanned, _) =>
+          val gone = scanned().toSet
+          Some(e => gone.contains(e.file))
       }
-      val carriedRows = tipRows.filter { case (c, f, b, _, _) =>
-        if (mode == LakeWriteMode.Truncate) false
-        else c != "data" || !replaced(f, b)
-      }.toSeq
-      val opName = mode match {
-        case LakeWriteMode.Truncate => "truncate_overwrite"
-        case _: LakeWriteMode.OverwriteWhere => "overwrite"
-        case LakeWriteMode.DynamicOverwrite => "dynamic_overwrite"
-        case LakeWriteMode.Append => "append"
-      }
-      val carried = carriedRows
-        .toDF("content", "file", "base", "seq", "key_col")
-        .select(lit(newSnap).as("snap_id"), $"content", $"file", $"base",
-          $"seq", $"key_col")
-      val fresh =
-        if (files.isEmpty) carried.filter(lit(false))
-        else files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col"))
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      carried.unionByName(fresh)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, opName, ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
+      LakeCommit.commitSnapshot(SparkSession.active, ctx, root, op,
+        keep = replaced.map(r => e => e.content != "data" || !r(e)),
+        add = seq => files.map(LakeEntry("data", _, dataDir, seq, "")))
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -964,91 +823,12 @@ private[lake] class LakeRowLevelOperation(
       override def build(): org.apache.spark.sql.connector.write.Write =
         // plannedFiles is read lazily at COMMIT time: runtime group
         // filtering mutates the scan's file set after build
-        new LakeReplaceWrite(resolved, ctx, info.schema(),
-          () => opScan.map(_.plannedFiles)
-            .getOrElse(resolved.files.map(_.path)),
-          cmd.toString.toLowerCase)
+        new LakeWrite(resolved, ctx, info.schema(),
+          LakeWriteMode.CopyOnWrite(
+            () => opScan.map(_.plannedFiles)
+              .getOrElse(resolved.files.map(_.path)),
+            cmd.toString.toLowerCase))
     }
-}
-
-/** The copy-on-write REPLACE write: same executor-side parquet writers as
-  * the append, but the commit swaps the scanned data files out for the
-  * written ones instead of adding on top.
-  */
-private[lake] class LakeReplaceWrite(
-    resolved: ResolvedLakeTable, ctx: LakeMutationCtx, schema: StructType,
-    replacedFiles: () => Seq[String], op: String)
-    extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-  import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.connector.distributions.Distributions
-  import org.apache.spark.sql.connector.expressions.Expressions
-
-  override def description(): String =
-    s"graft-lake $op (copy-on-write) on ${ctx.table}@v${ctx.version}"
-
-  override def requiredDistribution()
-      : org.apache.spark.sql.connector.distributions.Distribution =
-    if (resolved.partitionCols.isEmpty) Distributions.unspecified()
-    else Distributions.clustered(
-      resolved.partitionCols.map(c => Expressions.identity(c)).toArray)
-  override def requiredOrdering()
-      : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array.empty
-
-  override def toBatch: BatchWrite = new BatchWrite {
-    private val root = graft.Fixtures.tempDir("graft_lakecow")
-    private val dataDir = root.resolve("data").toString
-
-    override def createBatchWriterFactory(
-        info: PhysicalWriteInfo): DataWriterFactory =
-      new LakeWriterFactory(schema, resolved.partitionCols.toArray, dataDir)
-
-    override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val s = SparkSession.active
-      import s.implicits._
-      import org.apache.spark.sql.functions.lit
-      val files = messages.flatMap {
-        case m: LakeCommitMessage => m.files
-      }.toSeq
-      val replaced = replacedFiles().toSet
-      val man = LakeFilters.normalizedManifests(s, ctx.metaRoot)
-      val tip = man.filter($"snap_id" === ctx.snapId)
-      val newSeq = tip.agg(org.apache.spark.sql.functions.max($"seq"))
-        .as[Option[Long]].head().getOrElse(0L) + 1L
-      // world-max + 1, not pin + 1 — see deleteWhere
-      val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
-      val newSnap = snaps.agg(org.apache.spark.sql.functions.max($"snap_id"))
-        .as[Long].head() + 1L
-      val carried = tip.filter(!($"content" === "data" &&
-        $"file".isin(replaced.toSeq: _*)))
-        .withColumn("snap_id", lit(newSnap))
-      val fresh =
-        if (files.isEmpty) carried.filter(lit(false)) // a delete-all group
-        else files.toDF("file").select(
-          lit(newSnap).as("snap_id"), lit("data").as("content"), $"file",
-          lit(dataDir).as("base"), lit(newSeq).as("seq"),
-          lit("").as("key_col"))
-      // ONLY the new snapshot's rows — history stays in the parent chain
-      carried.unionByName(fresh)
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
-        .unionByName(Seq((newSnap, s"cow_$op", ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      graft.operators.PipelineOps.catalogCommit(
-        s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
-    }
-
-    override def abort(messages: Array[WriterCommitMessage]): Unit =
-      graft.Fixtures.deleteRecursively(root)
-  }
 }
 
 private[lake] case class LakeCommitMessage(files: Seq[String])
@@ -1198,29 +978,17 @@ class GraftLakeCatalog
   }
   override def name(): String = catName
 
-  private def logRows(s: SparkSession): Seq[(Long, String, String, Long)] = {
-    import s.implicits._
-    s.read.parquet(s"$catalogRoot/catalog_log")
-      .select($"version", $"table_name", $"meta_root", $"snap_id")
-      .as[(Long, String, String, Long)].collect().toIndexedSeq
-  }
-
-  /** Latest pointer-log row for `name`. A row with an EMPTY meta_root is
-    * a DROP tombstone: the name resolves as absent at the tip while
-    * older versions stay time-travelable.
-    */
-  private def latest(
-      s: SparkSession, name: String): Option[(Long, String, Long)] =
-    logRows(s).filter(_._2 == name) match {
-      case rows if rows.isEmpty => None
-      case rows => val r = rows.maxBy(_._1); Some((r._1, r._3, r._4))
-    }
+  /** Tip pointer-log row for `name`, tombstones included. */
+  private def latest(s: SparkSession, name: String): Option[CatalogPointer] =
+    LakeCommit.catalogPointer(s, catalogRoot, name, None)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val s = SparkSession.active
-    logRows(s).map(_._2).distinct.sorted
-      .filter(t => latest(s, t).exists(_._2.nonEmpty))
-      .map(t => Identifier.of(Array.empty, t)).toArray
+    import s.implicits._
+    s.read.parquet(s"$catalogRoot/catalog_log").select($"table_name")
+      .as[String].collect().distinct.sorted
+      .filter(t => latest(s, t).exists(!_.dropped))
+      .map(t => Identifier.of(Array.empty, t))
   }
 
   override def loadTable(ident: Identifier): Table = load(ident, None)
@@ -1239,8 +1007,8 @@ class GraftLakeCatalog
     val s = SparkSession.active
     if (ident.namespace().length == 1 && MetaTables.contains(ident.name)) {
       val parent = ident.namespace()(0)
-      val (_, metaRoot, _) = latest(s, parent).filter(_._2.nonEmpty)
-        .getOrElse(throw new NoSuchTableException(ident))
+      val metaRoot = latest(s, parent).filterNot(_.dropped)
+        .getOrElse(throw new NoSuchTableException(ident)).metaRoot
       // `.manifests` spans the commit chain (each root carries only its
       // own snapshot's rows); snapshots/refs_log are complete at the tip
       val dirs = (if (ident.name == "manifests")
@@ -1250,25 +1018,20 @@ class GraftLakeCatalog
         .filter(d => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
       if (dirs.isEmpty) throw new NoSuchTableException(ident)
       val files = dirs.flatMap(d => s.read.parquet(d).inputFiles)
-        .map(LakeResolver.normLocal).sorted.toIndexedSeq
+        .map(LakeIndex.normPath).sorted.toIndexedSeq
       val schema = s.read.parquet(dirs.head).schema
       return new GraftLakeTable(ResolvedLakeTable(
         s"$parent.${ident.name}", schema, Seq.empty, Map.empty,
         files.map(f => LakeFileSpec(f, 0L, Map.empty, Map.empty, null, null)),
         "", Array.empty, Array.empty, None, "l_orderkey"))
     }
-    val rows = logRows(s).filter(_._2 == ident.name)
-    if (rows.isEmpty) throw new NoSuchTableException(ident)
-    val hit = rows.filter(r => asOf.forall(r._1 <= _))
-    require(hit.nonEmpty,
-      s"${ident.name} has no version ≤ ${asOf.get} " +
-        s"(have ${rows.map(_._1).sorted.mkString(",")})")
-    val (ver, metaRoot, snap) = { val r = hit.maxBy(_._1); (r._1, r._3, r._4) }
-    if (metaRoot.isEmpty) throw new NoSuchTableException(ident) // tombstoned
+    val p = LakeCommit.catalogPointer(s, catalogRoot, ident.name, asOf)
+      .filterNot(_.dropped)
+      .getOrElse(throw new NoSuchTableException(ident))
     val resolved = LakeResolver.resolve(s,
-      Map("metaRoot" -> metaRoot, "snapshot" -> snap.toString))
-    new GraftLakeTable(resolved,
-      Some(LakeMutationCtx(catalogRoot, ident.name, ver, metaRoot, snap)))
+      Map("metaRoot" -> p.metaRoot, "snapshot" -> p.snapId.toString))
+    new GraftLakeTable(resolved, Some(LakeMutationCtx(
+      catalogRoot, ident.name, p.version, p.metaRoot, p.snapId)))
   }
 
   /** CREATE TABLE / CTAS (VERDICT r16 #4): bootstrap a fresh metadata
@@ -1289,7 +1052,7 @@ class GraftLakeCatalog
     val s = SparkSession.active
     import s.implicits._
     val prior = latest(s, ident.name)
-    if (prior.exists(_._2.nonEmpty))
+    if (prior.exists(!_.dropped))
       throw new org.apache.spark.sql.catalyst.analysis
         .TableAlreadyExistsException(ident)
     val partCols: Seq[String] = partitions.toSeq.map {
@@ -1317,10 +1080,10 @@ class GraftLakeCatalog
       .coalesce(1).write.parquet(root.resolve("manifests").toString)
     Seq((0L, "create", -1L)).toDF("snap_id", "op", "parent_id")
       .coalesce(1).write.parquet(root.resolve("snapshots").toString)
-    graft.operators.PipelineOps.catalogCommit(
+    LakeCommit.catalogCommit(
       s, s"$catalogRoot/catalog_log", ident.name,
       // CAS from the tombstone version when re-creating a dropped name
-      expectedVersion = prior.map(_._1).getOrElse(-1L),
+      expectedVersion = prior.map(_.version).getOrElse(-1L),
       metaRoot = root.toString, snapId = 0L)
     load(ident, None)
   }
@@ -1339,8 +1102,8 @@ class GraftLakeCatalog
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val s = SparkSession.active
     import s.implicits._
-    val (ver, metaRoot, snap) = latest(s, ident.name)
-      .filter(_._2.nonEmpty)
+    val CatalogPointer(ver, metaRoot, snap) = latest(s, ident.name)
+      .filterNot(_.dropped)
       .getOrElse(throw new NoSuchTableException(ident))
     val tsDir = s"$metaRoot/tableschema"
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(tsDir)),
@@ -1385,7 +1148,7 @@ class GraftLakeCatalog
       (n, t, false, cur.length.toLong + i) })
       .toDF("name", "dtype", "is_part", "ord").coalesce(1)
       .write.parquet(newRoot.resolve("tableschema").toString)
-    graft.operators.PipelineOps.catalogCommit(
+    LakeCommit.catalogCommit(
       s, s"$catalogRoot/catalog_log", ident.name,
       expectedVersion = ver, metaRoot = newRoot.toString, snapId = snap)
     load(ident, None)
@@ -1399,12 +1162,12 @@ class GraftLakeCatalog
     */
   override def dropTable(ident: Identifier): Boolean = {
     val s = SparkSession.active
-    latest(s, ident.name).filter(_._2.nonEmpty) match {
+    latest(s, ident.name).filterNot(_.dropped) match {
       case None => false
-      case Some((ver, _, _)) =>
-        graft.operators.PipelineOps.catalogCommit(
+      case Some(p) =>
+        LakeCommit.catalogCommit(
           s, s"$catalogRoot/catalog_log", ident.name,
-          expectedVersion = ver, metaRoot = "", snapId = -1L)
+          expectedVersion = p.version, metaRoot = "", snapId = -1L)
         true
     }
   }
@@ -1429,6 +1192,7 @@ private[lake] class GraftLakeScanBuilder(
     // key-equality probes prune files through the snapshot's bloom sidecar;
     // bloom admits false positives, so the filter STAYS residual (Spark
     // re-evaluates it) while the file list shrinks to the matched set
+    def bloomKeys(f: Filter) = LakeFilters.keyKeys(f, table.indexCol)
     val probes = rest.flatMap(bloomKeys).flatten.distinct
     val bloomUsed = probes.nonEmpty && table.idxPath.nonEmpty
     if (bloomUsed) {
@@ -1476,21 +1240,6 @@ private[lake] class GraftLakeScanBuilder(
     case IsNotNull(a) => pv.contains(a)
     case And(l, r) => evalPart(l, pv) && evalPart(r, pv)
     case _ => true
-  }
-
-  /** Long keys of an equality probe on the indexed column, if this filter
-    * is one (`k = v`, `k IN (...)`).
-    */
-  private def bloomKeys(f: Filter): Option[Seq[Long]] = f match {
-    case EqualTo(a, v: Long) if a == table.indexCol => Some(Seq(v))
-    case EqualTo(a, v: Int) if a == table.indexCol => Some(Seq(v.toLong))
-    case In(a, vs) if a == table.indexCol &&
-        vs.forall(v => v.isInstanceOf[Long] || v.isInstanceOf[Int]) =>
-      Some(vs.toSeq.map {
-        case l: Long => l
-        case i: Int => i.toLong
-      })
-    case _ => None
   }
 }
 

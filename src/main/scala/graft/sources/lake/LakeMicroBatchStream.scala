@@ -51,19 +51,8 @@ private[lake] class GraftLakeMicroBatchStream(
       .select($"snap_id", $"parent_id").as[(Long, Long)].collect().toIndexedSeq
   }
 
-  private def head(): Long = {
-    val s = spark
-    import s.implicits._
-    ref match {
-      case Some(r) =>
-        val heads = s.read.parquet(s"$metaRoot/refs_log")
-          .filter($"ref" === r).select($"step", $"snap_id")
-          .as[(Long, Long)].collect()
-        require(heads.nonEmpty, s"graft-lake stream: unknown ref $r")
-        heads.maxBy(_._1)._2
-      case None => snapshots().map(_._1).max
-    }
-  }
+  private def head(): Long =
+    ref.fold(snapshots().map(_._1).max)(LakeResolver.refHead(spark, metaRoot, _))
 
   private def genesis(): Long = snapshots().map(_._1).min
 
@@ -115,8 +104,8 @@ private[lake] class GraftLakeMicroBatchStream(
       .select($"snap_id", $"content", $"file", $"base")
       .as[(Long, String, String, String)].collect()
     def rel(f: String, b: String): String =
-      java.nio.file.Paths.get(LakeResolver.normLocal(b))
-        .relativize(java.nio.file.Paths.get(LakeResolver.normLocal(f)))
+      java.nio.file.Paths.get(LakeIndex.normPath(b))
+        .relativize(java.nio.file.Paths.get(LakeIndex.normPath(f)))
         .toString
     val bySnap = man.groupBy(_._1)
     var prev = from
@@ -136,7 +125,7 @@ private[lake] class GraftLakeMicroBatchStream(
           "changelog for row-level deltas")
       val out = cm.collect {
         case (_, "data", f, b) if !prevData(rel(f, b)) =>
-          (LakeResolver.normLocal(b), LakeResolver.normLocal(f))
+          (LakeIndex.normPath(b), LakeIndex.normPath(f))
       }
       prev = snap
       out

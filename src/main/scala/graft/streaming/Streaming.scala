@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.core.Chunker
 import graft.operators.Chunking
+import graft.sources.lake.LakeIndex
 
 /** One byte segment of a streaming blob. `seq` is the dense 0-based segment
   * number within the blob (0, 1, 2, …); `last` marks end-of-blob (the
@@ -1930,7 +1931,7 @@ object Streaming {
     // STREAMED sidecars over the STREAMED tree
     import s.implicits._
     val probes = P.BloomIdxKeys.toDF("k")
-    val files = P.matchedFilesOnly(s, s"$root0/index", probes)
+    val files = LakeIndex.matchedFilesOnly(s, s"$root0/index", probes)
     P.readMatchedFiles(s, s"$root0/data", files.toSeq)
       .join(broadcast(probes), col("l_orderkey") === col("k"))
       .groupBy(col("l_orderkey"))
@@ -1981,7 +1982,7 @@ object Streaming {
                   .collect().map(_.getString(0)).toSet
               else Set.empty
             val fresh = s.read.parquet(dataDir).inputFiles
-              .map(P.normPath).filterNot(indexed.contains).toSeq
+              .map(LakeIndex.normPath).filterNot(indexed.contains).toSeq
             if (fresh.nonEmpty)
               P.bloomIndexRows(s, P.readMatchedFiles(s, dataDir, fresh),
                   fresh.length)
@@ -2231,7 +2232,7 @@ object Streaming {
     */
   def dvReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val P = graft.operators.PipelineOps
-    P.dvApplyOverBase(s, P.normPath(P.bloomIdxDataDir(s, d)),
+    P.dvApplyOverBase(s, LakeIndex.normPath(P.bloomIdxDataDir(s, d)),
         s.read.parquet(dvStreamDir(s, d)))
       .groupBy(col("ship_month"))
       .agg(count(lit(1)).as("n_rows"),

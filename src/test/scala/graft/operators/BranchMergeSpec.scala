@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of branch merge-back ([[PipelineOps
   * .branchMergeDir]] / [[PipelineOps.mergeManifests]]) the monthly
   * readout oracle cannot see: order-independence at manifest grain, the
@@ -37,7 +39,7 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
     val broot = PipelineOps.branchMetaDir(spark, sfDir)
     val sourceFiles = spark.read.parquet(s"$broot/manifests")
       .filter($"snap_id".isin(4L, 6L))
-      .select($"file").as[String].collect().map(PipelineOps.normPath).toSet
+      .select($"file").as[String].collect().map(LakeIndex.normPath).toSet
     // the hotfix rewrite root (its files were written by the branch
     // COMMIT, not by the merge) — everything in snapshot 10 must come
     // from main's head, the audit head, or the hotfix head
@@ -45,7 +47,7 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
     val hotfixBases = merged.map(_._2)
       .filterNot(b => sourceFiles.exists(_.startsWith(b)))
     merged.foreach { case (f, b) =>
-      assert(sourceFiles.contains(PipelineOps.normPath(f)) ||
+      assert(sourceFiles.contains(LakeIndex.normPath(f)) ||
         hotfixBases.contains(b),
         s"merge fabricated a file outside every source manifest: $f")
     }

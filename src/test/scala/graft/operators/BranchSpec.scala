@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of the branch/tag/cherry-pick metadata layer
   * that the DuckDB oracles (which only check served row STATE) cannot
   * see:
@@ -34,7 +36,7 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     val root = PipelineOps.branchMetaDir(spark, sfDir)
     val batch = spark.read.parquet(s"$root/branch_files").inputFiles
-      .map(PipelineOps.normPath).toSet
+      .map(LakeIndex.normPath).toSet
     assert(batch.nonEmpty)
     val f2 = manifestFiles(root, 2L)
     val f4 = manifestFiles(root, 4L)
@@ -50,7 +52,7 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
     // commit already created (shared physically, not duplicated)
     (f7 -- f4).foreach { f =>
       assert(java.nio.file.Files.exists(java.nio.file.Paths.get(f)), f)
-      assert(f.startsWith(PipelineOps.normPath(s"$root/branch_files")), f)
+      assert(f.startsWith(LakeIndex.normPath(s"$root/branch_files")), f)
     }
   }
 
@@ -123,7 +125,7 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
     Seq(6L, 7L).foreach { id =>
       val idxFiles = spark.read.parquet(s"$root/idx$id")
         .select($"file").as[String].collect().toSet
-      assert(idxFiles == manifestFiles(root, id).map(PipelineOps.normPath),
+      assert(idxFiles == manifestFiles(root, id).map(LakeIndex.normPath),
         s"branch snapshot $id index drifted from its manifest")
       // row counts are true per file (the meta-rowcounts contract shape)
       val got = spark.read.parquet(s"$root/idx$id")
@@ -142,8 +144,8 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
       PipelineOps.matchedFilesInIndex(spark, s"$root/idx6", probes)
     assert(matched.nonEmpty && matched.length < total,
       s"no skipping: ${matched.length} of $total")
-    val branchRoot = PipelineOps.normPath(s"$root/branch_files")
-    assert(matched.exists(f => PipelineOps.normPath(f).startsWith(branchRoot)),
+    val branchRoot = LakeIndex.normPath(s"$root/branch_files")
+    assert(matched.exists(f => LakeIndex.normPath(f).startsWith(branchRoot)),
       "no probe routed to the branch root — fresh index rows unexercised")
   }
 

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeCommit
+
 /** Contracts of the catalog pointer layer ([[PipelineOps.catalogDir]] /
-  * [[PipelineOps.catalogCommit]]) the time-travel oracle cannot see: the
+  * [[LakeCommit.catalogCommit]]) the time-travel oracle cannot see: the
   * compare-and-swap commit protocol, append-only history, and that the
   * current pointer resolves to the rollback world.
   */
@@ -36,13 +38,13 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
         s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val ex = intercept[IllegalArgumentException] {
-      PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+      LakeCommit.catalogCommit(spark, scratch, "ship_fact",
         expectedVersion = 0L, metaRoot = "/nowhere", snapId = 9L)
     }
     assert(ex.getMessage.contains("re-resolve"),
       "stale CAS should direct the loser to re-resolve")
     val before = spark.read.parquet(scratch).count()
-    val v = PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+    val v = LakeCommit.catalogCommit(spark, scratch, "ship_fact",
       expectedVersion = 1L,
       metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 4L)
     assert(v == 2L)
@@ -71,14 +73,14 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     // table's pointer moves
     val before = spark.read.parquet(scratch).count()
     intercept[IllegalArgumentException] {
-      PipelineOps.catalogCommitAll(spark, scratch, Seq(
+      LakeCommit.catalogCommitAll(spark, scratch, Seq(
         ("ship_fact", 1L, meta, 4L),
         ("rollup", 5L, meta, 4L))) // rollup doesn't exist: current is -1
     }
     assert(spark.read.parquet(scratch).count() == before,
       "a failed multi-table commit leaked rows")
     // a valid transaction advances BOTH tables in one appended file
-    val vs = PipelineOps.catalogCommitAll(spark, scratch, Seq(
+    val vs = LakeCommit.catalogCommitAll(spark, scratch, Seq(
       ("ship_fact", 1L, meta, 4L),
       ("rollup", -1L, meta, 0L)))
     assert(vs == Seq(2L, 0L))
@@ -102,7 +104,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
     val results = Await.result(Future.sequence((1 to 2).map(_ => Future {
-      try Right(PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+      try Right(LakeCommit.catalogCommit(spark, scratch, "ship_fact",
         expectedVersion = 1L, metaRoot = meta, snapId = 4L))
       catch { case e: IllegalArgumentException => Left(e.getMessage) }
     })), 120.seconds).toList
@@ -151,7 +153,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
           assert(attempts < 500, s"writer $w livelocked")
           val expect = currentVersion() // loser re-resolves, never blind
           try {
-            won += PipelineOps.catalogCommit(spark, scratch, "ship_fact",
+            won += LakeCommit.catalogCommit(spark, scratch, "ship_fact",
               expectedVersion = expect, metaRoot = meta, snapId = 4L)
             done += 1
           } catch {
@@ -185,7 +187,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     spark.read.parquet(
         s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
-    val v = PipelineOps.catalogCommit(spark, scratch, "docs",
+    val v = LakeCommit.catalogCommit(spark, scratch, "docs",
       expectedVersion = -1L,
       metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 0L)
     assert(v == 0L)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Semantic contracts of the snapshot changelog scan
   * ([[PipelineOps.snapshotChangelog]]) beyond the oracle's bit-check:
   * the emitted rows must be a CORRECT DELTA (apply ≡ target snapshot),
@@ -95,7 +97,7 @@ class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
     val baseOf = spark.read.parquet(s"$meta/snapshots")
       .select($"snap_id", $"base").as[(Long, String)].collect().toMap
     def rels(id: Long): Set[String] = {
-      val base = java.nio.file.Paths.get(PipelineOps.normPath(baseOf(id)))
+      val base = java.nio.file.Paths.get(LakeIndex.normPath(baseOf(id)))
       spark.read.parquet(s"$meta/manifests").filter($"snap_id" === id)
         .select($"file").as[String].collect()
         .map(f => base.relativize(java.nio.file.Paths.get(f)).toString).toSet

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of the optimistic-concurrency commit protocol
   * that the DuckDB oracle (which only checks the converged row state)
   * cannot see:
@@ -58,7 +60,7 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
       .count() == 0L, "a deleted key survived the converged tip")
     // survivors ≡ the base tree minus both key sets, row-for-row
     val want = spark.read
-      .parquet(PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+      .parquet(LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
       .join(broadcast(gone), $"l_orderkey" === $"k", "left_anti")
       .select(dataCols.map(col): _*)
     val got = tree.select(dataCols.map(col): _*)
@@ -67,11 +69,11 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
 
   test("commit order does not matter: A-first converges to the same tree") {
     import spark.implicits._
-    val base = PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
+    val base = LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
     // replay the race with A winning: A commits from base, B rebases on A
     val tA = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_a"), base,
       base.stripSuffix("/data") + "/index",
-      PipelineOps.normPath(PipelineOps.mvRollupDir(spark, sfDir)), keysOf(383))
+      LakeIndex.normPath(PipelineOps.mvRollupDir(spark, sfDir)), keysOf(383))
     val tAB = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_b"),
       s"$tA/data", s"$tA/index", s"$tA/mv", keysOf(389))
     val root = PipelineOps.concurrentCommitDir(spark, sfDir)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Semantic contracts for the corpus/CDC diagnostic queries — the DuckDB
   * oracles pin their outputs bit-for-bit; these specs pin that the outputs
   * MEAN what they claim, via independent recomputation with a different
@@ -373,7 +375,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val actual = spark.read.parquet(PipelineOps.compactedDir(spark, sfDir))
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
-      .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+      .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
     assert(idx.keySet == actual.keySet,
       s"compacted index/tree drift: onlyIdx=${idx.keySet -- actual.keySet} " +
         s"onlyTree=${actual.keySet -- idx.keySet}")
@@ -402,7 +404,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val actual = spark.read.parquet(s"$root/data")
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
-      .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+      .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
     assert(idx.keySet == actual.keySet,
       s"index/tree drift: onlyIdx=${idx.keySet -- actual.keySet} " +
         s"onlyTree=${actual.keySet -- idx.keySet}")
@@ -415,11 +417,11 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val root = PipelineOps.deleteExecDir(spark, sfDir)
     val keys = PipelineOps.eraseOrderKeys(spark, sfDir)
     val (matched, total) = PipelineOps.bloomIdxMatchedFilesFor(spark, sfDir, keys)
-    val matchedSet = matched.map(PipelineOps.normPath).toSet
-    val oldData = PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
+    val matchedSet = matched.map(LakeIndex.normPath).toSet
+    val oldData = LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
     val newData = s"$root/data"
     val retained = spark.read.parquet(oldData).inputFiles
-      .map(PipelineOps.normPath).filterNot(matchedSet.contains)
+      .map(LakeIndex.normPath).filterNot(matchedSet.contains)
     assert(retained.nonEmpty && matched.nonEmpty && matched.length < total)
     retained.foreach { f =>
       val dst = java.nio.file.Paths.get(newData + f.stripPrefix(oldData))
@@ -457,7 +459,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val actual = spark.read.parquet(s"$root/data")
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
-      .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+      .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
     assert(idx.keySet == actual.keySet,
       s"post-merge index/tree drift: onlyIdx=${idx.keySet -- actual.keySet} " +
         s"onlyTree=${actual.keySet -- idx.keySet}")
@@ -509,7 +511,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val actual = spark.read.parquet(s"$root/data")
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
-      .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+      .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
     val idxMap = idx.toMap
     assert(idxMap.keySet == actual.keySet,
       s"streamed index/tree drift: onlyIdx=${idxMap.keySet -- actual.keySet} " +
@@ -584,7 +586,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     manifest.foreach { case (id, fs) => assert(fs.nonEmpty, s"empty manifest $id") }
     Seq(0L, 2L, 3L).foreach { k =>
       val opened = PipelineOps.readSnapshot(spark, sfDir, k)
-        .inputFiles.map(PipelineOps.normPath).toSet
+        .inputFiles.map(LakeIndex.normPath).toSet
       assert(opened == manifest(k),
         s"snapshot $k scan drifted from its manifest: " +
           s"extra=${opened -- manifest(k)} missing=${manifest(k) -- opened}")
@@ -605,7 +607,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val actual = spark.read.parquet(s"$root/data")
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
-      .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+      .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
     assert(idx == actual,
       s"wave-2 index/tree drift: onlyIdx=${idx.keySet -- actual.keySet} " +
         s"onlyTree=${actual.keySet -- idx.keySet} " +
@@ -635,7 +637,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
       .join(keys, $"l_orderkey" === $"k", "left_semi")
       .select($"ship_month").distinct().as[String].collect().toSet
     val oldMv = java.nio.file.Paths.get(
-      PipelineOps.normPath(PipelineOps.mvRollupDir(spark, sfDir)))
+      LakeIndex.normPath(PipelineOps.mvRollupDir(spark, sfDir)))
     val newMv = java.nio.file.Paths.get(s"$root/mv")
     import scala.jdk.CollectionConverters._
     val untouched = java.nio.file.Files.list(oldMv).iterator().asScala

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Contracts of the deletion-vector delete form ([[PipelineOps
   * .dvDeleteDir]] / [[PipelineOps.dvMergeBitmaps]] / [[PipelineOps
   * .dvApply]]) the monthly readout oracles cannot see: one vector per
@@ -102,9 +104,9 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val treeFiles = spark.read.parquet(base).inputFiles
-      .map(PipelineOps.normPath).toSet
+      .map(LakeIndex.normPath).toSet
     val served = PipelineOps.dvServeRead(spark, sfDir, "dv").inputFiles
-      .map(PipelineOps.normPath)
+      .map(LakeIndex.normPath)
       .filterNot(_.contains("/graft_dv")) // the sidecar itself
     assert(served.nonEmpty && served.forall(treeFiles.contains),
       "DV serve read files outside the original tree")
@@ -122,9 +124,9 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val oldData = java.nio.file.Paths.get(base)
     val touched = spark.read.parquet(s"$root/dv")
-      .select($"file").as[String].collect().map(PipelineOps.normPath).toSet
+      .select($"file").as[String].collect().map(LakeIndex.normPath).toSet
     // untouched files survive by link; touched files' relpaths are gone
-    spark.read.parquet(base).inputFiles.map(PipelineOps.normPath)
+    spark.read.parquet(base).inputFiles.map(LakeIndex.normPath)
       .foreach { f =>
         val dst = java.nio.file.Paths.get(s"$croot/data").resolve(
           oldData.relativize(java.nio.file.Paths.get(f)).toString)

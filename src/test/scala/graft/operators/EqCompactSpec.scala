@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Lifecycle contracts of equality-delete compaction
   * ([[PipelineOps.eqCompactDir]]) the monthly-readout oracle cannot see:
   * WHICH files were rewritten vs retained, that the sequence rule kept
@@ -45,9 +47,9 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     val mg = PipelineOps.eqMergeDir(spark, sfDir)
     val expected =
       spark.read.parquet(s"$w1/eq_deletes").inputFiles
-        .map(f => (PipelineOps.normPath(f), 1L)).toSet ++
+        .map(f => (LakeIndex.normPath(f), 1L)).toSet ++
       spark.read.parquet(s"$mg/eq_deletes").inputFiles
-        .map(f => (PipelineOps.normPath(f), 2L)).toSet
+        .map(f => (LakeIndex.normPath(f), 2L)).toSet
     val retired = spark.read.parquet(s"$root/retired_deletes")
       .as[(String, Long)].collect().toSet
     assert(retired == expected, "retired set diverges from the delete files")
@@ -61,7 +63,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     val mg = PipelineOps.eqMergeDir(spark, sfDir)
     val batchDir = java.nio.file.Paths.get(
-      PipelineOps.normPath(s"$mg/batch"))
+      LakeIndex.normPath(s"$mg/batch"))
     val batchRows = plan.filter(_._2 == "batch")
     assert(batchRows.nonEmpty && batchRows.forall(_._3 == "retained_newer"))
     // the counterfactual premise: those files' keys ARE in a delete file
@@ -82,7 +84,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     // the seq-0 tree: the path the delete write recorded (pinned against
     // the bloom layout by EqDeleteSpec)
-    val oldData = java.nio.file.Paths.get(PipelineOps.normPath(
+    val oldData = java.nio.file.Paths.get(LakeIndex.normPath(
       java.nio.file.Files.readString(java.nio.file.Paths.get(
         s"${PipelineOps.eqDeleteDir(spark, sfDir)}/data_base.txt"))))
     val baseRows = plan.filter(_._2 == "base")
@@ -96,7 +98,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
       .select(PipelineOps.metaFilePath.as("file"), $"l_orderkey")
       .join(deleteKeys, $"l_orderkey" === $"k", "left_semi")
       .select($"file").distinct().as[String].collect()
-      .map(PipelineOps.normPath).toSet
+      .map(LakeIndex.normPath).toSet
     assert(hitFiles == rewritten.toSet,
       "a file was rewritten without holding any matching row")
     // every retained base file holds NONE, and survived by link
@@ -120,7 +122,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     val srcNames = plan.map(t =>
       java.nio.file.Paths.get(t._1).getFileName.toString).toSet
     val outLeg = spark.read.parquet(s"$root/data").inputFiles
-      .map(PipelineOps.normPath)
+      .map(LakeIndex.normPath)
       .filterNot(f =>
         srcNames(java.nio.file.Paths.get(f).getFileName.toString))
     assert(outLeg.nonEmpty, "rewrite produced no files")

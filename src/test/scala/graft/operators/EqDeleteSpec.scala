@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of the EQUALITY-delete strategy (Iceberg v2
   * equality delete files) that the DuckDB oracles cannot see:
   *
@@ -31,7 +33,7 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     val root = PipelineOps.eqDeleteDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
-    assert(base == PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+    assert(base == LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
     // the snapshot root holds the delete file and the pointer, nothing else
     val entries = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(entries == Set("eq_deletes", "data_base.txt"), entries.toString)

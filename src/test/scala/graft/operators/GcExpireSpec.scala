@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of snapshot expiration + orphan GC
   * ([[PipelineOps.gcExpireDir]]) that the state-readout oracle cannot
   * see: WHICH files died and which survived. The clone's refcount
@@ -74,7 +76,7 @@ class GcExpireSpec extends AnyFunSuite with graft.SharedSpark {
     val orig = spark.read.parquet(s"$meta/manifests")
       .as[(Long, String)].collect().filter(t => live(t._1))
       .map { case (sid, f) =>
-        val base = java.nio.file.Paths.get(PipelineOps.normPath(baseOf(sid)))
+        val base = java.nio.file.Paths.get(LakeIndex.normPath(baseOf(sid)))
         (sid, base.relativize(java.nio.file.Paths.get(f)).toString) -> f
       }.toMap
     assert(cloneLive.nonEmpty && cloneLive.size == orig.size)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of the merge-on-read delete lifecycle
   * (position-delete sidecars → scan-time apply → compaction fold-in) that
   * the DuckDB oracles cannot see, because they only check row STATE:
@@ -27,7 +29,7 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     // the snapshot's data pointer IS the original bloom-indexed tree
-    assert(base == PipelineOps.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+    assert(base == LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
     // nothing under the MOR root but the sidecar and the pointer
     val entries = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(entries == Set("deletes", "data_base.txt"), entries.toString)
@@ -112,7 +114,7 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     val delFiles = spark.read.parquet(s"$morRoot/deletes")
       .select($"file").distinct().as[String].collect().toSet
     val baseFiles = spark.read.parquet(base).inputFiles
-      .map(PipelineOps.normPath)
+      .map(LakeIndex.normPath)
     assert(delFiles.nonEmpty && delFiles.size < baseFiles.length,
       s"degenerate layout: ${delFiles.size} of ${baseFiles.length}")
     baseFiles.filterNot(delFiles.contains).foreach { f =>

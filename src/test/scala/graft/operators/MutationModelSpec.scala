@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Model-based randomized tests for the copy-on-write mutation engine
   * ([[PipelineOps.applyMutation]]): for seeded random (base tree, delete
   * key set, upsert batch) triples — including keys matching nothing, a
@@ -121,7 +123,7 @@ class MutationModelSpec extends AnyFunSuite with graft.SharedSpark {
       val actual = spark.read.parquet(s"$out/data")
         .select(input_file_name().as("f")).groupBy($"f").count()
         .as[(String, Long)].collect()
-        .map { case (f, n) => PipelineOps.normPath(f) -> n }.toMap
+        .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
       assert(idx == actual, s"seed $seed: index/tree drift")
 
       // 3. MV ≡ from-scratch rollup of the model

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Contracts of the mutation writer's file-size targeting
   * ([[PipelineOps.writeMonthTargeted]] / [[PipelineOps.applyMutation]]'s
   * step 3): per-file row bound, manifest count O(months ×
@@ -32,7 +34,7 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
     // retained files share their inode with the source tree
     val src = spark.read.parquet(PipelineOps.bloomIdxDataDir(spark, sfDir))
       .inputFiles.map(f =>
-        java.nio.file.Paths.get(PipelineOps.normPath(f)).getFileName.toString)
+        java.nio.file.Paths.get(LakeIndex.normPath(f)).getFileName.toString)
       .toSet
     data.select(PipelineOps.metaFilePath.as("file"), $"ship_month")
       .groupBy($"file", $"ship_month").agg(count(lit(1)).as("n"))

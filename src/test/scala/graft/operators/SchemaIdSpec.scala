@@ -4,6 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Contracts of column-ID schema evolution ([[PipelineOps.schemaIdDir]] /
   * [[PipelineOps.idMappedRelease]]) the release-report oracle cannot see:
   * that old files are physically unrewritten (old footer names and INT32
@@ -27,8 +29,8 @@ class SchemaIdSpec extends AnyFunSuite with graft.SharedSpark {
     assert(byName("score") == IntegerType,
       "r1 score widened on disk — the widen rewrote data")
     // and the mapped serve reads exactly those files, in place
-    val rawFiles = raw.inputFiles.map(PipelineOps.normPath).toSet
-    val servedFiles = served.inputFiles.map(PipelineOps.normPath).toSet
+    val rawFiles = raw.inputFiles.map(LakeIndex.normPath).toSet
+    val servedFiles = served.inputFiles.map(LakeIndex.normPath).toSet
     assert(servedFiles == rawFiles, "mapped scan reads different files")
   }
 
@@ -88,7 +90,7 @@ class SchemaIdSpec extends AnyFunSuite with graft.SharedSpark {
     val proot = PipelineOps.schemaPromoDir(spark, sfDir)
     val p1File = java.nio.file.Paths.get(
       spark.read.parquet(s"$proot/data/release=p1")
-        .inputFiles.map(PipelineOps.normPath).head)
+        .inputFiles.map(LakeIndex.normPath).head)
     val before = java.nio.file.Files.readAllBytes(p1File)
     val served = PipelineOps.promoMappedRelease(spark, sfDir, "p1")
     served.count()

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeIndex
+
 /** Structural contracts of the write-audit-publish lifecycle
   * ([[PipelineOps.wapDir]]) the audit/publish oracles can't see: the
   * failed candidate is physically abandoned, and the GC of its staged
@@ -29,7 +31,7 @@ class WapSpec extends AnyFunSuite with graft.SharedSpark {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(bBase)),
       s"abandoned staged tree survived GC: $bBase")
     // the published pointer is the good snapshot
-    assert(gBase == PipelineOps.normPath(
+    assert(gBase == LakeIndex.normPath(
       s"${PipelineOps.mergeExecDir(spark, sfDir)}/data"))
   }
 

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Chunker
+import graft.operators.Chunking
 
 class BinaryFilesSpec extends AnyFunSuite with graft.SharedSpark {
 
@@ -24,7 +25,7 @@ class BinaryFilesSpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     val dir = writeCorpus()
     try {
-      val chunks = BinaryFiles.chunkFiles(spark, dir.toString, "fastcdc", 512, 42L,
+      val chunks = Chunking.chunkFiles(spark, dir.toString, "fastcdc", 512, 42L,
         glob = Some("*.bin"))
       val perFile = chunks.select($"id", $"chunk_idx", $"offset", $"length")
         .as[(String, Int, Int, Int)].collect()
@@ -38,7 +39,7 @@ class BinaryFilesSpec extends AnyFunSuite with graft.SharedSpark {
       }
 
       // shared 4 KiB prefix ⇒ cross-file duplicate chunks ⇒ coeff < 1
-      val m = BinaryFiles.dedupMetrics(spark, dir.toString, "fastcdc", 512, 42L)
+      val m = Chunking.dedupMetrics(spark, dir.toString, "fastcdc", 512, 42L)
         .select($"dedup_coeff").as[Double].head()
       assert(m < 0.9, s"expected cross-file dedup, coeff=$m")
     } finally {

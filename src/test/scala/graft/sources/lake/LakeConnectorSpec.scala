@@ -74,7 +74,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       .plannedFiles
     val (expected, _) = PipelineOps.matchedFilesInIndex(
       spark, s"$root/idx$auditId", probes.toDF("k"))
-    assert(pruned.toSet == expected.map(PipelineOps.normPath).toSet,
+    assert(pruned.toSet == expected.map(LakeIndex.normPath).toSet,
       "pruned set != the index-matched set")
     assert(pruned.size < all.size, "bloom probe did not prune")
   }
@@ -138,11 +138,11 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       .toDF("l_orderkey", "v").coalesce(1)
       .write.mode("overwrite").parquet(dataDir)
     val dataFile = spark.read.parquet(dataDir).inputFiles
-      .map(PipelineOps.normPath).head
+      .map(LakeIndex.normPath).head
     Seq((1L, 3L)).toDF("k", "seq_del").coalesce(1)
       .write.mode("overwrite").parquet(root.resolve("eq").toString)
     val eqFile = spark.read.parquet(root.resolve("eq").toString)
-      .inputFiles.map(PipelineOps.normPath).head
+      .inputFiles.map(LakeIndex.normPath).head
     def world(fileSeq: Long): String = {
       val m = root.resolve(s"meta_$fileSeq")
       Seq((0L, "data", dataFile, dataDir, fileSeq, ""),
@@ -170,7 +170,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
     val root = PipelineOps.schemaIdDir(spark, sfDir)
     val before = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(spark.read.parquet(s"$root/data/release=r1")
-        .inputFiles.map(PipelineOps.normPath).head))
+        .inputFiles.map(LakeIndex.normPath).head))
     val served = spark.read.format("graft-lake")
       .option("schemaRoot", root).option("schemaVersion", "2").load()
     // the v2 view serves char_count/bigint score; lang is never requested
@@ -184,7 +184,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       "connector schema serve drifted from idMappedRelease")
     val after = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(spark.read.parquet(s"$root/data/release=r1")
-        .inputFiles.map(PipelineOps.normPath).head))
+        .inputFiles.map(LakeIndex.normPath).head))
     assert(java.util.Arrays.equals(before, after), "old footer rewritten")
   }
 

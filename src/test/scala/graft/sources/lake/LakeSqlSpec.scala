@@ -2,6 +2,8 @@ package graft.sources.lake
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -94,12 +96,23 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     spark.sql("SELECT count(*) FROM graft_lake.ship_fact").collect() // warm
     val stale = cat.loadTable(ident, "1")
       .asInstanceOf[GraftLakeTable]
+    def commitRoots(): Set[String] = {
+      val ls = java.nio.file.Files.list(
+        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("graft_lakecommit")).toSet
+      finally ls.close()
+    }
+    val rootsBefore = commitRoots()
     val e = intercept[IllegalArgumentException] {
       stale.deleteWhere(Array[org.apache.spark.sql.sources.Filter](
         org.apache.spark.sql.sources.In("l_orderkey", Array(388L))))
     }
     assert(e.getMessage.contains("CAS failed"),
       s"expected a CAS refusal, got: ${e.getMessage}")
+    // the losing commit removes the metadata root it authored
+    val leaked = commitRoots() -- rootsBefore
+    assert(leaked.isEmpty, s"a lost CAS left its metadata root: $leaked")
   }
 
   test("INSERT INTO appends a new snapshot under CAS; time travel keeps " +
@@ -370,7 +383,7 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     val man = LakeFilters.normalizedManifests(spark, metaRoot)
     val tip = man.filter($"snap_id" === snap)
     val v1files = spark.read.parquet(v1root).inputFiles
-      .map(PipelineOps.normPath).toSeq
+      .map(LakeIndex.normPath).toSeq
     assert(v1files.size == 2)
     import org.apache.spark.sql.functions.lit
     man.unionByName(tip.withColumn("snap_id", lit(snap + 1)))
@@ -386,7 +399,7 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
       .coalesce(1)
       .write.parquet(newRoot.resolve("snapshots").toString)
     LakeFilters.carryTableSchema(spark, metaRoot, newRoot)
-    PipelineOps.catalogCommit(spark, s"$catRoot/catalog_log", "evo_t",
+    LakeCommit.catalogCommit(spark, s"$catRoot/catalog_log", "evo_t",
       expectedVersion = ver, metaRoot = newRoot.toString, snapId = snap + 1)
 
     // the MIXED snapshot serves: ints widened to bigint, floats to
@@ -616,5 +629,65 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     spark.sql("CREATE TABLE graft_lake.fresh_t (a BIGINT, b STRING) " +
       "PARTITIONED BY (b)")
     assert(one("SELECT count(*) AS n FROM graft_lake.fresh_t") == 0L)
+  }
+
+  test("every commit kind authors one snapshot: op, parent, id and " +
+      "sequence step by one; equality deletes carry until a full overwrite") {
+    import spark.implicits._
+    val catDir = spark.conf.get("spark.sql.catalog.graft_lake.catalogDir")
+    spark.sql("CREATE TABLE graft_lake.shape_t (l_orderkey BIGINT, a BIGINT, " +
+      "p STRING) PARTITIONED BY (p)")
+    def world(): (String, Long) = spark.read.parquet(s"$catDir/catalog_log")
+      .filter($"table_name" === "shape_t").orderBy($"version".desc)
+      .select($"meta_root", $"snap_id").as[(String, Long)].head()
+    // (statement, dynamic partition overwrite, op, eq_del entry carried)
+    val steps = Seq(
+      ("INSERT INTO graft_lake.shape_t VALUES (1, 10, 'x'), (2, 20, 'y'), " +
+        "(3, 30, 'z')", false, "append", false),
+      ("DELETE FROM graft_lake.shape_t WHERE l_orderkey = 1",
+        false, "eq_delete", true),
+      ("INSERT OVERWRITE graft_lake.shape_t PARTITION (p = 'x') " +
+        "SELECT 4 AS l_orderkey, 40 AS a", false, "overwrite", true),
+      ("INSERT OVERWRITE graft_lake.shape_t VALUES (5, 50, 'y')",
+        true, "dynamic_overwrite", true),
+      ("UPDATE graft_lake.shape_t SET a = a + 1 WHERE l_orderkey = 3",
+        false, "cow_update", true),
+      ("INSERT OVERWRITE graft_lake.shape_t VALUES (6, 60, 'w')",
+        false, "truncate_overwrite", false),
+      ("TRUNCATE TABLE graft_lake.shape_t", false, "truncate", false))
+    var prevSnap = world()._2
+    var prevSeq = 0L
+    var eqFiles = Seq.empty[String]
+    steps.foreach { case (stmt, dynamic, wantOp, carriesEq) =>
+      if (dynamic)
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+      try spark.sql(stmt)
+      finally if (dynamic)
+        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+      val (root, snap) = world()
+      val (op, parent) = spark.read.parquet(s"$root/snapshots")
+        .filter($"snap_id" === snap).select($"op", $"parent_id")
+        .as[(String, Long)].head()
+      assert(op == wantOp, s"$stmt: op $op")
+      assert(snap == prevSnap + 1 && parent == prevSnap,
+        s"$stmt: snapshot $snap with parent $parent after $prevSnap")
+      val entries = LakeFilters.normalizedManifests(spark, root)
+        .filter($"snap_id" === snap).select($"content", $"file", $"seq")
+        .as[(String, String, Long)].collect().toSeq
+      if (wantOp == "truncate") assert(entries.isEmpty, s"$stmt: $entries")
+      else {
+        assert(entries.map(_._3).max == prevSeq + 1,
+          s"$stmt: sequences ${entries.map(_._3)} after $prevSeq")
+        prevSeq += 1
+      }
+      val eqDel = entries.filter(_._1 == "eq_del").map(_._2)
+      if (wantOp == "eq_delete") {
+        assert(eqDel.size == 1, s"$stmt: eq_del entries $eqDel")
+        eqFiles = eqDel
+      }
+      assert(eqDel == (if (carriesEq) eqFiles else Nil),
+        s"$stmt: eq_del entries $eqDel, expected carried=$carriesEq")
+      prevSnap = snap
+    }
   }
 }
