@@ -25,7 +25,7 @@ import graft.Tables
   * equivalence to the core pinned by ChunkingSpec), so every driver query is
   * hash-checked.
   */
-object CdcQueries {
+object CdcQueries extends graft.QueryModule {
 
   private val ExpectedSize = 64
   private val Seed = 42L

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * cluster id, so one task's pair square is bounded by the largest cluster,
   * which K controls.
   */
-object Clustering {
+object Clustering extends graft.QueryRegistry {
   import Portable._
 
   private val K = 8
@@ -280,7 +280,7 @@ object Clustering {
     */
   private val OodCut = 2500000L
 
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- out-of-distribution screen (the data-curation pass before
     // training): every vector's exact quantized squared distance to its
@@ -704,10 +704,4 @@ object Clustering {
     asg.select($"vec_id", $"cid").join(dropped, Seq("vec_id"), "left")
       .select($"vec_id", $"cid", coalesce($"dropped", lit(false)).as("dropped"))
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

@@ -27,7 +27,7 @@ import graft.Tables
   *  - the only brute-force pair scan is `dedup_embedding_cosine`, the exact
   *    baseline against which the LSH variants in Similarity are judged.
   */
-object Dedup {
+object Dedup extends graft.QueryRegistry {
   import Portable._
 
   // ---------------------------------------------------------------- corpus
@@ -324,7 +324,7 @@ object Dedup {
     verifiedPairsW(s, d).select("id1", "id2")
 
   // --------------------------------------------------------------- queries
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- exact dedup: md5 content key, min-id canonical per group. The
     // distributed HashSet of the reference (A1, `ae.rs:80-83`) as a groupBy.
@@ -2182,10 +2182,4 @@ object Dedup {
        |FROM q LEFT JOIN canon c ON c.doc_id = q.doc_id LEFT JOIN near n ON n.doc_id = q.doc_id
        |ORDER BY q.doc_id""".stripMargin
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

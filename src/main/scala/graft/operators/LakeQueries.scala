@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   * equality-delete file simultaneously, applied under the sequence rules
   * by one reader (VERDICT r15 #2).
   */
-object LakeQueries {
-  import PipelineOps.{mergeStateCtes, snapshotMetaDir, branchMetaDir,
-    catalogDir, schemaIdDir, BloomIdxKeys}
+object LakeQueries extends graft.QueryRegistry {
+  import LakeServeQueries.{doubleDeleteServeOracleSql, mergeStateCtes, monthRollup}
+  import LakeFixture.{snapshotMetaDir, branchMetaDir, catalogDir, schemaIdDir,
+    BloomIdxKeys}
 
   /** `spark.read.format("graft-lake")` — resolved via the META-INF
     * services registration; the spec pins the short name resolves.
@@ -68,7 +69,7 @@ object LakeQueries {
       root
     }
 
-  private val defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected val defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- TIME TRAVEL through the connector: the pipeline_time_travel
     // readout (delete_w1 vs delete_w2 epochs, monthly deltas) with both
@@ -90,7 +91,7 @@ object LakeQueries {
           (coalesce($"n2", lit(0L)) - coalesce($"n1", lit(0L))).as("rows_delta"),
           (coalesce($"c2", lit(0L)) - coalesce($"c1", lit(0L))).as("cents_delta"))
         .orderBy($"ship_month")
-    }, Some(PipelineOps.oracleSql("pipeline_time_travel"))),
+    }, Some(LakeServeQueries.oracleSql("pipeline_time_travel"))),
 
     // ---- BRANCH POINT LOOKUPS through the connector:
     // `option("ref", "audit")` resolves the refs_log head, and the
@@ -113,7 +114,7 @@ object LakeQueries {
           sum($"qty").as("sum_qty"),
           sum($"net_cents").as("revenue_cents"))
         .orderBy($"l_orderkey")
-    }, Some(PipelineOps.oracleSql("pipeline_branch_lookup"))),
+    }, Some(LakeServeQueries.oracleSql("pipeline_branch_lookup"))),
 
     // ---- DELETION VECTORS through the connector: the `stable` TAG of the
     // lake world pins the DV-only snapshot; its manifest's content=dv
@@ -121,15 +122,10 @@ object LakeQueries {
     // readers. Judged by pipeline_dv_serve's VERBATIM oracle — the
     // connector read must equal the library dvApply serve row-for-row.
     ("lake_dv_serve", (s, d) => {
-      import s.implicits._
       lake(s).option("metaRoot", LakeFixture.lakeMetaDir(s, d))
         .option("ref", "stable").load()
-        .groupBy($"ship_month")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct($"l_orderkey").as("n_orders"),
-          sum($"net_cents").as("revenue_cents"))
-        .orderBy($"ship_month")
-    }, Some(PipelineOps.oracleSql("pipeline_dv_serve"))),
+        .transform(monthRollup)
+    }, Some(LakeServeQueries.oracleSql("pipeline_dv_serve"))),
 
     // ---- The COMPOSED MULTI-DELETE-FORM read (VERDICT r15 #2): the lake
     // world's tip snapshot carries a DV (wave 271, seq 1), a position
@@ -140,22 +136,9 @@ object LakeQueries {
     // recomputes the converged state from raw, and LakeConnectorSpec pins
     // per-form exactness plus the seq counterfactual.
     ("lake_multi_delete", (s, d) => {
-      import s.implicits._
       lake(s).option("metaRoot", LakeFixture.lakeMetaDir(s, d)).load()
-        .groupBy($"ship_month")
-        .agg(count(lit(1)).as("n_rows"),
-          countDistinct($"l_orderkey").as("n_orders"),
-          sum($"net_cents").as("revenue_cents"))
-        .orderBy($"ship_month")
-    }, Some(
-      """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
-        |  CAST(count(*) AS BIGINT) AS n_rows,
-        |  CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 100) AS BIGINT)) AS BIGINT) AS revenue_cents
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE o_custkey % 271 <> 0 AND o_custkey % 337 <> 0
-        |  AND o_custkey % 293 <> 0
-        |GROUP BY 1 ORDER BY ship_month""".stripMargin)),
+        .transform(monthRollup)
+    }, Some(doubleDeleteServeOracleSql("\n  AND o_custkey % 293 <> 0"))),
 
     // ---- CTAS + DML ROUNDTRIP through the SQL catalog (VERDICT r16 #4
     // gated): a brand-new table is bootstrapped PURELY in SQL — CREATE
@@ -242,7 +225,7 @@ object LakeQueries {
         .select(lit(v).as("version"), $"n_rows", $"n_orders",
           $"sum_qty", $"revenue_cents")
       at(0L).unionByName(at(1L)).orderBy($"version")
-    }, Some(PipelineOps.oracleSql("pipeline_catalog_time_travel"))),
+    }, Some(LakeServeQueries.oracleSql("pipeline_catalog_time_travel"))),
 
     // ---- COLUMN-ID SCHEMA EVOLUTION through the connector: both
     // releases served at schema v2 — rename (n_chars→char_count), widen
@@ -260,7 +243,7 @@ object LakeQueries {
           sum(when($"quality_tier".isNull, 1L).otherwise(0L)).as("n_null_tier"),
           countDistinct($"quality_tier").as("n_tiers"))
         .orderBy($"release")
-    }, Some(PipelineOps.oracleSql("pipeline_schema_rename"))),
+    }, Some(LakeServeQueries.oracleSql("pipeline_schema_rename"))),
 
     // ---- INITIAL DEFAULTS through the connector (schema v3): rows
     // written before region_code existed serve 99 from the reader's
@@ -279,7 +262,7 @@ object LakeQueries {
           sum(when($"quality_tier".isNull, 1L).otherwise(0L))
             .as("n_null_tier"))
         .orderBy($"release")
-    }, Some(PipelineOps.oracleSql("pipeline_schema_default"))),
+    }, Some(LakeServeQueries.oracleSql("pipeline_schema_default"))),
 
     // ---- the TYPE-PROMOTION matrix through the connector: the partition
     // readers widen float→double, decimal(9,2)→decimal(18,4) (unscaled
@@ -289,7 +272,7 @@ object LakeQueries {
     // Verbatim pipeline_schema_promote oracle.
     ("lake_schema_promote", (s, d) => {
       import s.implicits._
-      lake(s).option("schemaRoot", PipelineOps.schemaPromoDir(s, d)).load()
+      lake(s).option("schemaRoot", LakeFixture.schemaPromoDir(s, d)).load()
         .groupBy($"release")
         .agg(count(lit(1)).as("n_docs"),
           round(sum($"weight"), 4).as("sum_weight"),
@@ -299,12 +282,6 @@ object LakeQueries {
           sum($"score").as("sum_score"),
           sum($"flag".cast("long")).as("sum_flag"))
         .orderBy($"release")
-    }, Some(PipelineOps.oracleSql("pipeline_schema_promote")))
+    }, Some(LakeServeQueries.oracleSql("pipeline_schema_promote")))
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

@@ -42,7 +42,7 @@ case class MediaFeatures(
   * codegen'd `substring` before any exchange, and feature extraction reduces
   * each blob to 16 floats inside the scan stage; only the small outputs move.
   */
-object Multimodal {
+object Multimodal extends graft.QueryRegistry {
 
   private val FrameCount = 4
   private val HistBins = 16
@@ -208,7 +208,7 @@ object Multimodal {
     }
   }
 
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- catalog: binary length + typed metadata (pure arithmetic oracle).
     ("mm_media_catalog", (s, d) => {
@@ -597,10 +597,4 @@ object Multimodal {
 
   /** VAD window length in stub-decoded chars (≈2.5 s at 40 ms/char). */
   private[operators] val VadWindowChars = 64
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

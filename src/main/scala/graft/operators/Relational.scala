@@ -29,10 +29,10 @@ import graft.operators.Portable.round
   * scale by PlanQualitySpec) and falls back to a shuffled join at 100×
   * instead of OOMing on a forced build.
   */
-object Relational {
+object Relational extends graft.QueryRegistry {
 
   /** (name, spark query, optional oracle) triples — single source of truth. */
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- Q1-style pricing summary: full-scan partial+final agg, no shuffle
     // beyond 3-group exchange; the canonical map-side-combine showcase.
@@ -2280,10 +2280,4 @@ object Relational {
         |  l AS level_final_u3, b AS trend_final_u3
         |FROM fin ORDER BY event_type""".stripMargin))
   )
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

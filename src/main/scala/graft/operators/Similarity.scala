@@ -27,7 +27,7 @@ import graft.Tables
   * generation via equi-join on (table, signature); IVF probes nprobe=2 of 8
   * partitions → ~1/4 of the corpus scanned per query at this setting.
   */
-object Similarity {
+object Similarity extends graft.QueryRegistry {
   import Portable._
 
   private val NumQueries = 10
@@ -1390,7 +1390,7 @@ object Similarity {
        |    FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
        |  WHERE rank <= $TopK)""".stripMargin
 
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- exact brute-force top-k: the ground truth every ANN variant is
     // judged against. Query set broadcast; corpus never replicated.
@@ -2700,10 +2700,4 @@ object Similarity {
 
   /** Probe counts swept by sim_ivf_probe_sweep. */
   private val ProbeLevels = Seq(1, 2, 4)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

@@ -105,7 +105,7 @@ object Portable {
   * most one aggregation, so they scale linearly with the corpus and keep
   * Catalyst pushdown/pruning intact.
   */
-object TextOps {
+object TextOps extends graft.QueryRegistry {
   import Portable._
 
   private[operators] val Stops = Seq("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
@@ -170,7 +170,7 @@ object TextOps {
   /** Token budget filled by pipeline_budget_fill (quality-first selection). */
   private val TokenBudget = 25000L
 
-  private def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
+  protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- per-document token statistics: counts, distincts, type-token ratio.
     ("text_token_stats", (s, d) => {
@@ -1918,10 +1918,4 @@ object TextOps {
     """CASE WHEN s_en >= greatest(s_de, s_fr, s_es) THEN 'en'
       |       WHEN s_de >= greatest(s_fr, s_es) THEN 'de'
       |       WHEN s_fr >= s_es THEN 'fr' ELSE 'es' END""".stripMargin
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map { case (n, f, _) => n -> f }.toMap
-
-  val oracleSql: Map[String, String] =
-    defs.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

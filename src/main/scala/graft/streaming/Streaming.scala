@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.core.Chunker
-import graft.operators.Chunking
-import graft.sources.lake.LakeIndex
+import graft.operators.{LakeFixture, LakeServeQueries}
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** One byte segment of a streaming blob. `seq` is the dense 0-based segment
   * number within the blob (0, 1, 2, …); `last` marks end-of-blob (the
@@ -171,7 +171,7 @@ case class BlobChunkState(hashes: Map[Long, Int])
   * through the same code paths (Spark's unified API), which is how the specs
   * cross-check streaming output against batch oracles.
   */
-object Streaming {
+object Streaming extends graft.QueryModule {
 
   /** Chunk arriving blobs into the canonical chunk table (streaming version
     * of `Chunking.chunkTable`; same schema + `xxhash64` identity).
@@ -1925,14 +1925,13 @@ object Streaming {
     * like every replay contract.
     */
   def bloomReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val P = graft.operators.PipelineOps
     val root0 = bloomStreamDir(s, d)
     // the pipeline_bloom_index point-lookup serve, VERBATIM, through the
     // STREAMED sidecars over the STREAMED tree
     import s.implicits._
-    val probes = P.BloomIdxKeys.toDF("k")
+    val probes = LakeFixture.BloomIdxKeys.toDF("k")
     val files = LakeIndex.matchedFilesOnly(s, s"$root0/index", probes)
-    P.readMatchedFiles(s, s"$root0/data", files.toSeq)
+    LakeProtocol.readMatchedFiles(s, s"$root0/data", files.toSeq)
       .join(broadcast(probes), col("l_orderkey") === col("k"))
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_items"),
@@ -1946,7 +1945,6 @@ object Streaming {
     * first call; shared by the contract and DiagnosticsSpec's 1:1 pin.
     */
   private[graft] def bloomStreamDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    val P = graft.operators.PipelineOps
     graft.Fixtures.memo("graft_bloomstream", d) { root =>
       val dataDir = root.resolve("data").toString
       val idxDir = root.resolve("index").toString
@@ -1984,7 +1982,7 @@ object Streaming {
             val fresh = s.read.parquet(dataDir).inputFiles
               .map(LakeIndex.normPath).filterNot(indexed.contains).toSeq
             if (fresh.nonEmpty)
-              P.bloomIndexRows(s, P.readMatchedFiles(s, dataDir, fresh),
+              LakeProtocol.bloomIndexRows(s, LakeProtocol.readMatchedFiles(s, dataDir, fresh),
                   fresh.length)
                 .write.mode("append").parquet(idxDir)
           }
@@ -2136,7 +2134,7 @@ object Streaming {
     * than the sequence-0 tree, so all apply; deletes over a static base
     * commute, which is what makes the key-hash wave split arbitrary by
     * design). The judged readout is the batch equality serve VERBATIM
-    * ([[graft.operators.PipelineOps.eqServeFromDir]] — one shared plan)
+    * ([[LakeProtocol.eqServeFromDir]] — one shared plan)
     * over the STREAMED delete set, hash-checked by pipeline_eq_serve's
     * copy-on-write oracle: a dropped wave under-deletes, a double-applied
     * wave is harmless by idempotence but StreamingSpec pins the streamed
@@ -2144,13 +2142,9 @@ object Streaming {
     * one delete file per commit.
     */
   def eqdelReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val P = graft.operators.PipelineOps
-    P.eqServeFromDir(s, d, eqdelStreamDir(s, d))
-      .groupBy(col("ship_month"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(col("net_cents")).as("revenue_cents"))
-      .orderBy(col("ship_month"))
+    LakeProtocol.eqServeFromDir(s, LakeFixture.bloomIdxDataDir(s, d),
+      eqdelStreamDir(s, d))
+      .transform(LakeServeQueries.monthRollup)
   }
 
   /** Streamed equality-delete dir — runs the once-per-JVM ingest on first
@@ -2159,10 +2153,9 @@ object Streaming {
     */
   private[graft] def eqdelStreamDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
     import org.apache.spark.sql.DataFrame
-    val P = graft.operators.PipelineOps
     val root0 = graft.Fixtures.memo("graft_eqdelstream", d) { root =>
       val delDir = root.resolve("eq_deletes").toString
-      val keys = P.eraseOrderKeys(s, d)
+      val keys = LakeFixture.eraseOrderKeys(s, d)
       // rank-based wave split (not a hash mod): a hash bucket can come up
       // EMPTY at an untested SF, and an empty wave file produces a commit
       // whose seq never appears in the delete set — breaking the
@@ -2215,30 +2208,25 @@ object Streaming {
     * contract, the streaming half of the deletion-vector story: erase
     * wave 1's order keys arrive in five rank-split waves, and every
     * micro-batch (a) resolves ITS keys to physical positions (bloom-plan
-    * + row_index scan of only matched files — [[graft.operators
-    * .PipelineOps.purgePositions]], the same step the batch writer
+    * + row_index scan of only matched files — [[graft.sources.lake
+    * .LakeProtocol.purgePositions]], the same step the batch writer
     * runs), (b) packs them into per-file bitmaps, and (c) MERGES into
     * the running sidecar: each touched file's vector is REPLACED by the
-    * OR of old and new bits ([[graft.operators.PipelineOps
+    * OR of old and new bits ([[graft.sources.lake.LakeProtocol
     * .dvMergeBitmaps]]). No sidecar list grows per commit — the DV
     * property — and a micro-batch RETRY is harmless twice over: the
     * versioned dir write is deterministic per batch id, and OR is
     * idempotent. The judged readout is the DV scan VERBATIM
-    * ([[graft.operators.PipelineOps.dvApply]] — one shared plan) over
+    * ([[LakeProtocol.dvApply]] — one shared plan) over
     * the streamed final sidecar, hash-checked by pipeline_eq_serve's
     * copy-on-write oracle; DvSpec additionally pins the streamed sidecar
     * ≡ the batch wave-1 sidecar frame-for-frame (same files, same bits,
     * same popcounts).
     */
   def dvReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    val P = graft.operators.PipelineOps
-    P.dvApplyOverBase(s, LakeIndex.normPath(P.bloomIdxDataDir(s, d)),
+    LakeProtocol.dvApplyOverBase(s, LakeIndex.normPath(LakeFixture.bloomIdxDataDir(s, d)),
         s.read.parquet(dvStreamDir(s, d)))
-      .groupBy(col("ship_month"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(col("net_cents")).as("revenue_cents"))
-      .orderBy(col("ship_month"))
+      .transform(LakeServeQueries.monthRollup)
   }
 
   /** Streamed deletion-vector sidecar dir (the latest merged version) —
@@ -2247,9 +2235,8 @@ object Streaming {
     */
   private[graft] def dvStreamDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
     import org.apache.spark.sql.DataFrame
-    val P = graft.operators.PipelineOps
     graft.Fixtures.memo("graft_dvstream", d) { root =>
-      val keys = P.eraseOrderKeys(s, d)
+      val keys = LakeFixture.eraseOrderKeys(s, d)
       val src = waveFiles("dv", d,
         keys.withColumn("wave",
           (ntile(5).over(org.apache.spark.sql.expressions.Window
@@ -2262,14 +2249,15 @@ object Streaming {
       withFewShufflePartitions(s) {
         val q = stream.writeStream
           .foreachBatch { (batch: DataFrame, id: Long) =>
-            val delta = P.dvFromPositions(s,
-              P.purgePositions(s, d, batch.select(col("k"))))
+            val delta = LakeProtocol.dvFromPositions(s,
+              LakeProtocol.purgePositions(s, LakeFixture.bloomIdxDataDir(s, d),
+                s"${LakeFixture.bloomIdxDir(s, d)}/index", batch.select(col("k"))))
             val cur =
               if (java.nio.file.Files.exists(latest))
                 Some(s.read.parquet(
                   java.nio.file.Files.readString(latest)))
               else None
-            val merged = cur.fold(delta)(c => P.dvMergeBitmaps(c, delta))
+            val merged = cur.fold(delta)(c => LakeProtocol.dvMergeBitmaps(c, delta))
             // deterministic per-batch version dir, staged then swapped so
             // a retry REPLACES its own commit (and the merge reads the
             // PREVIOUS version, never the dir being written)
@@ -2311,14 +2299,13 @@ object Streaming {
     */
   def cdfReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.DataFrame
-    val P = graft.operators.PipelineOps
     val out0 = graft.Fixtures.memo("graft_cdfstream", d) { root =>
       val out = root.resolve("mv").toString
-      s.read.parquet(s"${P.deleteExecDir(s, d)}/mv")
+      s.read.parquet(s"${LakeFixture.deleteExecDir(s, d)}/mv")
         .select(col("ship_month"), col("ship_day"), col("n_items"),
           col("sum_qty"), col("revenue_cents"))
         .write.mode("overwrite").partitionBy("ship_month").parquet(out)
-      val log = s.read.parquet(P.changelogDir(s, d))
+      val log = s.read.parquet(LakeFixture.changelogDir(s, d))
         .withColumn("sgn",
           when(col("change_type").isin("insert", "update_post"), col("n"))
             .otherwise(-col("n")))
@@ -2477,12 +2464,7 @@ object Streaming {
         try q.processAllAvailable() finally q.stop()
       }
     }
-    emitted.groupBy(col("ship_month"))
-      .agg(count(lit(1)).as("n_rows"),
-        countDistinct(col("l_orderkey")).as("n_orders"),
-        sum(col("qty")).as("sum_qty"),
-        sum(col("net_cents")).as("revenue_cents"))
-      .orderBy(col("ship_month"))
+    LakeServeQueries.monthQtyRollup(emitted)
   }
 
   /** Driver-surfaced streaming queries (SparkEntry contract). */
@@ -2542,10 +2524,10 @@ object Streaming {
       // share pipeline_mv_refresh's oracle text (the direct fact-table
       // SQL) so the streaming maintenance and the batch fixture cannot
       // drift
-      "stream_mv_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_mv_refresh"),
+      "stream_mv_replay" -> graft.operators.LayoutQueries.oracleSql("pipeline_mv_refresh"),
       // the streamed sidecar ingest is judged by the BATCH bloom serve's
       // verbatim oracle: same seven probes, same aggregates
-      "stream_bloom_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_bloom_index"),
+      "stream_bloom_replay" -> graft.operators.LayoutQueries.oracleSql("pipeline_bloom_index"),
       // the streamed IVF index must serve EXACTLY what a fresh batch
       // rebuild serves — share the fresh-rebuild retrieval oracle verbatim
       "stream_ivf_replay" -> graft.operators.Similarity.ivfTopkOracle,
@@ -2555,20 +2537,20 @@ object Streaming {
       "stream_graph_replay" -> graft.operators.Similarity.graphTopkOracle,
       // the CDF-maintained rollup must equal the engine's own
       // thrice-refreshed MV of the same epoch — share its oracle verbatim
-      "stream_cdf_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_delete_mv2"),
+      "stream_cdf_replay" -> graft.operators.LakeServeQueries.oracleSql("pipeline_delete_mv2"),
       // the streamed equality-delete set must serve EXACTLY the batch
       // equality serve's state — share pipeline_eq_serve's copy-on-write
       // oracle verbatim (all delete strategies converge to one state)
-      "stream_eqdel_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_eq_serve"),
+      "stream_eqdel_replay" -> graft.operators.LakeServeQueries.oracleSql("pipeline_eq_serve"),
       // the streamed deletion-vector sidecar must serve EXACTLY the
       // wave-1 copy-on-write state — the same shared-oracle argument as
       // the equality-delete ingest (all delete strategies converge)
-      "stream_dv_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_eq_serve"),
+      "stream_dv_replay" -> graft.operators.LakeServeQueries.oracleSql("pipeline_eq_serve"),
       // the lakehouse CDC tail emits exactly the rows the batch
       // incremental append scan reads (fixture construction) — share its
       // oracle verbatim so the stream and batch fast paths cannot drift
       "stream_lake_replay" ->
-        graft.operators.PipelineOps.oracleSql("pipeline_incremental_scan"),
+        graft.operators.LakeServeQueries.oracleSql("pipeline_incremental_scan"),
       // the late-data contract's emitted windows must equal the batch
       // aggregate over the ON-TIME rows only: same q21 aggregate text, the
       // planted-late predicate (event_id % 17 in the first six waves)
@@ -2602,7 +2584,8 @@ object Streaming {
       "stream_neardup_replay" -> graft.operators.Dedup.oracleSql("dedup_minhash_lsh"),
       // the streaming bottom-k sampler must converge to the batch sample
       // VERBATIM — share pipeline_bottomk_sample's oracle text
-      "stream_bottomk_replay" -> graft.operators.PipelineOps.oracleSql("pipeline_bottomk_sample"),
+      "stream_bottomk_replay" ->
+        graft.operators.SamplingQueries.oracleSql("pipeline_bottomk_sample"),
       // the streaming drift monitor's final histogram must reproduce the
       // batch PSI report VERBATIM — share pipeline_psi_drift's oracle text
       // (the judging chain is the shared psiFromHists, so both sides of

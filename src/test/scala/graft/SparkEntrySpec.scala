@@ -30,15 +30,8 @@ class SparkEntrySpec extends AnyFunSuite {
   }
 
   test("no duplicate names across operator modules") {
-    import graft.operators._
-    val maps = Seq(
-      "cdc" -> CdcQueries.queries.keySet, "rel" -> Relational.queries.keySet,
-      "text" -> TextOps.queries.keySet, "dedup" -> Dedup.queries.keySet,
-      "sim" -> Similarity.queries.keySet, "mm" -> Multimodal.queries.keySet,
-      "pipe" -> PipelineOps.queries.keySet, "clus" -> Clustering.queries.keySet,
-      "lake" -> LakeQueries.queries.keySet,
-      "stream" -> graft.streaming.Streaming.queries.keySet)
-    val total = maps.map(_._2.size).sum
+    val maps = SparkEntry.modules.map(_.queries.keySet)
+    val total = maps.map(_.size).sum
     assert(total === SparkEntry.queries.size,
       s"module name collision: modules sum to $total but the merged registry has ${SparkEntry.queries.size}")
   }

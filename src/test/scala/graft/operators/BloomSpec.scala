@@ -4,6 +4,8 @@ import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeProtocol
+
 import graft.plans.BloomUtil
 
 /** Native Bloom filter stack (BloomUtil statics ← BloomAgg ← bloom_contains
@@ -53,7 +55,7 @@ class BloomSpec extends AnyFunSuite with graft.SharedSpark {
   test("prefilter passes every contaminated doc and prunes most of the corpus") {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
-    val flags = PipelineOps.bloomDecontamFlags(spark, d)
+    val flags = DecontamQueries.bloomDecontamFlags(spark, d)
       .select($"doc_id", $"cand").as[(Long, Boolean)].collect().toMap
     val contaminated = graft.SparkEntry.queries("pipeline_bloom_decontaminate")(spark, d)
       .filter(col("contaminated"))
@@ -87,17 +89,17 @@ class BloomSpec extends AnyFunSuite with graft.SharedSpark {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val reps = 3
-    val (realMatched, realTotal) = PipelineOps.bloomIdxMatchedFiles(spark, d)
+    val (realMatched, realTotal) = LakeFixture.bloomIdxMatchedFiles(spark, d)
     assert(realMatched.nonEmpty && realMatched.length < realTotal)
-    val realIdx = PipelineOps.bloomIdxDataDir(spark, d).stripSuffix("/data") + "/index"
+    val realIdx = LakeFixture.bloomIdxDataDir(spark, d).stripSuffix("/data") + "/index"
     val synth = graft.Fixtures.tempDir("graft_synthidx").resolve("index").toString
     spark.read.parquet(realIdx)
       .crossJoin(spark.range(reps).select($"id".as("rep")))
       .withColumn("file", concat($"file", lit("#rep"), $"rep"))
       .drop("rep")
       .write.parquet(synth)
-    val (matched, total) = PipelineOps.matchedFilesInIndex(spark, synth,
-      PipelineOps.BloomIdxKeys.toDF("k"))
+    val (matched, total) = LakeProtocol.matchedFilesInIndex(spark, synth,
+      LakeFixture.BloomIdxKeys.toDF("k"))
     assert(total == reps * realTotal)
     assert(matched.length == reps * realMatched.length)
     assert(matched.toSet == (for (f <- realMatched; r <- 0 until reps) yield s"$f#rep$r").toSet)

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
-/** Structural contracts of branch merge-back ([[PipelineOps
-  * .branchMergeDir]] / [[PipelineOps.mergeManifests]]) the monthly
+/** Structural contracts of branch merge-back ([[LakeFixture
+  * .branchMergeDir]] / [[LakeProtocol.mergeManifests]]) the monthly
   * readout oracle cannot see: order-independence at manifest grain, the
   * zero-data-I/O property, the conflict guard, and the refs history.
   */
@@ -14,7 +14,7 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.branchMergeDir(spark, sfDir)
+  private def root = LakeFixture.branchMergeDir(spark, sfDir)
 
   private def manOf(id: Long): Set[(String, String)] = {
     import spark.implicits._
@@ -29,14 +29,16 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
       "merge result depends on merge order")
     // and to the same served rows
     val cols = Seq("l_orderkey", "qty", "net_cents", "ship_month").map(col)
-    val t1 = PipelineOps.readMergedSnapshot(spark, sfDir, 10L).select(cols: _*)
-    val t2 = PipelineOps.readMergedSnapshot(spark, sfDir, 12L).select(cols: _*)
+    val t1 = LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMergeDir(spark, sfDir), 10L).select(cols: _*)
+    val t2 = LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMergeDir(spark, sfDir), 12L).select(cols: _*)
     assert(t1.exceptAll(t2).isEmpty && t2.exceptAll(t1).isEmpty)
   }
 
   test("merges are pure metadata: every referenced file is a source file") {
     import spark.implicits._
-    val broot = PipelineOps.branchMetaDir(spark, sfDir)
+    val broot = LakeFixture.branchMetaDir(spark, sfDir)
     val sourceFiles = spark.read.parquet(s"$broot/manifests")
       .filter($"snap_id".isin(4L, 6L))
       .select($"file").as[String].collect().map(LakeIndex.normPath).toSet
@@ -60,7 +62,7 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
   test("the conflict guard refuses a branch whose removals main also removed") {
     val main = Map("a" -> (("fa", "b")), "c" -> (("fc", "b")))
     val ex = intercept[IllegalArgumentException] {
-      PipelineOps.mergeManifests(main,
+      LakeProtocol.mergeManifests(main,
         mainRemovedSinceFork = Set("x"),
         branchAdded = Map("y" -> (("fy", "b"))),
         branchRemoved = Set("x", "c"))
@@ -70,12 +72,12 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
     // add-vs-add is a conflict too: both sides writing the same relpath
     // since the fork must refuse, never last-write-win
     val addClash = intercept[IllegalArgumentException] {
-      PipelineOps.mergeManifests(main, Set.empty,
+      LakeProtocol.mergeManifests(main, Set.empty,
         branchAdded = Map("a" -> (("fa2", "b2"))), branchRemoved = Set.empty)
     }
     assert(addClash.getMessage.contains("add-conflict"))
     // and the disjoint case applies cleanly
-    val ok = PipelineOps.mergeManifests(main, Set("x"),
+    val ok = LakeProtocol.mergeManifests(main, Set("x"),
       Map("y" -> (("fy", "b"))), Set("c"))
     assert(ok == Map("a" -> (("fa", "b")), "y" -> (("fy", "b"))))
   }
@@ -96,15 +98,22 @@ class BranchMergeSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("the hotfix delete semantically landed; the batch survived it") {
     import spark.implicits._
-    val merged = PipelineOps.readMergedSnapshot(spark, sfDir, 10L)
-    val hotKeys = PipelineOps.orderKeysOfCustomersMod(spark, sfDir, 163)
+    val merged = LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMergeDir(spark, sfDir), 10L)
+    val hotKeys = LakeFixture.orderKeysOfCustomersMod(spark, sfDir, 163)
     assert(merged.join(hotKeys, $"l_orderkey" === $"k", "left_semi")
       .count() == 0L, "a hotfix-deleted key survived the merge")
-    val batch = PipelineOps.branchBatchRows(spark, sfDir)
+    val batch = LakeFixture.branchBatchRows(spark, sfDir)
     val batchN = batch.count()
     assert(batchN > 0L &&
       merged.join(batch.select($"l_orderkey".as("bk")),
         $"l_orderkey" === $"bk", "left_semi").count() == batchN,
       "branch batch rows lost through the merge")
+  }
+
+  test("an unknown merge-world snapshot id is rejected, not served empty") {
+    val e = intercept[IllegalArgumentException](
+      LakeProtocol.readManifestSnapshot(spark, root, 999L))
+    assert(e.getMessage.contains("unknown snapshot 999"))
   }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Structural contracts of the branch/tag/cherry-pick metadata layer
   * that the DuckDB oracles (which only check served row STATE) cannot
@@ -34,7 +34,7 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("branch commit and cherry-pick are pure manifest algebra") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
     val batch = spark.read.parquet(s"$root/branch_files").inputFiles
       .map(LakeIndex.normPath).toSet
     assert(batch.nonEmpty)
@@ -58,8 +58,8 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("history snapshots 0-4 are copied verbatim, never rewritten") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     (0L to 4L).foreach { id =>
       val base = spark.read.parquet(s"$meta/manifests")
         .filter($"snap_id" === id).select($"file").as[String].collect().toSet
@@ -69,8 +69,8 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("the lineage records the branch commit and the pick with true parents") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val snaps = spark.read.parquet(s"$root/snapshots")
       .select($"snap_id", $"op", $"parent_id")
       .as[(Long, String, Long)].collect().sortBy(_._1)
@@ -86,8 +86,8 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("refs move correctly; the tag is immutable; main moves only at the pick") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
-    val cur = PipelineOps.currentRefs(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
+    val cur = LakeFixture.currentRefs(spark, sfDir)
       .map { case (r, t, i) => r -> ((t, i)) }.toMap
     assert(cur("main") == (("branch", 7L)))
     assert(cur("audit") == (("branch", 6L)))
@@ -104,16 +104,17 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("branch isolation: pre-pick main still serves the old chain tip") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
     // resolve main BEFORE the pick step from the log
     val pre = spark.read.parquet(s"$root/refs_log")
       .filter($"ref" === "main" && $"step" < 2L)
       .orderBy($"step".desc).limit(1).select($"snap_id").as[Long].head()
     assert(pre == 4L)
-    val served = PipelineOps.readBranchSnapshot(spark, sfDir, pre)
+    val served = LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMetaDir(spark, sfDir), pre)
       .select(dataCols.map(col): _*)
     val chainTip = spark.read
-      .parquet(s"${PipelineOps.deleteExec2Dir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.deleteExec2Dir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     assert(served.exceptAll(chainTip).isEmpty && chainTip.exceptAll(served).isEmpty,
       "branch work leaked into the untouched main head")
@@ -121,7 +122,7 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("branch commits reconcile their index: rows <-> manifest files 1:1, and it skips") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
     Seq(6L, 7L).foreach { id =>
       val idxFiles = spark.read.parquet(s"$root/idx$id")
         .select($"file").as[String].collect().toSet
@@ -130,7 +131,8 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
       // row counts are true per file (the meta-rowcounts contract shape)
       val got = spark.read.parquet(s"$root/idx$id")
         .agg(sum($"n_rows")).as[Long].head()
-      assert(got == PipelineOps.readBranchSnapshot(spark, sfDir, id).count())
+      assert(got == LakeProtocol.readManifestSnapshot(
+        spark, LakeFixture.branchMetaDir(spark, sfDir), id).count())
     }
     // the lookup actually skips, and the batch-key probes route through
     // the FRESH index rows to the branch root (the inherited rows alone
@@ -139,9 +141,9 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
       .select($"l_orderkey").orderBy($"l_orderkey")
       .limit(2).as[Long].collect()
     assert(twins.length == 2)
-    val probes = (PipelineOps.BloomIdxKeys ++ twins).toDF("k")
+    val probes = (LakeFixture.BloomIdxKeys ++ twins).toDF("k")
     val (matched, total) =
-      PipelineOps.matchedFilesInIndex(spark, s"$root/idx6", probes)
+      LakeProtocol.matchedFilesInIndex(spark, s"$root/idx6", probes)
     assert(matched.nonEmpty && matched.length < total,
       s"no skipping: ${matched.length} of $total")
     val branchRoot = LakeIndex.normPath(s"$root/branch_files")
@@ -150,13 +152,20 @@ class BranchSpec extends AnyFunSuite with graft.SharedSpark {
   }
 
   test("the branch head equals wave-1 state plus the batch row-for-row") {
-    val served = PipelineOps.readBranchSnapshot(spark, sfDir, 6L)
+    val served = LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMetaDir(spark, sfDir), 6L)
       .select(dataCols.map(col): _*)
     val want = spark.read
-      .parquet(s"${PipelineOps.deleteExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.deleteExecDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
-      .unionByName(PipelineOps.branchBatchRows(spark, sfDir)
+      .unionByName(LakeFixture.branchBatchRows(spark, sfDir)
         .select(dataCols.map(col): _*))
     assert(served.exceptAll(want).isEmpty && want.exceptAll(served).isEmpty)
+  }
+
+  test("an unknown branch-world snapshot id is rejected, not served empty") {
+    val e = intercept[IllegalArgumentException](LakeProtocol.readManifestSnapshot(
+      spark, LakeFixture.branchMetaDir(spark, sfDir), 999L))
+    assert(e.getMessage.contains("unknown snapshot 999"))
   }
 }

@@ -34,7 +34,7 @@ class BucketingSpec extends AnyFunSuite with graft.SharedSpark {
   }
 
   test("pipeline_bucketed_join's executed join is exchange-free on the bucket key") {
-    val df = PipelineOps.queries("pipeline_bucketed_join")(spark, sfDir)
+    val df = LayoutQueries.queries("pipeline_bucketed_join")(spark, sfDir)
     df.count() // force execution so AQE (if any) finalizes the plan
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), s"expected a sort-merge join:\n$plan")

@@ -3,9 +3,11 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeProtocol
+
 import graft.sources.lake.LakeCommit
 
-/** Contracts of the catalog pointer layer ([[PipelineOps.catalogDir]] /
+/** Contracts of the catalog pointer layer ([[LakeFixture.catalogDir]] /
   * [[LakeCommit.catalogCommit]]) the time-travel oracle cannot see: the
   * compare-and-swap commit protocol, append-only history, and that the
   * current pointer resolves to the rollback world.
@@ -16,7 +18,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def log = {
     import spark.implicits._
-    spark.read.parquet(s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+    spark.read.parquet(s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .as[(Long, String, String, Long)].collect().sortBy(_._1)
   }
 
@@ -35,7 +37,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val scratch = graft.Fixtures.tempDir("graft_cat_scratch")
       .resolve("catalog_log").toString
     spark.read.parquet(
-        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+        s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val ex = intercept[IllegalArgumentException] {
       LakeCommit.catalogCommit(spark, scratch, "ship_fact",
@@ -46,7 +48,7 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val before = spark.read.parquet(scratch).count()
     val v = LakeCommit.catalogCommit(spark, scratch, "ship_fact",
       expectedVersion = 1L,
-      metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 4L)
+      metaRoot = LakeFixture.snapshotMetaDir(spark, sfDir), snapId = 4L)
     assert(v == 2L)
     assert(spark.read.parquet(scratch).count() == before + 1L)
     // the failed CAS appended NOTHING
@@ -55,8 +57,8 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val head = spark.read.parquet(scratch)
       .orderBy($"version".desc).limit(1)
       .select($"meta_root", $"snap_id").as[(String, Long)].head()
-    val viaCatalog = PipelineOps.readSnapshotFrom(spark, head._1, head._2)
-    val direct = PipelineOps.readSnapshot(spark, sfDir, 4L)
+    val viaCatalog = LakeProtocol.readSnapshotFrom(spark, head._1, head._2)
+    val direct = LakeFixture.readSnapshot(spark, sfDir, 4L)
     assert(viaCatalog.exceptAll(direct).isEmpty &&
       direct.exceptAll(viaCatalog).isEmpty)
   }
@@ -66,9 +68,9 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val scratch = graft.Fixtures.tempDir("graft_cat_scratch3")
       .resolve("catalog_log").toString
     spark.read.parquet(
-        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+        s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     // one stale expectation poisons the WHOLE transaction — neither
     // table's pointer moves
     val before = spark.read.parquet(scratch).count()
@@ -95,9 +97,9 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val scratch = graft.Fixtures.tempDir("graft_cat_race")
       .resolve("catalog_log").toString
     spark.read.parquet(
-        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+        s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     // both commit against expected v1; the per-log monitor serializes
     // them, so exactly ONE appends v2 and the other refuses
     import scala.concurrent.{Await, Future}
@@ -130,9 +132,9 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val scratch = graft.Fixtures.tempDir("graft_cat_stress")
       .resolve("catalog_log").toString
     spark.read.parquet(
-        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+        s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val writers = 6
     val commitsEach = 3
     val startVersion = 1L // ship_fact's current in the seeded log
@@ -185,11 +187,11 @@ class CatalogSpec extends AnyFunSuite with graft.SharedSpark {
     val scratch = graft.Fixtures.tempDir("graft_cat_scratch2")
       .resolve("catalog_log").toString
     spark.read.parquet(
-        s"${PipelineOps.catalogDir(spark, sfDir)}/catalog_log")
+        s"${LakeFixture.catalogDir(spark, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite").parquet(scratch)
     val v = LakeCommit.catalogCommit(spark, scratch, "docs",
       expectedVersion = -1L,
-      metaRoot = PipelineOps.snapshotMetaDir(spark, sfDir), snapId = 0L)
+      metaRoot = LakeFixture.snapshotMetaDir(spark, sfDir), snapId = 0L)
     assert(v == 0L)
     // table namespaces are independent: ship_fact's current is untouched
     val cur = spark.read.parquet(scratch)

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.lake.LakeIndex
 
 /** Semantic contracts of the snapshot changelog scan
-  * ([[PipelineOps.snapshotChangelog]]) beyond the oracle's bit-check:
+  * ([[LakeFixture.snapshotChangelog]]) beyond the oracle's bit-check:
   * the emitted rows must be a CORRECT DELTA (apply ≡ target snapshot),
   * the typing must be internally consistent, and the planning must stay
   * metadata-bounded (changed files only, never the whole table).
@@ -19,13 +19,13 @@ class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("changelog applied to the source snapshot reproduces the target — every pair") {
     import spark.implicits._
-    def state(id: Long) = PipelineOps.readSnapshot(spark, sfDir, id)
+    def state(id: Long) = LakeFixture.readSnapshot(spark, sfDir, id)
       .groupBy(payload.map(col): _*).agg(count(lit(1)).as("n"))
     // pairs spanning one wave, the merge, the whole chain, and a
     // branch-to-tip jump across every mutation kind
     Seq((0L, 2L), (2L, 3L), (3L, 4L), (2L, 4L), (0L, 4L)).foreach {
       case (a, b) =>
-        val log = PipelineOps.snapshotChangelog(spark, sfDir, a, b)
+        val log = LakeFixture.snapshotChangelog(spark, sfDir, a, b)
           .withColumn("signed",
             when($"change_type".isin("insert", "update_post"), $"n")
               .otherwise(-$"n"))
@@ -51,12 +51,12 @@ class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
   test("typing is consistent and matches each pair's known wave shape") {
     import spark.implicits._
     def verbs(a: Long, b: Long): Set[String] =
-      PipelineOps.snapshotChangelog(spark, sfDir, a, b)
+      LakeFixture.snapshotChangelog(spark, sfDir, a, b)
         .select($"change_type").distinct().as[String].collect().toSet
     // compaction (snapshot 1 is a pure rewrite of 0): NO row changes —
     // the relpath manifest diff scans every file yet the payload
     // multisets cancel exactly
-    assert(PipelineOps.snapshotChangelog(spark, sfDir, 0L, 1L).isEmpty)
+    assert(LakeFixture.snapshotChangelog(spark, sfDir, 0L, 1L).isEmpty)
     // delete wave 1 emits only deletes
     assert(verbs(0L, 2L) == Set("delete"))
     // at sf0.001 the moduli 271/293/337 all hit ONLY customer 0 (the
@@ -66,7 +66,7 @@ class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
     // verbs are exercised (and hash-checked) by the sf0.01 driver oracle,
     // where %293 hits customers the erase waves don't.
     assert(verbs(2L, 4L) == Set("insert"))
-    val log = PipelineOps.snapshotChangelog(spark, sfDir, 0L, 4L)
+    val log = LakeFixture.snapshotChangelog(spark, sfDir, 0L, 4L)
     val types = log.groupBy($"l_orderkey")
       .agg(collect_set($"change_type").as("ts"))
       .as[(Long, Seq[String])].collect()
@@ -83,17 +83,17 @@ class ChangelogSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("persisted changelog fixture serves the live 2→4 diff verbatim") {
     // every consumer (the readout, the MV apply, the CDF replay waves)
-    // reads [[PipelineOps.changelogDir]] instead of re-running the diff;
+    // reads [[LakeFixture.changelogDir]] instead of re-running the diff;
     // the fixture must therefore be frame-equal to a fresh scan
-    val fixture = spark.read.parquet(PipelineOps.changelogDir(spark, sfDir))
-    val live = PipelineOps.snapshotChangelog(spark, sfDir, 2L, 4L)
+    val fixture = spark.read.parquet(LakeFixture.changelogDir(spark, sfDir))
+    val live = LakeFixture.snapshotChangelog(spark, sfDir, 2L, 4L)
     assert(fixture.exceptAll(live).isEmpty && live.exceptAll(fixture).isEmpty,
       "persisted changelog diverges from a fresh 2→4 scan")
   }
 
   test("planning reads only changed files (manifest relpath diff)") {
     import spark.implicits._
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val baseOf = spark.read.parquet(s"$meta/snapshots")
       .select($"snap_id", $"base").as[(Long, String)].collect().toMap
     def rels(id: Long): Set[String] = {

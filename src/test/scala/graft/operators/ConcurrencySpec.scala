@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Structural contracts of the optimistic-concurrency commit protocol
   * that the DuckDB oracle (which only checks the converged row state)
@@ -23,14 +23,14 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
   private val sfDir = "/root/testdata/sf0.001"
 
   private def keysOf(m: Int): DataFrame =
-    PipelineOps.orderKeysOfCustomersMod(spark, sfDir, m)
+    LakeFixture.orderKeysOfCustomersMod(spark, sfDir, m)
 
   private def dataCols = Seq("l_orderkey", "l_partkey", "qty", "net_cents",
     "ship_day", "ship_month")
 
   test("the race conflicts for real, and the stale staging is discarded") {
     import spark.implicits._
-    val root = PipelineOps.concurrentCommitDir(spark, sfDir)
+    val root = LakeFixture.concurrentCommitDir(spark, sfDir)
     val log = spark.read.parquet(s"$root/commit_log")
       .orderBy($"step")
       .select($"step", $"writer", $"base_tip", $"outcome",
@@ -51,7 +51,7 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
 
   test("both deletes landed; everything else carried through") {
     import spark.implicits._
-    val root = PipelineOps.concurrentCommitDir(spark, sfDir)
+    val root = LakeFixture.concurrentCommitDir(spark, sfDir)
     val tip = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/tip.txt"))
     val tree = spark.read.parquet(s"$tip/data")
@@ -60,7 +60,7 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
       .count() == 0L, "a deleted key survived the converged tip")
     // survivors ≡ the base tree minus both key sets, row-for-row
     val want = spark.read
-      .parquet(LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+      .parquet(LakeIndex.normPath(LakeFixture.bloomIdxDataDir(spark, sfDir)))
       .join(broadcast(gone), $"l_orderkey" === $"k", "left_anti")
       .select(dataCols.map(col): _*)
     val got = tree.select(dataCols.map(col): _*)
@@ -69,14 +69,14 @@ class ConcurrencySpec extends AnyFunSuite with graft.SharedSpark {
 
   test("commit order does not matter: A-first converges to the same tree") {
     import spark.implicits._
-    val base = LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
+    val base = LakeIndex.normPath(LakeFixture.bloomIdxDataDir(spark, sfDir))
     // replay the race with A winning: A commits from base, B rebases on A
-    val tA = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_a"), base,
+    val tA = LakeProtocol.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_a"), base,
       base.stripSuffix("/data") + "/index",
-      LakeIndex.normPath(PipelineOps.mvRollupDir(spark, sfDir)), keysOf(383))
-    val tAB = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_b"),
+      LakeIndex.normPath(LakeFixture.mvRollupDir(spark, sfDir)), keysOf(383))
+    val tAB = LakeProtocol.applyMutation(spark, graft.Fixtures.tempDir("graft_occ_alt_b"),
       s"$tA/data", s"$tA/index", s"$tA/mv", keysOf(389))
-    val root = PipelineOps.concurrentCommitDir(spark, sfDir)
+    val root = LakeFixture.concurrentCommitDir(spark, sfDir)
     val tip = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/tip.txt"))
     val ba = spark.read.parquet(s"$tip/data").select(dataCols.map(col): _*)

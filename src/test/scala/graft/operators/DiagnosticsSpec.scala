@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Semantic contracts for the corpus/CDC diagnostic queries — the DuckDB
   * oracles pin their outputs bit-for-bit; these specs pin that the outputs
@@ -117,7 +117,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("DSIR ESS: effective sample size bounded by n and consistent with its sums") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_dsir_ess")(spark, sfDir)
+    val rows = SamplingQueries.queries("pipeline_dsir_ess")(spark, sfDir)
       .select($"n_docs", $"sum_w", $"ess_docs", $"ess_ratio_e4")
       .as[(Long, Long, Option[Long], Option[Long])].collect()
     assert(rows.nonEmpty)
@@ -261,7 +261,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("zorder stats: interleaved layout tightens envelopes and prunes the 2-D probe") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_zorder_stats")(spark, sfDir)
+    val rows = LayoutQueries.queries("pipeline_zorder_stats")(spark, sfDir)
       .as[(String, Long, Long, Long, Long)].collect().map(r => r._1 -> r).toMap
     val z = rows("zorder"); val l = rows("linear")
     assert(z._2 > 0 && z._2 <= 64 && l._2 > 0 && l._2 <= 64, "64 buckets max per layout")
@@ -302,11 +302,11 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // entire point of paying for the sidecars.
   test("bloom index: matched files superset the true files and skip most of the layout") {
     import spark.implicits._
-    val (matched, total) = PipelineOps.bloomIdxMatchedFiles(spark, sfDir)
+    val (matched, total) = LakeFixture.bloomIdxMatchedFiles(spark, sfDir)
     val probes = Seq(7L, 212L, 388L, 701L, 994L, 1207L, 1403L)
     val truth = spark.read
-      .option("basePath", PipelineOps.bloomIdxDataDir(spark, sfDir))
-      .parquet(PipelineOps.bloomIdxDataDir(spark, sfDir))
+      .option("basePath", LakeFixture.bloomIdxDataDir(spark, sfDir))
+      .parquet(LakeFixture.bloomIdxDataDir(spark, sfDir))
       .filter($"l_orderkey".isin(probes: _*))
       .select(input_file_name()).distinct().as[String].collect().toSet
     assert(truth.subsetOf(matched.toSet),
@@ -330,8 +330,8 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val keys = graft.Tables.orders(spark, sfDir)
       .join(erased, $"o_custkey" === $"c_custkey")
       .select($"o_orderkey".as("k"))
-    val (matched, total) = PipelineOps.bloomIdxMatchedFilesFor(spark, sfDir, keys)
-    val dataDir = PipelineOps.bloomIdxDataDir(spark, sfDir)
+    val (matched, total) = LakeFixture.bloomIdxMatchedFilesFor(spark, sfDir, keys)
+    val dataDir = LakeFixture.bloomIdxDataDir(spark, sfDir)
     val truth = spark.read.option("basePath", dataDir).parquet(dataDir)
       .select($"l_orderkey", input_file_name().as("f")) // before the join:
       // input_file_name is per-source and a join has two
@@ -355,9 +355,9 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
         .filter(p => p.getFileName.toString.endsWith(".parquet"))
         .toSeq.groupBy(_.getParent.toString).view.mapValues(_.size).toMap
     }
-    val before = parquetFilesByDir(PipelineOps.bloomIdxDataDir(spark, sfDir))
-    PipelineOps.queries("pipeline_compaction_exec")(spark, sfDir).count()
-    val after = parquetFilesByDir(PipelineOps.compactedDir(spark, sfDir))
+    val before = parquetFilesByDir(LakeFixture.bloomIdxDataDir(spark, sfDir))
+    LakeServeQueries.queries("pipeline_compaction_exec")(spark, sfDir).count()
+    val after = parquetFilesByDir(LakeFixture.compactedDir(spark, sfDir))
     assert(after.nonEmpty && after.values.forall(_ == 1),
       s"months with >1 file after compaction: ${after.filter(_._2 > 1)}")
     assert(after.size == before.size, "partition count changed by compaction")
@@ -370,9 +370,9 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // SKIP — the whole point of carrying the index through the rewrite.
   test("compaction lookup: re-built sidecars describe the compacted tree and still skip") {
     import spark.implicits._
-    val idx = spark.read.parquet(PipelineOps.compactedIdxDir(spark, sfDir))
+    val idx = spark.read.parquet(LakeFixture.compactedIdxDir(spark, sfDir))
       .select($"file", $"n_rows").as[(String, Long)].collect().toMap
-    val actual = spark.read.parquet(PipelineOps.compactedDir(spark, sfDir))
+    val actual = spark.read.parquet(LakeFixture.compactedDir(spark, sfDir))
       .select(input_file_name().as("f"))
       .groupBy($"f").count().as[(String, Long)].collect()
       .map { case (f, n) => LakeIndex.normPath(f) -> n }.toMap
@@ -381,8 +381,8 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
         s"onlyTree=${actual.keySet -- idx.keySet}")
     assert(idx.forall { case (f, n) => actual(f) == n },
       "stale n_rows in the compacted index")
-    val (matched, total) = PipelineOps.matchedFilesInIndex(spark,
-      PipelineOps.compactedIdxDir(spark, sfDir),
+    val (matched, total) = LakeProtocol.matchedFilesInIndex(spark,
+      LakeFixture.compactedIdxDir(spark, sfDir),
       Seq(7L, 212L, 388L, 701L, 994L, 1207L, 1403L).toDF("k"))
     assert(matched.nonEmpty && matched.length < total,
       s"compacted index stopped skipping: ${matched.length} of $total files")
@@ -398,7 +398,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // its matched files yields zero purge rows.
   test("delete exec: reconciled index describes the post-delete tree exactly") {
     import spark.implicits._
-    val root = PipelineOps.deleteExecDir(spark, sfDir)
+    val root = LakeFixture.deleteExecDir(spark, sfDir)
     val idx = spark.read.parquet(s"$root/index")
       .select($"file", $"n_rows").as[(String, Long)].collect().toMap
     val actual = spark.read.parquet(s"$root/data")
@@ -414,11 +414,11 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("delete exec: unmatched files are retained by reference, not rewritten") {
     import spark.implicits._
-    val root = PipelineOps.deleteExecDir(spark, sfDir)
-    val keys = PipelineOps.eraseOrderKeys(spark, sfDir)
-    val (matched, total) = PipelineOps.bloomIdxMatchedFilesFor(spark, sfDir, keys)
+    val root = LakeFixture.deleteExecDir(spark, sfDir)
+    val keys = LakeFixture.eraseOrderKeys(spark, sfDir)
+    val (matched, total) = LakeFixture.bloomIdxMatchedFilesFor(spark, sfDir, keys)
     val matchedSet = matched.map(LakeIndex.normPath).toSet
-    val oldData = LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir))
+    val oldData = LakeIndex.normPath(LakeFixture.bloomIdxDataDir(spark, sfDir))
     val newData = s"$root/data"
     val retained = spark.read.parquet(oldData).inputFiles
       .map(LakeIndex.normPath).filterNot(matchedSet.contains)
@@ -435,10 +435,10 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("delete exec: erased orders are unfindable via the reconciled index") {
     import spark.implicits._
-    val root = PipelineOps.deleteExecDir(spark, sfDir)
-    val keys = PipelineOps.eraseOrderKeys(spark, sfDir)
-    val (files, _) = PipelineOps.matchedFilesInIndex(spark, s"$root/index", keys)
-    val survivors = PipelineOps.readMatchedFiles(spark, s"$root/data", files.toSeq)
+    val root = LakeFixture.deleteExecDir(spark, sfDir)
+    val keys = LakeFixture.eraseOrderKeys(spark, sfDir)
+    val (files, _) = LakeProtocol.matchedFilesInIndex(spark, s"$root/index", keys)
+    val survivors = LakeProtocol.readMatchedFiles(spark, s"$root/data", files.toSeq)
       .join(keys, $"l_orderkey" === $"k", "left_semi").count()
     assert(survivors == 0L, s"$survivors purge rows survive the delete")
   }
@@ -453,7 +453,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // by the batch stay gone.
   test("merge exec: reconciled index describes the post-merge tree exactly") {
     import spark.implicits._
-    val root = PipelineOps.mergeExecDir(spark, sfDir)
+    val root = LakeFixture.mergeExecDir(spark, sfDir)
     val idx = spark.read.parquet(s"$root/index")
       .select($"file", $"n_rows").as[(String, Long)].collect().toMap
     val actual = spark.read.parquet(s"$root/data")
@@ -469,12 +469,12 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("merge exec: batch keys served exactly once with replaced values; non-batch erased keys stay gone") {
     import spark.implicits._
-    val root = PipelineOps.mergeExecDir(spark, sfDir)
-    val batch = PipelineOps.mergeUpsertRows(spark, sfDir)
+    val root = LakeFixture.mergeExecDir(spark, sfDir)
+    val batch = LakeFixture.mergeUpsertRows(spark, sfDir)
       .select($"l_orderkey".as("k"), $"qty", $"net_cents")
-    val (files, _) = PipelineOps.matchedFilesInIndex(
+    val (files, _) = LakeProtocol.matchedFilesInIndex(
       spark, s"$root/index", batch.select($"k").distinct())
-    val served = PipelineOps.readMatchedFiles(spark, s"$root/data", files.toSeq)
+    val served = LakeProtocol.readMatchedFiles(spark, s"$root/data", files.toSeq)
       .join(batch.select($"k").distinct(), $"l_orderkey" === $"k", "left_semi")
       .select($"l_orderkey", $"qty", $"net_cents")
     // served batch rows ≡ the batch, row-for-row (replacement exactly once)
@@ -488,9 +488,9 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
     val goneKeys = graft.Tables.orders(spark, sfDir)
       .filter($"o_custkey" % 271 === 0 && $"o_custkey" % 293 =!= 0)
       .select($"o_orderkey".as("k"))
-    val (gFiles, _) = PipelineOps.matchedFilesInIndex(
+    val (gFiles, _) = LakeProtocol.matchedFilesInIndex(
       spark, s"$root/index", goneKeys)
-    val survivors = PipelineOps.readMatchedFiles(spark, s"$root/data", gFiles.toSeq)
+    val survivors = LakeProtocol.readMatchedFiles(spark, s"$root/data", gFiles.toSeq)
       .join(goneKeys, $"l_orderkey" === $"k", "left_semi").count()
     assert(survivors == 0L,
       s"$survivors wave-1-erased rows resurfaced through the merge")
@@ -518,8 +518,8 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
         s"onlyTree=${actual.keySet -- idxMap.keySet}")
     val badCounts = idxMap.filter { case (f, n) => actual(f) != n }
     assert(badCounts.isEmpty, s"stale n_rows in streamed sidecars: $badCounts")
-    val (matched, total) = PipelineOps.matchedFilesInIndex(
-      spark, s"$root/index", PipelineOps.BloomIdxKeys.toDF("k"))
+    val (matched, total) = LakeProtocol.matchedFilesInIndex(
+      spark, s"$root/index", LakeFixture.BloomIdxKeys.toDF("k"))
     assert(matched.length < total,
       s"streamed index stopped skipping: ${matched.length} of $total files")
   }
@@ -532,13 +532,13 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // slice CREATED.
   test("merge exec: MV untouched months carried over, refreshed view ≡ rebuild") {
     import spark.implicits._
-    val w1 = PipelineOps.deleteExecDir(spark, sfDir)
-    val root = PipelineOps.mergeExecDir(spark, sfDir)
-    val batch = PipelineOps.mergeUpsertRows(spark, sfDir)
+    val w1 = LakeFixture.deleteExecDir(spark, sfDir)
+    val root = LakeFixture.mergeExecDir(spark, sfDir)
+    val batch = LakeFixture.mergeUpsertRows(spark, sfDir)
     val keys = batch.select($"l_orderkey".as("k")).distinct()
-    val (matched, _) = PipelineOps.matchedFilesInIndex(
+    val (matched, _) = LakeProtocol.matchedFilesInIndex(
       spark, s"$w1/index", keys)
-    val touched = PipelineOps.readMatchedFiles(spark, s"$w1/data", matched.toSeq)
+    val touched = LakeProtocol.readMatchedFiles(spark, s"$w1/data", matched.toSeq)
       .join(keys, $"l_orderkey" === $"k", "left_semi")
       .select($"ship_month")
       .unionByName(batch.select($"ship_month"))
@@ -578,14 +578,14 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // the chain (every snapshot's list is non-empty and base-consistent).
   test("time travel: snapshot reads open exactly their manifest's files, never a later snapshot's") {
     import spark.implicits._
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val manifest = spark.read.parquet(s"$meta/manifests")
       .select($"snap_id", $"file").as[(Long, String)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
     assert(manifest.keySet == Set(0L, 1L, 2L, 3L, 4L))
     manifest.foreach { case (id, fs) => assert(fs.nonEmpty, s"empty manifest $id") }
     Seq(0L, 2L, 3L).foreach { k =>
-      val opened = PipelineOps.readSnapshot(spark, sfDir, k)
+      val opened = LakeFixture.readSnapshot(spark, sfDir, k)
         .inputFiles.map(LakeIndex.normPath).toSet
       assert(opened == manifest(k),
         s"snapshot $k scan drifted from its manifest: " +
@@ -601,7 +601,7 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // tree exactly, and BOTH erase sets are unfindable through it.
   test("delete exec wave 2: index consistent after sequential mutations; both erase sets gone") {
     import spark.implicits._
-    val root = PipelineOps.deleteExec2Dir(spark, sfDir)
+    val root = LakeFixture.deleteExec2Dir(spark, sfDir)
     val idx = spark.read.parquet(s"$root/index")
       .select($"file", $"n_rows").as[(String, Long)].collect().toMap
     val actual = spark.read.parquet(s"$root/data")
@@ -617,8 +617,8 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
         .filter($"c_custkey" % 271 === 0 || $"c_custkey" % 337 === 0)
         .select($"c_custkey"), $"o_custkey" === $"c_custkey")
       .select($"o_orderkey".as("k"))
-    val (files, _) = PipelineOps.matchedFilesInIndex(spark, s"$root/index", bothKeys)
-    val survivors = PipelineOps.readMatchedFiles(spark, s"$root/data", files.toSeq)
+    val (files, _) = LakeProtocol.matchedFilesInIndex(spark, s"$root/index", bothKeys)
+    val survivors = LakeProtocol.readMatchedFiles(spark, s"$root/data", files.toSeq)
       .join(bothKeys, $"l_orderkey" === $"k", "left_semi").count()
     assert(survivors == 0L,
       s"$survivors purge rows survive after two sequential deletes")
@@ -630,14 +630,14 @@ class DiagnosticsSpec extends AnyFunSuite with graft.SharedSpark {
   // of the post-delete tree — incremental refresh ≡ rebuild.
   test("delete exec: MV untouched months carried over, refreshed view ≡ rebuild") {
     import spark.implicits._
-    val root = PipelineOps.deleteExecDir(spark, sfDir)
-    val keys = PipelineOps.eraseOrderKeys(spark, sfDir)
-    val (matched, _) = PipelineOps.bloomIdxMatchedFilesFor(spark, sfDir, keys)
-    val touched = PipelineOps.readBloomMatched(spark, sfDir, matched.toSeq)
+    val root = LakeFixture.deleteExecDir(spark, sfDir)
+    val keys = LakeFixture.eraseOrderKeys(spark, sfDir)
+    val (matched, _) = LakeFixture.bloomIdxMatchedFilesFor(spark, sfDir, keys)
+    val touched = LakeFixture.readBloomMatched(spark, sfDir, matched.toSeq)
       .join(keys, $"l_orderkey" === $"k", "left_semi")
       .select($"ship_month").distinct().as[String].collect().toSet
     val oldMv = java.nio.file.Paths.get(
-      LakeIndex.normPath(PipelineOps.mvRollupDir(spark, sfDir)))
+      LakeIndex.normPath(LakeFixture.mvRollupDir(spark, sfDir)))
     val newMv = java.nio.file.Paths.get(s"$root/mv")
     import scala.jdk.CollectionConverters._
     val untouched = java.nio.file.Files.list(oldMv).iterator().asScala

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
-/** Contracts of the deletion-vector delete form ([[PipelineOps
-  * .dvDeleteDir]] / [[PipelineOps.dvMergeBitmaps]] / [[PipelineOps
+/** Contracts of the deletion-vector delete form ([[LakeFixture
+  * .dvDeleteDir]] / [[LakeProtocol.dvMergeBitmaps]] / [[LakeProtocol
   * .dvApply]]) the monthly readout oracles cannot see: one vector per
   * file always (replace, never accumulate), popcount exactness,
   * untouched vectors surviving a merge byte-identical, idempotent
@@ -16,7 +16,7 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.dvDeleteDir(spark, sfDir)
+  private def root = LakeFixture.dvDeleteDir(spark, sfDir)
 
   test("one vector per file, before and after the merge") {
     import spark.implicits._
@@ -33,10 +33,10 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val truth = spark.read.parquet(base)
-      .select(PipelineOps.metaFilePath.as("file"), $"l_orderkey")
+      .select(LakeProtocol.metaFilePath.as("file"), $"l_orderkey")
       .join(
-        PipelineOps.eraseOrderKeys(spark, sfDir).unionByName(
-          PipelineOps.orderKeysOfCustomersMod(spark, sfDir, 337)).distinct(),
+        LakeFixture.eraseOrderKeys(spark, sfDir).unionByName(
+          LakeFixture.orderKeysOfCustomersMod(spark, sfDir, 337)).distinct(),
         $"l_orderkey" === $"k", "left_semi")
       .groupBy($"file").agg(count(lit(1)).as("n_true"))
     val dv = spark.read.parquet(s"$root/dv")
@@ -52,10 +52,10 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("merge replaces only wave-2-touched vectors; others are byte-identical") {
     import spark.implicits._
-    val w2Files = PipelineOps.orderKeysOfCustomersMod(spark, sfDir, 337)
+    val w2Files = LakeFixture.orderKeysOfCustomersMod(spark, sfDir, 337)
       .join(spark.read.parquet(java.nio.file.Files.readString(
           java.nio.file.Paths.get(s"$root/data_base.txt")))
-          .select(PipelineOps.metaFilePath.as("file"), $"l_orderkey"),
+          .select(LakeProtocol.metaFilePath.as("file"), $"l_orderkey"),
         $"k" === $"l_orderkey", "inner")
       .select($"file").distinct().as[String].collect().toSet
     val dv1 = spark.read.parquet(s"$root/dv1")
@@ -77,7 +77,7 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
       .toDF("file", "bits")
     val b = Seq(("fb", Seq(8L)), ("fboth", Seq(3L, 0L, 4L)))
       .toDF("file", "bits")
-    val m = PipelineOps.dvMergeBitmaps(a, b)
+    val m = LakeProtocol.dvMergeBitmaps(a, b)
       .select($"file", $"bits", $"n_set")
       .as[(String, Seq[Long], Long)].collect()
       .map(t => t._1 -> ((t._2, t._3))).toMap
@@ -89,9 +89,9 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
   test("vectors OR idempotently: serve(dv) ≡ serve(dv1) minus wave-2 rows") {
     import spark.implicits._
     val cols = Seq("l_orderkey", "qty", "net_cents", "ship_month").map(col)
-    val viaMerged = PipelineOps.dvServeRead(spark, sfDir, "dv").select(cols: _*)
-    val sequential = PipelineOps.dvServeRead(spark, sfDir, "dv1")
-      .join(PipelineOps.orderKeysOfCustomersMod(spark, sfDir, 337),
+    val viaMerged = LakeFixture.dvServeRead(spark, sfDir, "dv").select(cols: _*)
+    val sequential = LakeFixture.dvServeRead(spark, sfDir, "dv1")
+      .join(LakeFixture.orderKeysOfCustomersMod(spark, sfDir, 337),
         $"l_orderkey" === $"k", "left_anti")
       .select(cols: _*)
     assert(viaMerged.exceptAll(sequential).isEmpty &&
@@ -105,21 +105,21 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val treeFiles = spark.read.parquet(base).inputFiles
       .map(LakeIndex.normPath).toSet
-    val served = PipelineOps.dvServeRead(spark, sfDir, "dv").inputFiles
+    val served = LakeFixture.dvServeRead(spark, sfDir, "dv").inputFiles
       .map(LakeIndex.normPath)
       .filterNot(_.contains("/graft_dv")) // the sidecar itself
     assert(served.nonEmpty && served.forall(treeFiles.contains),
       "DV serve read files outside the original tree")
     val cols = Seq("l_orderkey", "qty", "net_cents", "ship_month").map(col)
-    val dvw1 = PipelineOps.dvServeRead(spark, sfDir, "dv1").select(cols: _*)
-    val mor = PipelineOps.morServeRead(spark, sfDir).select(cols: _*)
+    val dvw1 = LakeFixture.dvServeRead(spark, sfDir, "dv1").select(cols: _*)
+    val mor = LakeFixture.morServeRead(spark, sfDir).select(cols: _*)
     assert(dvw1.exceptAll(mor).isEmpty && mor.exceptAll(dvw1).isEmpty,
       "deletion-vector and position-delete serves diverge")
   }
 
   test("compaction folds exactly the touched files and retires the sidecar") {
     import spark.implicits._
-    val croot = PipelineOps.dvCompactDir(spark, sfDir)
+    val croot = LakeFixture.dvCompactDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val oldData = java.nio.file.Paths.get(base)
@@ -144,7 +144,7 @@ class DvSpec extends AnyFunSuite with graft.SharedSpark {
     // folded serve ≡ probe serve row-for-row
     val cols = Seq("l_orderkey", "qty", "net_cents", "ship_month").map(col)
     val folded = spark.read.parquet(s"$croot/data").select(cols: _*)
-    val probe = PipelineOps.dvServeRead(spark, sfDir, "dv").select(cols: _*)
+    val probe = LakeFixture.dvServeRead(spark, sfDir, "dv").select(cols: _*)
     assert(folded.exceptAll(probe).isEmpty && probe.exceptAll(folded).isEmpty,
       "compaction changed the served state")
   }

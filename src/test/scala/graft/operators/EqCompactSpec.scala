@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Lifecycle contracts of equality-delete compaction
-  * ([[PipelineOps.eqCompactDir]]) the monthly-readout oracle cannot see:
+  * ([[LakeFixture.eqCompactDir]]) the monthly-readout oracle cannot see:
   * WHICH files were rewritten vs retained, that the sequence rule kept
   * the batch files physically untouched despite their keys sitting in a
   * delete file, and that both delete files actually retired.
@@ -15,7 +15,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.eqCompactDir(spark, sfDir)
+  private def root = LakeFixture.eqCompactDir(spark, sfDir)
 
   private def plan: Seq[(String, String, String)] = {
     import spark.implicits._
@@ -25,8 +25,8 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
 
   private def deleteKeys = {
     import spark.implicits._
-    val w1 = PipelineOps.eqDeleteDir(spark, sfDir)
-    val mg = PipelineOps.eqMergeDir(spark, sfDir)
+    val w1 = LakeFixture.eqDeleteDir(spark, sfDir)
+    val mg = LakeFixture.eqMergeDir(spark, sfDir)
     spark.read.parquet(s"$w1/eq_deletes")
       .unionByName(spark.read.parquet(s"$mg/eq_deletes"))
       .select($"k")
@@ -36,15 +36,15 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     val cols = Seq("l_orderkey", "l_partkey", "qty", "net_cents",
       "ship_day", "ship_month").map(col)
     val post = spark.read.parquet(s"$root/data").select(cols: _*)
-    val pre = PipelineOps.eqMergeServe(spark, sfDir).select(cols: _*)
+    val pre = LakeFixture.eqMergeServe(spark, sfDir).select(cols: _*)
     assert(post.exceptAll(pre).isEmpty && pre.exceptAll(post).isEmpty,
       "compaction changed the served state")
   }
 
   test("both delete files retired; the live delete set is empty") {
     import spark.implicits._
-    val w1 = PipelineOps.eqDeleteDir(spark, sfDir)
-    val mg = PipelineOps.eqMergeDir(spark, sfDir)
+    val w1 = LakeFixture.eqDeleteDir(spark, sfDir)
+    val mg = LakeFixture.eqMergeDir(spark, sfDir)
     val expected =
       spark.read.parquet(s"$w1/eq_deletes").inputFiles
         .map(f => (LakeIndex.normPath(f), 1L)).toSet ++
@@ -61,7 +61,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("sequence rule: batch files retained by link despite matching keys") {
     import spark.implicits._
-    val mg = PipelineOps.eqMergeDir(spark, sfDir)
+    val mg = LakeFixture.eqMergeDir(spark, sfDir)
     val batchDir = java.nio.file.Paths.get(
       LakeIndex.normPath(s"$mg/batch"))
     val batchRows = plan.filter(_._2 == "batch")
@@ -86,23 +86,23 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
     // the bloom layout by EqDeleteSpec)
     val oldData = java.nio.file.Paths.get(LakeIndex.normPath(
       java.nio.file.Files.readString(java.nio.file.Paths.get(
-        s"${PipelineOps.eqDeleteDir(spark, sfDir)}/data_base.txt"))))
+        s"${LakeFixture.eqDeleteDir(spark, sfDir)}/data_base.txt"))))
     val baseRows = plan.filter(_._2 == "base")
     val rewritten = baseRows.collect { case (f, _, "rewritten") => f }
     val retained = baseRows.collect { case (f, _, "retained") => f }
     assert(rewritten.nonEmpty && retained.nonEmpty,
       "degenerate plan: nothing rewritten or nothing retained")
     // every rewritten file really holds ≥1 matching row
-    val hitFiles = PipelineOps.readMatchedFiles(
+    val hitFiles = LakeProtocol.readMatchedFiles(
         spark, oldData.toString, rewritten.toSeq)
-      .select(PipelineOps.metaFilePath.as("file"), $"l_orderkey")
+      .select(LakeProtocol.metaFilePath.as("file"), $"l_orderkey")
       .join(deleteKeys, $"l_orderkey" === $"k", "left_semi")
       .select($"file").distinct().as[String].collect()
       .map(LakeIndex.normPath).toSet
     assert(hitFiles == rewritten.toSet,
       "a file was rewritten without holding any matching row")
     // every retained base file holds NONE, and survived by link
-    val retainedHits = PipelineOps.readMatchedFiles(
+    val retainedHits = LakeProtocol.readMatchedFiles(
         spark, oldData.toString, retained.toSeq)
       .join(deleteKeys, $"l_orderkey" === $"k", "left_semi").count()
     assert(retainedHits == 0L,
@@ -126,7 +126,7 @@ class EqCompactSpec extends AnyFunSuite with graft.SharedSpark {
       .filterNot(f =>
         srcNames(java.nio.file.Paths.get(f).getFileName.toString))
     assert(outLeg.nonEmpty, "rewrite produced no files")
-    val survivors = PipelineOps.readMatchedFiles(
+    val survivors = LakeProtocol.readMatchedFiles(
         spark, s"$root/data", outLeg.toSeq)
       .join(deleteKeys, $"l_orderkey" === $"k", "left_semi").count()
     assert(survivors == 0L, "a deleted key survived the rewrite")

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Structural contracts of the EQUALITY-delete strategy (Iceberg v2
   * equality delete files) that the DuckDB oracles cannot see:
@@ -30,10 +30,10 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("equality delete is keys + sequence only — zero data files touched") {
     import spark.implicits._
-    val root = PipelineOps.eqDeleteDir(spark, sfDir)
+    val root = LakeFixture.eqDeleteDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
-    assert(base == LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+    assert(base == LakeIndex.normPath(LakeFixture.bloomIdxDataDir(spark, sfDir)))
     // the snapshot root holds the delete file and the pointer, nothing else
     val entries = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(entries == Set("eq_deletes", "data_base.txt"), entries.toString)
@@ -43,32 +43,32 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     assert(del.columns.toSet == Set("k", "seq_del"), del.columns.mkString(","))
     // key set exactness, wave 1
     val got = del.select($"k").as[Long].collect().sorted
-    val want = PipelineOps.eraseOrderKeys(spark, sfDir)
+    val want = LakeFixture.eraseOrderKeys(spark, sfDir)
       .as[Long].collect().sorted
     assert(got.sameElements(want))
     assert(del.filter($"seq_del" =!= 1L).count() == 0L)
     // merge wave: keys ≡ the batch's distinct keys, all at sequence 2
-    val mg = spark.read.parquet(s"${PipelineOps.eqMergeDir(spark, sfDir)}/eq_deletes")
+    val mg = spark.read.parquet(s"${LakeFixture.eqMergeDir(spark, sfDir)}/eq_deletes")
     val gotM = mg.select($"k").as[Long].collect().sorted
-    val wantM = PipelineOps.mergeUpsertRows(spark, sfDir)
+    val wantM = LakeFixture.mergeUpsertRows(spark, sfDir)
       .select($"l_orderkey").distinct().as[Long].collect().sorted
     assert(gotM.sameElements(wantM))
     assert(mg.filter($"seq_del" =!= 2L).count() == 0L)
   }
 
   test("equality serve equals the copy-on-write delete row-for-row") {
-    val eq = PipelineOps.eqServeRead(spark, sfDir).select(dataCols.map(col): _*)
+    val eq = LakeFixture.eqServeRead(spark, sfDir).select(dataCols.map(col): _*)
     val cow = spark.read
-      .parquet(s"${PipelineOps.deleteExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.deleteExecDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     assert(eq.exceptAll(cow).isEmpty && cow.exceptAll(eq).isEmpty,
       "equality-delete state diverges from the copy-on-write delete")
   }
 
   test("composed equality merge equals the copy-on-write merge row-for-row") {
-    val eq = PipelineOps.eqMergeServe(spark, sfDir).select(dataCols.map(col): _*)
+    val eq = LakeFixture.eqMergeServe(spark, sfDir).select(dataCols.map(col): _*)
     val cow = spark.read
-      .parquet(s"${PipelineOps.mergeExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.mergeExecDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     assert(eq.exceptAll(cow).isEmpty && cow.exceptAll(eq).isEmpty,
       "equality-delete merge state diverges from the copy-on-write merge")
@@ -76,8 +76,8 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("the sequence rule is load-bearing: seq-ignorant apply loses re-inserts") {
     import spark.implicits._
-    val w1 = PipelineOps.eqDeleteDir(spark, sfDir)
-    val mg = PipelineOps.eqMergeDir(spark, sfDir)
+    val w1 = LakeFixture.eqDeleteDir(spark, sfDir)
+    val mg = LakeFixture.eqMergeDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$w1/data_base.txt"))
     val dels = spark.read.parquet(s"$w1/eq_deletes")
@@ -87,7 +87,7 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     // the counterfactual: apply every delete to every leg, no sequence
     val naive = legs.join(broadcast(dels.select($"k").distinct()),
       legs("l_orderkey") === col("k"), "left_anti")
-    val seqAware = PipelineOps.eqMergeServe(spark, sfDir)
+    val seqAware = LakeFixture.eqMergeServe(spark, sfDir)
       .select(dataCols.map(col): _*)
     val lost = seqAware.exceptAll(naive.select(dataCols.map(col): _*))
     // what the naive reader loses is EXACTLY the batch rows whose keys a
@@ -128,7 +128,7 @@ class EqDeleteSpec extends AnyFunSuite with graft.SharedSpark {
         (rnd.nextInt(50).toLong, (rnd.nextInt(3) + 1).toLong) }
       val data = rows.toDF("l_orderkey", "payload", "seq_data")
       val delDf = dels.toDF("k", "seq_del")
-      val got = PipelineOps.eqApply(data, delDf)
+      val got = LakeProtocol.eqApply(data, delDf)
         .select($"l_orderkey", $"payload", $"seq_data")
         .as[(Long, Long, Long)].collect().sorted
       val want = rows.filterNot { case (key, _, sd) =>

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Structural contracts of snapshot expiration + orphan GC
-  * ([[PipelineOps.gcExpireDir]]) that the state-readout oracle cannot
+  * ([[LakeFixture.gcExpireDir]]) that the state-readout oracle cannot
   * see: WHICH files died and which survived. The clone's refcount
   * structure (one physical file per relative path, shared by every
   * snapshot that references it) makes these checks exact.
@@ -15,7 +15,7 @@ class GcExpireSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.gcExpireDir(spark, sfDir)
+  private def root = LakeFixture.gcExpireDir(spark, sfDir)
 
   private def deleted: Set[String] = {
     import spark.implicits._
@@ -70,7 +70,7 @@ class GcExpireSpec extends AnyFunSuite with graft.SharedSpark {
     val live = liveIds
     val cloneLive = manifestsAll.filter(t => live(t._1))
     // map back to the original chain paths via the pre-GC metadata pair
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val baseOf = spark.read.parquet(s"$meta/snapshots")
       .select($"snap_id", $"base").as[(Long, String)].collect().toMap
     val orig = spark.read.parquet(s"$meta/manifests")
@@ -93,10 +93,19 @@ class GcExpireSpec extends AnyFunSuite with graft.SharedSpark {
     val cols = Seq("l_orderkey", "l_partkey", "qty", "net_cents",
       "ship_day", "ship_month").map(col)
     Seq(3L, 4L).foreach { id =>
-      val post = PipelineOps.readLiveSnapshot(spark, sfDir, id).select(cols: _*)
-      val pre = PipelineOps.readSnapshot(spark, sfDir, id).select(cols: _*)
+      val post = LakeProtocol.readCloneSnapshot(
+        spark, LakeFixture.gcExpireDir(spark, sfDir), id).select(cols: _*)
+      val pre = LakeFixture.readSnapshot(spark, sfDir, id).select(cols: _*)
       assert(post.exceptAll(pre).isEmpty && pre.exceptAll(post).isEmpty,
         s"snapshot $id drifted through GC")
+    }
+  }
+
+  test("an expired or unknown snapshot id is rejected after GC, not served empty") {
+    Seq(0L, 999L).foreach { id =>
+      val e = intercept[IllegalArgumentException](
+        LakeProtocol.readCloneSnapshot(spark, root, id))
+      assert(e.getMessage.contains(s"snapshot $id expired or unknown"))
     }
   }
 }

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Contracts of the two-level manifest layout ([[PipelineOps
-  * .manifestListDir]] / [[PipelineOps.planViaManifestList]]) the
+import graft.sources.lake.LakeProtocol
+
+/** Contracts of the two-level manifest layout ([[LakeFixture
+  * .manifestListDir]] / [[LakeProtocol.planViaManifestList]]) the
   * window-report oracle cannot see: group pruning actually happens, the
   * planned file set matches the flat manifest exactly, and the list's
   * range stats are consistent with the manifests they describe.
@@ -13,11 +15,11 @@ class ManifestListSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.manifestListDir(spark, sfDir)
+  private def root = LakeFixture.manifestListDir(spark, sfDir)
 
   private def tipFiles: Array[String] = {
     import spark.implicits._
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val tip = spark.read.parquet(s"$meta/snapshots")
       .agg(max($"snap_id")).as[Long].head()
     spark.read.parquet(s"$meta/manifests")
@@ -29,8 +31,8 @@ class ManifestListSpec extends AnyFunSuite with graft.SharedSpark {
     MonthRe.findFirstMatchIn(f).get.group(1)
 
   test("planning prunes manifest groups and lists exactly the window's files") {
-    val (files, opened, total) = PipelineOps.planViaManifestList(
-      spark, sfDir, "1995-01", "1995-12")
+    val (files, opened, total) = LakeProtocol.planViaManifestList(
+      spark, LakeFixture.manifestListDir(spark, sfDir), "1995-01", "1995-12")
     assert(total > 1L, "degenerate layout: one group prunes nothing")
     assert(opened < total, s"no pruning: opened $opened of $total groups")
     val expected = tipFiles.filter { f =>
@@ -65,8 +67,8 @@ class ManifestListSpec extends AnyFunSuite with graft.SharedSpark {
   }
 
   test("an out-of-range window opens zero manifest groups") {
-    val (files, opened, _) = PipelineOps.planViaManifestList(
-      spark, sfDir, "2199-01", "2199-12")
+    val (files, opened, _) = LakeProtocol.planViaManifestList(
+      spark, LakeFixture.manifestListDir(spark, sfDir), "2199-01", "2199-12")
     assert(files.isEmpty && opened == 0L)
   }
 }

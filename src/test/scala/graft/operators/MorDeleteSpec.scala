@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Structural contracts of the merge-on-read delete lifecycle
   * (position-delete sidecars → scan-time apply → compaction fold-in) that
@@ -25,11 +25,11 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
     "ship_day", "ship_month")
 
   test("MOR delete writes a sidecar and touches zero data files") {
-    val root = PipelineOps.morDeleteDir(spark, sfDir)
+    val root = LakeFixture.morDeleteDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     // the snapshot's data pointer IS the original bloom-indexed tree
-    assert(base == LakeIndex.normPath(PipelineOps.bloomIdxDataDir(spark, sfDir)))
+    assert(base == LakeIndex.normPath(LakeFixture.bloomIdxDataDir(spark, sfDir)))
     // nothing under the MOR root but the sidecar and the pointer
     val entries = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(entries == Set("deletes", "data_base.txt"), entries.toString)
@@ -42,16 +42,16 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("sidecar positions address exactly the purge rows, 1:1") {
     import spark.implicits._
-    val root = PipelineOps.morDeleteDir(spark, sfDir)
+    val root = LakeFixture.morDeleteDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$root/data_base.txt"))
     val del = spark.read.parquet(s"$root/deletes")
-    val eraseKeys = PipelineOps.eraseOrderKeys(spark, sfDir)
+    val eraseKeys = LakeFixture.eraseOrderKeys(spark, sfDir)
       .as[Long].collect().toSet
     // read the tree with physical positions; join the sidecar back
     val tree = spark.read.parquet(base)
       .select(
-        PipelineOps.metaFilePath.as("file"),
+        LakeProtocol.metaFilePath.as("file"),
         col("_metadata.row_index").as("pos"),
         col("l_orderkey").as("tree_key"))
     val joined = del.join(tree, Seq("file", "pos"))
@@ -68,33 +68,33 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
   test("compaction fold-in equals the copy-on-write delete row-for-row") {
     import spark.implicits._
     val mor = spark.read
-      .parquet(s"${PipelineOps.morCompactDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.morCompactDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     val cow = spark.read
-      .parquet(s"${PipelineOps.deleteExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.deleteExecDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     assert(mor.exceptAll(cow).isEmpty && cow.exceptAll(mor).isEmpty)
   }
 
   test("MOR merge equals the copy-on-write merge row-for-row, zero rewrites") {
     import spark.implicits._
-    val mor = PipelineOps.morMergeRead(spark, sfDir).select(dataCols.map(col): _*)
+    val mor = LakeFixture.morMergeRead(spark, sfDir).select(dataCols.map(col): _*)
     val cow = spark.read
-      .parquet(s"${PipelineOps.mergeExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.mergeExecDir(spark, sfDir)}/data")
       .select(dataCols.map(col): _*)
     assert(mor.exceptAll(cow).isEmpty && cow.exceptAll(mor).isEmpty,
       "merge-on-read state diverges from the copy-on-write merge")
     // the MOR merge snapshot is sidecar + batch only — the original tree
     // is untouched (its pointer is wave 1's, pinned in the first test)
-    val root = PipelineOps.morMergeDir(spark, sfDir)
+    val root = LakeFixture.morMergeDir(spark, sfDir)
     val entries = new java.io.File(root).listFiles().map(_.getName).toSet
     assert(entries == Set("deletes2", "batch"), entries.toString)
     // every replaced-row position addresses a batch-keyed row of the tree
     val base = java.nio.file.Files.readString(java.nio.file.Paths.get(
-      s"${PipelineOps.morDeleteDir(spark, sfDir)}/data_base.txt"))
+      s"${LakeFixture.morDeleteDir(spark, sfDir)}/data_base.txt"))
     val tree = spark.read.parquet(base)
       .select(
-        PipelineOps.metaFilePath.as("file"),
+        LakeProtocol.metaFilePath.as("file"),
         col("_metadata.row_index").as("pos"),
         col("l_orderkey").as("tree_key"))
     val del2 = spark.read.parquet(s"$root/deletes2")
@@ -105,12 +105,12 @@ class MorDeleteSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("compaction rewrites only files with deletes; the rest hard-link") {
     import spark.implicits._
-    val morRoot = PipelineOps.morDeleteDir(spark, sfDir)
+    val morRoot = LakeFixture.morDeleteDir(spark, sfDir)
     val base = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$morRoot/data_base.txt"))
     val oldData = java.nio.file.Paths.get(base)
     val newData = java.nio.file.Paths.get(
-      s"${PipelineOps.morCompactDir(spark, sfDir)}/data")
+      s"${LakeFixture.morCompactDir(spark, sfDir)}/data")
     val delFiles = spark.read.parquet(s"$morRoot/deletes")
       .select($"file").distinct().as[String].collect().toSet
     val baseFiles = spark.read.parquet(base).inputFiles

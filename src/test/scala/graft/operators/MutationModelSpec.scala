@@ -4,10 +4,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Model-based randomized tests for the copy-on-write mutation engine
-  * ([[PipelineOps.applyMutation]]): for seeded random (base tree, delete
+  * ([[LakeProtocol.applyMutation]]): for seeded random (base tree, delete
   * key set, upsert batch) triples — including keys matching nothing, a
   * month losing ALL its rows, inserts creating brand-new month
   * partitions, and replace-and-reinsert overlaps — the mutated snapshot
@@ -57,7 +57,7 @@ class MutationModelSpec extends AnyFunSuite with graft.SharedSpark {
     toDf(rows).repartition(3, col("l_orderkey"))
       .write.mode("overwrite").partitionBy("ship_month").parquet(dataDir)
     val data = spark.read.parquet(dataDir)
-    PipelineOps.bloomIndexRows(spark, data, data.inputFiles.length)
+    LakeProtocol.bloomIndexRows(spark, data, data.inputFiles.length)
       .write.mode("overwrite").parquet(idxDir)
     daily(data).write.mode("overwrite").partitionBy("ship_month").parquet(mvDir)
     (dataDir, idxDir, mvDir)
@@ -107,7 +107,7 @@ class MutationModelSpec extends AnyFunSuite with graft.SharedSpark {
         }
       val mutKeys = delKeys ++ batch.map(_.k)
       val (dataDir, idxDir, mvDir) = writeSnapshot(base)
-      val out = PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_mutout"),
+      val out = LakeProtocol.applyMutation(spark, graft.Fixtures.tempDir("graft_mutout"),
         dataDir, idxDir, mvDir, mutKeys.toSeq.toDF("k"),
         if (batch.isEmpty) None else Some(toDf(batch)))
 

@@ -3,10 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.lake.LakeIndex
+import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** Contracts of the mutation writer's file-size targeting
-  * ([[PipelineOps.writeMonthTargeted]] / [[PipelineOps.applyMutation]]'s
+  * ([[LakeProtocol.writeMonthTargeted]] / [[LakeProtocol.applyMutation]]'s
   * step 3): per-file row bound, manifest count O(months ×
   * ceil(rows/target)), and — with the default target — the one-file-per-
   * month layout every existing oracle pins, unchanged.
@@ -19,11 +19,11 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
   // a delete wave executed with a TINY per-file target, so the split is
   // observable at sf0.001 (months run ~1-3k rewritten rows)
   private lazy val tinyRoot: String = {
-    val bloom = PipelineOps.bloomIdxDataDir(spark, sfDir)
+    val bloom = LakeFixture.bloomIdxDataDir(spark, sfDir)
     val idx = bloom.stripSuffix("/data") + "/index"
-    val w1 = PipelineOps.deleteExecDir(spark, sfDir)
-    PipelineOps.applyMutation(spark, graft.Fixtures.tempDir("graft_tinytarget"), bloom, idx,
-      s"$w1/mv", PipelineOps.eraseOrderKeys(spark, sfDir),
+    val w1 = LakeFixture.deleteExecDir(spark, sfDir)
+    LakeProtocol.applyMutation(spark, graft.Fixtures.tempDir("graft_tinytarget"), bloom, idx,
+      s"$w1/mv", LakeFixture.eraseOrderKeys(spark, sfDir),
       targetRows = Target)
   }
 
@@ -32,11 +32,11 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
     val data = spark.read.parquet(s"$tinyRoot/data")
     // new files = written by the mutation (not hard-linked retains):
     // retained files share their inode with the source tree
-    val src = spark.read.parquet(PipelineOps.bloomIdxDataDir(spark, sfDir))
+    val src = spark.read.parquet(LakeFixture.bloomIdxDataDir(spark, sfDir))
       .inputFiles.map(f =>
         java.nio.file.Paths.get(LakeIndex.normPath(f)).getFileName.toString)
       .toSet
-    data.select(PipelineOps.metaFilePath.as("file"), $"ship_month")
+    data.select(LakeProtocol.metaFilePath.as("file"), $"ship_month")
       .groupBy($"file", $"ship_month").agg(count(lit(1)).as("n"))
       .as[(String, String, Long)].collect()
       .filterNot(t =>
@@ -62,9 +62,9 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
       $"l_orderkey".cast("long").as("l_orderkey"),
       $"l_quantity".cast("long").as("qty"),
       date_format($"l_shipdate", "yyyy-MM").as("ship_month"))
-    PipelineOps.writeMonthTargeted(spark, df, out, tgt)
+    LakeProtocol.writeMonthTargeted(spark, df, out, tgt)
     val byMonth = spark.read.parquet(out)
-      .select(PipelineOps.metaFilePath.as("file"), $"ship_month")
+      .select(LakeProtocol.metaFilePath.as("file"), $"ship_month")
       .groupBy($"file", $"ship_month").agg(count(lit(1)).as("n"))
       .as[(String, String, Long)].collect().groupBy(_._2)
     byMonth.foreach { case (m, fs) =>
@@ -91,16 +91,16 @@ class MutationWriterSpec extends AnyFunSuite with graft.SharedSpark {
       "ship_day", "ship_month").map(col)
     val tiny = spark.read.parquet(s"$tinyRoot/data").select(cols: _*)
     val ref = spark.read.parquet(
-      s"${PipelineOps.deleteExecDir(spark, sfDir)}/data").select(cols: _*)
+      s"${LakeFixture.deleteExecDir(spark, sfDir)}/data").select(cols: _*)
     assert(tiny.exceptAll(ref).isEmpty && ref.exceptAll(tiny).isEmpty,
       "file-size targeting changed the table contents")
   }
 
   test("default target keeps the one-file-per-month layout at test SF") {
     import spark.implicits._
-    val w1 = PipelineOps.deleteExecDir(spark, sfDir)
+    val w1 = LakeFixture.deleteExecDir(spark, sfDir)
     val perMonth = spark.read.parquet(s"$w1/data")
-      .select(PipelineOps.metaFilePath.as("file"), $"ship_month")
+      .select(LakeProtocol.metaFilePath.as("file"), $"ship_month")
       .groupBy($"ship_month")
       .agg(countDistinct($"file").as("nf"))
       .agg(max($"nf")).as[Long].head()

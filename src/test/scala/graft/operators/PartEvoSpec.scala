@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural contracts of partition evolution
-  * ([[PipelineOps.partEvoDir]]): the evolved table loses nothing at the
+  * ([[LakeFixture.partEvoDir]]): the evolved table loses nothing at the
   * cutover seam, each layout leg actually PRUNES under its own partition
   * scheme, and the seam is exact (no row lives in both legs).
   */
@@ -12,7 +12,7 @@ class PartEvoSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  private def root = PipelineOps.partEvoDir(spark, sfDir)
+  private def root = LakeFixture.partEvoDir(spark, sfDir)
 
   test("old ∪ new equals the fact exactly; the seam is clean") {
     import spark.implicits._

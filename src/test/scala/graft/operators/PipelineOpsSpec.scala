@@ -76,7 +76,7 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("bloom prefilter never misses a member and passes the fp bound") {
     import spark.implicits._
-    val row = PipelineOps.queries("pipeline_bloom_prefilter")(spark, sfDir)
+    val row = DecontamQueries.queries("pipeline_bloom_prefilter")(spark, sfDir)
       .as[(Long, Long, Long, Boolean)].head()
     assert(row._3 == 0L, "bloom filter reported a false negative")
     assert(row._4, "false-positive rate above bound")
@@ -98,7 +98,7 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("domain mixture: rates track target shares, sampling bounded by domain size") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_domain_mixture")(spark, sfDir)
+    val rows = SamplingQueries.queries("pipeline_domain_mixture")(spark, sfDir)
       .select($"source", $"n_docs", $"weight", $"target_share", $"n_sampled", $"achieved_share")
       .as[(String, Long, Long, Double, Long, Double)].collect()
     assert(rows.nonEmpty)
@@ -138,7 +138,7 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
   test("mv incremental refresh equals a full rebuild at day granularity") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val mv = spark.read.parquet(PipelineOps.mvRollupDir(spark, sfDir))
+    val mv = spark.read.parquet(LakeFixture.mvRollupDir(spark, sfDir))
       .select($"ship_month", $"ship_day", $"n_items", $"sum_qty", $"revenue_cents")
     val rebuild = graft.Tables.lineitem(spark, sfDir)
       .groupBy(date_format($"l_shipdate", "yyyy-MM").as("ship_month"),
@@ -162,7 +162,7 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
   // region, i.e. >= 5 — the balance pass alone catches those).
   test("entity match: planted recall 100%, ghosts rejected, pass split exact") {
     import spark.implicits._
-    val got = PipelineOps.queries("pipeline_entity_match")(spark, sfDir)
+    val got = DecontamQueries.queries("pipeline_entity_match")(spark, sfDir)
       .select($"c_custkey", $"registry_id", $"via_name")
       .as[(Long, Long, Long)].collect()
     val nCust = graft.Tables.customer(spark, sfDir).count()
@@ -206,8 +206,8 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
   test("golden record: every planted noise class resolves to the master's true attributes") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    val golden = PipelineOps.queries("pipeline_golden_record")(spark, sfDir)
-    val cust = PipelineOps.erCustomers(spark, sfDir)
+    val golden = DecontamQueries.queries("pipeline_golden_record")(spark, sfDir)
+    val cust = DecontamQueries.erCustomers(spark, sfDir)
     val paired = golden.filter($"n_members" === 2 && $"n_registry" === 1)
       .join(cust, $"entity_id" === $"c_custkey")
     val n = paired.count()

@@ -3,10 +3,12 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeProtocol
+
 /** Structural contracts of REF-AWARE expiration + GC
-  * ([[PipelineOps.refsGcDir]]) that the per-ref state oracle cannot see:
+  * ([[LakeFixture.refsGcDir]]) that the per-ref state oracle cannot see:
   * WHICH files died, which survived, and WHY survival required the
-  * multi-ref reachability rule instead of [[PipelineOps.gcExpireDir]]'s
+  * multi-ref reachability rule instead of [[LakeFixture.gcExpireDir]]'s
   * single-chain tip+parent policy. The clone's refcount structure (one
   * physical file per relpath, shared by every snapshot referencing it)
   * makes the checks exact.
@@ -15,7 +17,7 @@ class RefsGcSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  private def root = PipelineOps.refsGcDir(spark, sfDir)
+  private def root = LakeFixture.refsGcDir(spark, sfDir)
 
   private def deleted: Set[String] = {
     import spark.implicits._
@@ -97,12 +99,21 @@ class RefsGcSpec extends AnyFunSuite with graft.SharedSpark {
   test("live snapshots serve their exact pre-GC state after the purge") {
     val cols = Seq("l_orderkey", "qty", "net_cents", "ship_month").map(col)
     Seq(1L, 4L, 6L, 7L).foreach { id =>
-      val post = PipelineOps.readRefsGcSnapshot(spark, sfDir, id)
+      val post = LakeProtocol.readCloneSnapshot(spark, LakeFixture.refsGcDir(spark, sfDir), id)
         .select(cols: _*)
-      val pre = PipelineOps.readBranchSnapshot(spark, sfDir, id)
+      val pre = LakeProtocol.readManifestSnapshot(
+        spark, LakeFixture.branchMetaDir(spark, sfDir), id)
         .select(cols: _*)
       assert(post.exceptAll(pre).isEmpty && pre.exceptAll(post).isEmpty,
         s"snapshot $id drifted through ref-aware GC")
+    }
+  }
+
+  test("an expired or unknown snapshot id is rejected after ref-aware GC, not served empty") {
+    Seq(2L, 999L).foreach { id =>
+      val e = intercept[IllegalArgumentException](
+        LakeProtocol.readCloneSnapshot(spark, root, id))
+      assert(e.getMessage.contains(s"snapshot $id expired or unknown"))
     }
   }
 }

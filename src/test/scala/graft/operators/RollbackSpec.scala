@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural contracts of snapshot rollback
-  * ([[PipelineOps.rollbackMetaDir]]): the rollback is METADATA-ONLY and
+  * ([[LakeFixture.rollbackMetaDir]]): the rollback is METADATA-ONLY and
   * its manifest is the target snapshot's file list verbatim — nothing
   * the state oracle can observe.
   */
@@ -14,7 +14,7 @@ class RollbackSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("rollback manifest is snapshot 2's verbatim; lineage keeps the tip") {
     import spark.implicits._
-    val root = PipelineOps.rollbackMetaDir(spark, sfDir)
+    val root = LakeFixture.rollbackMetaDir(spark, sfDir)
     val snaps = spark.read.parquet(s"$root/snapshots")
       .select($"snap_id", $"op", $"parent_id", $"base")
       .as[(Long, String, Long, String)].collect().sortBy(_._1)

@@ -14,7 +14,7 @@ class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("weighted sample IS the exact bottom-k of independently recomputed ticket minima") {
     import spark.implicits._
-    val got = PipelineOps.queries("pipeline_weighted_sample")(spark, sfDir)
+    val got = SamplingQueries.queries("pipeline_weighted_sample")(spark, sfDir)
       .select($"doc_id", $"pri").as[(Long, Long)].collect().toSeq
 
     // independent recomputation: tokenize in Scala, fold ticket hashes with
@@ -34,7 +34,7 @@ class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("weighted sample favors heavier docs: mean tickets of the sample exceeds the corpus mean") {
     import spark.implicits._
-    val sampleMean = PipelineOps.queries("pipeline_weighted_sample")(spark, sfDir)
+    val sampleMean = SamplingQueries.queries("pipeline_weighted_sample")(spark, sfDir)
       .agg(avg($"w_tickets")).as[Double].head()
     val corpusMean = graft.Tables.documents(spark, sfDir)
       .select(expr("least(15L, CAST(size(split(trim(text), '\\\\s+')) AS BIGINT) div 32L) + 1L").as("w"))
@@ -45,7 +45,7 @@ class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("serpentine LPT sharding balances token load tighter than hash sharding") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_balanced_shards")(spark, sfDir)
+    val rows = SamplingQueries.queries("pipeline_balanced_shards")(spark, sfDir)
       .select($"n_docs", $"serp_tokens", $"serp_imbalance_e4", $"hash_tokens", $"hash_imbalance_e4")
       .as[(Long, Long, Long, Long, Long)].collect()
     assert(rows.length == 8)
@@ -62,7 +62,7 @@ class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("DSIR resample acceptance matches the formula recomputed from the weights query") {
     import spark.implicits._
-    val weights = PipelineOps.queries("pipeline_dsir_weights")(spark, sfDir)
+    val weights = SamplingQueries.queries("pipeline_dsir_weights")(spark, sfDir)
       .select($"doc_id", $"lang", $"dsir_score").as[(Long, String, Long)].collect()
     val meanW = weights.map(_._3).sum / weights.length
     val expected = weights.groupBy(_._2).map { case (lang, docs) =>
@@ -71,7 +71,7 @@ class SamplingSpec extends AnyFunSuite with graft.SharedSpark {
       }
       lang -> (docs.length.toLong, kept.toLong)
     }
-    val got = PipelineOps.queries("pipeline_dsir_resample")(spark, sfDir)
+    val got = SamplingQueries.queries("pipeline_dsir_resample")(spark, sfDir)
       .select($"lang", $"n_docs", $"n_kept").as[(String, Long, Long)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     assert(got == expected)

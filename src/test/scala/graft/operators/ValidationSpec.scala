@@ -37,7 +37,7 @@ class ValidationSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("schema evolution: r1 rows carry only NULL tiers, r2 rows all carry one; totals survive") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_schema_evolution")(spark, sfDir)
+    val rows = LakeServeQueries.queries("pipeline_schema_evolution")(spark, sfDir)
       .select($"release", $"n_docs", $"n_null_tier", $"n_tiers")
       .as[(String, Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3, r._4))).toMap
     val (even, odd) = {
@@ -244,7 +244,7 @@ class ValidationSpec extends AnyFunSuite with graft.SharedSpark {
   // nation-corrupt alone) is recovered.
   test("entity resolution: fn set is exactly the designed unfindables; caps shed no true pair") {
     import spark.implicits._
-    val row = PipelineOps.queries("pipeline_entity_resolution")(spark, sfDir)
+    val row = DecontamQueries.queries("pipeline_entity_resolution")(spark, sfDir)
       .as[(Long, Long, Long, Long, Long, Long, Long)].head()
     val (nTruth, _, tp, fp, fn, _, recallPpm) = row
     val maxKey = graft.Tables.customer(spark, sfDir)
@@ -259,7 +259,7 @@ class ValidationSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("temperature mix flattens toward rare domains within the budget") {
     import spark.implicits._
-    val rows = PipelineOps.queries("pipeline_temperature_mix")(spark, sfDir)
+    val rows = SamplingQueries.queries("pipeline_temperature_mix")(spark, sfDir)
       .select($"lang", $"n_docs", $"s_root", $"target_docs", $"epochs_milli")
       .as[(String, Long, Long, Long, Long)].collect()
     val nt = rows.map(_._2).sum

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.lake.LakeIndex
 
 /** Structural contracts of the write-audit-publish lifecycle
-  * ([[PipelineOps.wapDir]]) the audit/publish oracles can't see: the
+  * ([[LakeFixture.wapDir]]) the audit/publish oracles can't see: the
   * failed candidate is physically abandoned, and the GC of its staged
   * root cannot damage the published snapshot or its ancestor (hard-linked
   * retention is what makes staged-snapshot abandonment free and safe).
@@ -17,7 +17,7 @@ class WapSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("exactly one candidate publishes; the failed one's staged root is gone") {
     import spark.implicits._
-    val root = PipelineOps.wapDir(spark, sfDir)
+    val root = LakeFixture.wapDir(spark, sfDir)
     val log = spark.read.parquet(s"$root/publish_log")
       .select($"candidate", $"n_violations", $"published", $"base")
       .as[(String, Long, Boolean, String)].collect()
@@ -32,22 +32,22 @@ class WapSpec extends AnyFunSuite with graft.SharedSpark {
       s"abandoned staged tree survived GC: $bBase")
     // the published pointer is the good snapshot
     assert(gBase == LakeIndex.normPath(
-      s"${PipelineOps.mergeExecDir(spark, sfDir)}/data"))
+      s"${LakeFixture.mergeExecDir(spark, sfDir)}/data"))
   }
 
   test("abandon-GC is link-safe: published snapshot and its parent still serve") {
     import spark.implicits._
-    PipelineOps.wapDir(spark, sfDir) // ensure the GC ran
+    LakeFixture.wapDir(spark, sfDir) // ensure the GC ran
     val published = spark.read
-      .parquet(s"${PipelineOps.mergeExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.mergeExecDir(spark, sfDir)}/data")
     val parent = spark.read
-      .parquet(s"${PipelineOps.deleteExecDir(spark, sfDir)}/data")
+      .parquet(s"${LakeFixture.deleteExecDir(spark, sfDir)}/data")
     // both trees fully readable post-GC, and the published state is
     // still exactly the merged state (no shared byte was harmed)
     assert(published.count() > 0L && parent.count() > 0L)
     assert(published.filter($"qty" <= 0L).count() == 0L)
     // the parent still contains zero wave-1 erase keys (its contract)
-    val erased = PipelineOps.eraseOrderKeys(spark, sfDir).as[Long].collect().toSet
+    val erased = LakeFixture.eraseOrderKeys(spark, sfDir).as[Long].collect().toSet
     assert(parent.filter($"l_orderkey".isin(erased.toSeq: _*)).count() == 0L)
   }
 }

@@ -3,8 +3,10 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.sources.lake.LakeProtocol
+
 /** Structural contracts of the executed Z-order layout
-  * ([[PipelineOps.zorderExecDir]]) and its stats-skipping serve that the
+  * ([[LayoutQueries.zorderExecDir]]) and its stats-skipping serve that the
   * value oracles can't see: the rewrite loses nothing, the sidecar
   * matches the physical files, skipping is SOUND (truth ⊆ opened files)
   * and actually SKIPS (strictly fewer files than both the full scan and
@@ -14,7 +16,7 @@ class ZorderExecSpec extends AnyFunSuite with graft.SharedSpark {
 
   private val sfDir = "/root/testdata/sf0.01"
 
-  private def root = PipelineOps.zorderExecDir(spark, sfDir)
+  private def root = LayoutQueries.zorderExecDir(spark, sfDir)
 
   private def probeBounds: (Long, Long, Long, Long) = {
     import spark.implicits._
@@ -53,7 +55,7 @@ class ZorderExecSpec extends AnyFunSuite with graft.SharedSpark {
     assert(stats.count() == 64L)
     assert(stats.select($"zbkt").distinct().count() == 64L)
     val actual = spark.read.parquet(s"$root/zdata")
-      .select(PipelineOps.metaFilePath
+      .select(LakeProtocol.metaFilePath
         .as("file"), $"p", $"sk")
       .groupBy($"file")
       .agg(count(lit(1)).as("n_rows"), min($"p").as("minp"),
@@ -69,7 +71,7 @@ class ZorderExecSpec extends AnyFunSuite with graft.SharedSpark {
     val opened = envMatched("zdata_stats")
     val truthFiles = spark.read.parquet(s"$root/zdata")
       .filter($"p".between(pLo, pHi) && $"sk".between(sLo, sHi))
-      .select(PipelineOps.metaFilePath
+      .select(LakeProtocol.metaFilePath
         .as("file"))
       .distinct().as[String].collect().toSet
     assert(truthFiles.subsetOf(opened),

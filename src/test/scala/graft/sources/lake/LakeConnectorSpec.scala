@@ -7,7 +7,7 @@ import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThanOrEqual, In, Le
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{LakeFixture, PipelineOps}
+import graft.operators.LakeFixture
 
 /** Contracts of the `graft-lake` DataSourceV2 connector the lake_* query
   * oracles cannot see: the scan opens ONLY pruned files (partition window
@@ -41,12 +41,12 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("format short name resolves through the services registration") {
     val df = spark.read.format("graft-lake")
-      .option("metaRoot", PipelineOps.snapshotMetaDir(spark, sfDir)).load()
+      .option("metaRoot", LakeFixture.snapshotMetaDir(spark, sfDir)).load()
     assert(df.columns.contains("ship_month"))
   }
 
   test("partition window prunes the planned file set to exactly the window") {
-    val meta = PipelineOps.snapshotMetaDir(spark, sfDir)
+    val meta = LakeFixture.snapshotMetaDir(spark, sfDir)
     val o = opts("metaRoot" -> meta)
     val all = scanOf(o, Array.empty).plannedFiles
     val windowed = scanOf(o, Array(
@@ -64,15 +64,15 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("key probe prunes through the snapshot's own bloom sidecar") {
     import spark.implicits._
-    val root = PipelineOps.branchMetaDir(spark, sfDir)
+    val root = LakeFixture.branchMetaDir(spark, sfDir)
     val auditId = 6L
     val o = opts("metaRoot" -> root, "snapshot" -> "6")
     val all = scanOf(o, Array.empty).plannedFiles
-    val probes = PipelineOps.BloomIdxKeys
+    val probes = LakeFixture.BloomIdxKeys
     val pruned = scanOf(o,
       Array(In("l_orderkey", probes.map(_.asInstanceOf[Any]).toArray)))
       .plannedFiles
-    val (expected, _) = PipelineOps.matchedFilesInIndex(
+    val (expected, _) = LakeProtocol.matchedFilesInIndex(
       spark, s"$root/idx$auditId", probes.toDF("k"))
     assert(pruned.toSet == expected.map(LakeIndex.normPath).toSet,
       "pruned set != the index-matched set")
@@ -80,7 +80,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
   }
 
   test("pruned columns reach the scan's read schema") {
-    val o = opts("metaRoot" -> PipelineOps.snapshotMetaDir(spark, sfDir))
+    val o = opts("metaRoot" -> LakeFixture.snapshotMetaDir(spark, sfDir))
     val s = scanOf(o, Array.empty, cols = Some(Seq("l_orderkey", "ship_month")))
     assert(s.readSchema().fieldNames.toSeq == Seq("l_orderkey", "ship_month"))
   }
@@ -94,14 +94,14 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       .select($"l_orderkey", $"qty", $"net_cents", $"ship_month")
     // library composition over the same metadata: DV, then positions,
     // then the sequence-aware equality probe — the proven helpers
-    val base = PipelineOps.bloomIdxDataDir(spark, sfDir)
-    val dv = spark.read.parquet(s"${PipelineOps.dvDeleteDir(spark, sfDir)}/dv1")
+    val base = LakeFixture.bloomIdxDataDir(spark, sfDir)
+    val dv = spark.read.parquet(s"${LakeFixture.dvDeleteDir(spark, sfDir)}/dv1")
     val pos = spark.read.parquet(s"$meta/pos").select($"file", $"pos")
     val eq = spark.read.parquet(s"$meta/eq")
     val scan = spark.read.parquet(base)
-      .withColumn("file", PipelineOps.metaFilePath)
+      .withColumn("file", LakeProtocol.metaFilePath)
       .withColumn("pos", col("_metadata.row_index"))
-    val viaLibrary = PipelineOps.dvApply(scan, dv)
+    val viaLibrary = LakeProtocol.dvApply(scan, dv)
       .join(broadcast(pos), Seq("file", "pos"), "left_anti")
       .drop("file", "pos")
       .withColumn("seq_data", lit(0L))
@@ -120,7 +120,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
     assert(viaConnector.join(broadcast(cust0Orders),
       $"l_orderkey" === $"k", "left_semi").count() == 0L)
     val unionKeys = Seq(271, 337, 293)
-      .map(m => PipelineOps.orderKeysOfCustomersMod(spark, sfDir, m))
+      .map(m => LakeFixture.orderKeysOfCustomersMod(spark, sfDir, m))
       .reduce(_ unionByName _).distinct()
     val expectSurvivors = spark.read.parquet(base).count() -
       spark.read.parquet(base)
@@ -167,7 +167,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
   test("column-ID serve leaves old footers byte-identical (rename/widen " +
       "are read-time indirections)") {
     import spark.implicits._
-    val root = PipelineOps.schemaIdDir(spark, sfDir)
+    val root = LakeFixture.schemaIdDir(spark, sfDir)
     val before = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(spark.read.parquet(s"$root/data/release=r1")
         .inputFiles.map(LakeIndex.normPath).head))
@@ -176,8 +176,8 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
     // the v2 view serves char_count/bigint score; lang is never requested
     assert(served.columns.toSeq ==
       Seq("doc_id", "char_count", "score", "quality_tier", "release"))
-    val viaLibrary = PipelineOps.idMappedRelease(spark, sfDir, "r1", Some(2L))
-      .unionByName(PipelineOps.idMappedRelease(spark, sfDir, "r2", Some(2L)))
+    val viaLibrary = LakeFixture.idMappedRelease(spark, sfDir, "r1", Some(2L))
+      .unionByName(LakeFixture.idMappedRelease(spark, sfDir, "r2", Some(2L)))
       .select(served.columns.map(col).toIndexedSeq: _*)
     assert(served.exceptAll(viaLibrary).isEmpty &&
       viaLibrary.exceptAll(served).isEmpty,
@@ -192,9 +192,9 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       "(float→double, decimal widen, defaults)") {
     import org.apache.spark.sql.functions.col
     val served = spark.read.format("graft-lake")
-      .option("schemaRoot", PipelineOps.schemaPromoDir(spark, sfDir)).load()
-    val viaLibrary = PipelineOps.promoMappedRelease(spark, sfDir, "p1")
-      .unionByName(PipelineOps.promoMappedRelease(spark, sfDir, "p2"))
+      .option("schemaRoot", LakeFixture.schemaPromoDir(spark, sfDir)).load()
+    val viaLibrary = LakeFixture.promoMappedRelease(spark, sfDir, "p1")
+      .unionByName(LakeFixture.promoMappedRelease(spark, sfDir, "p2"))
       .select(served.columns.map(col).toIndexedSeq: _*)
     assert(served.schema("price").dataType ==
       org.apache.spark.sql.types.DecimalType(18, 4))
@@ -209,7 +209,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
     val viaConnector = spark.read.format("graft-lake")
       .option("metaRoot", meta).option("snapshot", "1").load()
       .select($"l_orderkey", $"qty", $"net_cents", $"ship_month")
-    val viaLibrary = PipelineOps.dvServeRead(spark, sfDir, "dv1")
+    val viaLibrary = LakeFixture.dvServeRead(spark, sfDir, "dv1")
       .select($"l_orderkey", $"qty", $"net_cents", $"ship_month")
     assert(viaConnector.exceptAll(viaLibrary).isEmpty &&
       viaLibrary.exceptAll(viaConnector).isEmpty)
@@ -255,7 +255,7 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
     assert(dataBatches == appended,
       s"expected $appended one-snapshot micro-batches, saw $dataBatches")
     val emitted = spark.table(sink)
-    val batch = PipelineOps.branchBatchRows(spark, sfDir)
+    val batch = LakeFixture.branchBatchRows(spark, sfDir)
       .select($"l_orderkey", $"qty", $"net_cents", $"ship_month")
     assert(emitted.exceptAll(batch).isEmpty && batch.exceptAll(emitted).isEmpty,
       "streamed rows drifted from the branch append batch")

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.PipelineOps
+import graft.operators.LakeFixture
 
 /** The SQL surface over the lake catalog plugin ([[GraftLakeCatalog]]):
   * multi-part table names resolve through the CAS pointer log,
@@ -33,7 +33,7 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     */
   private def scratchCatalog(s: SparkSession): String = {
     val root = graft.Fixtures.tempDir("graft_cat_sql")
-    s.read.parquet(s"${PipelineOps.catalogDir(s, sfDir)}/catalog_log")
+    s.read.parquet(s"${LakeFixture.catalogDir(s, sfDir)}/catalog_log")
       .coalesce(1).write.mode("overwrite")
       .parquet(root.resolve("catalog_log").toString)
     root.toString
@@ -43,7 +43,7 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     import spark.implicits._
     val viaSql = spark.sql(
       "SELECT count(*) AS n FROM graft_lake.ship_fact").as[Long].head()
-    val direct = PipelineOps.readSnapshot(spark, sfDir, 2L).count() // wave-1
+    val direct = LakeFixture.readSnapshot(spark, sfDir, 2L).count() // wave-1
     assert(viaSql == direct,
       s"catalog current ($viaSql) != the rollback state ($direct)")
   }
@@ -53,7 +53,7 @@ class LakeSqlSpec extends AnyFunSuite with BeforeAndAfterAll with graft.SharedSp
     val v0 = spark.sql(
       "SELECT count(*) AS n FROM graft_lake.ship_fact VERSION AS OF 0")
       .as[Long].head()
-    val direct = PipelineOps.readSnapshot(spark, sfDir, 4L).count()
+    val direct = LakeFixture.readSnapshot(spark, sfDir, 4L).count()
     assert(v0 == direct)
   }
 

@@ -976,7 +976,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
   test("streamed CDF consumption equals the batch changelog apply exactly") {
     val d = "/root/testdata/sf0.001"
     val streamed = Streaming.queries("stream_cdf_replay")(spark, d)
-    val batch = graft.operators.PipelineOps
+    val batch = graft.operators.LakeServeQueries
       .queries("pipeline_changelog_apply_mv")(spark, d)
     assert(streamed.exceptAll(batch).isEmpty &&
       batch.exceptAll(streamed).isEmpty,
@@ -987,13 +987,12 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
   test("streamed equality-delete ingest is exactly-once and serves the batch state") {
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
-    val P = graft.operators.PipelineOps
     val delDir = Streaming.eqdelStreamDir(spark, d)
     val streamedDels = spark.read.parquet(delDir)
     // exactly-once: the streamed key multiset ≡ the erase key set (each
     // key arrived in exactly one wave, each wave committed exactly once)
     val got = streamedDels.select($"k").as[Long].collect().sorted
-    val want = P.eraseOrderKeys(spark, d).as[Long].collect().sorted
+    val want = graft.operators.LakeFixture.eraseOrderKeys(spark, d).as[Long].collect().sorted
     assert(got.sameElements(want), "streamed delete keys drifted from the erase set")
     // one delete file per commit, each strictly newer than the seq-0 tree
     val seqs = streamedDels.select($"seq_del").distinct().as[Long].collect()
@@ -1003,7 +1002,7 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
       "delete files != commits — a commit fragmented or two commits merged")
     // and the serve through the streamed set equals the batch serve
     val streamed = Streaming.queries("stream_eqdel_replay")(spark, d)
-    val batch = P.queries("pipeline_eq_serve")(spark, d)
+    val batch = graft.operators.LakeServeQueries.queries("pipeline_eq_serve")(spark, d)
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "streamed equality serve diverges from the batch serve")
   }
