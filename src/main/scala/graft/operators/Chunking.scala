@@ -176,13 +176,6 @@ object Chunking {
       encode(col(payloadCol), "UTF-8")
     else col(payloadCol)
 
-  /** JVM twin of the `xxhash64` Column expression (seed 42) for chunk
-    * identities computed inside fused loops/UDFs.
-    */
-  private def xxh64(bytes: Array[Byte], from: Int, len: Int): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-
   /** Strategy B — edge-chunk re-chunking (`parallel.rs:88-120`, SURVEY.md
     * §2.3 P3-P7) as a distributed partial+final aggregation, per blob:
     *

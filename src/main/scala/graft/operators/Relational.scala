@@ -645,7 +645,6 @@ object Relational extends graft.QueryRegistry {
     // ---- explicit GROUPING SETS (beyond rollup/cube): per-status, per-
     // priority, and grand total in one pass.
     ("q35_grouping_sets", (s, d) => {
-      import s.implicits._
       Tables.orders(s, d).createOrReplaceTempView("orders_gs_v")
       s.sql(
         """SELECT coalesce(o_orderstatus, 'ALL') AS status,

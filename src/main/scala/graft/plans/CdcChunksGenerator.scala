@@ -81,6 +81,14 @@ object CdcChunks {
     else TypeCheckResult.TypeCheckSuccess
   }
 
+  /** JVM twin of the `xxhash64` Column expression (same default seed 42)
+    * over `bytes[from, from + len)`, so chunk identities hashed inside JVM
+    * loops match the batch chunk tables' `xxhash64(chunk)` bit-for-bit.
+    */
+  private[graft] def xxh64(bytes: Array[Byte], from: Int, len: Int): Long =
+    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
+
   /** One `(chunk_idx, offset, length, chunk)` row per exclusive chunk end
     * offset in `ends`, chunk i spanning `[ends(i - 1), ends(i))` with
     * `ends(-1) = 0`. Bytes after the last end (a strategy-A tail that failed

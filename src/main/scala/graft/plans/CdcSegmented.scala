@@ -118,10 +118,6 @@ case class CdcSliceChunks(
     expectedSize.eval().toString.toInt,
     seed.eval().toString.toLong)
 
-  private def xxh64(bytes: Array[Byte], from: Int, len: Int): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val bytes = payload.eval(input).asInstanceOf[Array[Byte]]
     if (bytes == null || bytes.length < nP) return Iterator.empty
@@ -134,7 +130,7 @@ case class CdcSliceChunks(
     var i = lo
     while (i < hi) {
       val (off, len) = cs(i)
-      local.getOrElseUpdate(xxh64(slice, off, len), len)
+      local.getOrElseUpdate(CdcChunks.xxh64(slice, off, len), len)
       i += 1
     }
     val (eo, el) = if (p % 2 == 0) cs.last else cs.head

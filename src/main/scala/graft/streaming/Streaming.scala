@@ -1,11 +1,13 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.StructType
 
 import graft.core.Chunker
 import graft.operators.{LakeFixture, LakeServeQueries}
+import graft.plans.CdcChunks
 import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** One byte segment of a streaming blob. `seq` is the dense 0-based segment
@@ -339,14 +341,6 @@ object Streaming extends graft.QueryModule {
     }
   }
 
-
-  /** JVM twin of the `xxhash64` Column expression (same default seed 42), so
-    * streaming chunk identities match the batch chunk tables bit-for-bit.
-    */
-  private def xxh64(bytes: Array[Byte], from: Int, len: Int): Long =
-    org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-      bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-
   /** Streaming CDC — the north star ("Structured Streaming + change
     * detection") in one operator: each arriving blob version is chunked,
     * diffed against the previous version's chunk-hash set carried in
@@ -364,7 +358,7 @@ object Streaming extends graft.QueryModule {
     val out = scala.collection.mutable.ArrayBuffer.empty[ChunkChange]
     for (ev <- events.toArray.sortBy(_.version)) {
       val cur: Map[Long, Int] = chunker.chunks(ev.data)
-        .map { case (off, len) => xxh64(ev.data, off, len) -> len }.toMap
+        .map { case (off, len) => CdcChunks.xxh64(ev.data, off, len) -> len }.toMap
       for ((h, len) <- cur if !prev.contains(h))
         out += ChunkChange(blobId, ev.version, "added", h, len)
       for ((h, len) <- prev if !cur.contains(h))
@@ -643,23 +637,6 @@ object Streaming extends graft.QueryModule {
       }
   }
 
-  /** Streaming changelog compaction — the incremental twin of batch
-    * `q64_changelog_compact`: per-key `GroupState` folds the op log into
-    * (first_op, last_op, last_value, n_ops) — O(1) per key, never an op
-    * buffer — and each micro-batch that carries a key emits that key's
-    * running compaction snapshot. The FINAL snapshot per key (largest
-    * cumulative `n_ops`) is the net change the batch query computes; a
-    * downstream merge can apply snapshots continuously instead of waiting
-    * for the feed to close.
-    *
-    * Ordering contract: within a micro-batch each key's ops are sorted by
-    * (tsUs, eventId) before folding, so intra-batch disorder is absorbed;
-    * ACROSS batches first/last are online (an op older than an
-    * already-folded one still overwrites `lastOp`). On a time-ordered
-    * replay the stream and the batch window agree exactly; in production,
-    * front the feed with a watermarked sort or accept online semantics —
-    * the same stated trade as [[funnelStream]].
-    */
   /** Streaming bottom-k sampler — the incremental twin of the batch
     * `pipeline_bottomk_sample` query (BottomKAgg): keep the k input docs
     * with the smallest (md5(doc_id), doc_id) in O(k) GroupState, emit the
@@ -734,20 +711,10 @@ object Streaming extends graft.QueryModule {
     val waved = graft.operators.Dedup.corpus(s, d)
       .select(PipelineOps.psiLenBucket.as("bucket"),
         pmod(col("doc_id"), lit(7)).cast("int").as("wave"))
-    val emitted = replayedSink(s, d, "graft_psi_replay_") { (sink, root) =>
-      val src = waveFiles("psi", d, waved)
-      val stream = s.readStream
-        .schema(waved.drop("wave").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = psiHistogramStream(
-            stream.as[PsiBucketRow](org.apache.spark.sql.Encoders.product[PsiBucketRow]))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_psi_replay_",
+        Waves(waveFiles("psi", d, waved), waved.drop("wave").schema)) { stream =>
+      psiHistogramStream(
+        stream.as[PsiBucketRow](org.apache.spark.sql.Encoders.product[PsiBucketRow]))
     }
     PipelineOps.psiFromHists(
       PipelineOps.psiLenHistogram(graft.Tables.documents(s, d))
@@ -755,6 +722,23 @@ object Streaming extends graft.QueryModule {
       emitted.groupBy(col("bucket")).agg(max(col("cnt")).as("n_cur")))
   }
 
+  /** Streaming changelog compaction — the incremental twin of batch
+    * `q64_changelog_compact`: per-key `GroupState` folds the op log into
+    * (first_op, last_op, last_value, n_ops) — O(1) per key, never an op
+    * buffer — and each micro-batch that carries a key emits that key's
+    * running compaction snapshot. The FINAL snapshot per key (largest
+    * cumulative `n_ops`) is the net change the batch query computes; a
+    * downstream merge can apply snapshots continuously instead of waiting
+    * for the feed to close.
+    *
+    * Ordering contract: within a micro-batch each key's ops are sorted by
+    * (tsUs, eventId) before folding, so intra-batch disorder is absorbed;
+    * ACROSS batches first/last are online (an op older than an
+    * already-folded one still overwrites `lastOp`). On a time-ordered
+    * replay the stream and the batch window agree exactly; in production,
+    * front the feed with a watermarked sort or accept online semantics —
+    * the same stated trade as [[funnelStream]].
+    */
   def compactionStream(ops: Dataset[OpEvent]): Dataset[CompactUpdate] = {
     val spark = ops.sparkSession
     import spark.implicits._
@@ -1010,7 +994,7 @@ object Streaming extends graft.QueryModule {
     * parquet file per wave value, mtimes increasing with the wave — the
     * ordered micro-batch input for a `maxFilesPerTrigger=1` file source.
     */
-  private def waveFiles(
+  private[graft] def waveFiles(
       name: String, d: String, mkWaved: => DataFrame): java.nio.file.Path =
     graft.Fixtures.memo(s"graft_wave_$name", d) { root =>
       import java.nio.file.Files
@@ -1030,6 +1014,87 @@ object Streaming extends graft.QueryModule {
       dir
     }
 
+  /** Equal-width range waves over `key`, a SQL expression on `df`: `n`
+    * slices from its min to its max, the last one bound-inclusive. Returns
+    * the int wave column and the key's max. The bounds head() is replay
+    * SETUP — call this inside a [[waveFiles]] by-name argument so it runs
+    * on the once-per-JVM cache-miss path, not in every invocation.
+    *
+    * `exactDiv` slices by exact LONG integer division (`div`), which an
+    * oracle's `//` reproduces exactly; otherwise by double division
+    * truncated by the int cast. Each call site keeps the form it was
+    * written with: the two are not interchangeable, since a double-division
+    * truncation could disagree with floor at a quotient boundary.
+    */
+  private def rangeWave(
+      df: DataFrame, key: String, n: Int, exactDiv: Boolean = false): (Column, Long) = {
+    val r = df.agg(min(expr(key)), max(expr(key))).head()
+    val (lo, hi) = (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)
+    val width = math.max(1L, (hi - lo) / n + 1)
+    val wave =
+      if (exactDiv) expr(s"($key - ${lo}L) div ${width}L")
+      else (expr(key) - lit(lo)) / lit(width)
+    (wave.cast("int"), hi)
+  }
+
+  /** `waved` raw events plus the far-future SENTINEL event as wave 9:
+    * reserved user and event −1 at `hi` + 10 days, with event_type
+    * "sentinel" when `waved` carries that column. Its event time pushes
+    * the watermark past every real window and session end, so append mode
+    * finalizes them all; the judged readouts filter it out.
+    */
+  private def withSentinel(waved: DataFrame, hi: Long): DataFrame = {
+    val typed =
+      if (waved.columns.contains("event_type")) Seq(lit("sentinel").as("event_type")) else Nil
+    waved.unionByName(waved.sparkSession.range(1).select(
+      Seq(lit(-1L).as("user_id"), lit(-1L).as("event_id")) ++ typed ++
+        Seq(lit(0.0).as("value"), timestamp_micros(lit(hi + 864000000000L)).as("ts"),
+          lit(9).as("wave")): _*))
+  }
+
+  /** Five rank-split waves: ntile(5) over `df` sorted by `key`, so every
+    * wave is nonempty whenever `df` has at least five rows, at any SF.
+    */
+  private def rankWaves(df: DataFrame, key: String): DataFrame =
+    df.withColumn("wave",
+      (ntile(5).over(org.apache.spark.sql.expressions.Window.orderBy(col(key))) - 1).cast("int"))
+
+  /** What a replay reads: [[waveFiles]] output with its row schema, or a
+    * ready streaming frame (the `graft-lake` CDC tail).
+    */
+  private[graft] sealed trait ReplaySource
+  private[graft] final case class Waves(dir: java.nio.file.Path, schema: StructType)
+      extends ReplaySource
+  private[graft] final case class Live(stream: DataFrame) extends ReplaySource
+
+  /** The one replay harness. Reads `source` — wave files ONE PER TRIGGER,
+    * so the file source replays them in mtime order — attaches `sink`,
+    * checkpoints under `root`, and runs start THROUGH processAllAvailable
+    * inside [[withFewShufflePartitions]]. The query is stopped whether or
+    * not a batch failed (processAllAvailable rethrows a failed batch's
+    * error), and returned so a caller can read its progress.
+    */
+  private[graft] def replay(s: SparkSession, root: java.nio.file.Path, source: => ReplaySource)(
+      sink: DataFrame => DataStreamWriter[_]): StreamingQuery =
+    withFewShufflePartitions(s) {
+      val stream = source match {
+        case Waves(dir, schema) =>
+          s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir.toString)
+        case Live(frame) => frame
+      }
+      val q = sink(stream).option("checkpointLocation", root.resolve("chk").toString).start()
+      try q.processAllAvailable() finally q.stop()
+      q
+    }
+
+  /** [[replay]] into a `foreachBatch` writer: the streaming ingests, which
+    * run inside their own [[graft.Fixtures.memo]] and keep what `batch`
+    * writes under the memo's root.
+    */
+  private[graft] def replayBatches(s: SparkSession, root: java.nio.file.Path, source: ReplaySource)(
+      batch: (DataFrame, Long) => Unit): StreamingQuery =
+    replay(s, root, source)(_.writeStream.foreachBatch(batch))
+
   /** Captured replay emissions per (contract, source dir), built once per
     * JVM. A replay contract's emitted row set is a pure deterministic
     * function of the source tables — that is the entire determinism design
@@ -1044,20 +1109,23 @@ object Streaming extends graft.QueryModule {
     * rebuilds a LocalRelation from the captured rows and runs the
     * contract's downstream judging query fresh.
     *
-    * Run `exec(sinkName, runDir)` (start → processAllAvailable → stop) on
-    * cache miss, capture the sink table, clean up, and return the captured
-    * rows as a fresh LocalRelation frame bound to `s`. `q.stop()` does not
-    * join the state store's ASYNC maintenance thread, which can still be
-    * writing `.snapshot` files while the run dir is swept — hence the
-    * retrying delete.
+    * On cache miss, [[replay]] `source` through `transform` into a memory
+    * sink in output `mode`, hand the stopped query to `inspect`, capture
+    * the sink table, clean up, and return the captured rows as a fresh
+    * LocalRelation frame bound to `s`. `q.stop()` does not join the state
+    * store's ASYNC maintenance thread, which can still be writing
+    * `.snapshot` files while the run dir is swept — hence the retrying
+    * delete.
     */
-  private def replayedSink(
-      s: org.apache.spark.sql.SparkSession, d: String, tag: String)(
-      exec: (String, java.nio.file.Path) => Unit): DataFrame = {
+  private[graft] def replayedSink(
+      s: SparkSession, d: String, tag: String, source: => ReplaySource,
+      mode: String = "append", inspect: StreamingQuery => Unit = _ => ())(
+      transform: DataFrame => Dataset[_]): DataFrame = {
     val (schema, rows) = graft.Fixtures.memo(tag, d) { root =>
       val sink = tag + java.util.UUID.randomUUID().toString.replace("-", "")
       try {
-        exec(sink, root)
+        inspect(replay(s, root, source)(
+          transform(_).writeStream.format("memory").queryName(sink).outputMode(mode)))
         val t = s.table(sink)
         (t.schema, t.collect())
       } finally {
@@ -1099,27 +1167,17 @@ object Streaming extends graft.QueryModule {
         row_number().over(Window.partitionBy(col("k")).orderBy(col("doc_id"))) - 1)
       .select(col("doc_id"), col("text"), col("ts"), col("wave"))
 
-    val emitted = replayedSink(s, d, "graft_intake_replay_") { (sink, root) =>
-      val src = waveFiles("intake", d, corpus)
-      val stream = s.readStream
-        .schema(corpus.drop("wave").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = corpusIntakeStream(stream, watermark = "3650 days")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_intake_replay_",
+        Waves(waveFiles("intake", d, corpus), corpus.drop("wave").schema)) {
+      corpusIntakeStream(_, watermark = "3650 days")
     }
     emitted.select(col("doc_id"), col("quality"), col("split"))
       .orderBy(col("doc_id"))
   }
 
-  /** Run a replay (start THROUGH processAllAvailable — micro-batch planning
-    * reads the session conf, so it must stay lowered for the whole run)
-    * with 8 shuffle partitions, restoring the conf after. The contracts pay
+  /** Run `run` (a whole [[replay]], start THROUGH processAllAvailable —
+    * micro-batch planning reads the session conf, so it must stay lowered
+    * for the whole run) with 8 shuffle partitions, restoring the conf after. The contracts pay
     * per-micro-batch state-store overhead proportional to the shuffle
     * partition count; their state semantics are partition-count independent
     * (keyed state), and their data per batch is one wave file — 32 state
@@ -1147,12 +1205,7 @@ object Streaming extends graft.QueryModule {
   private def eventTimeWaves(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     waveFiles("events-time", d, {
       val ev = typedEvents(s, d)
-      // bounds head() is replay SETUP — by-name arg keeps it on the
-      // once-per-JVM cache-miss path, not in every invocation
-      val r = ev.agg(min(col("tsUs")), max(col("tsUs"))).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val width = math.max(1L, (hi - lo) / 8 + 1) // 8 waves, last bound-inclusive
-      ev.withColumn("wave", ((col("tsUs") - lit(lo)) / lit(width)).cast("int"))
+      ev.withColumn("wave", rangeWave(ev, "tsUs", 8)._1)
     })
 
   /** Time-ordered file-source replay of the events table through
@@ -1171,19 +1224,9 @@ object Streaming extends graft.QueryModule {
     import s.implicits._
 
     val ev = typedEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_funnel_replay_") { (sink, root) =>
-      val src = eventTimeWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = funnelStream(stream.as[UserTypeEvent])
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_funnel_replay_",
+        Waves(eventTimeWaves(s, d), ev.schema)) { stream =>
+      funnelStream(stream.as[UserTypeEvent])
     }
     emitted.agg(
       count(when(col("step") === "signup", 1)).as("n_signup"),
@@ -1214,26 +1257,13 @@ object Streaming extends graft.QueryModule {
     val K = 64
     val docs = graft.Tables.documents(s, d)
       .select(col("doc_id").as("docId"), col("lang"), col("text"))
-    val emitted = replayedSink(s, d, "graft_hh_replay_") { (sink, root) =>
-      val src = waveFiles("hh", d, {
-        // 8 doc_id-range waves — order is irrelevant to the MG guarantee,
-        // but a deterministic slicing keeps the harness reproducible
-        val r = docs.agg(min(col("docId")), max(col("docId"))).head()
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val width = math.max(1L, (hi - lo) / 8 + 1)
-        docs.withColumn("wave", ((col("docId") - lit(lo)) / lit(width)).cast("int"))
-      })
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = heavyHittersStream(stream.as[LangDocEvent], k = K)
-          .writeStream.format("memory").queryName(sink).outputMode("update")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    // 8 doc_id-range waves — order is irrelevant to the MG guarantee,
+    // but a deterministic slicing keeps the harness reproducible
+    val emitted = replayedSink(s, d, "graft_hh_replay_",
+        Waves(waveFiles("hh", d, docs.withColumn("wave", rangeWave(docs, "docId", 8)._1)),
+          docs.schema),
+        mode = "update") { stream =>
+      heavyHittersStream(stream.as[LangDocEvent], k = K)
     }
     val fin = emitted
       .withColumn("mx", max(col("nTotal")).over(Window.partitionBy(col("lang"))))
@@ -1272,34 +1302,22 @@ object Streaming extends graft.QueryModule {
     import s.implicits._
     val docs = graft.operators.Dedup.corpus(s, d)
       .select(col("doc_id").as("docId"), col("text"))
-    val emitted = replayedSink(s, d, "graft_neardup_replay_") { (sink, root) =>
-      val src = waveFiles("neardup", d, {
+    // Parity with the batch candidate set rests on every band bucket
+    // staying under nearDupCandidateStream's maxBucket cap: an overflow
+    // silently drops pairs and would only surface as an opaque oracle
+    // hash mismatch (ADVICE r9). Count cap hits and fail loudly instead.
+    // Lazy: registered only when the replay runs (cache miss).
+    lazy val capHits = s.sparkContext.longAccumulator("graft.neardup.capHits")
+    val emitted = replayedSink(s, d, "graft_neardup_replay_",
         // 8 doc_id-range waves: interleaves originals with their planted
         // +100000/+200000 dups across batches, so pairing spans micro-batches
-        val r = docs.agg(min(col("docId")), max(col("docId"))).head()
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val width = math.max(1L, (hi - lo) / 8 + 1)
-        docs.withColumn("wave", ((col("docId") - lit(lo)) / lit(width)).cast("int"))
-      })
-      val stream = s.readStream
-        .schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      // Parity with the batch candidate set rests on every band bucket
-      // staying under nearDupCandidateStream's maxBucket cap: an overflow
-      // silently drops pairs and would only surface as an opaque oracle
-      // hash mismatch (ADVICE r9). Count cap hits and fail loudly instead.
-      val capHits = s.sparkContext.longAccumulator("graft.neardup.capHits")
-      withFewShufflePartitions(s) {
-        val q = nearDupCandidateStream(stream.as[DocEvent], onCapHit = () => capHits.add(1))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
-      require(capHits.value == 0L,
-        s"nearDupCandidateStream dropped ${capHits.value} arrivals at the maxBucket cap — " +
-          "candidate parity with dedup_minhash_lsh does not hold on this corpus")
+        Waves(waveFiles("neardup", d, docs.withColumn("wave", rangeWave(docs, "docId", 8)._1)),
+          docs.schema),
+        inspect = _ => require(capHits.value == 0L,
+          s"nearDupCandidateStream dropped ${capHits.value} arrivals at the maxBucket cap — " +
+            "candidate parity with dedup_minhash_lsh does not hold on this corpus")) { stream =>
+      val hits = capHits // the executor-side closure captures the accumulator itself
+      nearDupCandidateStream(stream.as[DocEvent], onCapHit = () => hits.add(1))
     }
     graft.operators.Dedup.verifyPairs(s, d,
       emitted.select(col("id1"), col("id2")).distinct())
@@ -1321,19 +1339,9 @@ object Streaming extends graft.QueryModule {
   def scd2ReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = typedEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_scd2_replay_") { (sink, root) =>
-      val src = eventTimeWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = scd2Stream(stream.as[UserTypeEvent])
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_scd2_replay_",
+        Waves(eventTimeWaves(s, d), ev.schema)) { stream =>
+      scd2Stream(stream.as[UserTypeEvent])
     }
     emitted.select(
       col("userId").as("user_id"), col("eventType").as("event_type"),
@@ -1361,22 +1369,9 @@ object Streaming extends graft.QueryModule {
   private def opTimeWaves(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     waveFiles("events-opval", d, {
       val ev = opEvents(s, d)
-      // bounds head() is replay SETUP — by-name arg keeps it on the
-      // once-per-JVM cache-miss path, not in every invocation
-      val r = ev.agg(min(col("tsUs")), max(col("tsUs"))).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val width = math.max(1L, (hi - lo) / 8 + 1) // 8 waves, last bound-inclusive
-      ev.withColumn("wave", ((col("tsUs") - lit(lo)) / lit(width)).cast("int"))
+      ev.withColumn("wave", rangeWave(ev, "tsUs", 8)._1)
     })
 
-  /** Time-ordered file-source replay of the events feed (as a pre-classified
-    * CDC op log) through [[compactionStream]], reduced to each key's FINAL
-    * snapshot (largest cumulative n_ops) and net-op classification —
-    * judged VERBATIM by q64_changelog_compact's batch oracle. Determinism:
-    * within-batch fold order is (tsUs, eventId)-sorted, cross-batch order
-    * is event-time by the wave construction, and n_ops strictly increases
-    * per key across its emissions, so "largest n_ops" picks a unique row.
-    */
   /** File-source replay of the documents table (waved by doc_id % 7 — an
     * ARBITRARY slicing, deliberately not time-ordered, because the sampler
     * is order-independent) through [[bottomKStream]], reduced to the final
@@ -1386,22 +1381,12 @@ object Streaming extends graft.QueryModule {
   def bottomKReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val corpus = graft.Tables.documents(s, d)
       .select(col("doc_id"), pmod(col("doc_id"), lit(7)).cast("int").as("wave"))
-    val emitted = replayedSink(s, d, "graft_bottomk_replay_") { (sink, root) =>
-      val src = waveFiles("bottomk", d, corpus)
-      val stream = s.readStream
-        .schema(corpus.drop("wave").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = bottomKStream(
-            stream.select(col("doc_id").as("docId"))
-              .as[SampleDoc](org.apache.spark.sql.Encoders.product[SampleDoc]),
-            k = 100)
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_bottomk_replay_",
+        Waves(waveFiles("bottomk", d, corpus), corpus.drop("wave").schema)) { stream =>
+      bottomKStream(
+        stream.select(col("doc_id").as("docId"))
+          .as[SampleDoc](org.apache.spark.sql.Encoders.product[SampleDoc]),
+        k = 100)
     }
     val mx = emitted.agg(max(col("nSeen")).as("mx"))
     emitted.crossJoin(broadcast(mx)).filter(col("nSeen") === col("mx"))
@@ -1409,22 +1394,20 @@ object Streaming extends graft.QueryModule {
       .orderBy(col("rank"))
   }
 
+  /** Time-ordered file-source replay of the events feed (as a pre-classified
+    * CDC op log) through [[compactionStream]], reduced to each key's FINAL
+    * snapshot (largest cumulative n_ops) and net-op classification —
+    * judged VERBATIM by q64_changelog_compact's batch oracle. Determinism:
+    * within-batch fold order is (tsUs, eventId)-sorted, cross-batch order
+    * is event-time by the wave construction, and n_ops strictly increases
+    * per key across its emissions, so "largest n_ops" picks a unique row.
+    */
   def compactReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val ev = opEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_compact_replay_") { (sink, root) =>
-      val src = opTimeWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = compactionStream(stream.as[OpEvent](org.apache.spark.sql.Encoders.product[OpEvent]))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_compact_replay_",
+        Waves(opTimeWaves(s, d), ev.schema)) { stream =>
+      compactionStream(stream.as[OpEvent](org.apache.spark.sql.Encoders.product[OpEvent]))
     }
     val wFinal = Window.partitionBy(col("userId")).orderBy(col("nOps").desc)
     emitted
@@ -1458,19 +1441,9 @@ object Streaming extends graft.QueryModule {
   def rateAnomalyReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import s.implicits._
     val ev = typedEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_rate_replay_") { (sink, root) =>
-      val src = eventTimeWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = rateAnomalyStream(stream.as[UserTypeEvent])
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_rate_replay_",
+        Waves(eventTimeWaves(s, d), ev.schema)) { stream =>
+      rateAnomalyStream(stream.as[UserTypeEvent])
     }
     emitted.select(
       col("eventType").as("event_type"),
@@ -1516,29 +1489,16 @@ object Streaming extends graft.QueryModule {
     */
   def semanticReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val emitted = replayedSink(s, d, "graft_semantic_replay_") { (sink, root) =>
-      val (vecs, cents, threshold) = graft.operators.Clustering.semanticReplayInputs(s, d)
-      val src = waveFiles("semantic", d, {
-        val r = vecs.agg(min(col("vecId")), max(col("vecId"))).head()
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val width = math.max(1L, (hi - lo) / 8 + 1)
-        vecs.withColumn("wave", ((col("vecId") - lit(lo)) / lit(width)).cast("int"))
-      })
-      val stream = s.readStream
-        .schema(new org.apache.spark.sql.types.StructType()
-          .add("vecId", org.apache.spark.sql.types.LongType)
-          .add("emb", org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType)))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
+    // Lazy: the inputs are built only when the replay runs (cache miss).
+    lazy val (vecs, cents, threshold) = graft.operators.Clustering.semanticReplayInputs(s, d)
+    val emitted = replayedSink(s, d, "graft_semantic_replay_",
+        Waves(waveFiles("semantic", d, vecs.withColumn("wave", rangeWave(vecs, "vecId", 8)._1)),
+          new StructType()
+            .add("vecId", org.apache.spark.sql.types.LongType)
+            .add("emb", org.apache.spark.sql.types.ArrayType(
+              org.apache.spark.sql.types.DoubleType)))) { stream =>
       val centroids = cents.map { case (cid, e) => ClusterCentroid(cid, e) }
-      withFewShufflePartitions(s) {
-        val q = semanticDedupStream(stream.as[VecEvent], centroids, threshold = threshold)
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+      semanticDedupStream(stream.as[VecEvent], centroids, threshold = threshold)
     }
     emitted.select(col("vecId").as("vec_id"), col("cid"), col("dropped"))
       .orderBy(col("vec_id"))
@@ -1566,31 +1526,20 @@ object Streaming extends graft.QueryModule {
     import org.apache.spark.sql.types._
     val segBytes = 128
     val docs = graft.Tables.documents(s, d).select(col("doc_id"), col("text"))
-    val emitted = replayedSink(s, d, "graft_chunk_replay_") { (sink, root) =>
-      val src = waveFiles("chunk", d, {
-        docs.as[(Long, String)].flatMap { case (id, text) =>
-          val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          val n = math.max(1, (bytes.length + segBytes - 1) / segBytes)
-          (0 until n).map { i =>
-            val to = math.min(bytes.length, (i + 1) * segBytes)
-            (id, i, java.util.Arrays.copyOfRange(bytes, i * segBytes, to), i == n - 1, i)
-          }
-        }.toDF("blobId", "seq", "data", "last", "wave")
-      })
-      val stream = s.readStream
-        .schema(StructType(Seq(
+    def segments: DataFrame =
+      docs.as[(Long, String)].flatMap { case (id, text) =>
+        val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val n = math.max(1, (bytes.length + segBytes - 1) / segBytes)
+        (0 until n).map { i =>
+          val to = math.min(bytes.length, (i + 1) * segBytes)
+          (id, i, java.util.Arrays.copyOfRange(bytes, i * segBytes, to), i == n - 1, i)
+        }
+      }.toDF("blobId", "seq", "data", "last", "wave")
+    val emitted = replayedSink(s, d, "graft_chunk_replay_",
+        Waves(waveFiles("chunk", d, segments), StructType(Seq(
           StructField("blobId", LongType), StructField("seq", IntegerType),
-          StructField("data", BinaryType), StructField("last", BooleanType))))
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = statefulChunkStream(stream.as[SegmentEvent], "fastcdc", 64, 42L)
-          .toDF()
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+          StructField("data", BinaryType), StructField("last", BooleanType))))) { stream =>
+      statefulChunkStream(stream.as[SegmentEvent], "fastcdc", 64, 42L).toDF()
     }
     val streamed = emitted.select(col("blobId").as("doc_id"),
       col("chunkIdx").cast("long").as("idx"), col("offset"),
@@ -1636,37 +1585,19 @@ object Streaming extends graft.QueryModule {
     import org.apache.spark.sql.expressions.Window
     val ev = graft.Tables.events(s, d)
       .select(col("user_id"), col("event_id"), col("value"), col("ts"))
-    val emitted = replayedSink(s, d, "graft_session_replay_") { (sink, root) =>
-      val src = waveFiles("events-session", d, {
-        val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-        val (lo, hi) = (r.getLong(0), r.getLong(1))
-        val width = math.max(1L, (hi - lo) / 8 + 1)
-        val waved = ev.withColumn("wave",
-          ((unix_micros(col("ts")) - lit(lo)) / lit(width)).cast("int"))
-        val sentinel = s.range(1).select(
-          lit(-1L).as("user_id"), lit(-1L).as("event_id"), lit(0.0).as("value"),
-          timestamp_micros(lit(hi + 864000000000L)).as("ts"), lit(9).as("wave"))
-        waved.unionByName(sentinel)
-      })
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-        .withWatermark("ts", "0 seconds")
-      withFewShufflePartitions(s) {
-        val q = stream
-          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-          .agg(count(lit(1)).as("n_events"),
-            min(unix_micros(col("ts"))).as("session_start_us"),
-            max(unix_micros(col("ts"))).as("session_end_us"),
-            round(sum(col("value")), 2).as("total_value"))
-          .select(col("user_id"), col("n_events"), col("session_start_us"),
-            col("session_end_us"), col("total_value"))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_session_replay_",
+        Waves(waveFiles("events-session", d, {
+          val (wave, hi) = rangeWave(ev, "unix_micros(ts)", 8)
+          withSentinel(ev.withColumn("wave", wave), hi)
+        }), ev.schema)) {
+      _.withWatermark("ts", "0 seconds")
+        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"),
+          min(unix_micros(col("ts"))).as("session_start_us"),
+          max(unix_micros(col("ts"))).as("session_end_us"),
+          round(sum(col("value")), 2).as("total_value"))
+        .select(col("user_id"), col("n_events"), col("session_start_us"),
+          col("session_end_us"), col("total_value"))
     }
     val w = Window.partitionBy(col("user_id")).orderBy(col("session_start_us"))
     emitted.filter(col("user_id") =!= -1L)
@@ -1676,16 +1607,6 @@ object Streaming extends graft.QueryModule {
       .orderBy(col("user_id"), col("session_id"))
   }
 
-  /** Time-ordered file-source replay of the events table through the
-    * canonical tumbling-window aggregation ([[windowedEventStats]]'s
-    * operator), judged by q21_hourly_event_stats' batch oracle VERBATIM.
-    * Same sentinel-flush design as the session replay: the far-future
-    * final wave pushes the watermark past every real hour, so append mode
-    * emits ALL real windows and the sentinel's own window is filtered
-    * out. Hour buckets are exact integer truncations and per-bucket float
-    * sums round at 2 decimals (the q29 argument), so the emitted set is
-    * hash-identical to the batch group-by.
-    */
   /** Raw-schema events table (user_id, event_id, event_type, value, ts). */
   private def rawEvents(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
     graft.Tables.events(s, d)
@@ -1699,33 +1620,25 @@ object Streaming extends graft.QueryModule {
   private def rawEventWaves(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     waveFiles("events-raw", d, {
       val ev = rawEvents(s, d)
-      val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val width = math.max(1L, (hi - lo) / 8 + 1)
-      val waved = ev.withColumn("wave",
-        ((unix_micros(col("ts")) - lit(lo)) / lit(width)).cast("int"))
-      val sentinel = s.range(1).select(
-        lit(-1L).as("user_id"), lit(-1L).as("event_id"),
-        lit("sentinel").as("event_type"), lit(0.0).as("value"),
-        timestamp_micros(lit(hi + 864000000000L)).as("ts"), lit(9).as("wave"))
-      waved.unionByName(sentinel)
+      val (wave, hi) = rangeWave(ev, "unix_micros(ts)", 8)
+      withSentinel(ev.withColumn("wave", wave), hi)
     })
 
+  /** Time-ordered file-source replay of the events table through the
+    * canonical tumbling-window aggregation ([[windowedEventStats]]'s
+    * operator), judged by q21_hourly_event_stats' batch oracle VERBATIM.
+    * Same sentinel-flush design as the session replay: the far-future
+    * final wave pushes the watermark past every real hour, so append mode
+    * emits ALL real windows and the sentinel's own window is filtered
+    * out. Hour buckets are exact integer truncations and per-bucket float
+    * sums round at 2 decimals (the q29 argument), so the emitted set is
+    * hash-identical to the batch group-by.
+    */
   def hourlyReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val ev = rawEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_hourly_replay_") { (sink, root) =>
-      val src = rawEventWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = windowedEventStats(stream, "ts", "1 hour", "0 seconds")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_hourly_replay_",
+        Waves(rawEventWaves(s, d), ev.schema)) {
+      windowedEventStats(_, "ts", "1 hour", "0 seconds")
     }
     emitted.filter(col("event_type") =!= "sentinel")
       .select(unix_micros(col("window_start")).as("hour_us"), col("event_type"),
@@ -1763,19 +1676,13 @@ object Streaming extends graft.QueryModule {
   private def lateEventWaves(s: org.apache.spark.sql.SparkSession, d: String): java.nio.file.Path =
     waveFiles("events-late", d, {
       val ev = rawEvents(s, d)
-      val r = ev.agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
-      val (lo, hi) = (r.getLong(0), r.getLong(1))
-      val width = math.max(1L, (hi - lo) / 8 + 1)
+      val (base, hi) = rangeWave(ev, "unix_micros(ts)", 8, exactDiv = true)
       val waved = ev
-        .withColumn("base", expr(s"(unix_micros(ts) - ${lo}L) div ${width}L").cast("int"))
+        .withColumn("base", base)
         .withColumn("wave",
           when(isLate(col("base")), col("base") + 3).otherwise(col("base")))
         .drop("base")
-      val sentinel = s.range(1).select(
-        lit(-1L).as("user_id"), lit(-1L).as("event_id"),
-        lit("sentinel").as("event_type"), lit(0.0).as("value"),
-        timestamp_micros(lit(hi + 864000000000L)).as("ts"), lit(9).as("wave"))
-      waved.unionByName(sentinel)
+      withSentinel(waved, hi)
     })
 
   /** Late-data WATERMARK SEMANTICS contract — the one streaming behavior
@@ -1800,21 +1707,11 @@ object Streaming extends graft.QueryModule {
     */
   def lateReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val ev = rawEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_late_replay_") { (sink, root) =>
-      val src = lateEventWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = windowedEventStats(stream, "ts", "1 hour", "1 hour")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        lateDropCounts.put(d, q.recentProgress.toSeq
-          .flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)
-      }
+    val emitted = replayedSink(s, d, "graft_late_replay_",
+        Waves(lateEventWaves(s, d), ev.schema),
+        inspect = q => lateDropCounts.put(d, q.recentProgress.toSeq
+          .flatMap(_.stateOperators.toSeq).map(_.numRowsDroppedByWatermark).sum)) {
+      windowedEventStats(_, "ts", "1 hour", "1 hour")
     }
     emitted.filter(col("event_type") =!= "sentinel")
       .select(unix_micros(col("window_start")).as("hour_us"), col("event_type"),
@@ -1859,50 +1756,34 @@ object Streaming extends graft.QueryModule {
           .as("net_cents"),
         date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"),
         to_date(col("l_shipdate")).as("ship_day"))
-      val src = waveFiles("mvli", d, {
-        val r = slim.agg(min(unix_date(col("ship_day"))),
-          max(unix_date(col("ship_day")))).head()
-        val (lo, hi) = (r.getInt(0).toLong, r.getInt(1).toLong)
-        val width = math.max(1L, (hi - lo) / 6 + 1)
-        slim.withColumn("wave",
-          expr(s"(unix_date(ship_day) - ${lo}L) div ${width}L").cast("int"))
-      })
+      val src = waveFiles("mvli", d,
+        slim.withColumn("wave", rangeWave(slim, "unix_date(ship_day)", 6, exactDiv = true)._1))
       def daily(src: DataFrame): DataFrame = src
         .groupBy(col("ship_month"), col("ship_day"))
         .agg(count(lit(1)).as("n_items"), sum(col("qty")).as("sum_qty"),
           sum(col("net_cents")).as("revenue_cents"))
-      val stream = s.readStream
-        .schema(slim.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val delta = daily(batch)
-            val exists = java.nio.file.Files.exists(
-              java.nio.file.Paths.get(out))
-            val merged = if (!exists) delta
-            else {
-              val touched = delta.select(col("ship_month")).distinct()
-              s.read.parquet(out)
-                .join(broadcast(touched), Seq("ship_month"), "left_semi")
-                .unionByName(delta)
-                .groupBy(col("ship_month"), col("ship_day"))
-                .agg(sum(col("n_items")).as("n_items"),
-                  sum(col("sum_qty")).as("sum_qty"),
-                  sum(col("revenue_cents")).as("revenue_cents"))
-            }
-            val stage = root.resolve(s"stage").toString
-            merged.write.mode("overwrite").parquet(stage)
-            // per-write option, NOT a session-conf flip (concurrent plans
-            // on the shared session must not inherit dynamic overwrite)
-            s.read.parquet(stage)
-              .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ship_month").parquet(out)
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      replayBatches(s, root, Waves(src, slim.schema)) { (batch: DataFrame, _: Long) =>
+        val delta = daily(batch)
+        val exists = java.nio.file.Files.exists(
+          java.nio.file.Paths.get(out))
+        val merged = if (!exists) delta
+        else {
+          val touched = delta.select(col("ship_month")).distinct()
+          s.read.parquet(out)
+            .join(broadcast(touched), Seq("ship_month"), "left_semi")
+            .unionByName(delta)
+            .groupBy(col("ship_month"), col("ship_day"))
+            .agg(sum(col("n_items")).as("n_items"),
+              sum(col("sum_qty")).as("sum_qty"),
+              sum(col("revenue_cents")).as("revenue_cents"))
+        }
+        val stage = root.resolve(s"stage").toString
+        merged.write.mode("overwrite").parquet(stage)
+        // per-write option, NOT a session-conf flip (concurrent plans
+        // on the shared session must not inherit dynamic overwrite)
+        s.read.parquet(stage)
+          .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ship_month").parquet(out)
       }
       out
     }
@@ -1955,40 +1836,24 @@ object Streaming extends graft.QueryModule {
           .as("net_cents"),
         to_date(col("l_shipdate")).as("ship_day"),
         date_format(col("l_shipdate"), "yyyy-MM").as("ship_month"))
-      val src = waveFiles("bloomli", d, {
-        val r = slim.agg(min(unix_date(col("ship_day"))),
-          max(unix_date(col("ship_day")))).head()
-        val (lo, hi) = (r.getInt(0).toLong, r.getInt(1).toLong)
-        val width = math.max(1L, (hi - lo) / 6 + 1)
-        slim.withColumn("wave",
-          expr(s"(unix_date(ship_day) - ${lo}L) div ${width}L").cast("int"))
-      })
-      val stream = s.readStream
-        .schema(slim.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").partitionBy("ship_month").parquet(dataDir)
-            // incremental sidecar APPEND: index exactly the files this
-            // batch created (already-indexed paths are a metadata-scale
-            // read of the sidecar table — one row per data file)
-            val indexed: Set[String] =
-              if (java.nio.file.Files.exists(java.nio.file.Paths.get(idxDir)))
-                s.read.parquet(idxDir).select(col("file"))
-                  .collect().map(_.getString(0)).toSet
-              else Set.empty
-            val fresh = s.read.parquet(dataDir).inputFiles
-              .map(LakeIndex.normPath).filterNot(indexed.contains).toSeq
-            if (fresh.nonEmpty)
-              LakeProtocol.bloomIndexRows(s, LakeProtocol.readMatchedFiles(s, dataDir, fresh),
-                  fresh.length)
-                .write.mode("append").parquet(idxDir)
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      val src = waveFiles("bloomli", d,
+        slim.withColumn("wave", rangeWave(slim, "unix_date(ship_day)", 6, exactDiv = true)._1))
+      replayBatches(s, root, Waves(src, slim.schema)) { (batch: DataFrame, _: Long) =>
+        batch.write.mode("append").partitionBy("ship_month").parquet(dataDir)
+        // incremental sidecar APPEND: index exactly the files this
+        // batch created (already-indexed paths are a metadata-scale
+        // read of the sidecar table — one row per data file)
+        val indexed: Set[String] =
+          if (java.nio.file.Files.exists(java.nio.file.Paths.get(idxDir)))
+            s.read.parquet(idxDir).select(col("file"))
+              .collect().map(_.getString(0)).toSet
+          else Set.empty
+        val fresh = s.read.parquet(dataDir).inputFiles
+          .map(LakeIndex.normPath).filterNot(indexed.contains).toSeq
+        if (fresh.nonEmpty)
+          LakeProtocol.bloomIndexRows(s, LakeProtocol.readMatchedFiles(s, dataDir, fresh),
+              fresh.length)
+            .write.mode("append").parquet(idxDir)
       }
       root.toString
     }
@@ -2032,19 +1897,9 @@ object Streaming extends graft.QueryModule {
       // micro-batch assigns against this frame instead of re-scanning
       // the embeddings source per batch
       val cent = Sim.ivfCentroids(s, d)
-      val stream = s.readStream
-        .schema(v.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            Sim.ivfAssignSlice(s, cent, batch)
-              .write.mode("append").partitionBy("cid").parquet(idxDir)
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      replayBatches(s, root, Waves(src, v.schema)) { (batch: DataFrame, _: Long) =>
+        Sim.ivfAssignSlice(s, cent, batch)
+          .write.mode("append").partitionBy("cid").parquet(idxDir)
       }
       idxDir
     }
@@ -2100,22 +1955,9 @@ object Streaming extends graft.QueryModule {
         // rank-split waves (ntile over the sorted delta ids): every wave
         // nonempty at any SF, same reasoning as the eq-delete contract
         val src = waveFiles("graphv", d,
-          v.filter(col("vec_id") % 10 === 9)
-            .withColumn("wave",
-              (ntile(5).over(org.apache.spark.sql.expressions.Window
-                .orderBy(col("vec_id"))) - 1).cast("int")))
-        val stream = s.readStream
-          .schema(v.schema)
-          .option("maxFilesPerTrigger", 1)
-          .parquet(src.toString)
-        withFewShufflePartitions(s) {
-          val q = stream.writeStream
-            .foreachBatch { (batch: DataFrame, id: Long) =>
-              Sim.graphStreamUpsert(s, d, root.toString, batch, id)
-            }
-            .option("checkpointLocation", root.resolve("chk").toString)
-            .start()
-          try q.processAllAvailable() finally q.stop()
+          rankWaves(v.filter(col("vec_id") % 10 === 9), "vec_id"))
+        replayBatches(s, root, Waves(src, v.schema)) { (batch: DataFrame, id: Long) =>
+          Sim.graphStreamUpsert(s, d, root.toString, batch, id)
         }
       }
       (root.toString, !incremental)
@@ -2152,7 +1994,6 @@ object Streaming extends graft.QueryModule {
     * StreamingSpec's exactly-once pin.
     */
   private[graft] def eqdelStreamDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import org.apache.spark.sql.DataFrame
     val root0 = graft.Fixtures.memo("graft_eqdelstream", d) { root =>
       val delDir = root.resolve("eq_deletes").toString
       val keys = LakeFixture.eraseOrderKeys(s, d)
@@ -2162,42 +2003,29 @@ object Streaming extends graft.QueryModule {
       // one-file-per-commit pin. ntile over the sorted keys guarantees
       // every wave nonempty whenever |keys| >= 5; the erase key set is
       // metadata-scale, so the single-partition window is free.
-      val src = waveFiles("eqdel", d,
-        keys.withColumn("wave",
-          (ntile(5).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("k"))) - 1).cast("int")))
-      val stream = s.readStream
-        .schema(keys.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            // idempotent commit: a micro-batch RETRY after a partial append
-            // must REPLACE its delete file, not duplicate it (the
-            // one-file-per-commit / exactly-once contract). Write to a
-            // per-seq scratch dir, then move the single part file onto the
-            // deterministic per-seq name.
-            val seq = id + 1L
-            val scratch = root.resolve(s"commit_tmp_$seq")
-            batch.select(col("k"), lit(seq).as("seq_del"))
-              .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
-            val part = {
-              val ls = java.nio.file.Files.list(scratch)
-              try ls.filter(p => p.getFileName.toString.startsWith("part-"))
-                .findFirst().get()
-              finally ls.close()
-            }
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(delDir))
-            java.nio.file.Files.move(part,
-              java.nio.file.Paths.get(delDir, s"seq-$seq.parquet"),
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            graft.Fixtures.deleteRecursively(scratch)
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      val src = waveFiles("eqdel", d, rankWaves(keys, "k"))
+      replayBatches(s, root, Waves(src, keys.schema)) { (batch: DataFrame, id: Long) =>
+        // idempotent commit: a micro-batch RETRY after a partial append
+        // must REPLACE its delete file, not duplicate it (the
+        // one-file-per-commit / exactly-once contract). Write to a
+        // per-seq scratch dir, then move the single part file onto the
+        // deterministic per-seq name.
+        val seq = id + 1L
+        val scratch = root.resolve(s"commit_tmp_$seq")
+        batch.select(col("k"), lit(seq).as("seq_del"))
+          .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
+        val part = {
+          val ls = java.nio.file.Files.list(scratch)
+          try ls.filter(p => p.getFileName.toString.startsWith("part-"))
+            .findFirst().get()
+          finally ls.close()
+        }
+        java.nio.file.Files.createDirectories(
+          java.nio.file.Paths.get(delDir))
+        java.nio.file.Files.move(part,
+          java.nio.file.Paths.get(delDir, s"seq-$seq.parquet"),
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        graft.Fixtures.deleteRecursively(scratch)
       }
       root.toString
     }
@@ -2234,47 +2062,32 @@ object Streaming extends graft.QueryModule {
     * contract and DvSpec's streamed-≡-batch pin.
     */
   private[graft] def dvStreamDir(s: org.apache.spark.sql.SparkSession, d: String): String = {
-    import org.apache.spark.sql.DataFrame
     graft.Fixtures.memo("graft_dvstream", d) { root =>
       val keys = LakeFixture.eraseOrderKeys(s, d)
-      val src = waveFiles("dv", d,
-        keys.withColumn("wave",
-          (ntile(5).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("k"))) - 1).cast("int")))
+      val src = waveFiles("dv", d, rankWaves(keys, "k"))
       val latest = root.resolve("LATEST")
-      val stream = s.readStream
-        .schema(keys.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, id: Long) =>
-            val delta = LakeProtocol.dvFromPositions(s,
-              LakeProtocol.purgePositions(s, LakeFixture.bloomIdxDataDir(s, d),
-                s"${LakeFixture.bloomIdxDir(s, d)}/index", batch.select(col("k"))))
-            val cur =
-              if (java.nio.file.Files.exists(latest))
-                Some(s.read.parquet(
-                  java.nio.file.Files.readString(latest)))
-              else None
-            val merged = cur.fold(delta)(c => LakeProtocol.dvMergeBitmaps(c, delta))
-            // deterministic per-batch version dir, staged then swapped so
-            // a retry REPLACES its own commit (and the merge reads the
-            // PREVIOUS version, never the dir being written)
-            val out = root.resolve(s"dv_v$id")
-            val stage = root.resolve(s"dv_v${id}_stage")
-            merged.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-            graft.Fixtures.deleteRecursively(out)
-            java.nio.file.Files.move(stage, out)
-            val tmp = root.resolve("LATEST.tmp")
-            java.nio.file.Files.writeString(tmp, out.toString)
-            java.nio.file.Files.move(tmp, latest,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            ()
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      replayBatches(s, root, Waves(src, keys.schema)) { (batch: DataFrame, id: Long) =>
+        val delta = LakeProtocol.dvFromPositions(s,
+          LakeProtocol.purgePositions(s, LakeFixture.bloomIdxDataDir(s, d),
+            s"${LakeFixture.bloomIdxDir(s, d)}/index", batch.select(col("k"))))
+        val cur =
+          if (java.nio.file.Files.exists(latest))
+            Some(s.read.parquet(
+              java.nio.file.Files.readString(latest)))
+          else None
+        val merged = cur.fold(delta)(c => LakeProtocol.dvMergeBitmaps(c, delta))
+        // deterministic per-batch version dir, staged then swapped so
+        // a retry REPLACES its own commit (and the merge reads the
+        // PREVIOUS version, never the dir being written)
+        val out = root.resolve(s"dv_v$id")
+        val stage = root.resolve(s"dv_v${id}_stage")
+        merged.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+        graft.Fixtures.deleteRecursively(out)
+        java.nio.file.Files.move(stage, out)
+        val tmp = root.resolve("LATEST.tmp")
+        java.nio.file.Files.writeString(tmp, out.toString)
+        java.nio.file.Files.move(tmp, latest,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
       java.nio.file.Files.readString(latest)
     }
@@ -2298,7 +2111,6 @@ object Streaming extends graft.QueryModule {
     * clobbered untouched month all mismatch.
     */
   def cdfReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.DataFrame
     val out0 = graft.Fixtures.memo("graft_cdfstream", d) { root =>
       val out = root.resolve("mv").toString
       s.read.parquet(s"${LakeFixture.deleteExecDir(s, d)}/mv")
@@ -2313,41 +2125,30 @@ object Streaming extends graft.QueryModule {
           col("qty"), col("net_cents"))
       val src = waveFiles("cdf", d, log.withColumn("wave",
         pmod(xxhash64(col("ship_month")), lit(6L)).cast("int")))
-      val schema = log.schema
-      val stream = s.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val delta = batch.groupBy(col("ship_month"), col("ship_day"))
-              .agg(sum(col("sgn")).as("d_items"),
-                sum(col("sgn") * col("qty")).as("d_qty"),
-                sum(col("sgn") * col("net_cents")).as("d_cents"))
-            val touched = delta.select(col("ship_month")).distinct()
-            val merged = s.read.parquet(out)
-              .join(broadcast(touched), Seq("ship_month"), "left_semi")
-              .join(delta, Seq("ship_month", "ship_day"), "full_outer")
-              .select(col("ship_month"), col("ship_day"),
-                (coalesce(col("n_items"), lit(0L)) +
-                  coalesce(col("d_items"), lit(0L))).as("n_items"),
-                (coalesce(col("sum_qty"), lit(0L)) +
-                  coalesce(col("d_qty"), lit(0L))).as("sum_qty"),
-                (coalesce(col("revenue_cents"), lit(0L)) +
-                  coalesce(col("d_cents"), lit(0L))).as("revenue_cents"))
-            val stage = root.resolve("stage").toString
-            merged.write.mode("overwrite").parquet(stage)
-            // per-write option, NOT a session-conf flip (the shared
-            // session's concurrent plans must not inherit dynamic mode)
-            s.read.parquet(stage)
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("ship_month").parquet(out)
-          }
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
+      replayBatches(s, root, Waves(src, log.schema)) { (batch: DataFrame, _: Long) =>
+        val delta = batch.groupBy(col("ship_month"), col("ship_day"))
+          .agg(sum(col("sgn")).as("d_items"),
+            sum(col("sgn") * col("qty")).as("d_qty"),
+            sum(col("sgn") * col("net_cents")).as("d_cents"))
+        val touched = delta.select(col("ship_month")).distinct()
+        val merged = s.read.parquet(out)
+          .join(broadcast(touched), Seq("ship_month"), "left_semi")
+          .join(delta, Seq("ship_month", "ship_day"), "full_outer")
+          .select(col("ship_month"), col("ship_day"),
+            (coalesce(col("n_items"), lit(0L)) +
+              coalesce(col("d_items"), lit(0L))).as("n_items"),
+            (coalesce(col("sum_qty"), lit(0L)) +
+              coalesce(col("d_qty"), lit(0L))).as("sum_qty"),
+            (coalesce(col("revenue_cents"), lit(0L)) +
+              coalesce(col("d_cents"), lit(0L))).as("revenue_cents"))
+        val stage = root.resolve("stage").toString
+        merged.write.mode("overwrite").parquet(stage)
+        // per-write option, NOT a session-conf flip (the shared
+        // session's concurrent plans must not inherit dynamic mode)
+        s.read.parquet(stage)
+          .write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ship_month").parquet(out)
       }
       out
     }
@@ -2375,19 +2176,9 @@ object Streaming extends graft.QueryModule {
     */
   def attributionReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val ev = rawEvents(s, d)
-    val emitted = replayedSink(s, d, "graft_attr_replay_") { (sink, root) =>
-      val src = rawEventWaves(s, d)
-      val stream = s.readStream
-        .schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = purchaseAttribution(stream, "ts", "1 hour", "2 hours")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+    val emitted = replayedSink(s, d, "graft_attr_replay_",
+        Waves(rawEventWaves(s, d), ev.schema)) {
+      purchaseAttribution(_, "ts", "1 hour", "2 hours")
     }
     emitted.select(col("user_id"), col("purchase_id"), col("signup_id"),
         unix_micros(col("p_ts")).as("p_ts_us"), unix_micros(col("s_ts")).as("s_ts_us"))
@@ -2409,26 +2200,16 @@ object Streaming extends graft.QueryModule {
     val scored = graft.operators.TextOps.pplScoredCorpus(s, d)
       .withColumn("wave", pmod(col("doc_id"), lit(5)).cast("int"))
     val model = graft.operators.TextOps.pplModel(s, d)
-    val emitted = replayedSink(s, d, "graft_ppl_replay_") { (sink, root) =>
-      val src = waveFiles("ppl", d, scored)
-      val stream = s.readStream
-        .schema(scored.drop("wave").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src.toString)
-      withFewShufflePartitions(s) {
-        val q = stream.as[(Long, String)]
-          .mapPartitions { it =>
-            it.flatMap { case (id, text) =>
-              graft.operators.TextOps.pplScoreJvm(model, text)
-                .map { case (n, avg, tier) => (id, n, avg, tier) }
-            }
+    val emitted = replayedSink(s, d, "graft_ppl_replay_",
+        Waves(waveFiles("ppl", d, scored), scored.drop("wave").schema)) {
+      _.as[(Long, String)]
+        .mapPartitions { it =>
+          it.flatMap { case (id, text) =>
+            graft.operators.TextOps.pplScoreJvm(model, text)
+              .map { case (n, avg, tier) => (id, n, avg, tier) }
           }
-          .toDF("doc_id", "n_bigrams", "avg_nll_u6", "tier")
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", root.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+        }
+        .toDF("doc_id", "n_bigrams", "avg_nll_u6", "tier")
     }
     emitted.orderBy(col("doc_id"))
   }
@@ -2449,20 +2230,13 @@ object Streaming extends graft.QueryModule {
     */
   def lakeReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame = {
     val root = graft.operators.LakeFixture.lakeStreamDir(s, d)
-    val emitted = replayedSink(s, d, "graft_lake_replay_") { (sink, run) =>
-      withFewShufflePartitions(s) {
-        val q = s.readStream.format("graft-lake")
+    val emitted = replayedSink(s, d, "graft_lake_replay_",
+        Live(s.readStream.format("graft-lake")
           .option("metaRoot", root)
           .option("startSnapshot", "0")
           .option("maxSnapshotsPerTrigger", "1")
-          .load()
-          .select(col("l_orderkey"), col("qty"), col("net_cents"),
-            col("ship_month"))
-          .writeStream.format("memory").queryName(sink).outputMode("append")
-          .option("checkpointLocation", run.resolve("chk").toString)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      }
+          .load())) {
+      _.select(col("l_orderkey"), col("qty"), col("net_cents"), col("ship_month"))
     }
     LakeServeQueries.monthQtyRollup(emitted)
   }

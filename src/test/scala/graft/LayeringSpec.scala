@@ -24,7 +24,6 @@ class LayeringSpec extends AnyFunSuite {
 
   private val MaxLines = 2500
   private val overLimitCeilings = Map(
-    "graft/streaming/Streaming.scala" -> 2651,
     "graft/operators/Similarity.scala" -> 2703)
 
   test("nothing under graft/sources names graft.operators") {

@@ -1006,4 +1006,61 @@ class StreamingSpec extends AnyFunSuite with graft.SharedSpark {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty,
       "streamed equality serve diverges from the batch serve")
   }
+
+  // The replay harness owns each run's whole lifecycle: however a replay
+  // ends, no query stays active, no memory-sink view stays registered, no
+  // failed build leaves its directory, and the session's shuffle-partition
+  // setting is back to what it was.
+  private def harnessWaves(d: String): Streaming.Waves = {
+    import spark.implicits._
+    val waved = (0L until 30L).map(i => (i, (i % 3).toInt)).toDF("id", "wave")
+    Streaming.Waves(Streaming.waveFiles("spec_harness", d, waved), waved.drop("wave").schema)
+  }
+
+  private def assertNothingLeft(partitionsBefore: String): Unit = {
+    assert(spark.streams.active.isEmpty,
+      s"replay left queries running: ${spark.streams.active.map(_.name).mkString(", ")}")
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && t.name.matches("graft_.*_replay_.*")).map(_.name)
+    assert(views.isEmpty, s"replay left sink views: ${views.mkString(", ")}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == partitionsBefore)
+  }
+
+  test("memory-sink and foreachBatch replays run one wave per trigger and leave nothing behind") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val d = graft.Fixtures.tempDir("graft_spec_harness").toString
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val emitted = Streaming.replayedSink(spark, d, "graft_spec_replay_", harnessWaves(d)) {
+      (stream: org.apache.spark.sql.DataFrame) => stream
+    }
+    assert(emitted.as[Long].collect().sorted.toSeq == (0L until 30L))
+    assertNothingLeft(partitions)
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    Streaming.replayBatches(spark, graft.Fixtures.tempDir("graft_spec_batches"), harnessWaves(d)) {
+      (batch, id) => batches.add(id -> batch.count())
+    }
+    // one wave file per trigger: three batches of ten rows, in wave order
+    assert(batches.asScala.toSeq == Seq(0L -> 10L, 1L -> 10L, 2L -> 10L))
+    assertNothingLeft(partitions)
+  }
+
+  test("a replay whose batch function throws rethrows it and leaves no query or memo dir") {
+    import scala.jdk.CollectionConverters._
+    val d = graft.Fixtures.tempDir("graft_spec_failing").toString
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    val boom = new IllegalStateException("planted batch failure")
+    var root: java.nio.file.Path = null
+    val err = intercept[Exception] {
+      graft.Fixtures.memo("graft_spec_failing_replay", d) { r =>
+        root = r
+        Streaming.replayBatches(spark, r, harnessWaves(d)) { (_, _) => throw boom }
+      }
+    }
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).contains(boom),
+      s"the batch function's error is not in the rethrown chain: $err")
+    assertNothingLeft(partitions)
+    assert(root != null && !java.nio.file.Files.exists(root), s"memo dir $root left behind")
+    assert(!graft.Fixtures.memos.keySet.asScala.exists(_.startsWith("graft_spec_failing_replay|")))
+  }
 }
