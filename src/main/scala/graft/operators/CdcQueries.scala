@@ -526,8 +526,8 @@ object CdcQueries extends graft.QueryModule {
           val so = o.agg(sum(col("length")).cast("long").as("total_orig"),
             countDistinct(col("hash")).as("d_orig"))
           val ss = c.agg(sum(col("length")).cast("long").as("total_shift"))
-          val shared = o.select(col("hash")).distinct
-            .join(c.select(col("hash")).distinct, "hash")
+          val shared = o.select(col("hash")).distinct()
+            .join(c.select(col("hash")).distinct(), "hash")
             .agg(count(lit(1)).as("shared"))
           so.crossJoin(ss).crossJoin(shared).crossJoin(corp)
             .select(

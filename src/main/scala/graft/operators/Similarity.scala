@@ -114,25 +114,43 @@ object Similarity extends graft.QueryRegistry {
   private def cosine(aEmb: Column, bEmb: Column): Column =
     call_function("vec_dot", aEmb, bEmb)
 
+  /** The top-k cut every ranked result and shortlist ends in: number each
+    * query's rows (each `by` group) by (`score` DESC, `id`) as column `as`
+    * and keep the first `k`. The number is LONG where it is served, the
+    * window's INT where a caller only cuts on it.
+    */
+  private def topK(df: DataFrame, score: String, id: String, k: Int = TopK,
+      as: String = "rank", long: Boolean = true,
+      by: Seq[String] = Seq("q_id")): DataFrame = {
+    val rn = row_number().over(
+      Window.partitionBy(by.map(col): _*).orderBy(col(score).desc, col(id)))
+    df.withColumn(as, if (long) rn.cast("long") else rn).filter(col(as) <= k)
+  }
+
+  /** Per-query recall@[[TopK]] of `ann` (q_id, n_id) against the ground
+    * truth `truth` (q_id, n_id): one (q_id, n_hit, recall) row per truth
+    * query, 0 hits where `ann` found none.
+    */
+  private def recallByQuery(ann: DataFrame, truth: DataFrame): DataFrame = {
+    val hits = ann.join(truth, Seq("q_id", "n_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
+    truth.select(col("q_id")).distinct()
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"),
+        coalesce(col("n_hit"), lit(0L)).as("n_hit"),
+        round(coalesce(col("n_hit"), lit(0L)) / TopK.toDouble, 4).as("recall"))
+      .orderBy(col("q_id"))
+  }
+
   /** Shared oracle for sim_ivf_topk and sim_ivf_persisted — same retrieval
     * contract, two physical serving paths (in-flight assignment vs the
-    * cid-partitioned on-disk index), so the text is shared VERBATIM.
+    * cid-partitioned on-disk index), so the text is shared VERBATIM; also
+    * the fresh-rebuild oracle of the streaming maintenance contract
+    * (stream_ivf_replay).
     */
-  private lazy val ivfTopkSql: String =
+  private[graft] lazy val ivfTopkOracle: String =
     s"""WITH $vectorsSql,
-       |cent AS (
-       |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-       |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-       |ranked AS (
-       |  SELECT v.vec_id, cid,
-       |    row_number() OVER (PARTITION BY v.vec_id
-       |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-       |  FROM v CROSS JOIN cent),
-       |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
-       |probes AS (SELECT vec_id AS q_id, cid FROM ranked WHERE vec_id < $NumQueries AND crn <= $NProbe),
-       |cand AS (
-       |  SELECT DISTINCT p.q_id, a.vec_id AS n_id
-       |  FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.q_id)
+       |$ivfCandSql
        |SELECT q_id, rank, n_id, ${rndSql("cos", 4)} AS cos FROM (
        |  SELECT c.q_id, c.n_id,
        |    list_dot_product(q.emb, n.emb) AS cos,
@@ -141,19 +159,108 @@ object Similarity extends graft.QueryRegistry {
        |  FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
        |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
 
+  // ---- The IVF coarse quantizer, once per engine: every IVF query, build,
+  // delta upsert and the streaming ingest use the Spark helpers, every IVF
+  // oracle the SQL ones. Neither feeds the other: the oracle stays the
+  // independent reference.
+
+  /** `id` is an IVF seed medoid: every [[IvfSeedStride]]-th vector, the
+    * first [[IvfCentroids]] of them.
+    */
+  private def isIvfSeed(id: Column): Column =
+    id % IvfSeedStride === 0 && id < IvfSeedStride * IvfCentroids
+
+  /** The seed centroids (cid, c_emb) of vector frame `v`. Takes the frame,
+    * not (s, d), so a caller's cached frame (or sim_mips_topk's augmented
+    * one) is what the centroids are read from.
+    */
+  private def ivfSeeds(v: DataFrame): DataFrame =
+    v.filter(isIvfSeed(col("vec_id")))
+      .select((col("vec_id") / IvfSeedStride).cast("long").as("cid"), col("emb").as("c_emb"))
+
+  /** Every row of `v` scored against every centroid of `cent` (`ccos`,
+    * cosine of `emb` unless given) and ranked by (ccos DESC, cid) as `crn`:
+    * crn = 1 is the row's coarse assignment, crn ≤ n its n-probe list.
+    */
+  private def ivfRanked(v: DataFrame, cent: DataFrame,
+      ccos: Column = cosine(col("emb"), col("c_emb"))): DataFrame = {
+    val s = v.sparkSession
+    import s.implicits._
+    v.crossJoin(broadcast(cent))
+      .withColumn("ccos", ccos)
+      .withColumn("crn", row_number().over(
+        Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")))
+  }
+
+  /** The coarse assignment (vec_id, emb, cid) of [[ivfRanked]] rows. */
+  private def ivfAssigned(ranked: DataFrame): DataFrame =
+    ranked.filter(col("crn") === 1).select(col("vec_id"), col("emb"), col("cid"))
+
+  /** The query rows' probe lists out of [[ivfRanked]] rows: (q_id, q_emb,
+    * cid) for each query's `nprobe` best centroids.
+    */
+  private def ivfProbes(ranked: DataFrame, nprobe: Int = NProbe,
+      cid: Column = col("cid")): DataFrame =
+    ranked.filter(col("vec_id") < NumQueries && col("crn") <= nprobe)
+      .select(col("vec_id").as("q_id"), col("emb").as("q_emb"), cid)
+
+  /** Probe → candidate: every vector of the inverted lists `index` (vec_id,
+    * emb, cid) in a list its query probes, the query itself excluded, once
+    * per (q_id, n_id), scored as `cos`.
+    */
+  private def ivfCandidates(probes: DataFrame, index: DataFrame): DataFrame =
+    probes.join(index, "cid")
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("q_emb"), col("vec_id").as("n_id"), col("emb").as("n_emb"))
+      .distinct()
+      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
+
+  /** Candidates → top-k: the serve tail of sim_ivf_topk (lists assigned in
+    * flight) and [[ivfServeFromDir]] (lists read from disk).
+    */
+  private def ivfServe(probes: DataFrame, index: DataFrame): DataFrame =
+    topK(ivfCandidates(probes, index), "cos", "n_id")
+      .select(col("q_id"), col("rank"), col("n_id"), round(col("cos"), 4).as("cos"))
+      .orderBy(col("q_id"), col("rank"))
+
+  /** SQL twin of [[isIvfSeed]] over a `vec_id` column. */
+  private def ivfSeedSql: String =
+    s"vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}"
+
+  /** Oracle twin of [[ivfSeeds]]: CTE `cent` over relation `from`. */
+  private def ivfCentSql(from: String): String =
+    s"""cent AS (
+       |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
+       |  FROM $from WHERE $ivfSeedSql)""".stripMargin
+
+  /** Oracle twin of [[ivfRanked]] over CTE `v`: CTEs cent and ranked. */
+  private def ivfRankedSql: String =
+    s"""${ivfCentSql("v")},
+       |ranked AS (
+       |  SELECT v.vec_id, cid,
+       |    row_number() OVER (PARTITION BY v.vec_id
+       |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
+       |  FROM v CROSS JOIN cent)""".stripMargin
+
+  /** Oracle twin of assignment → probes → candidates: [[ivfRankedSql]]
+    * then CTEs assigned, probes and cand (q_id, n_id).
+    */
+  private def ivfCandSql: String =
+    s"""$ivfRankedSql,
+       |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
+       |probes AS (SELECT vec_id AS q_id, cid FROM ranked WHERE vec_id < $NumQueries AND crn <= $NProbe),
+       |cand AS (
+       |  SELECT DISTINCT p.q_id, a.vec_id AS n_id
+       |  FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.q_id)""".stripMargin
+
   /** The frozen coarse quantizer: the 8 seed centroids every IVF build,
     * delta-upsert and the streaming ingest share. Coarse assignment is a
-    * pure per-vector function of these, which is what makes append ≡
-    * rebuild bit-for-bit across all three maintenance paths.
+    * pure per-vector function of these, and all three maintenance paths
+    * assign through [[ivfAssignSlice]], which is what makes append ≡
+    * rebuild bit-for-bit across them.
     */
-  private[graft] def ivfCentroids(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    vectors(s, d)
-      .filter($"vec_id" % IvfSeedStride === 0 &&
-        $"vec_id" < IvfSeedStride * IvfCentroids)
-      .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"),
-        $"emb".as("c_emb"))
-  }
+  private[graft] def ivfCentroids(s: SparkSession, d: String): DataFrame =
+    ivfSeeds(vectors(s, d))
 
   /** Coarse-assign one vector slice against the frozen centroids —
     * (vec_id, emb, cid) rows ready to land in the cid-partitioned index.
@@ -164,58 +271,29 @@ object Similarity extends graft.QueryRegistry {
     */
   private[graft] def ivfAssignSlice(
       s: SparkSession, d: String, slice: DataFrame): DataFrame =
-    ivfAssignSlice(s, ivfCentroids(s, d), slice)
+    ivfAssignSlice(ivfCentroids(s, d), slice)
 
   /** Overload taking a PRE-BUILT centroid frame, so a per-micro-batch
     * caller (the streaming contract's foreachBatch) derives the frozen
     * centroids once before the stream starts instead of re-scanning the
     * embeddings source on every batch.
     */
-  private[graft] def ivfAssignSlice(
-      s: SparkSession, cent: DataFrame, slice: DataFrame): DataFrame = {
-    import s.implicits._
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-    slice.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"emb", $"c_emb"))
-      .withColumn("crn", row_number().over(wAssign)).filter($"crn" === 1)
-      .select($"vec_id", $"emb", $"cid")
-  }
+  private[graft] def ivfAssignSlice(cent: DataFrame, slice: DataFrame): DataFrame =
+    ivfAssigned(ivfRanked(slice, cent))
 
   /** The shared probe-and-rank serve over ANY persisted cid-partitioned
     * IVF index directory — the exact plan of sim_ivf_persisted /
     * sim_ivf_incremental, reused by the streaming contract so all three
     * index maintenance paths are judged by the same serve through the
-    * VERBATIM [[ivfTopkSql]] fresh-rebuild oracle.
+    * VERBATIM [[ivfTopkOracle]] fresh-rebuild oracle.
     */
   private[graft] def ivfServeFromDir(
       s: SparkSession, d: String, indexDir: String): DataFrame = {
-    import s.implicits._
     val v = vectors(s, d).cache()
-    val cent = ivfCentroids(s, d)
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-    val probes = v.crossJoin(broadcast(cent))
-      .withColumn("ccos", cosine($"emb", $"c_emb"))
-      .withColumn("crn", row_number().over(wAssign))
-      .filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-      .select($"vec_id".as("q_id"), $"emb".as("q_emb"),
-        $"cid".cast("int").as("cid")) // match the partition column's inferred INT
-    val index = graft.Tables.readCached(s, indexDir)
-    val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-    probes.join(index, "cid")
-      .filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
-      .distinct()
-      .withColumn("cos", cosine($"q_emb", $"n_emb"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter($"rank" <= TopK)
-      .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
-      .orderBy($"q_id", $"rank")
+    val probes = ivfProbes(ivfRanked(v, ivfCentroids(s, d)),
+      cid = col("cid").cast("int").as("cid")) // match the partition column's inferred INT
+    ivfServe(probes, graft.Tables.readCached(s, indexDir))
   }
-
-  /** The verbatim fresh-rebuild retrieval oracle, exported for the
-    * streaming maintenance contract (stream_ivf_replay).
-    */
-  private[graft] def ivfTopkOracle: String = ivfTopkSql
 
   /** Once-per-JVM persisted IVF index for sim_ivf_persisted: the coarse
     * assignment (vec_id, emb) written as parquet PARTITIONED BY cid — the
@@ -227,16 +305,9 @@ object Similarity extends graft.QueryRegistry {
     // rebuilds the index instead of serving stale lists. Dir is swept at
     // JVM exit by the Fixtures shutdown hook.
     graft.Fixtures.memo("graft_ivfidx", d) { dir =>
-      import s.implicits._
       val root = dir.resolve("index").toString
       val v = vectors(s, d)
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(wAssign)).filter($"crn" === 1)
-        .select($"vec_id", $"emb", $"cid")
+      ivfAssignSlice(ivfSeeds(v), v)
         .write.mode("overwrite").partitionBy("cid").parquet(root)
       root
     }
@@ -248,7 +319,7 @@ object Similarity extends graft.QueryRegistry {
     * of a live vector store. The assignment uses the SAME frozen centroids
     * as the full build; coarse assignment is a pure per-vector function of
     * those centroids, so append ≡ rebuild BIT-FOR-BIT — enforced by serving
-    * sim_ivf_incremental through the verbatim shared ivfTopkSql oracle (the
+    * sim_ivf_incremental through the verbatim shared ivfTopkOracle (the
     * fresh-rebuild contract) and by the direct frame-equality spec in
     * AnnQualitySpec. At 100 TB: centroids stay frozen between re-trains,
     * deltas append cid-partitioned files, and a periodic compaction rewrites
@@ -259,19 +330,12 @@ object Similarity extends graft.QueryRegistry {
       import s.implicits._
       val root = dir.resolve("index").toString
       val v = vectors(s, d)
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      def assign(slice: DataFrame): DataFrame = slice
-        .crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(wAssign)).filter($"crn" === 1)
-        .select($"vec_id", $"emb", $"cid")
+      val cent = ivfSeeds(v)
       // day 0: base build (centroid seeds are vec_id % 50 == 0 — all in base)
-      assign(v.filter($"vec_id" % 10 =!= 9))
+      ivfAssignSlice(cent, v.filter($"vec_id" % 10 =!= 9))
         .write.mode("overwrite").partitionBy("cid").parquet(root)
       // day 1: delta upsert into the existing partition layout
-      assign(v.filter($"vec_id" % 10 === 9))
+      ivfAssignSlice(cent, v.filter($"vec_id" % 10 === 9))
         .write.mode("append").partitionBy("cid").parquet(root)
       root
     }
@@ -370,39 +434,117 @@ object Similarity extends graft.QueryRegistry {
     */
   private def writeGraphLayers(v0: DataFrame, root: String,
       sigsOpt: Option[DataFrame] = None): Unit = {
-    val s = v0.sparkSession
-    import s.implicits._
     // Re-project before caching so this build-local cache entry canonicalizes
     // to a DIFFERENT plan than the bare vectors(s, d) frame: Spark's cache
     // manager keys on the canonicalized plan, so unpersisting the identical
     // plan in the finally block below could otherwise evict a vectors() cache
     // a concurrently-running serve relies on (perf-only, but cheap to avoid).
-    val v = v0.select(v0.columns.map(col): _*).cache()
-    val we = Window.partitionBy($"src").orderBy($"ecos".desc, $"dst")
+    val v = v0.select(v0.columns.toSeq.map(col): _*).cache()
     val kc = knnCandidatesWithRegime(v, sigsOpt)
-    val scored = kc.cand
-      .join(v.select($"vec_id".as("src"), $"emb".as("s_emb")), "src")
-      .join(v.select($"vec_id".as("dst"), $"emb".as("d_emb")), "dst")
-      .withColumn("ecos", cosine($"s_emb", $"d_emb"))
-      .select($"src", $"dst", $"ecos") // drop the embeddings BEFORE caching:
-      .cache() // cut twice (l0 + l1) — score once; 3 narrow columns cache
-    // fine at 200k vectors where the emb-carrying frame OOMed a 4.6 GB heap
+    // scoreEdges drops the embeddings BEFORE caching: the edges are cut
+    // twice (l0 + l1) but scored once, and 3 narrow columns cache fine at
+    // 200k vectors where the emb-carrying frame OOMed a 4.6 GB heap
+    val scored = scoreEdges(kc.cand, v).cache()
     try {
-      scored
-        .withColumn("rn", row_number().over(we)).filter($"rn" <= GraphDegree)
-        .select($"src", $"dst", $"ecos", $"rn")
-        .write.mode("overwrite").parquet(s"$root/l0")
-      scored
-        .filter($"src" % HnswLayerMod === 0 && $"dst" % HnswLayerMod === 0)
-        .withColumn("rn", row_number().over(we)).filter($"rn" <= HnswL1Degree)
-        .select($"src", $"dst", $"ecos", $"rn")
-        .write.mode("overwrite").parquet(s"$root/l1")
+      for ((layer, deg, edges) <- graphLayers(scored))
+        cutDegree(edges, deg).write.mode("overwrite").parquet(s"$root/$layer")
     } finally { // build is once-per-JVM: nothing may stay cached after it
       scored.unpersist()
       kc.cached.foreach(_.unpersist())
       v.unpersist()
     }
   }
+
+  /** Directed pairs (src, dst) scored by their endpoints' cosine in `v`:
+    * (src, dst, ecos), the embeddings dropped.
+    */
+  private def scoreEdges(pairs: DataFrame, v: DataFrame): DataFrame =
+    pairs
+      .join(v.select(col("vec_id").as("src"), col("emb").as("s_emb")), "src")
+      .join(v.select(col("vec_id").as("dst"), col("emb").as("d_emb")), "dst")
+      .withColumn("ecos", cosine(col("s_emb"), col("d_emb")))
+      .select(col("src"), col("dst"), col("ecos"))
+
+  /** Both serve-graph layers of one edge set, as (layer, degree, edges):
+    * `l0` takes every edge, `l1` (HNSW's upper layer) the edges whose both
+    * endpoints sit in the vec_id % [[HnswLayerMod]] subsample.
+    */
+  private def graphLayers(edges: DataFrame): Seq[(String, Int, DataFrame)] = Seq(
+    ("l0", GraphDegree, edges),
+    ("l1", HnswL1Degree, edges.filter(
+      col("src") % HnswLayerMod === 0 && col("dst") % HnswLayerMod === 0)))
+
+  /** Each source's best `deg` out-edges by (ecos DESC, dst), numbered `rn`. */
+  private def cutDegree(edges: DataFrame, deg: Int): DataFrame =
+    edges
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("src")).orderBy(col("ecos").desc, col("dst"))))
+      .filter(col("rn") <= deg)
+      .select(col("src"), col("dst"), col("ecos"), col("rn"))
+
+  /** One layer's merge-recut: the source lists that `fresh` (edges with a
+    * new endpoint) touches are re-cut to top-`deg` over old ∪ fresh; every
+    * other list of `old` carries over verbatim.
+    */
+  private def mergeRecut(old: DataFrame, fresh: DataFrame, deg: Int): DataFrame = {
+    val affected = fresh.select(col("src")).distinct()
+    old.join(affected, Seq("src"), "left_anti") // unaffected lists: verbatim carry-over
+      .unionByName(cutDegree(old.select(col("src"), col("dst"), col("ecos"))
+        .join(affected, Seq("src"), "left_semi")
+        .unionByName(fresh), deg)) // disjoint: fresh edges have a new endpoint
+  }
+
+  /** (src, dst) pairs of `x` rows and `y` rows sharing an LSH bucket
+    * (table and signature), self-pairs excluded.
+    */
+  private def bucketPairs(x: DataFrame, y: DataFrame): DataFrame =
+    x.as("x").join(y.as("y"),
+        col("x.tbl") === col("y.tbl") && col("x.sig") === col("y.sig") &&
+          col("x.vec_id") =!= col("y.vec_id"))
+      .select(col("x.vec_id").as("src"), col("y.vec_id").as("dst"))
+
+  /** The scored edges new vectors add: their signatures `sigsNew`
+    * bucket-paired against every present signature `sigsAll` (their own
+    * included — intra-batch pairs), in both directions.
+    */
+  private def newEndpointEdges(
+      sigsNew: DataFrame, sigsAll: DataFrame, v: DataFrame): DataFrame = {
+    val half = bucketPairs(sigsNew, sigsAll)
+    scoreEdges(half
+      .unionByName(half.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct(), v)
+  }
+
+  /** (tbl, sig, cnt): the size of every LSH bucket — ≤ LshTables ·
+    * 2^LshBits groups, a schema-bounded agg, tiny either way.
+    */
+  private def bucketSizes(sigs: DataFrame): DataFrame =
+    sigs.groupBy(col("tbl"), col("sig")).agg(count(lit(1)).as("cnt"))
+
+  /** The candidate-regime probe: one small job reading the largest bucket,
+    * which every graph builder compares against [[BucketAllPairsMax]].
+    */
+  private def maxBucket(sigs: DataFrame): Long =
+    bucketSizes(sigs).agg(max(col("cnt"))).head().getLong(0)
+
+  /** Day 0 of an incrementally-maintained graph over `v` and its cached
+    * signatures `sigsAll`: probe the candidate regime, then write either
+    * the base slice's layers (vec_id % 10 != 9) at `base` — returns true,
+    * the upsert path is armed — or, past the bucket cap, the documented
+    * full rebuild at `full` — returns false. The base build reuses the
+    * cached signature scan the probe already paid for (a filter of a
+    * cached frame reads the cache).
+    */
+  private def writeBaseGraph(
+      v: DataFrame, sigsAll: DataFrame, full: String, base: String): Boolean =
+    if (maxBucket(sigsAll) > BucketAllPairsMax) {
+      writeGraphLayers(v, full, Some(sigsAll))
+      false
+    } else {
+      writeGraphLayers(v.filter(col("vec_id") % 10 =!= 9), base,
+        Some(sigsAll.filter(col("vec_id") % 10 =!= 9)))
+      true
+    }
 
   /** Per-dataset record of whether [[knnIncrementalDir]] took its
     * full-rebuild fallback instead of the delta upsert (keyed by dataset
@@ -441,60 +583,23 @@ object Similarity extends graft.QueryRegistry {
   private def knnIncremental(s: SparkSession, d: String): (String, Boolean) =
     graft.Fixtures.memo("graft_knnincr", d) { dir =>
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
       val root = dir.resolve("graph").toString
       val v = vectors(s, d)
       val sigsAll = lshSignatures(v).cache()
-      val maxBucket = sigsAll.groupBy($"tbl", $"sig").agg(count(lit(1)).as("cnt"))
-        .agg(max($"cnt")).head().getLong(0)
-      val fellBack = maxBucket > BucketAllPairsMax
-      if (fellBack) {
-        try writeGraphLayers(v, root, Some(sigsAll)) // documented fallback
-        finally sigsAll.unpersist()
-      } else {
-        // day 0: both layers over the base slice — reusing the cached
-        // signature scan the regime probe already paid for (a filter of a
-        // cached frame reads the cache)
-        writeGraphLayers(v.filter($"vec_id" % 10 =!= 9), s"$root/base",
-          Some(sigsAll.filter($"vec_id" % 10 =!= 9)))
-        // day 1: candidate pairs with a NEW endpoint (either side),
-        // bucket-equality over the full signature set
-        val half = sigsAll.filter($"vec_id" % 10 === 9).as("x")
-          .join(sigsAll.as("y"),
-            $"x.tbl" === $"y.tbl" && $"x.sig" === $"y.sig" &&
-              $"x.vec_id" =!= $"y.vec_id")
-          .select($"x.vec_id".as("src"), $"y.vec_id".as("dst"))
-        val newScored = half
-          .unionByName(half.select($"dst".as("src"), $"src".as("dst")))
-          .distinct()
-          .join(v.select($"vec_id".as("src"), $"emb".as("s_emb")), "src")
-          .join(v.select($"vec_id".as("dst"), $"emb".as("d_emb")), "dst")
-          .withColumn("ecos", cosine($"s_emb", $"d_emb"))
-          .select($"src", $"dst", $"ecos").cache()
-        try {
-          val we = Window.partitionBy($"src").orderBy($"ecos".desc, $"dst")
-          def upsert(layer: String, deg: Int, fresh: DataFrame): Unit = {
-            val old = graft.Tables.readCached(s, s"$root/base/$layer")
-            val affected = fresh.select($"src").distinct()
-            val carry = old // unaffected lists: verbatim carry-over
-              .join(affected, Seq("src"), "left_anti")
-            val recut = old.select($"src", $"dst", $"ecos")
-              .join(affected, Seq("src"), "left_semi")
-              .unionByName(fresh) // disjoint: fresh edges have a new endpoint
-              .withColumn("rn", row_number().over(we)).filter($"rn" <= deg)
-              .select($"src", $"dst", $"ecos", $"rn")
-            carry.unionByName(recut)
+      try {
+        val armed = writeBaseGraph(v, sigsAll, root, s"$root/base")
+        if (armed) {
+          // day 1: candidate pairs with a NEW endpoint (either side),
+          // bucket-equality over the full signature set
+          val newScored =
+            newEndpointEdges(sigsAll.filter($"vec_id" % 10 === 9), sigsAll, v).cache()
+          try for ((layer, deg, fresh) <- graphLayers(newScored))
+            mergeRecut(graft.Tables.readCached(s, s"$root/base/$layer"), fresh, deg)
               .write.mode("overwrite").parquet(s"$root/$layer")
-          }
-          upsert("l0", GraphDegree, newScored)
-          upsert("l1", HnswL1Degree, newScored.filter(
-            $"src" % HnswLayerMod === 0 && $"dst" % HnswLayerMod === 0))
-        } finally {
-          newScored.unpersist()
-          sigsAll.unpersist()
+          finally newScored.unpersist()
         }
-      }
-      (root, fellBack)
+        (root, !armed)
+      } finally sigsAll.unpersist()
     }
 
   // ---- STREAMING GRAPH MAINTENANCE hooks (the 23rd replay contract,
@@ -516,22 +621,13 @@ object Similarity extends graft.QueryRegistry {
   private[graft] def graphStreamInit(
       s: SparkSession, d: String, root: String): Boolean = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val v = vectors(s, d)
     val sigsAll = lshSignatures(v).cache()
     try {
-      val maxBucket = sigsAll.groupBy($"tbl", $"sig")
-        .agg(count(lit(1)).as("cnt")).agg(max($"cnt")).head().getLong(0)
-      if (maxBucket > BucketAllPairsMax) {
-        writeGraphLayers(v, s"$root/graph", Some(sigsAll))
-        false
-      } else {
-        writeGraphLayers(v.filter($"vec_id" % 10 =!= 9), s"$root/graph",
-          Some(sigsAll.filter($"vec_id" % 10 =!= 9)))
-        sigsAll.filter($"vec_id" % 10 =!= 9)
-          .write.mode("overwrite").parquet(s"$root/sigs/commit=0")
-        true
-      }
+      val armed = writeBaseGraph(v, sigsAll, s"$root/graph", s"$root/graph")
+      if (armed) sigsAll.filter($"vec_id" % 10 =!= 9)
+        .write.mode("overwrite").parquet(s"$root/sigs/commit=0")
+      armed
     } finally sigsAll.unpersist()
   }
 
@@ -554,19 +650,8 @@ object Similarity extends graft.QueryRegistry {
         .parquet(s"$root/sigs/commit=${commitId + 1}")
       val sigsAll = graft.Tables.readCached(s, s"$root/sigs")
         .select($"vec_id", $"tbl", $"sig")
-      val half = sigsB.as("x").join(sigsAll.as("y"),
-          $"x.tbl" === $"y.tbl" && $"x.sig" === $"y.sig" &&
-            $"x.vec_id" =!= $"y.vec_id")
-        .select($"x.vec_id".as("src"), $"y.vec_id".as("dst"))
-      val fresh = half
-        .unionByName(half.select($"dst".as("src"), $"src".as("dst")))
-        .distinct()
-        .join(v.select($"vec_id".as("src"), $"emb".as("s_emb")), "src")
-        .join(v.select($"vec_id".as("dst"), $"emb".as("d_emb")), "dst")
-        .withColumn("ecos", cosine($"s_emb", $"d_emb"))
-        .select($"src", $"dst", $"ecos").cache()
+      val fresh = newEndpointEdges(sigsB, sigsAll, v).cache()
       try {
-        val we = Window.partitionBy($"src").orderBy($"ecos".desc, $"dst")
         def upsert(layer: String, deg: Int, freshL: DataFrame): Unit = {
           val live = s"$root/graph/$layer"
           // crash recovery: a retry may land after the old live dir was
@@ -583,13 +668,7 @@ object Similarity extends graft.QueryRegistry {
             else graft.Fixtures.deleteRecursively(asidePath)
           }
           val old = graft.Tables.readCached(s, live)
-          val affected = freshL.select($"src").distinct()
-          val next = old.join(affected, Seq("src"), "left_anti")
-            .unionByName(old.select($"src", $"dst", $"ecos")
-              .join(affected, Seq("src"), "left_semi")
-              .unionByName(freshL)
-              .withColumn("rn", row_number().over(we)).filter($"rn" <= deg)
-              .select($"src", $"dst", $"ecos", $"rn"))
+          val next = mergeRecut(old, freshL, deg)
           val stage = s"${live}_stage"
           next.write.mode("overwrite").parquet(stage)
           // aside-then-promote-then-delete: at every instant a whole
@@ -600,29 +679,21 @@ object Similarity extends graft.QueryRegistry {
           java.nio.file.Files.move(java.nio.file.Paths.get(stage), livePath)
           graft.Fixtures.deleteRecursively(asidePath)
         }
-        upsert("l0", GraphDegree, fresh)
-        upsert("l1", HnswL1Degree, fresh.filter(
-          $"src" % HnswLayerMod === 0 && $"dst" % HnswLayerMod === 0))
+        for ((layer, deg, freshL) <- graphLayers(fresh)) upsert(layer, deg, freshL)
       } finally fresh.unpersist()
     } finally sigsB.unpersist()
   }
 
-  /** The standard flat beam serve over an arbitrary graph root — the
-    * streamed contract's judged readout (same plan as sim_graph_topk).
-    */
-  private[graft] def graphServeFromDir(
-      s: SparkSession, d: String, graphRoot: String): DataFrame =
-    graphBeamServe(s, d, graphRoot)
-
   /** Beam search over a persisted serve graph's `l0` layer — the shared
-    * execution of sim_graph_topk (fresh-built graph) and
-    * sim_graph_incremental (delta-upserted graph): entry points are the 8
+    * execution of sim_graph_topk (fresh-built graph), sim_graph_incremental
+    * (delta-upserted graph) and the streamed graph contract
+    * (stream_graph_replay, streamed graph): entry points are the 8
     * IVF seed medoids; each hop expands the beam along the directed
     * top-[[GraphDegree]] edges and re-cuts to the best [[GraphBeam]] nodes
     * by exact cosine; after [[GraphHops]] hops the beam's top-K is served.
     * Executed as ONE bounded per-query fold ([[foldedBeamServe]]).
     */
-  private def graphBeamServe(
+  private[graft] def graphBeamServe(
       s: SparkSession, d: String, graphRoot: String): DataFrame =
     foldedBeamServe(s, d, graphRoot,
       phases = Seq(("l0", GraphBeam, GraphHops)), entryBeam = GraphBeam,
@@ -744,9 +815,7 @@ object Similarity extends graft.QueryRegistry {
           state.map { case (n, c) => (q, n, c) }
         }
       }.toDF("q_id", "node", "cos")
-    val wr = Window.partitionBy($"q_id").orderBy($"cos".desc, $"node")
-    served.withColumn("rank", row_number().over(wr).cast("long"))
-      .filter($"rank" <= TopK)
+    topK(served, "cos", "node")
       .select($"q_id", $"rank", $"node".as("n_id"), round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -771,7 +840,6 @@ object Similarity extends graft.QueryRegistry {
   private def shardedBeamServe(
       s: SparkSession, d: String, graphRoot: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val v = vectors(s, d)
     val emb = v.select($"vec_id".as("node"), $"emb".as("n_emb"))
     val adj = graft.Tables.readCached(s, s"$graphRoot/l0").select($"src", $"dst")
@@ -784,13 +852,10 @@ object Similarity extends graft.QueryRegistry {
         .join(broadcast(qs), Seq("q_id"))
         .withColumn("cos", call_function("vec_dot", $"q_emb", $"n_emb"))
         .select($"q_id", $"node", $"cos")
-    val wb = Window.partitionBy($"q_id").orderBy($"cos".desc, $"node")
     def cut(scored: DataFrame): DataFrame =
-      scored.withColumn("rn", row_number().over(wb))
-        .filter($"rn" <= GraphBeam).select($"q_id", $"node", $"cos")
-    val ent = v.filter($"vec_id" % IvfSeedStride === 0 &&
-        $"vec_id" < IvfSeedStride * IvfCentroids)
-      .select($"vec_id".as("node"))
+      topK(scored, "cos", "node", k = GraphBeam, as = "rn", long = false)
+        .select($"q_id", $"node", $"cos")
+    val ent = v.filter(isIvfSeed($"vec_id")).select($"vec_id".as("node"))
     // localCheckpoint per hop (r18): the beam is queries×GraphBeam rows
     // (~tiny at any scale — beam state, not corpus state), but WITHOUT the
     // checkpoint each hop's plan nests the previous hop's whole subtree and
@@ -809,8 +874,7 @@ object Similarity extends graft.QueryRegistry {
         .filter($"node" =!= $"q_id").distinct()
       beam = cut(score(cand)).localCheckpoint()
     }
-    beam.withColumn("rank", row_number().over(wb).cast("long"))
-      .filter($"rank" <= TopK)
+    topK(beam, "cos", "node")
       .select($"q_id", $"rank", $"node".as("n_id"), round($"cos", 4).as("cos"))
       .orderBy($"q_id", $"rank")
   }
@@ -833,6 +897,60 @@ object Similarity extends graft.QueryRegistry {
        |  FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
        |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
 
+  /** Oracle beam cut: CTE `next` keeps each query's best `beam` nodes of
+    * candidate CTE `cand` by (cos DESC, node), scored against CTE `qs`.
+    */
+  private def beamCutSql(cand: String, next: String, beam: Int): String =
+    s"""$next AS (
+       |  SELECT q_id, node, cos FROM (
+       |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
+       |      row_number() OVER (PARTITION BY c.q_id
+       |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
+       |    FROM $cand c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
+       |  WHERE rn <= $beam)""".stripMargin
+
+  /** Oracle serve tail: the top-[[TopK]] of the last beam CTE `beam`. */
+  private def beamTopkSql(beam: String): String =
+    s"""SELECT q_id, rank, node AS n_id, ${rndSql("cos", 4)} AS cos FROM (
+       |  SELECT q_id, node, cos,
+       |    CAST(row_number() OVER (PARTITION BY q_id
+       |      ORDER BY cos DESC, node) AS BIGINT) AS rank
+       |  FROM $beam)
+       |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
+
+  /** One oracle beam hop over edge CTE `g`: beam `prev` plus its
+    * out-neighbours (the query excluded) as CTE `cand`, cut to `beam` as
+    * CTE `next`.
+    */
+  private def beamHopSql(prev: String, cand: String, next: String,
+      g: String, beam: Int): String =
+    s"""$cand AS (
+       |  SELECT q_id, node FROM $prev
+       |  UNION
+       |  SELECT b.q_id, e.dst AS node FROM $prev b
+       |  JOIN $g e ON e.src = b.node WHERE e.dst <> b.q_id),
+       |${beamCutSql(cand, next, beam)}""".stripMargin
+
+  /** Oracle twin of [[graphLayers]] + [[cutDegree]] over candidate CTE
+    * `cand`: scored edges `sc` and the two layers `g0` and `g1` (src, dst).
+    */
+  private def graphLayersSql: String =
+    s"""sc AS (
+       |  SELECT c.src, c.dst, list_dot_product(s.emb, n.emb) AS ecos
+       |  FROM cand c
+       |  JOIN v s ON s.vec_id = c.src JOIN v n ON n.vec_id = c.dst),
+       |g0 AS (
+       |  SELECT src, dst FROM (
+       |    SELECT src, dst, row_number() OVER (PARTITION BY src
+       |      ORDER BY ecos DESC, dst) AS rn FROM sc)
+       |  WHERE rn <= $GraphDegree),
+       |g1 AS (
+       |  SELECT src, dst FROM (
+       |    SELECT src, dst, row_number() OVER (PARTITION BY src
+       |      ORDER BY ecos DESC, dst) AS rn FROM sc
+       |    WHERE src % $HnswLayerMod = 0 AND dst % $HnswLayerMod = 0)
+       |  WHERE rn <= $HnswL1Degree)""".stripMargin
+
   /** The DuckDB twin of [[graphBeamServe]] over a FRESH full-corpus graph
     * — shared verbatim by sim_graph_topk and sim_graph_incremental (for
     * the latter, hash-matching it is the serve-level proof that the
@@ -845,13 +963,7 @@ object Similarity extends graft.QueryRegistry {
          |  UNION
          |  SELECT b.q_id, g.dst AS node FROM $prev b
          |  JOIN g ON g.src = b.node WHERE g.dst <> b.q_id),
-         |$next AS (
-         |  SELECT q_id, node, cos FROM (
-         |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-         |      row_number() OVER (PARTITION BY c.q_id
-         |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-         |    FROM $cand c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-         |  WHERE rn <= $GraphBeam)""".stripMargin
+         |${beamCutSql(cand, next, GraphBeam)}""".stripMargin
     s"""WITH $vectorsSql,
        |$knnCandidatesSql,
        |g AS (
@@ -864,24 +976,13 @@ object Similarity extends graft.QueryRegistry {
        |  WHERE rn <= $GraphDegree),
        |qs AS (SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE vec_id < $NumQueries),
        |ent AS (SELECT vec_id AS node FROM v
-       |  WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
+       |  WHERE $ivfSeedSql),
        |c0 AS (SELECT q_id, node FROM qs CROSS JOIN ent WHERE node <> q_id),
-       |b0 AS (
-       |  SELECT q_id, node, cos FROM (
-       |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-       |      row_number() OVER (PARTITION BY c.q_id
-       |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-       |    FROM c0 c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-       |  WHERE rn <= $GraphBeam),
+       |${beamCutSql("c0", "b0", GraphBeam)},
        |${hop("b0", "c1", "b1")},
        |${hop("b1", "c2", "b2")},
        |${hop("b2", "c3", "b3")}
-       |SELECT q_id, rank, node AS n_id, ${rndSql("cos", 4)} AS cos FROM (
-       |  SELECT q_id, node, cos,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos DESC, node) AS BIGINT) AS rank
-       |  FROM b3)
-       |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
+       |${beamTopkSql("b3")}""".stripMargin
   }
 
   /** Hierarchical (HNSW) serve over a persisted two-layer graph — the
@@ -900,59 +1001,20 @@ object Similarity extends graft.QueryRegistry {
   /** The DuckDB twin of [[hnswServe]] over a FRESH full-corpus two-layer
     * graph — shared verbatim by sim_hnsw_topk and sim_hnsw_incremental.
     */
-  private def hnswTopkOracle: String = {
-    def hop(prev: String, cand: String, next: String, g: String, beam: Int): String =
-      s"""$cand AS (
-         |  SELECT q_id, node FROM $prev
-         |  UNION
-         |  SELECT b.q_id, e.dst AS node FROM $prev b
-         |  JOIN $g e ON e.src = b.node WHERE e.dst <> b.q_id),
-         |$next AS (
-         |  SELECT q_id, node, cos FROM (
-         |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-         |      row_number() OVER (PARTITION BY c.q_id
-         |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-         |    FROM $cand c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-         |  WHERE rn <= $beam)""".stripMargin
+  private def hnswTopkOracle: String =
     s"""WITH $vectorsSql,
        |$knnCandidatesSql,
-       |sc AS (
-       |  SELECT c.src, c.dst, list_dot_product(s.emb, n.emb) AS ecos
-       |  FROM cand c
-       |  JOIN v s ON s.vec_id = c.src JOIN v n ON n.vec_id = c.dst),
-       |g0 AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst, row_number() OVER (PARTITION BY src
-       |      ORDER BY ecos DESC, dst) AS rn FROM sc)
-       |  WHERE rn <= $GraphDegree),
-       |g1 AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst, row_number() OVER (PARTITION BY src
-       |      ORDER BY ecos DESC, dst) AS rn FROM sc
-       |    WHERE src % $HnswLayerMod = 0 AND dst % $HnswLayerMod = 0)
-       |  WHERE rn <= $HnswL1Degree),
+       |$graphLayersSql,
        |qs AS (SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE vec_id < $NumQueries),
        |ent AS (SELECT vec_id AS node FROM v
        |  WHERE vec_id % $HnswLayerMod = 0 AND vec_id < ${HnswLayerMod * 8}),
        |c0 AS (SELECT q_id, node FROM qs CROSS JOIN ent WHERE node <> q_id),
-       |bh0 AS (
-       |  SELECT q_id, node, cos FROM (
-       |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-       |      row_number() OVER (PARTITION BY c.q_id
-       |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-       |    FROM c0 c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-       |  WHERE rn <= $HnswL1Beam),
-       |${hop("bh0", "ch1", "bh1", "g1", HnswL1Beam)},
-       |${hop("bh1", "ch2", "bh2", "g1", HnswL1Beam)},
-       |${hop("bh2", "cl1", "bl1", "g0", GraphBeam)},
-       |${hop("bl1", "cl2", "bl2", "g0", GraphBeam)}
-       |SELECT q_id, rank, node AS n_id, ${rndSql("cos", 4)} AS cos FROM (
-       |  SELECT q_id, node, cos,
-       |    CAST(row_number() OVER (PARTITION BY q_id
-       |      ORDER BY cos DESC, node) AS BIGINT) AS rank
-       |  FROM bl2)
-       |WHERE rank <= $TopK ORDER BY q_id, rank""".stripMargin
-  }
+       |${beamCutSql("c0", "bh0", HnswL1Beam)},
+       |${beamHopSql("bh0", "ch1", "bh1", "g1", HnswL1Beam)},
+       |${beamHopSql("bh1", "ch2", "bh2", "g1", HnswL1Beam)},
+       |${beamHopSql("bh2", "cl1", "bl1", "g0", GraphBeam)},
+       |${beamHopSql("bl1", "cl2", "bl2", "g0", GraphBeam)}
+       |${beamTopkSql("bl2")}""".stripMargin
 
   /** The DuckDB twin of sim_hnsw_clustered: re-derives the planted
     * clustered corpus as CTE `v` (so the shared signature/candidate chain
@@ -961,19 +1023,6 @@ object Similarity extends graft.QueryRegistry {
     * serve's recall@[[TopK]] against the exact brute-force top-K.
     */
   private def hnswClusteredOracle: String = {
-    def hop(prev: String, cand: String, next: String, g: String, beam: Int): String =
-      s"""$cand AS (
-         |  SELECT q_id, node FROM $prev
-         |  UNION
-         |  SELECT b.q_id, e.dst AS node FROM $prev b
-         |  JOIN $g e ON e.src = b.node WHERE e.dst <> b.q_id),
-         |$next AS (
-         |  SELECT q_id, node, cos FROM (
-         |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-         |      row_number() OVER (PARTITION BY c.q_id
-         |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-         |    FROM $cand c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-         |  WHERE rn <= $beam)""".stripMargin
     def topk(b: String, t: String): String =
       s"""$t AS (
          |  SELECT q_id, node FROM (
@@ -1004,45 +1053,19 @@ object Similarity extends graft.QueryRegistry {
        |      x -> x / sqrt(list_dot_product(raw, raw))) AS emb
        |  FROM clraw),
        |$knnCandidatesSql,
-       |sc AS (
-       |  SELECT c.src, c.dst, list_dot_product(s.emb, n.emb) AS ecos
-       |  FROM cand c
-       |  JOIN v s ON s.vec_id = c.src JOIN v n ON n.vec_id = c.dst),
-       |g0 AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst, row_number() OVER (PARTITION BY src
-       |      ORDER BY ecos DESC, dst) AS rn FROM sc)
-       |  WHERE rn <= $GraphDegree),
-       |g1 AS (
-       |  SELECT src, dst FROM (
-       |    SELECT src, dst, row_number() OVER (PARTITION BY src
-       |      ORDER BY ecos DESC, dst) AS rn FROM sc
-       |    WHERE src % $HnswLayerMod = 0 AND dst % $HnswLayerMod = 0)
-       |  WHERE rn <= $HnswL1Degree),
+       |$graphLayersSql,
        |qs AS (SELECT vec_id AS q_id, emb AS q_emb FROM v WHERE vec_id < $NumQueries),
        |ent AS (SELECT max(vec_id) AS node FROM v WHERE vec_id % $HnswLayerMod = 0),
        |c0 AS (SELECT q_id, node FROM qs CROSS JOIN ent WHERE node <> q_id),
-       |bf0 AS (
-       |  SELECT q_id, node, cos FROM (
-       |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-       |      row_number() OVER (PARTITION BY c.q_id
-       |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-       |    FROM c0 c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-       |  WHERE rn <= $GraphBeam),
-       |${hop("bf0", "cf1", "bf1", "g0", GraphBeam)},
-       |${hop("bf1", "cf2", "bf2", "g0", GraphBeam)},
-       |${hop("bf2", "cf3", "bf3", "g0", GraphBeam)},
-       |bh0 AS (
-       |  SELECT q_id, node, cos FROM (
-       |    SELECT c.q_id, c.node, list_dot_product(q.q_emb, n.emb) AS cos,
-       |      row_number() OVER (PARTITION BY c.q_id
-       |        ORDER BY list_dot_product(q.q_emb, n.emb) DESC, c.node) AS rn
-       |    FROM c0 c JOIN qs q ON q.q_id = c.q_id JOIN v n ON n.vec_id = c.node)
-       |  WHERE rn <= $HnswL1Beam),
-       |${hop("bh0", "ch1", "bh1", "g1", HnswL1Beam)},
-       |${hop("bh1", "ch2", "bh2", "g1", HnswL1Beam)},
-       |${hop("bh2", "cl1", "bl1", "g0", GraphBeam)},
-       |${hop("bl1", "cl2", "bl2", "g0", GraphBeam)},
+       |${beamCutSql("c0", "bf0", GraphBeam)},
+       |${beamHopSql("bf0", "cf1", "bf1", "g0", GraphBeam)},
+       |${beamHopSql("bf1", "cf2", "bf2", "g0", GraphBeam)},
+       |${beamHopSql("bf2", "cf3", "bf3", "g0", GraphBeam)},
+       |${beamCutSql("c0", "bh0", HnswL1Beam)},
+       |${beamHopSql("bh0", "ch1", "bh1", "g1", HnswL1Beam)},
+       |${beamHopSql("bh1", "ch2", "bh2", "g1", HnswL1Beam)},
+       |${beamHopSql("bh2", "cl1", "bl1", "g0", GraphBeam)},
+       |${beamHopSql("bl1", "cl2", "bl2", "g0", GraphBeam)},
        |${topk("bf3", "tf")},
        |${topk("bl2", "th")},
        |brute AS (
@@ -1226,22 +1249,16 @@ object Similarity extends graft.QueryRegistry {
     // `cached`, so this builder won't unpersist what it doesn't own.
     val ownSigs = sigsOpt.isEmpty
     val sigs = sigsOpt.getOrElse(lshSignatures(v).cache())
-    // ≤ LshTables · 2^LshBits groups — schema-bounded agg, tiny either way
-    val sizes = sigs.groupBy($"tbl", $"sig").agg(count(lit(1)).as("cnt"))
-    val maxBucket = sizes.agg(max($"cnt")).head().getLong(0)
-    if (maxBucket <= BucketAllPairsMax) {
+    if (maxBucket(sigs) <= BucketAllPairsMax) {
       // every bucket fits: the banded legs below would be empty — run the
       // original all-pairs bucket self-join verbatim
-      KnnCandidates(sigs.as("x").join(sigs.as("y"),
-          $"x.tbl" === $"y.tbl" && $"x.sig" === $"y.sig" && $"x.vec_id" =!= $"y.vec_id")
-        .select($"x.vec_id".as("src"), $"y.vec_id".as("dst")).distinct(),
+      KnnCandidates(bucketPairs(sigs, sigs).distinct(),
         banded = false, cached = if (ownSigs) Seq(sigs) else Seq.empty)
     } else {
+      val sizes = bucketSizes(sigs)
       val small = sigs.join(
         broadcast(sizes.filter($"cnt" <= BucketAllPairsMax)), Seq("tbl", "sig"))
-      val smallPairs = small.as("x").join(small.as("y"),
-          $"x.tbl" === $"y.tbl" && $"x.sig" === $"y.sig" && $"x.vec_id" =!= $"y.vec_id")
-        .select($"x.vec_id".as("src"), $"y.vec_id".as("dst"))
+      val smallPairs = bucketPairs(small, small)
       // Banded execution of the |pos diff| <= width join: each left row
       // lands in its own block and the next (blocks of width positions), the
       // join is EQUI on (tbl, sig, blk) — never the raw bucket cross product
@@ -1355,14 +1372,7 @@ object Similarity extends graft.QueryRegistry {
     */
   private def labeledIvfBaseSql: String =
     s"""lab AS (SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings),
-       |cent AS (
-       |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-       |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-       |ranked AS (
-       |  SELECT v.vec_id, cid,
-       |    row_number() OVER (PARTITION BY v.vec_id
-       |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-       |  FROM v CROSS JOIN cent),
+       |$ivfRankedSql,
        |assigned AS (
        |  SELECT r.vec_id, r.cid, l.label FROM ranked r JOIN lab l USING (vec_id)
        |  WHERE crn = 1)""".stripMargin
@@ -1390,6 +1400,33 @@ object Similarity extends graft.QueryRegistry {
        |    FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
        |  WHERE rank <= $TopK)""".stripMargin
 
+  /** Oracle CTE `brute` over CTE `v`: the exact top-[[TopK]] (q_id, n_id)
+    * of each query, the ground truth the recall evals grade against.
+    */
+  private def bruteSql: String =
+    s"""brute AS (
+       |  SELECT q_id, n_id FROM (
+       |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
+       |      row_number() OVER (PARTITION BY q.vec_id
+       |        ORDER BY list_dot_product(q.emb, n.emb) DESC, n.vec_id) AS rank
+       |    FROM v q JOIN v n ON q.vec_id < $NumQueries AND n.vec_id <> q.vec_id)
+       |  WHERE rank <= $TopK)""".stripMargin
+
+  /** Oracle twin of [[recallByQuery]]: the recall of relation `ann`
+    * (aliased `a`) against CTE `brute`, ending the statement. `sep` sits
+    * between `ann` and the brute join.
+    */
+  private def recallSql(ann: String, a: String, sep: String = " "): String =
+    s"""hits AS (
+       |  SELECT $a.q_id, count(*) AS n_hit
+       |  FROM $ann $a${sep}JOIN brute b ON b.q_id = $a.q_id AND b.n_id = $a.n_id
+       |  GROUP BY 1),
+       |qids AS (SELECT DISTINCT q_id FROM brute)
+       |SELECT q.q_id, coalesce(h.n_hit, 0) AS n_hit,
+       |  ${rndSql(s"coalesce(h.n_hit, 0) / CAST($TopK AS DOUBLE)", 4)} AS recall
+       |FROM qids q LEFT JOIN hits h ON h.q_id = q.q_id
+       |ORDER BY q.q_id""".stripMargin
+
   protected def defs: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] = Seq(
 
     // ---- exact brute-force top-k: the ground truth every ANN variant is
@@ -1399,11 +1436,8 @@ object Similarity extends graft.QueryRegistry {
       val v = vectors(s, d)
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      broadcast(q).join(v, $"q_id" =!= $"vec_id")
-        .withColumn("cos", cosine($"q_emb", $"emb"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(broadcast(q).join(v, $"q_id" =!= $"vec_id")
+          .withColumn("cos", cosine($"q_emb", $"emb")), "cos", "vec_id")
         .select($"q_id", $"rank", $"vec_id".as("n_id"), round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -1433,29 +1467,23 @@ object Similarity extends graft.QueryRegistry {
       import s.implicits._
       val v = vectors(s, d).cache()
       val ids = v.select($"vec_id")
-      val wb = Window.partitionBy($"q_id").orderBy($"bm25_u6".desc, $"doc_id")
-      val bmTop = TextOps.bm25Scores(s, d)
-        .join(ids.select($"vec_id".as("doc_id")), "doc_id")
-        .join(ids.select($"vec_id".as("q_id")), "q_id")
-        .filter($"doc_id" =!= $"q_id")
-        .withColumn("r_text", row_number().over(wb))
-        .filter($"r_text" <= FusionDepth)
+      val bmTop = topK(TextOps.bm25Scores(s, d)
+          .join(ids.select($"vec_id".as("doc_id")), "doc_id")
+          .join(ids.select($"vec_id".as("q_id")), "q_id")
+          .filter($"doc_id" =!= $"q_id"),
+          "bm25_u6", "doc_id", k = FusionDepth, as = "r_text", long = false)
         .select($"q_id", $"doc_id", $"r_text")
       val q = v.filter($"vec_id" % 100 === 0)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val wc = Window.partitionBy($"q_id").orderBy($"cos".desc, $"vec_id")
-      val vecTop = broadcast(q).join(v, $"q_id" =!= $"vec_id")
-        .withColumn("cos", cosine($"q_emb", $"emb"))
-        .withColumn("r_vec", row_number().over(wc))
-        .filter($"r_vec" <= FusionDepth)
+      val vecTop = topK(broadcast(q).join(v, $"q_id" =!= $"vec_id")
+          .withColumn("cos", cosine($"q_emb", $"emb")),
+          "cos", "vec_id", k = FusionDepth, as = "r_vec", long = false)
         .select($"q_id", $"vec_id".as("doc_id"), $"r_vec")
-      val wf = Window.partitionBy($"q_id").orderBy($"rrf_u".desc, $"doc_id")
-      bmTop.join(vecTop, Seq("q_id", "doc_id"), "full_outer")
-        .withColumn("rrf_u",
-          coalesce(expr("CAST(1000000000 DIV (r_text + 60) AS BIGINT)"), lit(0L)) +
-            coalesce(expr("CAST(1000000000 DIV (r_vec + 60) AS BIGINT)"), lit(0L)))
-        .withColumn("rank", row_number().over(wf).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(bmTop.join(vecTop, Seq("q_id", "doc_id"), "full_outer")
+          .withColumn("rrf_u",
+            coalesce(expr("CAST(1000000000 DIV (r_text + 60) AS BIGINT)"), lit(0L)) +
+              coalesce(expr("CAST(1000000000 DIV (r_vec + 60) AS BIGINT)"), lit(0L))),
+          "rrf_u", "doc_id")
         .select($"q_id", $"rank", $"doc_id", $"rrf_u")
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -1541,7 +1569,6 @@ object Similarity extends graft.QueryRegistry {
     // text, and SqlSurfaceSpec additionally pins frame-equality between
     // the two surfaces.
     ("sim_lsh_topk_sql", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       vectors(s, d).createOrReplaceTempView("sim_vectors_v")
       s.sql(
         s"""WITH sigs AS (
@@ -1726,11 +1753,9 @@ object Similarity extends graft.QueryRegistry {
         n => n == entry, Some(cv), vecTag = "clustered")
       val qs = cv.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val wb = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      val brute = cv.select($"vec_id".as("n_id"), $"emb".as("n_emb"))
-        .crossJoin(broadcast(qs)).filter($"n_id" =!= $"q_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rk", row_number().over(wb)).filter($"rk" <= TopK)
+      val brute = topK(cv.select($"vec_id".as("n_id"), $"emb".as("n_emb"))
+          .crossJoin(broadcast(qs)).filter($"n_id" =!= $"q_id")
+          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
       // static per-query scored-candidate bounds: entry + Σ beam·(1+deg)
       val flatWork = 1L + GraphHops.toLong * GraphBeam * (1 + GraphDegree)
@@ -1761,22 +1786,9 @@ object Similarity extends graft.QueryRegistry {
     ("sim_mmr_rerank", (s, d) => {
       import s.implicits._
       val v = vectors(s, d).cache()
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val scoredC = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      val rankedC = scoredC.withColumn("crn", row_number().over(wAssign))
-      val assigned = rankedC.filter($"crn" === 1).select($"vec_id", $"emb", $"cid")
-      val probes = rankedC.filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
-      val wS = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      val short = probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
-        .distinct()
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("srn", row_number().over(wS)).filter($"srn" <= RerankDepth)
+      val ranked = ivfRanked(v, ivfSeeds(v))
+      val short = topK(ivfCandidates(ivfProbes(ranked), ivfAssigned(ranked)),
+          "cos", "n_id", k = RerankDepth, as = "srn", long = false)
         .select($"q_id", $"n_id", $"n_emb",
           floor($"cos" * 1000000).cast("long").as("rel_u6"))
         .cache() // two readers: the candidate agg and the pairwise self-join
@@ -1847,19 +1859,7 @@ object Similarity extends graft.QueryRegistry {
            |sel$r AS (SELECT * FROM $prev UNION ALL SELECT * FROM p$r)""".stripMargin
       }
       s"""WITH $vectorsSql,
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-         |ranked AS (
-         |  SELECT v.vec_id, cid,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-         |  FROM v CROSS JOIN cent),
-         |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
-         |probes AS (SELECT vec_id AS q_id, cid FROM ranked WHERE vec_id < $NumQueries AND crn <= $NProbe),
-         |cand AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id AS n_id
-         |  FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.q_id),
+         |$ivfCandSql,
          |short AS (
          |  SELECT q_id, n_id, rel_u6 FROM (
          |    SELECT c.q_id, c.n_id,
@@ -1891,25 +1891,11 @@ object Similarity extends graft.QueryRegistry {
     ("sim_recall_report", (s, d) => {
       import s.implicits._
       val brute = queries("sim_brute_topk")(s, d).select($"q_id", $"n_id")
-      val lsh = queries("sim_lsh_topk")(s, d).select($"q_id", $"n_id")
-      val hits = lsh.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy($"q_id").agg(count(lit(1)).as("n_hit"))
-      brute.select($"q_id").distinct()
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id",
-          coalesce($"n_hit", lit(0L)).as("n_hit"),
-          round(coalesce($"n_hit", lit(0L)) / TopK.toDouble, 4).as("recall"))
-        .orderBy($"q_id")
+      recallByQuery(queries("sim_lsh_topk")(s, d).select($"q_id", $"n_id"), brute)
     }, Some(
       s"""WITH $vectorsSql,
          |$lshSignaturesSql,
-         |brute AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_dot_product(q.emb, n.emb) DESC, n.vec_id) AS rank
-         |    FROM v q JOIN v n ON q.vec_id < $NumQueries AND n.vec_id <> q.vec_id)
-         |  WHERE rank <= $TopK),
+         |$bruteSql,
          |cand AS (
          |  SELECT DISTINCT q.vec_id AS q_id, n.vec_id AS n_id
          |  FROM sigs q JOIN sigs n ON q.tbl = n.tbl AND q.sig = n.sig
@@ -1921,43 +1907,16 @@ object Similarity extends graft.QueryRegistry {
          |        ORDER BY list_dot_product(q.emb, n.emb) DESC, c.n_id) AS rank
          |    FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
          |  WHERE rank <= $TopK),
-         |hits AS (
-         |  SELECT l.q_id, count(*) AS n_hit
-         |  FROM lsh l JOIN brute b ON b.q_id = l.q_id AND b.n_id = l.n_id
-         |  GROUP BY 1),
-         |qids AS (SELECT DISTINCT q_id FROM brute)
-         |SELECT q.q_id, coalesce(h.n_hit, 0) AS n_hit,
-         |  ${rndSql(s"coalesce(h.n_hit, 0) / CAST($TopK AS DOUBLE)", 4)} AS recall
-         |FROM qids q LEFT JOIN hits h ON h.q_id = q.q_id
-         |ORDER BY q.q_id""".stripMargin)),
+         |${recallSql("lsh", "l")}""".stripMargin)),
 
     // ---- IVF top-k: 8 seeded-medoid centroids (every 50th vector), each
     // vector assigned to its max-cosine centroid; queries probe the top-2
     // centroids and scan only those partitions.
     ("sim_ivf_topk", (s, d) => {
-      import s.implicits._
       val v = vectors(s, d).cache()
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val scored = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      val ranked = scored.withColumn("crn", row_number().over(wAssign))
-      val assigned = ranked.filter($"crn" === 1)
-        .select($"vec_id", $"emb", $"cid")
-      val probes = ranked.filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
-        .distinct()
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
-        .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
-        .orderBy($"q_id", $"rank")
-    }, Some(ivfTopkSql)),
+      val ranked = ivfRanked(v, ivfSeeds(v))
+      ivfServe(ivfProbes(ranked), ivfAssigned(ranked))
+    }, Some(ivfTopkOracle)),
 
     // ---- the SAME retrieval contract served from a PERSISTED index: the
     // IVF assignment (vec_id, emb, cid) is written ONCE as parquet
@@ -1974,14 +1933,14 @@ object Similarity extends graft.QueryRegistry {
     // the partitioned-prune / schema-evolution fixtures): build cost is
     // amortized across every serve, which is the layout's entire point.
     ("sim_ivf_persisted", (s, d) =>
-      ivfServeFromDir(s, d, ivfIndexDir(s, d)), Some(ivfTopkSql)),
+      ivfServeFromDir(s, d, ivfIndexDir(s, d)), Some(ivfTopkOracle)),
 
     // ---- incremental maintenance of the persisted IVF index: base build +
     // cid-partitioned delta append (see ivfIncrementalDir), served by the
     // IDENTICAL plan as sim_ivf_persisted and judged by the VERBATIM shared
     // fresh-rebuild oracle — the delta-upsert must be invisible to serving.
     ("sim_ivf_incremental", (s, d) =>
-      ivfServeFromDir(s, d, ivfIncrementalDir(s, d)), Some(ivfTopkSql)),
+      ivfServeFromDir(s, d, ivfIncrementalDir(s, d)), Some(ivfTopkOracle)),
 
     // ---- metadata-filtered ANN: each query retrieves top-k only among
     // vectors sharing its `label` (the language/tenant/domain-constrained
@@ -2000,25 +1959,14 @@ object Similarity extends graft.QueryRegistry {
       val v = vectors(s, d).cache() // centroid, probe, and scoring sides
       val labels = Tables.embeddings(s, d)
         .select($"vec_id", $"label".cast("long").as("label"))
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val ranked = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")))
-      val assigned = ranked.filter($"crn" === 1)
-        .select($"vec_id", $"emb", $"cid")
-        .join(labels, "vec_id")
-      val probes = ranked.filter($"vec_id" < NumQueries && $"crn" <= FilteredProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
+      val ranked = ivfRanked(v, ivfSeeds(v))
+      val assigned = ivfAssigned(ranked).join(labels, "vec_id")
+      val probes = ivfProbes(ranked, FilteredProbe)
         .join(labels.select($"vec_id".as("q_id"), $"label"), "q_id")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      probes.join(assigned, Seq("cid", "label"))
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"label", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(probes.join(assigned, Seq("cid", "label"))
+          .filter($"vec_id" =!= $"q_id")
+          .select($"q_id", $"label", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
+          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"label", $"rank", $"n_id", round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2041,23 +1989,12 @@ object Similarity extends graft.QueryRegistry {
       val v = vectors(s, d).join(labels, "vec_id").cache()
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"label")
-      val wB = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      val brute = broadcast(q)
-        .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb"), $"label"), Seq("label"))
-        .filter($"n_id" =!= $"q_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(wB))
-        .filter($"rank" <= TopK)
+      val brute = topK(broadcast(q)
+          .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb"), $"label"), Seq("label"))
+          .filter($"n_id" =!= $"q_id")
+          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
-      val ann = queries("sim_filtered_topk")(s, d).select($"q_id", $"n_id")
-      val hits = ann.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy($"q_id").agg(count(lit(1)).as("n_hit"))
-      brute.select($"q_id").distinct()
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id",
-          coalesce($"n_hit", lit(0L)).as("n_hit"),
-          round(coalesce($"n_hit", lit(0L)) / TopK.toDouble, 4).as("recall"))
-        .orderBy($"q_id")
+      recallByQuery(queries("sim_filtered_topk")(s, d).select($"q_id", $"n_id"), brute)
     }, Some(
       s"""WITH $vectorsSql,
          |$filteredChainSql,
@@ -2071,16 +2008,7 @@ object Similarity extends graft.QueryRegistry {
          |      JOIN v n ON n.vec_id = ln.vec_id
          |    WHERE q.vec_id < $NumQueries)
          |  WHERE rank <= $TopK),
-         |hits AS (
-         |  SELECT f.q_id, count(*) AS n_hit
-         |  FROM (SELECT DISTINCT q_id, n_id FROM ftopk) f
-         |  JOIN brute b ON b.q_id = f.q_id AND b.n_id = f.n_id
-         |  GROUP BY 1),
-         |qids AS (SELECT DISTINCT q_id FROM brute)
-         |SELECT q.q_id, coalesce(h.n_hit, 0) AS n_hit,
-         |  ${rndSql(s"coalesce(h.n_hit, 0) / CAST($TopK AS DOUBLE)", 4)} AS recall
-         |FROM qids q LEFT JOIN hits h ON h.q_id = q.q_id
-         |ORDER BY q.q_id""".stripMargin)),
+         |${recallSql("(SELECT DISTINCT q_id, n_id FROM ftopk)", "f", "\n  ")}""".stripMargin)),
 
     // ---- contrastive hard-negative mining: for each query, the top-k
     // most-similar vectors with a DIFFERENT label — the training-data op
@@ -2095,27 +2023,16 @@ object Similarity extends graft.QueryRegistry {
       val v = vectors(s, d).cache()
       val labels = Tables.embeddings(s, d)
         .select($"vec_id", $"label".cast("long").as("label"))
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val ranked = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")))
-      val assigned = ranked.filter($"crn" === 1)
-        .select($"vec_id", $"emb", $"cid")
-        .join(labels, "vec_id")
-      val probes = ranked.filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
+      val ranked = ivfRanked(v, ivfSeeds(v))
+      val assigned = ivfAssigned(ranked).join(labels, "vec_id")
+      val probes = ivfProbes(ranked)
         .join(labels.select($"vec_id".as("q_id"), $"label".as("q_label")), "q_id")
-      val w = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id" && $"label" =!= $"q_label")
-        .select($"q_id", $"q_label", $"q_emb",
-          $"vec_id".as("n_id"), $"label".as("n_label"), $"emb".as("n_emb"))
-        .distinct()
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(probes.join(assigned, "cid")
+          .filter($"vec_id" =!= $"q_id" && $"label" =!= $"q_label")
+          .select($"q_id", $"q_label", $"q_emb",
+            $"vec_id".as("n_id"), $"label".as("n_label"), $"emb".as("n_emb"))
+          .distinct()
+          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"q_label", $"rank", $"n_id", $"n_label",
           round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
@@ -2161,29 +2078,20 @@ object Similarity extends graft.QueryRegistry {
           array(sqrt(greatest($"mnorm" * $"mnorm" - $"nsq", lit(0.0))) / $"mnorm")))
         .select($"vec_id", $"r", $"emb")
         .cache() // centroid, assignment, and probe sides
-      val cent = aug.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val wA = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      val assigned = aug.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(wA)).filter($"crn" === 1)
+      val cent = ivfSeeds(aug)
+      val assigned = ivfRanked(aug, cent).filter($"crn" === 1)
         .select($"vec_id", $"r", $"cid")
       // query-side augmentation is [q, 0] — rank centroids by the dot of q
       // against the centroid's first 64 dims (the appended coordinate
       // contributes 0), any positive scale of q gives the same order
-      val probes = aug.filter($"vec_id" < NumQueries)
-        .crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"r", slice($"c_emb", 1, Dims)))
-        .withColumn("crn", row_number().over(wA)).filter($"crn" <= NProbe)
+      val probes = ivfRanked(aug.filter($"vec_id" < NumQueries), cent,
+          cosine($"r", slice($"c_emb", 1, Dims))).filter($"crn" <= NProbe)
         .select($"vec_id".as("q_id"), $"r".as("q_r"), $"cid")
-      val w = Window.partitionBy($"q_id").orderBy($"dot".desc, $"n_id")
-      probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"q_r", $"vec_id".as("n_id"), $"r".as("n_r"))
-        .distinct()
-        .withColumn("dot", cosine($"q_r", $"n_r"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(probes.join(assigned, "cid")
+          .filter($"vec_id" =!= $"q_id")
+          .select($"q_id", $"q_r", $"vec_id".as("n_id"), $"r".as("n_r"))
+          .distinct()
+          .withColumn("dot", cosine($"q_r", $"n_r")), "dot", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"dot", 4).as("dot"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2197,9 +2105,7 @@ object Similarity extends graft.QueryRegistry {
          |    list_append(list_transform(r, x -> x / mnorm),
          |      sqrt(greatest(mnorm*mnorm - nsq, 0)) / mnorm) AS emb
          |  FROM raw CROSS JOIN m),
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM aug WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
+         |${ivfCentSql("aug")},
          |assigned AS (
          |  SELECT vec_id, cid FROM (
          |    SELECT a.vec_id, cid,
@@ -2240,11 +2146,8 @@ object Similarity extends graft.QueryRegistry {
       val v = vectors(s, d).cache() // read by codebook, encode, and query sides (spills; Bench clears)
       val recon = pqRecon(v)
       val q = v.filter($"vec_id" < NumQueries).select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val wTop = Window.partitionBy($"q_id").orderBy($"score".desc, $"n_id")
-      broadcast(q).join(recon.select($"vec_id".as("n_id"), $"recon"), $"q_id" =!= $"n_id")
-        .withColumn("score", cosine($"q_emb", $"recon"))
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(broadcast(q).join(recon.select($"vec_id".as("n_id"), $"recon"), $"q_id" =!= $"n_id")
+          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2267,42 +2170,21 @@ object Similarity extends graft.QueryRegistry {
     ("sim_ivfpq_topk", (s, d) => {
       import s.implicits._
       val v = vectors(s, d).cache()
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val ranked = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")))
+      val ranked = ivfRanked(v, ivfSeeds(v))
       val assigned = ranked.filter($"crn" === 1).select($"vec_id", $"cid")
-      val probes = ranked.filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
+      val probes = ivfProbes(ranked)
       val recon = pqRecon(v)
-      val w = Window.partitionBy($"q_id").orderBy($"score".desc, $"n_id")
-      probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
-        .distinct()
-        .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
-        .withColumn("score", cosine($"q_emb", $"recon"))
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(probes.join(assigned, "cid")
+          .filter($"vec_id" =!= $"q_id")
+          .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
+          .distinct()
+          .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
+          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
       s"""WITH $vectorsSql,
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-         |ranked AS (
-         |  SELECT v.vec_id, cid,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-         |  FROM v CROSS JOIN cent),
-         |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
-         |probes AS (SELECT vec_id AS q_id, cid FROM ranked WHERE vec_id < $NumQueries AND crn <= $NProbe),
-         |cand AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id AS n_id
-         |  FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.q_id),
+         |$ivfCandSql,
          |$pqReconSql
          |SELECT q_id, rank, n_id, ${rndSql("score", 4)} AS approx_cos FROM (
          |  SELECT c.q_id, c.n_id, list_dot_product(q.emb, r.recon) AS score,
@@ -2332,11 +2214,8 @@ object Similarity extends graft.QueryRegistry {
           transform($"emb", x => floor(x / $"scale" + lit(0.5)).cast("double") * $"scale")
             .as("recon"))
       val q = v.filter($"vec_id" < NumQueries).select($"vec_id".as("q_id"), $"emb".as("q_emb"))
-      val wTop = Window.partitionBy($"q_id").orderBy($"score".desc, $"n_id")
-      broadcast(q).join(recon, $"q_id" =!= $"n_id")
-        .withColumn("score", cosine($"q_emb", $"recon"))
-        .withColumn("rank", row_number().over(wTop).cast("long"))
-        .filter($"rank" <= TopK)
+      topK(broadcast(q).join(recon, $"q_id" =!= $"n_id")
+          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2368,49 +2247,26 @@ object Similarity extends graft.QueryRegistry {
     ("sim_ivfpq_rerank", (s, d) => {
       import s.implicits._
       val v = vectors(s, d).cache() // read by centroid, codebook, probe, and rerank sides
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val ranked = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(
-          Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")))
+      val ranked = ivfRanked(v, ivfSeeds(v))
       val assigned = ranked.filter($"crn" === 1).select($"vec_id", $"cid")
-      val probes = ranked.filter($"vec_id" < NumQueries && $"crn" <= NProbe)
-        .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid")
+      val probes = ivfProbes(ranked)
       val recon = pqRecon(v)
-      val wApprox = Window.partitionBy($"q_id").orderBy($"approx".desc, $"n_id")
-      val shortlist = probes.join(assigned, "cid")
-        .filter($"vec_id" =!= $"q_id")
-        .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
-        .distinct()
-        .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
-        .withColumn("approx", cosine($"q_emb", $"recon"))
-        .withColumn("arn", row_number().over(wApprox))
-        .filter($"arn" <= RerankDepth)
-      val wExact = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
-      shortlist
-        .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(wExact).cast("long"))
-        .filter($"rank" <= TopK)
+      val shortlist = topK(probes.join(assigned, "cid")
+          .filter($"vec_id" =!= $"q_id")
+          .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
+          .distinct()
+          .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
+          .withColumn("approx", cosine($"q_emb", $"recon")),
+          "approx", "n_id", k = RerankDepth, as = "arn", long = false)
+      topK(shortlist
+          .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
+          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"),
           round($"approx", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
       s"""WITH $vectorsSql,
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-         |ranked AS (
-         |  SELECT v.vec_id, cid,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-         |  FROM v CROSS JOIN cent),
-         |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
-         |probes AS (SELECT vec_id AS q_id, cid FROM ranked WHERE vec_id < $NumQueries AND crn <= $NProbe),
-         |cand AS (
-         |  SELECT DISTINCT p.q_id, a.vec_id AS n_id
-         |  FROM probes p JOIN assigned a ON a.cid = p.cid AND a.vec_id <> p.q_id),
+         |$ivfCandSql,
          |$pqReconSql,
          |shortlist AS (
          |  SELECT q_id, n_id, approx FROM (
@@ -2438,13 +2294,8 @@ object Similarity extends graft.QueryRegistry {
     ("sim_ivf_probe_sweep", (s, d) => {
       import s.implicits._
       val v = vectors(s, d).cache()
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      val ranked = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(wAssign))
-      val assigned = ranked.filter($"crn" === 1).select($"vec_id", $"emb", $"cid")
+      val ranked = ivfRanked(v, ivfSeeds(v))
+      val assigned = ivfAssigned(ranked)
       val cand = ranked.filter($"vec_id" < NumQueries && $"crn" <= ProbeLevels.max)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"), $"cid", $"crn")
         .withColumn("np", explode(array(ProbeLevels.map(lit): _*)))
@@ -2454,11 +2305,8 @@ object Similarity extends graft.QueryRegistry {
         .select($"np", $"q_id", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
         .distinct()
         .cache() // read by the top-k pass and the candidate-volume roll-up
-      val w = Window.partitionBy($"np", $"q_id").orderBy($"cos".desc, $"n_id")
-      val topk = cand
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(w))
-        .filter($"rank" <= TopK)
+      val topk = topK(cand.withColumn("cos", cosine($"q_emb", $"n_emb")),
+          "cos", "n_id", long = false, by = Seq("np", "q_id"))
         .select($"np", $"q_id", $"n_id")
       val brute = queries("sim_brute_topk")(s, d).select($"q_id", $"n_id")
       val hits = topk.join(brute, Seq("q_id", "n_id"), "left_semi")
@@ -2471,14 +2319,7 @@ object Similarity extends graft.QueryRegistry {
         .orderBy($"nprobe")
     }, Some(
       s"""WITH $vectorsSql,
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-         |ranked AS (
-         |  SELECT v.vec_id, cid,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-         |  FROM v CROSS JOIN cent),
+         |$ivfRankedSql,
          |assigned AS (SELECT vec_id, cid FROM ranked WHERE crn = 1),
          |lv AS (SELECT unnest([${ProbeLevels.mkString(", ")}]) AS np),
          |cand AS (
@@ -2493,13 +2334,7 @@ object Similarity extends graft.QueryRegistry {
          |        ORDER BY list_dot_product(q.emb, n.emb) DESC, c.n_id) AS rank
          |    FROM cand c JOIN v q ON q.vec_id = c.q_id JOIN v n ON n.vec_id = c.n_id)
          |  WHERE rank <= $TopK),
-         |brute AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_dot_product(q.emb, n.emb) DESC, n.vec_id) AS rank
-         |    FROM v q JOIN v n ON q.vec_id < $NumQueries AND n.vec_id <> q.vec_id)
-         |  WHERE rank <= $TopK),
+         |$bruteSql,
          |hits AS (
          |  SELECT t.np, count(*) AS n_hits
          |  FROM topk t JOIN brute b ON b.q_id = t.q_id AND b.n_id = t.n_id
@@ -2578,13 +2413,7 @@ object Similarity extends graft.QueryRegistry {
     ("sim_ivf_balance", (s, d) => {
       import s.implicits._
       val v = vectors(s, d)
-      val cent = v.filter($"vec_id" % IvfSeedStride === 0 && $"vec_id" < IvfSeedStride * IvfCentroids)
-        .select(($"vec_id" / IvfSeedStride).cast("long").as("cid"), $"emb".as("c_emb"))
-      val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cid")
-      val assigned = v.crossJoin(broadcast(cent))
-        .withColumn("ccos", cosine($"emb", $"c_emb"))
-        .withColumn("crn", row_number().over(wAssign))
-        .filter($"crn" === 1)
+      val assigned = ivfRanked(v, ivfSeeds(v)).filter($"crn" === 1)
       val perList = assigned.groupBy($"cid").agg(count(lit(1)).as("n_assigned"))
       val stats = perList.agg(sum($"n_assigned").as("total"), count(lit(1)).as("n_lists"))
       perList.crossJoin(broadcast(stats))
@@ -2595,14 +2424,7 @@ object Similarity extends graft.QueryRegistry {
         .orderBy($"cid")
     }, Some(
       s"""WITH $vectorsSql,
-         |cent AS (
-         |  SELECT CAST(vec_id // $IvfSeedStride AS BIGINT) AS cid, emb AS c_emb
-         |  FROM v WHERE vec_id % $IvfSeedStride = 0 AND vec_id < ${IvfSeedStride * IvfCentroids}),
-         |ranked AS (
-         |  SELECT v.vec_id, cid,
-         |    row_number() OVER (PARTITION BY v.vec_id
-         |      ORDER BY list_dot_product(v.emb, c_emb) DESC, cid) AS crn
-         |  FROM v CROSS JOIN cent),
+         |$ivfRankedSql,
          |per AS (
          |  SELECT cid, CAST(count(*) AS BIGINT) AS n_assigned
          |  FROM ranked WHERE crn = 1 GROUP BY 1),
@@ -2632,41 +2454,23 @@ object Similarity extends graft.QueryRegistry {
       val proj = rpProjections(v)
       val q = proj.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"p".as("q_p"))
-      val wShort = Window.partitionBy($"q_id").orderBy($"pdot".desc, $"vec_id")
-      val short = broadcast(q).join(proj, $"q_id" =!= $"vec_id")
-        .withColumn("pdot", cosine($"q_p", $"p"))
-        .withColumn("prank", row_number().over(wShort))
-        .filter($"prank" <= RpShortlist)
+      val short = topK(broadcast(q).join(proj, $"q_id" =!= $"vec_id")
+          .withColumn("pdot", cosine($"q_p", $"p")),
+          "pdot", "vec_id", k = RpShortlist, as = "prank", long = false)
         .select($"q_id", $"vec_id".as("n_id"))
-      val wRerank = Window.partitionBy($"q_id").orderBy($"cos".desc, $"n_id")
       // the shortlist is ≤ NumQueries×RpShortlist rows by construction —
       // broadcast it (and its q_emb-enriched successor) so both rerank
       // joins probe the corpus instead of shuffling it
-      val rtop = broadcast(broadcast(short)
+      val rtop = topK(broadcast(broadcast(short)
           .join(v.select($"vec_id".as("q_id"), $"emb".as("q_emb")), "q_id"))
         .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
-        .withColumn("rank", row_number().over(wRerank))
-        .filter($"rank" <= TopK)
+        .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
-      val hits = rtop.join(brute, Seq("q_id", "n_id"), "left_semi")
-        .groupBy($"q_id").agg(count(lit(1)).as("n_hit"))
-      brute.select($"q_id").distinct()
-        .join(hits, Seq("q_id"), "left")
-        .select($"q_id",
-          coalesce($"n_hit", lit(0L)).as("n_hit"),
-          round(coalesce($"n_hit", lit(0L)) / TopK.toDouble, 4).as("recall"))
-        .orderBy($"q_id")
+      recallByQuery(rtop, brute)
     }, Some(
       s"""WITH $vectorsSql,
          |$rpProjectionsSql,
-         |brute AS (
-         |  SELECT q_id, n_id FROM (
-         |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
-         |      row_number() OVER (PARTITION BY q.vec_id
-         |        ORDER BY list_dot_product(q.emb, n.emb) DESC, n.vec_id) AS rank
-         |    FROM v q JOIN v n ON q.vec_id < $NumQueries AND n.vec_id <> q.vec_id)
-         |  WHERE rank <= $TopK),
+         |$bruteSql,
          |short AS (
          |  SELECT q_id, n_id FROM (
          |    SELECT q.vec_id AS q_id, n.vec_id AS n_id,
@@ -2681,15 +2485,7 @@ object Similarity extends graft.QueryRegistry {
          |        ORDER BY list_dot_product(q.emb, n.emb) DESC, s.n_id) AS rank
          |    FROM short s JOIN v q ON q.vec_id = s.q_id JOIN v n ON n.vec_id = s.n_id)
          |  WHERE rank <= $TopK),
-         |hits AS (
-         |  SELECT p.q_id, count(*) AS n_hit
-         |  FROM rtop p JOIN brute b ON b.q_id = p.q_id AND b.n_id = p.n_id
-         |  GROUP BY 1),
-         |qids AS (SELECT DISTINCT q_id FROM brute)
-         |SELECT q.q_id, coalesce(h.n_hit, 0) AS n_hit,
-         |  ${rndSql(s"coalesce(h.n_hit, 0) / CAST($TopK AS DOUBLE)", 4)} AS recall
-         |FROM qids q LEFT JOIN hits h ON h.q_id = q.q_id
-         |ORDER BY q.q_id""".stripMargin))
+         |${recallSql("rtop", "p")}""".stripMargin))
   )
 
   /** Thresholds swept by sim_threshold_sweep — written with an explicit

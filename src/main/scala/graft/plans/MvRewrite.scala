@@ -140,7 +140,7 @@ object MvRewrite {
 
   def install(spark: SparkSession, template: DataFrame, mvPath: String,
       mvKeySql: Option[String] = None): Unit = {
-    val key = spark.hashCode() + "|" + mvPath + "|" + mvKeySql.getOrElse("")
+    val key = s"${spark.hashCode()}|$mvPath|${mvKeySql.getOrElse("")}"
     targets.computeIfAbsent(key, _ => {
       val templatePlan = {
         installing.set(true)

@@ -1870,7 +1870,7 @@ object Streaming extends graft.QueryModule {
     * partitions its vectors land in, exactly the per-commit upsert a live
     * vector store performs. The judged readout is the IDENTICAL
     * probe-and-rank serve the batch paths use, over the STREAMED index,
-    * hash-checked by the VERBATIM fresh-rebuild oracle (ivfTopkSql): a
+    * hash-checked by the VERBATIM fresh-rebuild oracle (ivfTopkOracle): a
     * dropped wave loses its vectors' rows from every probed list and
     * mismatches; a double-applied wave duplicates candidates, which the
     * serve's distinct would hide — so StreamingSpec additionally pins the
@@ -1898,7 +1898,7 @@ object Streaming extends graft.QueryModule {
       // the embeddings source per batch
       val cent = Sim.ivfCentroids(s, d)
       replayBatches(s, root, Waves(src, v.schema)) { (batch: DataFrame, _: Long) =>
-        Sim.ivfAssignSlice(s, cent, batch)
+        Sim.ivfAssignSlice(cent, batch)
           .write.mode("append").partitionBy("cid").parquet(idxDir)
       }
       idxDir
@@ -1935,7 +1935,7 @@ object Streaming extends graft.QueryModule {
     * adjacent-list re-cuts, never a corpus rebuild.
     */
   def graphReplayContract(s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
-    graft.operators.Similarity.graphServeFromDir(s, d, graphStreamGraphDir(s, d))
+    graft.operators.Similarity.graphBeamServe(s, d, graphStreamGraphDir(s, d))
 
   /** Streamed graph dir — runs the once-per-JVM ingest on first call;
     * shared by the contract and StreamingSpec's rebuild-equality pin.

@@ -8,9 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-layout guards over `src/main/scala`: the lake connector and
   * protocol layer (`graft.sources`) never reaches up into the query
-  * layer (`graft.operators`), and no source file grows past 2,500 lines.
-  * Files that were already longer when the limit came in are listed with
-  * their line count at that time; they may shrink, never grow.
+  * layer (`graft.operators`), and no source file grows past 2,500 lines,
+  * with no per-file exemption.
   */
 class LayeringSpec extends AnyFunSuite {
 
@@ -23,8 +22,6 @@ class LayeringSpec extends AnyFunSuite {
   }
 
   private val MaxLines = 2500
-  private val overLimitCeilings = Map(
-    "graft/operators/Similarity.scala" -> 2703)
 
   test("nothing under graft/sources names graft.operators") {
     val offenders = scalaFiles(root.resolve("graft/sources")).filter(p =>
@@ -38,8 +35,7 @@ class LayeringSpec extends AnyFunSuite {
     val tooLong = files.flatMap { p =>
       val rel = root.relativize(p).toString
       val n = Files.readAllLines(p).size
-      val limit = overLimitCeilings.getOrElse(rel, MaxLines)
-      if (n > limit) Some(s"$rel: $n lines > $limit") else None
+      if (n > MaxLines) Some(s"$rel: $n lines > $MaxLines") else None
     }
     assert(tooLong.isEmpty, tooLong.mkString("; "))
   }
