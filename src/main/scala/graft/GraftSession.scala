@@ -11,8 +11,9 @@ import graft.plans.GraftExtensions
   * Applies the recommended scale configuration — AQE with skew-join handling
   * on, shuffle parallelism matched to cores (the right default for local
   * mode; on a cluster pass the target partition count explicitly) — and
-  * registers the engine's SQL surface (`cdc_chunks`). Everything is a plain
-  * SparkSession: `GraftSession.get()` composes with existing code.
+  * registers the SQL function names, which only SQL text needs (DataFrame
+  * code uses [[graft.plans.Native]]). Everything is a plain SparkSession:
+  * `GraftSession.get()` composes with existing code.
   */
 object GraftSession {
 
@@ -50,7 +51,7 @@ object GraftSession {
       .withExtensions(new GraftExtensions)
   }
 
-  /** Build (or reuse) the session and ensure the SQL functions are
+  /** Build (or reuse) the session and ensure the SQL function names are
     * registered even when an existing session is returned.
     */
   def get(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Portable.round
+import graft.plans.Native
 
 /** Spark lift of the CDC chunkers: blob/text columns → a distributed chunk
   * table → dedup metrics, mirroring the reference pipeline
@@ -34,7 +35,7 @@ object Chunking {
     * into the canonical chunk table:
     * `(id, chunk_idx int, offset int, length int, chunk binary, hash long)`.
     *
-    * Runs the boundary scan through the registered `cdc_chunks` Generator —
+    * Runs the boundary scan through the native `cdc_chunks` Generator —
     * the analyzer plans it as a `Generate` node, streaming chunk rows out
     * without materializing the full per-blob bounds array the old UDF route
     * needed (r7 unification: UDF path deleted).
@@ -46,9 +47,8 @@ object Chunking {
       algo: String,
       expectedSize: Int,
       seed: Long = 0L): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
-    df.select(col(idCol).as("id"), call_function("cdc_chunks",
-        payloadBytes(df, payloadCol), lit(algo), lit(expectedSize), lit(seed)))
+    df.select(col(idCol).as("id"),
+        Native.cdcChunks(payloadBytes(df, payloadCol), algo, expectedSize, seed))
       .withColumn("hash", xxhash64(col("chunk")))
   }
 
@@ -155,7 +155,6 @@ object Chunking {
       seed: Long = 0L,
       segments: Int = 4,
       spreadSegments: Boolean = false): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val blobs = df.select(col(idCol).as("id"), payloadBytes(df, payloadCol).as("payload"))
     // Explicit partition count: with a bare repartition(cols), AQE sees a
     // few multi-MB rows as "small" by row stats and coalesces the exchange
@@ -165,13 +164,13 @@ object Chunking {
       if (spreadSegments)
         blobs.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, col("id"))
       else blobs
-    placed.select(col("id"), call_function("cdc_segmented_chunks", col("payload"),
-        lit(algo), lit(expectedSize), lit(seed), lit(segments)))
+    placed.select(col("id"),
+        Native.cdcSegmentedChunks(col("payload"), algo, expectedSize, seed, segments))
       .withColumn("hash", xxhash64(col("chunk")))
   }
 
   /** A payload column as bytes: BINARY as is, STRING encoded UTF-8. */
-  private def payloadBytes(df: DataFrame, payloadCol: String): Column =
+  private[graft] def payloadBytes(df: DataFrame, payloadCol: String): Column =
     if (df.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
       encode(col(payloadCol), "UTF-8")
     else col(payloadCol)
@@ -203,7 +202,6 @@ object Chunking {
       expectedSize: Int,
       seed: Long = 0L,
       parts: Int = 4): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val nParts = parts
     // Degenerate payloads (< one byte per slice) would produce an empty
     // slice whose cs.last/cs.head has no element — skip them instead of
@@ -219,8 +217,7 @@ object Chunking {
     val sliced = base
       .select(col("id"), col("payload"), explode(sequence(lit(0), lit(nParts - 1))).as("p"))
       .select(col("id"), col("p"),
-        call_function("cdc_slice_chunks", col("payload"), lit(algo),
-          lit(expectedSize), lit(seed), col("p"), lit(nParts)))
+        Native.cdcSliceChunks(col("payload"), algo, expectedSize, seed, col("p"), nParts))
     val interior = sliced
       .filter(!col("is_edge"))
       .select(col("id"), col("hash"), col("length").as("len"))
@@ -238,8 +235,7 @@ object Chunking {
       .select(col("id"), ((col("p") - 1) / 2).cast("int").as("pair"), col("edge").as("e1"))
     val stitched = even.join(odd, Seq("id", "pair"))
       .select(col("id"),
-        call_function("cdc_chunks", concat(col("e0"), col("e1")), lit(algo),
-          lit(expectedSize), lit(seed)))
+        Native.cdcChunks(concat(col("e0"), col("e1")), algo, expectedSize, seed))
       .select(col("id"), xxhash64(col("chunk")).as("hash"), col("length").as("len"))
       .groupBy(col("id"), col("hash")).agg(first(col("len")).as("len"))
 
@@ -278,12 +274,4 @@ object Chunking {
     val removed = o.join(n, Seq("id", "hash"), "left_anti").withColumn("change", lit("removed"))
     added.unionByName(removed)
   }
-
-  /** Register the SQL chunking surface (`cdc_chunks` table-valued generator,
-    * `LATERAL VIEW cdc_chunks(payload, algo, size, seed)`) — delegates to the
-    * single native codepath in [[graft.plans.GraftExtensions]]. The old
-    * per-algo `cdc_bounds_<algo>` UDF registration is gone (r7 unification).
-    */
-  def registerSql(spark: SparkSession): Unit =
-    graft.plans.GraftExtensions.register(spark)
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.plans.Native.vecDot
+
 /** Embedding-space clustering for LLM training-data curation: deterministic
   * k-means over the embeddings table, and SemDeDup-style semantic
   * deduplication (Abbas et al. 2023: cluster the corpus, then drop documents
@@ -48,8 +50,6 @@ object Clustering extends graft.QueryRegistry {
   // hash cells, bounding any one task's pair square at ~cap². 256 keeps
   // every sf0.01 cluster single-shard (bit-identical to the uncapped rule).
   private val SemDedupShardCap = 256
-
-  private def vecDot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   /** Integer-quantized unit vectors: (vec_id, qv: array<double> holding
     * exact integers in [-1024, 1024]). The rounding shim (Portable.round /
@@ -314,7 +314,6 @@ object Clustering extends graft.QueryRegistry {
     // ---- deterministic k-means over the raw embeddings: cluster id +
     // cluster size per vector after two Lloyd iterations.
     ("sim_kmeans_clusters", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val a2 = kmeansAssign(Similarity.vectors(s, d))
       val n2 = a2.groupBy($"cid").agg(count(lit(1)).as("cluster_size"))
@@ -342,7 +341,6 @@ object Clustering extends graft.QueryRegistry {
     // final division by n²·Q² touches floating point — one deterministic
     // IEEE op per cluster (exact-integer → nearest-double on both sides).
     ("sim_kmeans_report", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val (asg, cn) = kmeansModel(Similarity.vectors(s, d))
       asg.join(broadcast(cn), "cid")
@@ -419,7 +417,6 @@ object Clustering extends graft.QueryRegistry {
     // partition-order invariance by the total (md5, id) key; at 100 TB this
     // is one hash-shuffle by cid over (cid, 16-byte key, id) triples.
     ("sim_cluster_balanced_sample", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val bottomK = udaf(new graft.functions.BottomKAgg(ClusterQuota))
         .withName(s"bottom_k_$ClusterQuota")
@@ -454,7 +451,6 @@ object Clustering extends graft.QueryRegistry {
     // assignment tables the model already produces; no extra passes over
     // the vectors.
     ("sim_centroid_drift", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       // asg carries both iterations' assignments on one row — the old
       // a1 ⋈ a2 vec_id join (and its cache) is gone outright.
@@ -520,7 +516,6 @@ object Clustering extends graft.QueryRegistry {
     // entry. The scan cache is released before returning; the result is a
     // K-row LocalRelation.
     ("sim_kmeanspp_init", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val q = quantized(Similarity.vectors(s, d)).cache() // K-1 scan rounds
       try {
@@ -644,7 +639,6 @@ object Clustering extends graft.QueryRegistry {
     * that the query itself serves from the persisted verdict.
     */
   private[graft] def semanticVerdictFrame(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     import s.implicits._
     // kmeansModel's cached asg row carries (emb, qv, cid) together, so the
     // pair scan needs no separate u cache and no vec_id re-joins.

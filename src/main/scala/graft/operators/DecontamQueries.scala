@@ -39,7 +39,6 @@ object DecontamQueries extends graft.QueryRegistry {
     // however Spark schedules the build.
     ("pipeline_bloom_prefilter", (s, d) => {
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
       val members = Tables.customer(s, d).filter($"c_mktsegment" === "BUILDING")
         .select($"c_custkey")
       val nMembers = members.count()
@@ -53,8 +52,7 @@ object DecontamQueries extends graft.QueryRegistry {
       val bloomAgg = udaf(new graft.functions.BloomAgg(mBits, BloomK),
         org.apache.spark.sql.Encoders.scalaLong)
       val bloomRow = members.agg(bloomAgg(xxhash64($"c_custkey")).as("bloom"))
-      def hit = call_function("bloom_contains",
-        $"bloom", xxhash64($"o_custkey"), lit(BloomK))
+      def hit = graft.plans.Native.bloomContains($"bloom", xxhash64($"o_custkey"), BloomK)
       val orders = Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
       // members scales with the customer table — no broadcast hint; the
       // planner broadcasts the semi-join side below the threshold and
@@ -462,14 +460,13 @@ object DecontamQueries extends graft.QueryRegistry {
     */
   private[operators] def bloomDecontamFlags(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val bloomAgg = udaf(new graft.functions.BloomAgg(BloomBits, BloomK),
       org.apache.spark.sql.Encoders.scalaLong)
     val bloomRow = evalGramHashes(s, d).agg(bloomAgg($"h").as("bloom"))
     ngramHashArrays(Tables.documents(s, d).select($"doc_id", $"text"))
       .crossJoin(broadcast(bloomRow))
       .withColumn("cand",
-        exists($"hs", h => call_function("bloom_contains", $"bloom", h, lit(BloomK))))
+        exists($"hs", h => graft.plans.Native.bloomContains($"bloom", h, BloomK)))
       .select($"doc_id", $"hs", $"cand")
   }
 

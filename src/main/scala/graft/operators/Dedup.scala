@@ -1244,14 +1244,9 @@ object Dedup extends graft.QueryRegistry {
     // dot product is the codegen'd `vec_dot` (plans.VecDot), a sequential
     // left fold — bit-identical to DuckDB's list_dot_product.
     ("dedup_embedding_cosine", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val B = 256 // block size: bounds one task's pair square at B²
-      val unit = Tables.embeddings(s, d)
-        .select($"vec_id", transform($"embedding", x => x.cast("double")).as("raw"))
-        .withColumn("nrm", sqrt(call_function("vec_dot", $"raw", $"raw")))
-        .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"),
-          ($"vec_id" / B).cast("long").as("blk"))
+      val unit = Similarity.vectors(s, d).withColumn("blk", ($"vec_id" / B).cast("long"))
         .cache() // normalize once; read by both join sides (spills, Bench clears)
       val blocks = unit.select($"blk").distinct()
       val blockPairs = blocks.as("x").join(blocks.as("y"), $"x.blk" <= $"y.blk")
@@ -1260,7 +1255,7 @@ object Dedup extends graft.QueryRegistry {
         .join(unit.select($"blk".as("b1"), $"vec_id".as("id1"), $"emb".as("e1")), "b1")
         .join(unit.select($"blk".as("b2"), $"vec_id".as("id2"), $"emb".as("e2")), "b2")
         .filter($"id1" < $"id2") // same-block pairs kept once; cross-block always id1<id2
-        .withColumn("cos", call_function("vec_dot", $"e1", $"e2"))
+        .withColumn("cos", graft.plans.Native.vecDot($"e1", $"e2"))
         .filter($"cos" >= 0.4)
         .select($"id1", $"id2", round($"cos", 4).as("cos"))
         .orderBy($"id1", $"id2")

@@ -461,7 +461,6 @@ object LakeFixture {
   private[graft] def bloomIdxDir(s: SparkSession, d: String): String =
     graft.Fixtures.memo("graft_bloomidx", d) { root =>
       import s.implicits._
-      graft.plans.GraftExtensions.register(s)
       val dataDir = root.resolve("data").toString
       val li = Tables.lineitem(s, d)
       li.select($"l_orderkey", $"l_partkey",

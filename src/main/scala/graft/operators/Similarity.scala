@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.plans.Native.vecDot
 
 /** Approximate-nearest-neighbor search over the embeddings table
   * (`Array[Float]`, 64-dim): brute-force cosine top-k as the exact baseline,
@@ -35,8 +36,8 @@ object Similarity extends graft.QueryRegistry {
   private val LshTables = 4
   private val LshBits = 6
   private val Dims = 64
-  private val IvfCentroids = 8
-  private val IvfSeedStride = 50
+  private[graft] val IvfCentroids = 8
+  private[graft] val IvfSeedStride = 50
   private val NProbe = 2
   // Widened probe for label-filtered search. Tuned on the labeled recall
   // eval (sim_filtered_recall, sf0.01 mean recall): probe 4 → 0.60,
@@ -94,11 +95,10 @@ object Similarity extends graft.QueryRegistry {
     * left-to-right accumulation order, bit-identical doubles.
     */
   private[graft] def vectors(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExtensions.register(s)
     import s.implicits._
     Tables.embeddings(s, d)
       .select($"vec_id", transform($"embedding", x => x.cast("double")).as("raw"))
-      .withColumn("nrm", sqrt(call_function("vec_dot", $"raw", $"raw")))
+      .withColumn("nrm", sqrt(vecDot($"raw", $"raw")))
       .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
   }
 
@@ -107,12 +107,6 @@ object Similarity extends graft.QueryRegistry {
       |  SELECT vec_id, list_transform(CAST(embedding AS DOUBLE[]),
       |      x -> x / sqrt(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(embedding AS DOUBLE[])))) AS emb
       |  FROM embeddings)""".stripMargin
-
-  /** cos(a, b) on unit vectors: one sequential fold — the native codegen'd
-    * `vec_dot` (callers run on sessions where [[vectors]] registered it).
-    */
-  private def cosine(aEmb: Column, bEmb: Column): Column =
-    call_function("vec_dot", aEmb, bEmb)
 
   /** The top-k cut every ranked result and shortlist ends in: number each
     * query's rows (each `by` group) by (`score` DESC, `id`) as column `as`
@@ -165,10 +159,14 @@ object Similarity extends graft.QueryRegistry {
   // independent reference.
 
   /** `id` is an IVF seed medoid: every [[IvfSeedStride]]-th vector, the
-    * first [[IvfCentroids]] of them.
+    * first [[IvfCentroids]] of them. [[isIvfSeedId]] is its JVM form.
     */
-  private def isIvfSeed(id: Column): Column =
+  private[graft] def isIvfSeed(id: Column): Column =
     id % IvfSeedStride === 0 && id < IvfSeedStride * IvfCentroids
+
+  /** [[isIvfSeed]] on a JVM id: the graph beam's entry points. */
+  private[graft] def isIvfSeedId(id: Long): Boolean =
+    id % IvfSeedStride == 0 && id < IvfSeedStride * IvfCentroids
 
   /** The seed centroids (cid, c_emb) of vector frame `v`. Takes the frame,
     * not (s, d), so a caller's cached frame (or sim_mips_topk's augmented
@@ -183,7 +181,7 @@ object Similarity extends graft.QueryRegistry {
     * crn = 1 is the row's coarse assignment, crn ≤ n its n-probe list.
     */
   private def ivfRanked(v: DataFrame, cent: DataFrame,
-      ccos: Column = cosine(col("emb"), col("c_emb"))): DataFrame = {
+      ccos: Column = vecDot(col("emb"), col("c_emb"))): DataFrame = {
     val s = v.sparkSession
     import s.implicits._
     v.crossJoin(broadcast(cent))
@@ -213,7 +211,7 @@ object Similarity extends graft.QueryRegistry {
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("q_emb"), col("vec_id").as("n_id"), col("emb").as("n_emb"))
       .distinct()
-      .withColumn("cos", cosine(col("q_emb"), col("n_emb")))
+      .withColumn("cos", vecDot(col("q_emb"), col("n_emb")))
 
   /** Candidates → top-k: the serve tail of sim_ivf_topk (lists assigned in
     * flight) and [[ivfServeFromDir]] (lists read from disk).
@@ -412,7 +410,7 @@ object Similarity extends graft.QueryRegistry {
       .join(broadcast(centers.toDF("cid", "c_emb")), "cid")
       .withColumn("raw", zip_with($"c_emb", $"emb",
         (c, e) => c * ClusterMixNum + e))
-      .withColumn("nrm", sqrt(call_function("vec_dot", $"raw", $"raw")))
+      .withColumn("nrm", sqrt(vecDot($"raw", $"raw")))
       .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
   }
 
@@ -462,7 +460,7 @@ object Similarity extends graft.QueryRegistry {
     pairs
       .join(v.select(col("vec_id").as("src"), col("emb").as("s_emb")), "src")
       .join(v.select(col("vec_id").as("dst"), col("emb").as("d_emb")), "dst")
-      .withColumn("ecos", cosine(col("s_emb"), col("d_emb")))
+      .withColumn("ecos", vecDot(col("s_emb"), col("d_emb")))
       .select(col("src"), col("dst"), col("ecos"))
 
   /** Both serve-graph layers of one edge set, as (layer, degree, edges):
@@ -697,8 +695,7 @@ object Similarity extends graft.QueryRegistry {
       s: SparkSession, d: String, graphRoot: String): DataFrame =
     foldedBeamServe(s, d, graphRoot,
       phases = Seq(("l0", GraphBeam, GraphHops)), entryBeam = GraphBeam,
-      entryPred = n =>
-        n % IvfSeedStride == 0 && n < IvfSeedStride * IvfCentroids)
+      entryPred = isIvfSeedId)
 
   /** The folded beam-search engine behind [[graphBeamServe]] and
     * [[hnswServe]]: instead of unrolling each hop into its own
@@ -850,7 +847,7 @@ object Similarity extends graft.QueryRegistry {
     def score(cand: DataFrame): DataFrame =
       emb.join(broadcast(cand), Seq("node"))
         .join(broadcast(qs), Seq("q_id"))
-        .withColumn("cos", call_function("vec_dot", $"q_emb", $"n_emb"))
+        .withColumn("cos", vecDot($"q_emb", $"n_emb"))
         .select($"q_id", $"node", $"cos")
     def cut(scored: DataFrame): DataFrame =
       topK(scored, "cos", "node", k = GraphBeam, as = "rn", long = false)
@@ -1106,7 +1103,7 @@ object Similarity extends graft.QueryRegistry {
     val wEnc = Window.partitionBy($"vec_id", $"m").orderBy($"dist", $"code")
     val enc = subs.join(broadcast(codebook), "m") // 128 rows — schema-bounded broadcast
       .withColumn("dist",
-        cosine($"sub", $"sub") - lit(2) * cosine($"sub", $"csub") + cosine($"csub", $"csub"))
+        vecDot($"sub", $"sub") - lit(2) * vecDot($"sub", $"csub") + vecDot($"csub", $"csub"))
       .withColumn("rn", row_number().over(wEnc)).filter($"rn" === 1)
     enc.groupBy($"vec_id")
       .agg(flatten(transform(array_sort(collect_list(struct($"m", $"csub"))),
@@ -1240,7 +1237,6 @@ object Similarity extends graft.QueryRegistry {
       sigsOpt: Option[DataFrame] = None): KnnCandidates = {
     val spark = v.sparkSession
     import spark.implicits._
-    graft.plans.GraftExtensions.register(spark)
     // Cached: the signature scan feeds the regime-probe job AND the pair
     // join(s) of whichever regime wins — without the cache each consumer
     // re-hashes every vector LshTables times. A caller that already holds
@@ -1271,7 +1267,7 @@ object Similarity extends graft.QueryRegistry {
       val big = sigs.join(
           broadcast(sizes.filter($"cnt" > BucketAllPairsMax)), Seq("tbl", "sig"))
         .join(v.select($"vec_id", $"emb"), "vec_id")
-        .withColumn("ordv", call_function("vec_dot", $"emb", typedLit(ordPlane)))
+        .withColumn("ordv", vecDot($"emb", typedLit(ordPlane)))
         .withColumn("pos", row_number().over(
           Window.partitionBy($"tbl", $"sig").orderBy($"ordv", $"vec_id")))
         .withColumn("blk", floor($"pos" / NeighborhoodWidth))
@@ -1437,7 +1433,7 @@ object Similarity extends graft.QueryRegistry {
       val q = v.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
       topK(broadcast(q).join(v, $"q_id" =!= $"vec_id")
-          .withColumn("cos", cosine($"q_emb", $"emb")), "cos", "vec_id")
+          .withColumn("cos", vecDot($"q_emb", $"emb")), "cos", "vec_id")
         .select($"q_id", $"rank", $"vec_id".as("n_id"), round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -1476,7 +1472,7 @@ object Similarity extends graft.QueryRegistry {
       val q = v.filter($"vec_id" % 100 === 0)
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
       val vecTop = topK(broadcast(q).join(v, $"q_id" =!= $"vec_id")
-          .withColumn("cos", cosine($"q_emb", $"emb")),
+          .withColumn("cos", vecDot($"q_emb", $"emb")),
           "cos", "vec_id", k = FusionDepth, as = "r_vec", long = false)
         .select($"q_id", $"vec_id".as("doc_id"), $"r_vec")
       topK(bmTop.join(vecTop, Seq("q_id", "doc_id"), "full_outer")
@@ -1553,7 +1549,7 @@ object Similarity extends graft.QueryRegistry {
       cand
         .join(v.select($"vec_id".as("q_id"), $"emb".as("q_emb")), "q_id")
         .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb"))
+        .withColumn("cos", vecDot($"q_emb", $"n_emb"))
         .withColumn("rank", row_number().over(w).cast("long"))
         .filter($"rank" <= TopK)
         .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"))
@@ -1569,6 +1565,7 @@ object Similarity extends graft.QueryRegistry {
     // text, and SqlSurfaceSpec additionally pins frame-equality between
     // the two surfaces.
     ("sim_lsh_topk_sql", (s, d) => {
+      graft.plans.GraftExtensions.register(s)
       vectors(s, d).createOrReplaceTempView("sim_vectors_v")
       s.sql(
         s"""WITH sigs AS (
@@ -1606,7 +1603,7 @@ object Similarity extends graft.QueryRegistry {
       cand
         .join(v.select($"vec_id".as("id1"), $"emb".as("e1")), "id1")
         .join(v.select($"vec_id".as("id2"), $"emb".as("e2")), "id2")
-        .withColumn("cos", cosine($"e1", $"e2"))
+        .withColumn("cos", vecDot($"e1", $"e2"))
         .filter($"cos" >= 0.4)
         .select($"id1", $"id2", round($"cos", 4).as("cos"))
         .orderBy($"id1", $"id2")
@@ -1755,7 +1752,7 @@ object Similarity extends graft.QueryRegistry {
         .select($"vec_id".as("q_id"), $"emb".as("q_emb"))
       val brute = topK(cv.select($"vec_id".as("n_id"), $"emb".as("n_emb"))
           .crossJoin(broadcast(qs)).filter($"n_id" =!= $"q_id")
-          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
+          .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
       // static per-query scored-candidate bounds: entry + Σ beam·(1+deg)
       val flatWork = 1L + GraphHops.toLong * GraphBeam * (1 + GraphDegree)
@@ -1795,7 +1792,7 @@ object Similarity extends graft.QueryRegistry {
       val ps = short.as("a").join(short.as("b"),
           $"a.q_id" === $"b.q_id" && $"a.n_id" =!= $"b.n_id")
         .select($"a.q_id".as("q_id"), $"a.n_id".as("id_a"), $"b.n_id".as("id_b"),
-          floor(cosine($"a.n_emb", $"b.n_emb") * 1000000).cast("long").as("sim_u6"))
+          floor(vecDot($"a.n_emb", $"b.n_emb") * 1000000).cast("long").as("sim_u6"))
       // The greedy itself is ONE bounded per-query fold, not an unrolled
       // per-round dataflow: a first cut as TopK chained anti-join/agg/window
       // rounds grew the logical plan combinatorially (each round references
@@ -1966,7 +1963,7 @@ object Similarity extends graft.QueryRegistry {
       topK(probes.join(assigned, Seq("cid", "label"))
           .filter($"vec_id" =!= $"q_id")
           .select($"q_id", $"label", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
-          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
+          .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"label", $"rank", $"n_id", round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -1992,7 +1989,7 @@ object Similarity extends graft.QueryRegistry {
       val brute = topK(broadcast(q)
           .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb"), $"label"), Seq("label"))
           .filter($"n_id" =!= $"q_id")
-          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
+          .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
       recallByQuery(queries("sim_filtered_topk")(s, d).select($"q_id", $"n_id"), brute)
     }, Some(
@@ -2032,7 +2029,7 @@ object Similarity extends graft.QueryRegistry {
           .select($"q_id", $"q_label", $"q_emb",
             $"vec_id".as("n_id"), $"label".as("n_label"), $"emb".as("n_emb"))
           .distinct()
-          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
+          .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"q_label", $"rank", $"n_id", $"n_label",
           round($"cos", 4).as("cos"))
         .orderBy($"q_id", $"rank")
@@ -2066,11 +2063,10 @@ object Similarity extends graft.QueryRegistry {
     // augmented space. Candidates are scored by the exact raw dot product
     // (approximate candidate set, exact scores — same stance as IVF).
     ("sim_mips_topk", (s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import s.implicits._
       val raw = Tables.embeddings(s, d)
         .select($"vec_id", transform($"embedding", x => x.cast("double")).as("r"))
-        .withColumn("nsq", call_function("vec_dot", $"r", $"r"))
+        .withColumn("nsq", vecDot($"r", $"r"))
       val mrow = raw.agg(sqrt(max($"nsq")).as("mnorm"))
       val aug = raw.crossJoin(broadcast(mrow)) // 1-row scalar broadcast
         .withColumn("emb", concat(
@@ -2085,13 +2081,13 @@ object Similarity extends graft.QueryRegistry {
       // against the centroid's first 64 dims (the appended coordinate
       // contributes 0), any positive scale of q gives the same order
       val probes = ivfRanked(aug.filter($"vec_id" < NumQueries), cent,
-          cosine($"r", slice($"c_emb", 1, Dims))).filter($"crn" <= NProbe)
+          vecDot($"r", slice($"c_emb", 1, Dims))).filter($"crn" <= NProbe)
         .select($"vec_id".as("q_id"), $"r".as("q_r"), $"cid")
       topK(probes.join(assigned, "cid")
           .filter($"vec_id" =!= $"q_id")
           .select($"q_id", $"q_r", $"vec_id".as("n_id"), $"r".as("n_r"))
           .distinct()
-          .withColumn("dot", cosine($"q_r", $"n_r")), "dot", "n_id")
+          .withColumn("dot", vecDot($"q_r", $"n_r")), "dot", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"dot", 4).as("dot"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2147,7 +2143,7 @@ object Similarity extends graft.QueryRegistry {
       val recon = pqRecon(v)
       val q = v.filter($"vec_id" < NumQueries).select($"vec_id".as("q_id"), $"emb".as("q_emb"))
       topK(broadcast(q).join(recon.select($"vec_id".as("n_id"), $"recon"), $"q_id" =!= $"n_id")
-          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
+          .withColumn("score", vecDot($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2179,7 +2175,7 @@ object Similarity extends graft.QueryRegistry {
           .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
           .distinct()
           .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
-          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
+          .withColumn("score", vecDot($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2215,7 +2211,7 @@ object Similarity extends graft.QueryRegistry {
             .as("recon"))
       val q = v.filter($"vec_id" < NumQueries).select($"vec_id".as("q_id"), $"emb".as("q_emb"))
       topK(broadcast(q).join(recon, $"q_id" =!= $"n_id")
-          .withColumn("score", cosine($"q_emb", $"recon")), "score", "n_id")
+          .withColumn("score", vecDot($"q_emb", $"recon")), "score", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"score", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
     }, Some(
@@ -2256,11 +2252,11 @@ object Similarity extends graft.QueryRegistry {
           .select($"q_id", $"q_emb", $"vec_id".as("n_id"))
           .distinct()
           .join(recon.select($"vec_id".as("n_id"), $"recon"), "n_id")
-          .withColumn("approx", cosine($"q_emb", $"recon")),
+          .withColumn("approx", vecDot($"q_emb", $"recon")),
           "approx", "n_id", k = RerankDepth, as = "arn", long = false)
       topK(shortlist
           .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
-          .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id")
+          .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id")
         .select($"q_id", $"rank", $"n_id", round($"cos", 4).as("cos"),
           round($"approx", 4).as("approx_cos"))
         .orderBy($"q_id", $"rank")
@@ -2305,7 +2301,7 @@ object Similarity extends graft.QueryRegistry {
         .select($"np", $"q_id", $"q_emb", $"vec_id".as("n_id"), $"emb".as("n_emb"))
         .distinct()
         .cache() // read by the top-k pass and the candidate-volume roll-up
-      val topk = topK(cand.withColumn("cos", cosine($"q_emb", $"n_emb")),
+      val topk = topK(cand.withColumn("cos", vecDot($"q_emb", $"n_emb")),
           "cos", "n_id", long = false, by = Seq("np", "q_id"))
         .select($"np", $"q_id", $"n_id")
       val brute = queries("sim_brute_topk")(s, d).select($"q_id", $"n_id")
@@ -2369,7 +2365,7 @@ object Similarity extends graft.QueryRegistry {
       val scored = cand
         .join(u.select($"vec_id".as("id1"), $"emb".as("e1")), "id1")
         .join(u.select($"vec_id".as("id2"), $"emb".as("e2")), "id2")
-        .select($"id1", $"id2", cosine($"e1", $"e2").as("cos"))
+        .select($"id1", $"id2", vecDot($"e1", $"e2").as("cos"))
       val counts = scored
         .withColumn("th", explode(array(SweepThresholds.map(lit): _*)))
         .filter($"cos" >= $"th")
@@ -2455,7 +2451,7 @@ object Similarity extends graft.QueryRegistry {
       val q = proj.filter($"vec_id" < NumQueries)
         .select($"vec_id".as("q_id"), $"p".as("q_p"))
       val short = topK(broadcast(q).join(proj, $"q_id" =!= $"vec_id")
-          .withColumn("pdot", cosine($"q_p", $"p")),
+          .withColumn("pdot", vecDot($"q_p", $"p")),
           "pdot", "vec_id", k = RpShortlist, as = "prank", long = false)
         .select($"q_id", $"vec_id".as("n_id"))
       // the shortlist is ≤ NumQueries×RpShortlist rows by construction —
@@ -2464,7 +2460,7 @@ object Similarity extends graft.QueryRegistry {
       val rtop = topK(broadcast(broadcast(short)
           .join(v.select($"vec_id".as("q_id"), $"emb".as("q_emb")), "q_id"))
         .join(v.select($"vec_id".as("n_id"), $"emb".as("n_emb")), "n_id")
-        .withColumn("cos", cosine($"q_emb", $"n_emb")), "cos", "n_id", long = false)
+        .withColumn("cos", vecDot($"q_emb", $"n_emb")), "cos", "n_id", long = false)
         .select($"q_id", $"n_id")
       recallByQuery(rtop, brute)
     }, Some(

@@ -1,7 +1,7 @@
 package graft.sources.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, call_function, lit, xxhash64}
+import org.apache.spark.sql.functions.{broadcast, xxhash64}
 
 /** The per-file bloom-sidecar probe and the file-path normal form that
   * every file list of the lake (connector resolve, library planners,
@@ -25,11 +25,9 @@ object LakeIndex {
       s: SparkSession, idxPath: String,
       probes: DataFrame): Array[String] = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val idx = graft.Tables.readCached(s, idxPath)
     val matched = idx.crossJoin(broadcast(probes)) // |files| × |keys|, metadata-scale
-      .filter(call_function("bloom_contains",
-        $"bloom", xxhash64($"k"), lit(BloomK)))
+      .filter(graft.plans.Native.bloomContains($"bloom", xxhash64($"k"), BloomK))
       .select($"file").distinct().as[String].collect()
     matched.sorted
   }

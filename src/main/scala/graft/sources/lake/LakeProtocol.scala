@@ -41,7 +41,6 @@ object LakeProtocol {
   private[graft] def bloomIndexRows(
       s: SparkSession, data: DataFrame, nFiles: Int): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val perFile = math.max(64L, data.count() / math.max(1, nFiles))
     var mBits = 1 << 10
     while (mBits < perFile * 16 && mBits < (1 << 27)) mBits <<= 1
@@ -311,7 +310,6 @@ object LakeProtocol {
       upsert: Option[org.apache.spark.sql.DataFrame] = None,
       targetRows: Long = MutationTargetFileRows): String = {
     import s.implicits._
-    graft.plans.GraftExtensions.register(s)
     val keys = keys0
     val newData = root.resolve("data")
     val oldData = java.nio.file.Paths.get(normPath(srcDataDir))

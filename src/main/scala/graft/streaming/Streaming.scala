@@ -6,8 +6,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 import org.apache.spark.sql.types.StructType
 
 import graft.core.Chunker
-import graft.operators.{LakeFixture, LakeServeQueries}
-import graft.plans.CdcChunks
+import graft.operators.{Chunking, LakeFixture, LakeServeQueries}
+import graft.plans.{CdcChunks, Native}
 import graft.sources.lake.{LakeIndex, LakeProtocol}
 
 /** One byte segment of a streaming blob. `seq` is the dense 0-based segment
@@ -186,16 +186,11 @@ object Streaming extends graft.QueryModule {
       algo: String,
       expectedSize: Int,
       seed: Long = 0L): DataFrame = {
-    graft.plans.GraftExtensions.register(blobs.sparkSession)
-    val payload: Column =
-      if (blobs.schema(payloadCol).dataType == org.apache.spark.sql.types.StringType)
-        encode(col(payloadCol), "UTF-8")
-      else col(payloadCol)
     // Same native `cdc_chunks` Generator as the batch lift — one boundary-
     // scan codepath across batch, SQL, and streaming (r7 unification).
     blobs
       .select(col(idCol).as("id"), col(tsCol).as("ts"),
-        call_function("cdc_chunks", payload, lit(algo), lit(expectedSize), lit(seed)))
+        Native.cdcChunks(Chunking.payloadBytes(blobs, payloadCol), algo, expectedSize, seed))
       .withColumn("hash", xxhash64(col("chunk")))
   }
 

@@ -91,6 +91,16 @@ class AnnQualitySpec extends AnyFunSuite with graft.SharedSpark {
     assert(rows("sim_ivf_incremental") == rows("sim_ivf_persisted"))
   }
 
+  test("IVF seed rule: the Column and JVM forms accept exactly the same ids") {
+    import spark.implicits._
+    import Similarity.{IvfCentroids, IvfSeedStride}
+    val ids = 0L to 2L * IvfSeedStride * IvfCentroids
+    val got = ids.toDF("vec_id").filter(Similarity.isIvfSeed($"vec_id"))
+      .as[Long].collect().sorted.toSeq
+    assert(got == ids.filter(Similarity.isIvfSeedId))
+    assert(got.size == IvfCentroids)
+  }
+
   test("MinHash-LSH candidates include every exact-duplicate pair") {
     import spark.implicits._
     val pairs = Dedup.queries("dedup_minhash_lsh")(spark, sfDir)

@@ -96,7 +96,7 @@ class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
           segments = segments, spreadSegments = spread)
         .select($"id", $"chunk_idx", $"offset", $"length", $"chunk")
         .as[(String, Int, Int, Int, Array[Byte])].collect()
-        .groupBy(_._1).view.mapValues(rs => spans(rs.map(r => (r._2, r._3, r._4, r._5)))).toMap
+        .groupBy(_._1).view.mapValues(rs => spans(rs.toIndexedSeq.map(r => (r._2, r._3, r._4, r._5)))).toMap
       val ctx = s"$algo segments=$segments spread=$spread"
       assert(!got.contains("blob-null"), s"$ctx: a null payload yields no chunks")
       for ((id, data) <- blobs)
@@ -297,7 +297,7 @@ class ChunkingSpec extends AnyFunSuite with graft.SharedSpark {
   }
 
   test("SQL surface: cdc_chunks generator composes with LATERAL VIEW") {
-    Chunking.registerSql(spark)
+    graft.plans.GraftExtensions.register(spark)
     import spark.implicits._
     Seq((1L, rndBytes(4000, 5))).toDF("id", "content").createOrReplaceTempView("blobs")
     val n = spark.sql(

@@ -92,7 +92,7 @@ class PipelineOpsSpec extends AnyFunSuite with graft.SharedSpark {
     val li = graft.Tables.lineitem(spark, sfDir)
     assert(prof._1 == li.count())
     assert(prof._2 == li.filter($"l_returnflag".isNull).count())
-    assert(prof._3 == li.select($"l_returnflag").distinct.count())
+    assert(prof._3 == li.select($"l_returnflag").distinct().count())
     assert(prof._4 == "A" && prof._5 == "R")
   }
 
