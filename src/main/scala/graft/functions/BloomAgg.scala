@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.expressions.{Aggregator, UserDefinedFunction}
+import org.apache.spark.sql.functions.udaf
 
 import graft.plans.BloomUtil
 
@@ -45,4 +46,11 @@ final class BloomAgg(mBits: Int, k: Int)
 
   override def bufferEncoder: Encoder[Array[Byte]] = ExpressionEncoder[Array[Byte]]()
   override def outputEncoder: Encoder[Array[Byte]] = ExpressionEncoder[Array[Byte]]()
+}
+
+object BloomAgg {
+
+  /** The aggregate as a column function over BIGINT item hashes. */
+  def udf(mBits: Int, k: Int): UserDefinedFunction =
+    udaf(new BloomAgg(mBits, k), Encoders.scalaLong)
 }

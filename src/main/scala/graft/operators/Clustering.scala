@@ -190,11 +190,9 @@ object Clustering extends graft.QueryRegistry {
   private[operators] def plantedUnit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val u0 = Similarity.vectors(s, d)
-    val pert = u0.filter($"vec_id" % 7 === 0)
+    val pert = Similarity.unitVectors(u0.filter($"vec_id" % 7 === 0)
       .select(($"vec_id" + 200000).as("vec_id"),
-        concat(array(element_at($"emb", 1) + 0.5), slice($"emb", 2, Dims - 1)).as("p"))
-      .withColumn("nrm", sqrt(vecDot($"p", $"p")))
-      .select($"vec_id", transform($"p", x => x / $"nrm").as("emb"))
+        concat(array(element_at($"emb", 1) + 0.5), slice($"emb", 2, Dims - 1)).as("p")), "p")
     u0.unionByName(
         u0.filter($"vec_id" % 5 === 0).select(($"vec_id" + 100000).as("vec_id"), $"emb"))
       .unionByName(pert)

@@ -49,8 +49,7 @@ object DecontamQueries extends graft.QueryRegistry {
       // native in-dataflow build: BloomAgg bitset over xxhash64(key), one
       // broadcast row — no driver-side construction, no UDF probe; the
       // membership test is the codegen'd bloom_contains expression.
-      val bloomAgg = udaf(new graft.functions.BloomAgg(mBits, BloomK),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val bloomAgg = graft.functions.BloomAgg.udf(mBits, BloomK)
       val bloomRow = members.agg(bloomAgg(xxhash64($"c_custkey")).as("bloom"))
       def hit = graft.plans.Native.bloomContains($"bloom", xxhash64($"o_custkey"), BloomK)
       val orders = Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
@@ -460,8 +459,7 @@ object DecontamQueries extends graft.QueryRegistry {
     */
   private[operators] def bloomDecontamFlags(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val bloomAgg = udaf(new graft.functions.BloomAgg(BloomBits, BloomK),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val bloomAgg = graft.functions.BloomAgg.udf(BloomBits, BloomK)
     val bloomRow = evalGramHashes(s, d).agg(bloomAgg($"h").as("bloom"))
     ngramHashArrays(Tables.documents(s, d).select($"doc_id", $"text"))
       .crossJoin(broadcast(bloomRow))

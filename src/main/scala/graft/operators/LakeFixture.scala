@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.sources.lake.LakeCommit.{catalogCommit, emptyCatalog, writeTable}
 import graft.sources.lake.LakeIndex.{BloomK, matchedFilesOnly, normPath}
 import graft.sources.lake.LakeProtocol._
 
@@ -106,22 +107,18 @@ object LakeFixture {
         files.map(f => (snap, content, f, base, seq, keyCol))
       val dataRows = (snap: Long) =>
         rows(snap, "data", dataFiles, dataBase, 0L, "")
-      (dataRows(0L) ++
+      writeTable(root, "manifests", (dataRows(0L) ++
         dataRows(1L) ++ rows(1L, "dv", dvFiles, dvBase, 1L, "") ++
         dataRows(2L) ++ rows(2L, "dv", dvFiles, dvBase, 1L, "") ++
         rows(2L, "pos_del", posFiles, root.resolve("pos").toString, 2L, "") ++
         rows(2L, "eq_del", eqFiles, root.resolve("eq").toString, 3L,
           "l_orderkey"))
-        .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      Seq((0L, "original", -1L), (1L, "dv_delete", 0L),
+        .toDF("snap_id", "content", "file", "base", "seq", "key_col"))
+      writeTable(root, "snapshots", Seq((0L, "original", -1L), (1L, "dv_delete", 0L),
         (2L, "multi_delete", 1L))
-        .toDF("snap_id", "op", "parent_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      Seq((0L, "main", "branch", 2L), (0L, "stable", "tag", 1L))
-        .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
+        .toDF("snap_id", "op", "parent_id"))
+      writeTable(root, "refs_log", Seq((0L, "main", "branch", 2L), (0L, "stable", "tag", 1L))
+        .toDF("step", "ref", "ref_type", "snap_id"))
       root.toString
     }
 
@@ -167,12 +164,10 @@ object LakeFixture {
         acc = acc ++ fs.map(f => (f, base))
         snapRows ++= acc.map { case (f, b) => ((i + 1).toLong, f, b) }
       }
-      snapRows.toSeq.toDF("snap_id", "file", "base").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      ((0L, "genesis", -1L) +: (1 to nWaves).map(i =>
+      writeTable(root, "manifests", snapRows.toSeq.toDF("snap_id", "file", "base"))
+      writeTable(root, "snapshots", ((0L, "genesis", -1L) +: (1 to nWaves).map(i =>
         (i.toLong, "append", (i - 1).toLong)))
-        .toDF("snap_id", "op", "parent_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+        .toDF("snap_id", "op", "parent_id"))
       root.toString
     }
 
@@ -476,8 +471,7 @@ object LakeFixture {
         math.max(1, data.inputFiles.length))
       var mBits = 1 << 10
       while (mBits < perFile * 16 && mBits < (1 << 27)) mBits <<= 1
-      val bloomAgg = udaf(new graft.functions.BloomAgg(mBits, BloomK),
-        org.apache.spark.sql.Encoders.scalaLong)
+      val bloomAgg = graft.functions.BloomAgg.udf(mBits, BloomK)
       data.select(input_file_name().as("file"), xxhash64($"l_orderkey").as("h"))
         .groupBy($"file")
         .agg(bloomAgg($"h").as("bloom"), count(lit(1)).as("n_rows"))
@@ -1143,14 +1137,12 @@ object LakeFixture {
       graft.Fixtures.deleteRecursively(stagedA)
       val t2 = applyMutation(s, graft.Fixtures.tempDir("graft_occ_a"),
         s"$t1/data", s"$t1/index", s"$t1/mv", kA)
-      Seq(
+      writeTable(root, "commit_log", Seq(
         (0L, "B", "T0", "committed", 0L, 0L, "T1"),
         (1L, "A", "T0", "conflict", conflict.size.toLong, nStaged.toLong, ""),
         (2L, "A", "T1", "committed", 0L, 0L, "T2"))
         .toDF("step", "writer", "base_tip", "outcome",
-          "n_conflict_files", "n_staged_discarded", "new_tip")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("commit_log").toString)
+          "n_conflict_files", "n_staged_discarded", "new_tip"))
       java.nio.file.Files.writeString(root.resolve("tip.txt"), t2)
       root.toString
     }
@@ -1308,11 +1300,10 @@ object LakeFixture {
       }
       val (gn, gv) = audit(good)
       val (bn, bv) = audit(bad)
-      Seq(("good", gn, gv, gv == 0L, normPath(s"$good/data")),
+      writeTable(root, "publish_log",
+        Seq(("good", gn, gv, gv == 0L, normPath(s"$good/data")),
           ("bad", bn, bv, bv == 0L, normPath(s"$bad/data")))
-        .toDF("candidate", "n_checked", "n_violations", "published", "base")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("publish_log").toString)
+        .toDF("candidate", "n_checked", "n_violations", "published", "base"))
       // abandon + GC the failed candidate — never a published snapshot
       require(bv > 0L && gv == 0L,
         s"WAP fixture degenerated: good=$gv bad=$bv violations")
@@ -1348,16 +1339,14 @@ object LakeFixture {
           s"${mergeExecDir(s, d)}/index"),
         (4L, "delete_w2", 3L, s"${deleteExec2Dir(s, d)}/data",
           s"${deleteExec2Dir(s, d)}/index"))
-      snaps.map { case (id, _, _, base, _) =>
+      writeTable(root, "manifests", snaps.map { case (id, _, _, base, _) =>
         graft.Tables.readCached(s, base).inputFiles.map(normPath).toSeq
           .toDF("file").select(lit(id).as("snap_id"), $"file")
-      }.reduce(_ unionByName _).coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
+      }.reduce(_ unionByName _))
       // every snapshot also records ITS OWN sidecar index path — a
       // time-travel reader plans point lookups through the index the
       // snapshot was reconciled with, not the current one
-      snaps.toDF("snap_id", "op", "parent_id", "base", "idx").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+      writeTable(root, "snapshots", snaps.toDF("snap_id", "op", "parent_id", "base", "idx"))
       root.toString
     }
 
@@ -1397,48 +1386,57 @@ object LakeFixture {
         .as[(Long, String, Long, String)].collect().sortBy(_._1)
       val manifests = graft.Tables.readCached(s, s"$meta/manifests")
         .select($"snap_id", $"file").as[(Long, String)].collect()
-      val filesDir = root.resolve("files")
       val baseOf = snaps.map(t => t._1 -> java.nio.file.Paths.get(normPath(t._4))).toMap
-      def linkInto(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-        graft.Fixtures.linkOrCopy(src, dst)
-      val cloneRows = manifests.map { case (sid, f) =>
-        val src = java.nio.file.Paths.get(f)
-        val dst = filesDir.resolve(baseOf(sid).relativize(src).toString)
-        linkInto(src, dst)
-        (sid, dst.toString)
-      }.toSeq
-      Seq("orphan_a.parquet", "orphan_b.parquet").foreach { n =>
-        linkInto(java.nio.file.Paths.get(manifests.head._2), filesDir.resolve(n))
-      }
-      // pre-GC metadata (the spec's "before" picture)
-      cloneRows.toDF("snap_id", "file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests_all").toString)
       // expire: keep the current snapshot and its parent
       val maxId = snaps.map(_._1).max
-      val live = Set(maxId, snaps.find(_._1 == maxId).get._3)
-      val liveFiles = cloneRows.collect {
-        case (sid, f) if live(sid) => f
-      }.toSet
-      // GC walk: every file under files/ unreferenced by a live manifest
-      // collect first with the walk stream CLOSED, then delete — never
-      // mutate the tree under an open directory stream
-      val onDisk = scala.collection.mutable.ArrayBuffer[String]()
-      val walk = java.nio.file.Files.walk(filesDir)
-      try walk.forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p)) onDisk += p.toString
-      } finally walk.close()
-      val deleted = onDisk.filterNot(liveFiles.contains)
-      deleted.foreach(f =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(f)))
-      deleted.toSeq.toDF("file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("gc_deleted").toString)
-      cloneRows.filter(r => live(r._1)).toDF("snap_id", "file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      snaps.filter(t => live(t._1)).map(t => (t._1, t._2, t._3)).toSeq
-        .toDF("snap_id", "op", "parent_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+      expireAndGc(s, root, manifests.toSeq.map { case (sid, f) =>
+          val src = java.nio.file.Paths.get(f)
+          (sid, src, baseOf(sid).relativize(src).toString)
+        }, snaps.toSeq.map(t => (t._1, t._2, t._3)),
+        live = Set(maxId, snaps.find(_._1 == maxId).get._3))
       root.toString
     }
+
+  /** The clone → orphans → `manifests_all` → walk/delete sequence of
+    * [[gcExpireDir]] and [[refsGcDir]] over manifest entries given as
+    * (snap_id, source file, clone relpath), keeping the `live` snapshots:
+    * `gc_deleted` lists what the walk deleted, and the live rows of `snaps`
+    * and of the clone manifest land in `snapshots` + `manifests`.
+    */
+  private def expireAndGc(s: SparkSession, root: java.nio.file.Path,
+      entries: Seq[(Long, java.nio.file.Path, String)],
+      snaps: Seq[(Long, String, Long)], live: Set[Long]): Unit = {
+    import s.implicits._
+    val filesDir = root.resolve("files")
+    val cloneRows = entries.map { case (sid, src, rel) =>
+      val dst = filesDir.resolve(rel)
+      graft.Fixtures.linkOrCopy(src, dst)
+      (sid, dst.toString)
+    }
+    Seq("orphan_a.parquet", "orphan_b.parquet").foreach { n =>
+      graft.Fixtures.linkOrCopy(entries.head._2, filesDir.resolve(n))
+    }
+    // pre-GC metadata (the spec's "before" picture)
+    writeTable(root, "manifests_all", cloneRows.toDF("snap_id", "file"))
+    val liveFiles = cloneRows.collect {
+      case (sid, f) if live(sid) => f
+    }.toSet
+    // GC walk: every file under files/ unreferenced by a live manifest
+    // collect first with the walk stream CLOSED, then delete — never
+    // mutate the tree under an open directory stream
+    val onDisk = scala.collection.mutable.ArrayBuffer[String]()
+    val walk = java.nio.file.Files.walk(filesDir)
+    try walk.forEach { p =>
+      if (java.nio.file.Files.isRegularFile(p)) onDisk += p.toString
+    } finally walk.close()
+    val deleted = onDisk.filterNot(liveFiles.contains)
+    deleted.foreach(f =>
+      java.nio.file.Files.delete(java.nio.file.Paths.get(f)))
+    writeTable(root, "gc_deleted", deleted.toSeq.toDF("file"))
+    writeTable(root, "manifests", cloneRows.filter(r => live(r._1)).toDF("snap_id", "file"))
+    writeTable(root, "snapshots", snaps.filter(t => live(t._1))
+      .toDF("snap_id", "op", "parent_id"))
+  }
 
   /** Once-per-JVM SNAPSHOT ROLLBACK — the recovery half of the snapshot
     * lifecycle (Iceberg `rollback_to_snapshot`): the table's current
@@ -1459,17 +1457,13 @@ object LakeFixture {
       val tip = snaps.agg(max($"snap_id")).as[Long].head()
       val src = snaps.filter($"op" === "delete_w1")
         .select($"snap_id", $"base", $"idx").as[(Long, String, String)].head()
-      snaps.unionByName(
+      writeTable(root, "snapshots", snaps.unionByName(
           Seq((tip + 1, "rollback", tip, src._2, src._3))
-            .toDF("snap_id", "op", "parent_id", "base", "idx"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+            .toDF("snap_id", "op", "parent_id", "base", "idx")))
       val mans = graft.Tables.readCached(s, s"$meta/manifests")
-      mans.unionByName(
+      writeTable(root, "manifests", mans.unionByName(
           mans.filter($"snap_id" === src._1)
-            .select(lit(tip + 1).as("snap_id"), $"file"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
+            .select(lit(tip + 1).as("snap_id"), $"file")))
       root.toString
     }
 
@@ -1542,16 +1536,12 @@ object LakeFixture {
         .select(lit(as).as("snap_id"), $"file", $"base")
       def batchLeg(as: Long) = batchFiles.toDF("file")
         .select(lit(as).as("snap_id"), $"file", lit(bfDir).as("base"))
-      mans0
+      writeTable(root, "manifests", mans0
         .unionByName(inherited(2L, 6L)).unionByName(batchLeg(6L))
-        .unionByName(inherited(4L, 7L)).unionByName(batchLeg(7L))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      baseSnaps.select($"snap_id", $"op", $"parent_id")
+        .unionByName(inherited(4L, 7L)).unionByName(batchLeg(7L)))
+      writeTable(root, "snapshots", baseSnaps.select($"snap_id", $"op", $"parent_id")
         .unionByName(Seq((6L, "branch_append", 2L), (7L, "cherry_pick", 4L))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+          .toDF("snap_id", "op", "parent_id")))
       // a branch commit reconciles its sidecar INDEX like any other
       // commit (branches are full tables — statistics and point-lookup
       // skipping must serve through a ref too): inherited files keep
@@ -1568,14 +1558,13 @@ object LakeFixture {
           .unionByName(freshIdx)
           .write.mode("overwrite").parquet(root.resolve(s"idx$as").toString)
       }
-      Seq(
+      writeTable(root, "refs_log", Seq(
         (0L, "main", "branch", 4L),
         (0L, "v1_compacted", "tag", 1L),
         (0L, "audit", "branch", 2L),
         (1L, "audit", "branch", 6L),
         (2L, "main", "branch", 7L))
-        .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
+        .toDF("step", "ref", "ref_type", "snap_id"))
       root.toString
     }
 
@@ -1656,20 +1645,19 @@ object LakeFixture {
         auditAdded, auditRemoved)
       def rows(id: Long, m: Map[String, (String, String)]) =
         m.values.toSeq.map { case (f, b) => (id, f, b) }
-      (rows(9L, s9) ++ rows(10L, s10) ++ rows(11L, s11) ++ rows(12L, s12))
-        .toDF("snap_id", "file", "base").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      Seq((8L, "branch_delete", 4L, -1L),
+      writeTable(root, "manifests",
+        (rows(9L, s9) ++ rows(10L, s10) ++ rows(11L, s11) ++ rows(12L, s12))
+          .toDF("snap_id", "file", "base"))
+      writeTable(root, "snapshots", Seq((8L, "branch_delete", 4L, -1L),
           (9L, "merge", 4L, 6L), (10L, "merge", 9L, 8L),
           (11L, "merge", 4L, 8L), (12L, "merge", 11L, 6L))
-        .toDF("snap_id", "op", "parent_id", "merge_parent").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+        .toDF("snap_id", "op", "parent_id", "merge_parent"))
       // refs_log continuation of branchMetaDir's (steps 0-2 live there):
       // the hotfix cut + commit, then main's two merge movements
-      Seq((3L, "hotfix", "branch", 4L), (4L, "hotfix", "branch", 8L),
+      writeTable(root, "refs_log",
+        Seq((3L, "hotfix", "branch", 4L), (4L, "hotfix", "branch", 8L),
           (5L, "main", "branch", 9L), (6L, "main", "branch", 10L))
-        .toDF("step", "ref", "ref_type", "snap_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("refs_log").toString)
+        .toDF("step", "ref", "ref_type", "snap_id"))
       root.toString
     }
 
@@ -1790,47 +1778,13 @@ object LakeFixture {
       val mans = graft.Tables.readCached(s, s"$broot/manifests")
         .select($"snap_id", $"file", $"base")
         .as[(Long, String, String)].collect()
-      val filesDir = root.resolve("files")
-      def linkInto(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-        graft.Fixtures.linkOrCopy(src, dst)
-      val cloneRows = mans.map { case (sid, f, b) =>
-        val rel = java.nio.file.Paths.get(normPath(b))
-          .relativize(java.nio.file.Paths.get(normPath(f))).toString
-        val dst = filesDir.resolve(rel)
-        linkInto(java.nio.file.Paths.get(normPath(f)), dst)
-        (sid, dst.toString)
-      }.toSeq
-      Seq("orphan_a.parquet", "orphan_b.parquet").foreach { n =>
-        linkInto(java.nio.file.Paths.get(normPath(mans.head._2)),
-          filesDir.resolve(n))
-      }
-      cloneRows.toDF("snap_id", "file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests_all").toString)
       val mainHead = refs.collectFirst { case ("main", _, id) => id }.get
       val parentOf = snaps.map(t => t._1 -> t._3).toMap
-      val live = refs.map(_._3).toSet + parentOf(mainHead)
-      val liveFiles = cloneRows.collect {
-        case (sid, f) if live(sid) => f
-      }.toSet
-      // collect first with the walk stream CLOSED, then delete — never
-      // mutate the tree under an open directory stream
-      val onDisk = scala.collection.mutable.ArrayBuffer[String]()
-      val walk = java.nio.file.Files.walk(filesDir)
-      try walk.forEach { p =>
-        if (java.nio.file.Files.isRegularFile(p)) onDisk += p.toString
-      } finally walk.close()
-      val deleted = onDisk.filterNot(liveFiles.contains)
-      deleted.foreach(f =>
-        java.nio.file.Files.delete(java.nio.file.Paths.get(f)))
-      deleted.toSeq.toDF("file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("gc_deleted").toString)
-      cloneRows.filter(r => live(r._1)).toDF("snap_id", "file").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
-      snaps.filter(t => live(t._1)).toSeq.toDF("snap_id", "op", "parent_id")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
-      refs.toDF("ref", "ref_type", "snap_id").coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("refs").toString)
+      expireAndGc(s, root, mans.toSeq.map { case (sid, f, b) =>
+          val src = java.nio.file.Paths.get(normPath(f))
+          (sid, src, java.nio.file.Paths.get(normPath(b)).relativize(src).toString)
+        }, snaps.toSeq, live = refs.map(_._3).toSet + parentOf(mainHead))
+      writeTable(root, "refs", refs.toDF("ref", "ref_type", "snap_id"))
       root.toString
     }
 
@@ -1862,13 +1816,10 @@ object LakeFixture {
     */
   private[graft] def catalogDir(s: SparkSession, d: String): String =
     graft.Fixtures.memo("graft_catalog", d) { root =>
-      import s.implicits._
-      Seq(
-        (0L, "ship_fact", snapshotMetaDir(s, d), 4L),
-        (1L, "ship_fact", rollbackMetaDir(s, d), 5L))
-        .toDF("version", "table_name", "meta_root", "snap_id").coalesce(1)
-        .write.mode("overwrite")
-        .parquet(root.resolve("catalog_log").toString)
+      emptyCatalog(s, root)
+      val log = root.resolve("catalog_log").toString
+      catalogCommit(s, log, "ship_fact", -1L, snapshotMetaDir(s, d), 4L)
+      catalogCommit(s, log, "ship_fact", 0L, rollbackMetaDir(s, d), 5L)
       root.toString
     }
 
@@ -1906,15 +1857,11 @@ object LakeFixture {
         m -> (i / ManifestGroupMonths).toLong }.toMap
       val byGroup = rows.groupBy(t => groupOf(t._1))
       byGroup.foreach { case (g, rs) =>
-        rs.toSeq.toDF("ship_month", "file").coalesce(1)
-          .write.mode("overwrite")
-          .parquet(root.resolve(s"manifest/group=$g").toString)
+        writeTable(root, s"manifest/group=$g", rs.toSeq.toDF("ship_month", "file"))
       }
-      byGroup.map { case (g, rs) =>
+      writeTable(root, "manifest_list", byGroup.map { case (g, rs) =>
         (g, rs.length.toLong, rs.map(_._1).min, rs.map(_._1).max)
-      }.toSeq.toDF("group_id", "n_files", "min_month", "max_month")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifest_list").toString)
+      }.toSeq.toDF("group_id", "n_files", "min_month", "max_month"))
       // pin the snapshot this layout describes: id + its discovery base,
       // read back by the serve so it cannot drift from the grouping
       java.nio.file.Files.writeString(root.resolve("tip.txt"), tip.toString)

@@ -34,11 +34,8 @@ object LakeQueries extends graft.QueryRegistry {
     */
   private def ctasFixture(s: SparkSession, d: String): Unit =
     graft.Fixtures.memo("graft_ctascat", d) { dir =>
-      import s.implicits._
       val root = dir.toString
-      Seq.empty[(Long, String, String, Long)]
-        .toDF("version", "table_name", "meta_root", "snap_id")
-        .coalesce(1).write.parquet(s"$root/catalog_log")
+      graft.sources.lake.LakeCommit.emptyCatalog(s, dir)
       s.conf.set("spark.sql.catalog.graft_ctas",
         classOf[graft.sources.lake.GraftLakeCatalog].getName)
       s.conf.set("spark.sql.catalog.graft_ctas.catalogDir", root)

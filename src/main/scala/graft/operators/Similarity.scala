@@ -96,11 +96,14 @@ object Similarity extends graft.QueryRegistry {
     */
   private[graft] def vectors(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Tables.embeddings(s, d)
-      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("raw"))
-      .withColumn("nrm", sqrt(vecDot($"raw", $"raw")))
-      .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
+    unitVectors(Tables.embeddings(s, d)
+      .select($"vec_id", transform($"embedding", x => x.cast("double")).as("raw")), "raw")
   }
+
+  /** (vec_id, emb): `df`'s double array `raw` scaled to unit length. */
+  private[operators] def unitVectors(df: DataFrame, raw: String): DataFrame =
+    df.withColumn("nrm", sqrt(vecDot(col(raw), col(raw))))
+      .select(col("vec_id"), transform(col(raw), x => x / col("nrm")).as("emb"))
 
   private val vectorsSql: String =
     """v AS (
@@ -406,12 +409,10 @@ object Similarity extends graft.QueryRegistry {
       val n = math.sqrt(s2)
       (c.toLong, raw.map(_ / n).toSeq)
     }
-    u.withColumn("cid", ($"vec_id" * ClusterHash) % ClusterCenters)
+    unitVectors(u.withColumn("cid", ($"vec_id" * ClusterHash) % ClusterCenters)
       .join(broadcast(centers.toDF("cid", "c_emb")), "cid")
       .withColumn("raw", zip_with($"c_emb", $"emb",
-        (c, e) => c * ClusterMixNum + e))
-      .withColumn("nrm", sqrt(vecDot($"raw", $"raw")))
-      .select($"vec_id", transform($"raw", x => x / $"nrm").as("emb"))
+        (c, e) => c * ClusterMixNum + e)), "raw")
   }
 
   /** Once-per-JVM two-layer serve graph over the PLANTED clustered corpus

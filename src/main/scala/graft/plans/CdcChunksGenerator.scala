@@ -37,7 +37,7 @@ case class CdcChunks(payload: Expression, algo: Expression, expectedSize: Expres
 
   override def checkInputDataTypes(): TypeCheckResult =
     CdcChunks.checkArgs("cdc_chunks(payload, algo, expected_size, seed)",
-      payload, algo, Seq(expectedSize, seed))
+      payload, algo, Seq(expectedSize, seed), chunker = chunker)
 
   override def elementSchema: StructType = CdcChunks.elementSchema
 
@@ -66,11 +66,13 @@ object CdcChunks {
     StructField("chunk", BinaryType, nullable = false)))
 
   /** Analysis-time argument check shared by the CDC generators: `algo` and
-    * `config` are constants, the payload is BINARY, `algo` a STRING, and
-    * `config` plus the per-row `integral` arguments are integral.
+    * `config` are constants, the payload is BINARY, `algo` a STRING,
+    * `config` plus the per-row `integral` arguments are integral, and the
+    * generator's `chunker` builds ([[checkChunker]]).
     */
   private[plans] def checkArgs(signature: String, payload: Expression, algo: Expression,
-      config: Seq[Expression], integral: Seq[Expression] = Nil): TypeCheckResult = {
+      config: Seq[Expression], integral: Seq[Expression] = Nil,
+      chunker: => Any = ()): TypeCheckResult = {
     def fail(msg: String) = TypeCheckResult.TypeCheckFailure(s"$signature: $msg")
     if (!(algo +: config).forall(_.foldable)) fail("config arguments must be constants")
     else if (payload.dataType != BinaryType)
@@ -78,8 +80,18 @@ object CdcChunks {
     else if (algo.dataType != StringType) fail("algo must be STRING")
     else if (!(config ++ integral).forall(e => Seq(IntegerType, LongType, ShortType, ByteType).contains(e.dataType)))
       fail("numeric arguments must be integral")
-    else TypeCheckResult.TypeCheckSuccess
+    else checkChunker(signature)(chunker)
   }
+
+  /** Build a generator's chunker on the driver while the plan is analysed,
+    * so a config its own `require`s refuse fails analysis, not a task.
+    */
+  private[plans] def checkChunker(signature: String)(chunker: => Any): TypeCheckResult =
+    try { chunker; TypeCheckResult.TypeCheckSuccess }
+    catch {
+      case e: IllegalArgumentException =>
+        TypeCheckResult.TypeCheckFailure(s"$signature: ${e.getMessage}")
+    }
 
   /** JVM twin of the `xxhash64` Column expression (same default seed 42)
     * over `bytes[from, from + len)`, so chunk identities hashed inside JVM

@@ -22,8 +22,8 @@ import graft.core.{AeChunker, Chunker, ParallelChunking, RabinChunker}
   * tasks ships the payload once per segment, and on multi-MB blobs that
   * shuffle cost more CPU than the scans it parallelised.
   *
-  * Config is checked when the plan is analysed, so a bad `algo` or
-  * `n_parts` fails before any task runs. CodegenFallback, as for
+  * Config is checked when the plan is analysed, so a bad `algo`,
+  * `n_parts` or `expected_size` fails before any task runs. CodegenFallback, as for
   * `cdc_chunks`: the per-row cost is the byte scan, not expression dispatch.
   */
 case class CdcSegmentedChunks(
@@ -43,7 +43,7 @@ case class CdcSegmentedChunks(
         s"$signature: algo must be 'ae' or 'rabin' (the batch bounds forms), got ${algo.eval()}")
     else if (Option(nParts.eval()).forall(_.toString.toLong <= 0))
       TypeCheckResult.TypeCheckFailure(s"$signature: n_parts must be > 0, got ${nParts.eval()}")
-    else TypeCheckResult.TypeCheckSuccess
+    else CdcChunks.checkChunker(signature)(mergedEnds)
   }
 
   override def elementSchema: StructType = CdcChunks.elementSchema
@@ -96,7 +96,7 @@ case class CdcSliceChunks(
 
   override def checkInputDataTypes(): TypeCheckResult =
     CdcChunks.checkArgs("cdc_slice_chunks(payload, algo, expected_size, seed, part, n_parts)",
-      payload, algo, Seq(expectedSize, seed, nParts), integral = Seq(part))
+      payload, algo, Seq(expectedSize, seed, nParts), integral = Seq(part), chunker = chunker)
 
   @transient private lazy val nP: Int = nParts.eval().toString.toInt
 

@@ -591,8 +591,7 @@ private[lake] object LakeFilters {
       s: SparkSession, fromRoot: String, toRoot: java.nio.file.Path): Unit = {
     val src = s"$fromRoot/tableschema"
     if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(src)))
-      s.read.parquet(src).coalesce(1)
-        .write.parquet(toRoot.resolve("tableschema").toString)
+      LakeCommit.writeTable(toRoot, "tableschema", s.read.parquet(src))
   }
 
   /** The metadata-root PARENT CHAIN of a world: each connector commit
@@ -1047,7 +1046,6 @@ class GraftLakeCatalog
       partitions: Array[Transform],
       properties: JMap[String, String]): Table = {
     val s = SparkSession.active
-    import s.implicits._
     val prior = latest(s, ident.name)
     if (prior.exists(!_.dropped))
       throw new org.apache.spark.sql.catalyst.analysis
@@ -1067,21 +1065,10 @@ class GraftLakeCatalog
         s"graft-lake: partition column $p must be STRING (Hive-style " +
           s"dir layout), got ${f.dataType.simpleString}")
     }
-    val root = graft.Fixtures.tempDir("graft_lakecreate")
-    fields.zipWithIndex.toSeq
-      .map { case (f, i) => (f.name, f.dataType.sql, partCols.contains(f.name), i.toLong) }
-      .toDF("name", "dtype", "is_part", "ord")
-      .coalesce(1).write.parquet(root.resolve("tableschema").toString)
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1).write.parquet(root.resolve("manifests").toString)
-    Seq((0L, "create", -1L)).toDF("snap_id", "op", "parent_id")
-      .coalesce(1).write.parquet(root.resolve("snapshots").toString)
-    LakeCommit.catalogCommit(
-      s, s"$catalogRoot/catalog_log", ident.name,
+    LakeCommit.schemaWorld(s, catalogRoot, ident.name,
       // CAS from the tombstone version when re-creating a dropped name
-      expectedVersion = prior.map(_.version).getOrElse(-1L),
-      metaRoot = root.toString, snapId = 0L)
+      expectedVersion = prior.map(_.version).getOrElse(-1L), parent = None,
+      fields.toSeq.map(f => (f.name, f.dataType.sql, partCols.contains(f.name))))
     load(ident, None)
   }
   /** ALTER TABLE … ADD COLUMNS — schema evolution as a METADATA-ONLY
@@ -1099,10 +1086,10 @@ class GraftLakeCatalog
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val s = SparkSession.active
     import s.implicits._
-    val CatalogPointer(ver, metaRoot, snap) = latest(s, ident.name)
+    val p = latest(s, ident.name)
       .filterNot(_.dropped)
       .getOrElse(throw new NoSuchTableException(ident))
-    val tsDir = s"$metaRoot/tableschema"
+    val tsDir = s"${p.metaRoot}/tableschema"
     require(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(tsDir)),
       s"graft-lake: ALTER needs a declared-schema table (CREATE TABLE / " +
         s"CTAS worlds); ${ident.name} predates the tableschema layout")
@@ -1132,22 +1119,8 @@ class GraftLakeCatalog
       case c => throw new UnsupportedOperationException(
         s"graft-lake: only ADD COLUMNS is supported, got $c")
     }
-    val newRoot = graft.Fixtures.tempDir("graft_lakealter")
-    // no new snapshot: a zero-row manifest + the parent marker — every
-    // existing snapshot's rows resolve through the chain
-    Seq.empty[(Long, String, String, String, Long, String)]
-      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-      .coalesce(1).write.parquet(newRoot.resolve("manifests").toString)
-    LakeFilters.writeParentMarker(newRoot, metaRoot)
-    s.read.parquet(s"$metaRoot/snapshots").coalesce(1)
-      .write.parquet(newRoot.resolve("snapshots").toString)
-    (cur.toSeq ++ adds.zipWithIndex.map { case ((n, t), i) =>
-      (n, t, false, cur.length.toLong + i) })
-      .toDF("name", "dtype", "is_part", "ord").coalesce(1)
-      .write.parquet(newRoot.resolve("tableschema").toString)
-    LakeCommit.catalogCommit(
-      s, s"$catalogRoot/catalog_log", ident.name,
-      expectedVersion = ver, metaRoot = newRoot.toString, snapId = snap)
+    LakeCommit.schemaWorld(s, catalogRoot, ident.name, p.version, Some(p),
+      cur.toSeq.map(c => (c._1, c._2, c._3)) ++ adds.map { case (n, t) => (n, t, false) })
     load(ident, None)
   }
 
@@ -1272,13 +1245,18 @@ private[lake] class GraftLakeScan(
     * partition/bloom pushdown — the same number Spark's own file scans
     * report). Without this a DSv2 relation defaults to Long.MaxValue
     * size and a small lake dimension NEVER auto-broadcasts — every join
-    * against the lakehouse would sort-merge unless hand-hinted.
+    * against the lakehouse would sort-merge unless hand-hinted. A listed
+    * file that cannot be stat-ed fails planning by name: counting it as
+    * 0 bytes would shrink the estimate and could pick a broadcast join.
     */
   override def estimateStatistics()
       : org.apache.spark.sql.connector.read.Statistics = {
     val bytes = files.map { f =>
       try java.nio.file.Files.size(java.nio.file.Paths.get(f.path))
-      catch { case _: java.io.IOException => 0L }
+      catch {
+        case e: java.io.IOException => throw new IllegalStateException(
+          s"graft-lake: ${table.name} lists ${f.path}, which cannot be read", e)
+      }
     }.sum
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =

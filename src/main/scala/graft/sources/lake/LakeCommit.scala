@@ -4,7 +4,7 @@ import java.nio.file.Path
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.max
 
 /** One manifest entry of a snapshot: a data or delete file, the base its
@@ -23,11 +23,77 @@ private[lake] case class CatalogPointer(
   def dropped: Boolean = metaRoot.isEmpty
 }
 
-/** The lake's one commit path: the catalog compare-and-swap over the
-  * append-only `catalog_log`, and the one function that authors a new
-  * snapshot on top of a loaded table and swaps the catalog pointer to it.
+/** The lake's one commit path and one metadata writer: the catalog
+  * compare-and-swap over the append-only `catalog_log`, the metadata-table
+  * write, and the function that authors a metadata root (a snapshot
+  * commit, a CREATE or ALTER TABLE world) and swaps the catalog pointer to it.
   */
 object LakeCommit {
+
+  /** Write the metadata table `name` under `root` as ONE parquet file,
+    * replacing any earlier content. The only writer of a metadata table.
+    */
+  private[graft] def writeTable(root: Path, name: String, rows: DataFrame): Unit =
+    rows.coalesce(1).write.mode("overwrite").parquet(root.resolve(name).toString)
+
+  /** An empty `catalog_log` under `catalogRoot`, for [[catalogCommit]]. */
+  private[graft] def emptyCatalog(s: SparkSession, catalogRoot: Path): Unit = {
+    import s.implicits._
+    writeTable(catalogRoot, "catalog_log", Seq.empty[(Long, String, String, Long)]
+      .toDF("version", "table_name", "meta_root", "snap_id"))
+  }
+
+  /** Author ONE metadata root: `write` fills `root` and returns the
+    * snapshot id the root pins, then the catalog pointer of `table` is
+    * CAS-ed from `expectedVersion` to it. Returns the new catalog version.
+    * Any failure — a lost CAS included — deletes `root` before
+    * rethrowing, so a refused commit leaves nothing behind.
+    */
+  private[lake] def author(
+      s: SparkSession, root: Path, catalogRoot: String, table: String,
+      expectedVersion: Long)(write: => Long): Long =
+    try {
+      val snapId = write
+      catalogCommit(s, s"$catalogRoot/catalog_log", table,
+        expectedVersion, root.toString, snapId)
+    } catch {
+      case NonFatal(e) =>
+        graft.Fixtures.deleteRecursively(root)
+        throw e
+    }
+
+  /** CREATE / ALTER TABLE's root: the declared `cols` as `tableschema`
+    * and a zero-row manifest. CREATE (`parent` None) starts snapshot 0;
+    * ALTER adds no snapshot — it carries `parent`'s snapshots verbatim
+    * and pins `parent`'s snapshot. CAS-ed from `expectedVersion` (−1 for
+    * a new name, the tombstone's version for a dropped one).
+    */
+  private[lake] def schemaWorld(
+      s: SparkSession, catalogRoot: String, table: String, expectedVersion: Long,
+      parent: Option[CatalogPointer], cols: Seq[(String, String, Boolean)]): Unit = {
+    import s.implicits._
+    val root = graft.Fixtures.tempDir(
+      if (parent.isEmpty) "graft_lakecreate" else "graft_lakealter")
+    author(s, root, catalogRoot, table, expectedVersion) {
+      writeTable(root, "tableschema", cols.zipWithIndex
+        .map { case ((n, t, part), i) => (n, t, part, i.toLong) }
+        .toDF("name", "dtype", "is_part", "ord"))
+      writeTable(root, "manifests", Seq.empty[(Long, String, String, String, Long, String)]
+        .toDF("snap_id", "content", "file", "base", "seq", "key_col"))
+      parent match {
+        case None =>
+          writeTable(root, "snapshots",
+            Seq((0L, "create", -1L)).toDF("snap_id", "op", "parent_id"))
+          0L
+        case Some(p) =>
+          // no new snapshot: a zero-row manifest + the parent marker — every
+          // existing snapshot's rows resolve through the chain
+          LakeFilters.writeParentMarker(root, p.metaRoot)
+          writeTable(root, "snapshots", s.read.parquet(s"${p.metaRoot}/snapshots"))
+          p.snapId
+      }
+    }
+  }
 
   /** Per-log monitor serializing the read-validate-append sequence of
     * [[catalogCommitAll]] within this JVM — without it two same-process
@@ -125,14 +191,14 @@ object LakeCommit {
     * pin + 1 would collide with an existing snapshot (duplicate id =
     * merged manifests). The new sequence is the tip's max + 1; `add`
     * receives it by name, so a commit that keeps and adds nothing
-    * (TRUNCATE TABLE) never reads the tip. Any failure — a lost CAS
-    * included — deletes `root` before rethrowing.
+    * (TRUNCATE TABLE) never reads the tip. Committed through [[author]]:
+    * any failure — a lost CAS included — deletes `root`.
     */
   private[lake] def commitSnapshot(
       s: SparkSession, ctx: LakeMutationCtx, root: Path, op: String,
       keep: Option[LakeEntry => Boolean],
       add: (=> Long) => Seq[LakeEntry]): Unit =
-    try {
+    author(s, root, ctx.catalogLogDir, ctx.table, ctx.version) {
       import s.implicits._
       lazy val tip = LakeFilters.normalizedManifests(s, ctx.metaRoot)
         .filter($"snap_id" === ctx.snapId)
@@ -143,23 +209,14 @@ object LakeCommit {
       val snaps = s.read.parquet(s"${ctx.metaRoot}/snapshots")
       val newSnap = snaps.agg(max($"snap_id")).as[Long].head() + 1L
       val entries = keep.fold(Seq.empty[LakeEntry])(k => tip.filter(k)) ++ add(newSeq)
-      entries.map(e => (newSnap, e.content, e.file, e.base, e.seq, e.keyCol))
-        .toDF("snap_id", "content", "file", "base", "seq", "key_col")
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("manifests").toString)
+      writeTable(root, "manifests",
+        entries.map(e => (newSnap, e.content, e.file, e.base, e.seq, e.keyCol))
+          .toDF("snap_id", "content", "file", "base", "seq", "key_col"))
       LakeFilters.writeParentMarker(root, ctx.metaRoot)
-      snaps.select($"snap_id", $"op", $"parent_id")
+      writeTable(root, "snapshots", snaps.select($"snap_id", $"op", $"parent_id")
         .unionByName(Seq((newSnap, op, ctx.snapId))
-          .toDF("snap_id", "op", "parent_id"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(root.resolve("snapshots").toString)
+          .toDF("snap_id", "op", "parent_id")))
       LakeFilters.carryTableSchema(s, ctx.metaRoot, root)
-      catalogCommit(s, s"${ctx.catalogLogDir}/catalog_log", ctx.table,
-        expectedVersion = ctx.version, metaRoot = root.toString,
-        snapId = newSnap)
-    } catch {
-      case NonFatal(e) =>
-        graft.Fixtures.deleteRecursively(root)
-        throw e
+      newSnap
     }
 }

@@ -44,8 +44,7 @@ object LakeProtocol {
     val perFile = math.max(64L, data.count() / math.max(1, nFiles))
     var mBits = 1 << 10
     while (mBits < perFile * 16 && mBits < (1 << 27)) mBits <<= 1
-    val bloomAgg = udaf(new graft.functions.BloomAgg(mBits, BloomK),
-      org.apache.spark.sql.Encoders.scalaLong)
+    val bloomAgg = graft.functions.BloomAgg.udf(mBits, BloomK)
     data.select(regexp_replace(input_file_name(), "^file:/+", "/").as("file"),
         xxhash64($"l_orderkey").as("h"))
       .groupBy($"file")

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-layout guards over `src/main/scala`: the lake connector and
   * protocol layer (`graft.sources`) never reaches up into the query
   * layer (`graft.operators`), no source file grows past 2,500 lines,
-  * with no per-file exemption, and DataFrame code reaches the native
-  * expressions through `graft.plans.Native`, not by SQL name.
+  * with no per-file exemption, DataFrame code reaches the native
+  * expressions through `graft.plans.Native`, not by SQL name, and only
+  * `graft/sources/lake` writes a lake metadata table.
   */
 class LayeringSpec extends AnyFunSuite {
 
@@ -47,6 +48,46 @@ class LayeringSpec extends AnyFunSuite {
     }
     assert(sites.sorted == Seq("GraftSession", "cdc_chunks_generator_sql",
       "dedup_minhash_pairs_sql", "sim_lsh_topk_sql"), sites.mkString(", "))
+  }
+
+  private val MetaTable =
+    """["/](manifests|snapshots|refs_log|refs|manifests_all|gc_deleted|catalog_log|commit_log|publish_log|manifest_list|tableschema)["/]|["/]manifest/group=""".r
+
+  /** The `.parquet(…)` calls in `src` that WRITE (the nearest preceding
+    * `.write` comes after the nearest `.read`) to a path naming a lake
+    * metadata table, as their argument text.
+    */
+  private def metaTableWrites(src: String): Seq[String] =
+    """\.parquet\(""".r.findAllMatchIn(src).toSeq.flatMap { m =>
+      val before = src.substring(0, m.start)
+      val isWrite = """\.write\b""".r.findAllMatchIn(before).map(_.start).maxOption
+        .exists(w => """\.read\w*\b""".r.findAllMatchIn(before).forall(_.start < w))
+      var depth = 1
+      var i = m.end
+      while (i < src.length && depth > 0) {
+        if (src(i) == '(') depth += 1 else if (src(i) == ')') depth -= 1
+        i += 1
+      }
+      val arg = src.substring(m.end, i - 1)
+      if (isWrite && MetaTable.findFirstIn(arg).nonEmpty) Some(arg) else None
+    }
+
+  test("the metadata-table write detector flags writes and passes reads") {
+    assert(metaTableWrites("""rows.coalesce(1)
+      |  .write.mode("overwrite").parquet(root.resolve("manifests").toString)
+      |rows.write.parquet(s"$root/catalog_log")
+      |rows.write.parquet(root.resolve(s"manifest/group=$g").toString)""".stripMargin).size == 3)
+    assert(metaTableWrites("""x.write.parquet(dir)
+      |s.read.parquet(s"$meta/manifests")
+      |Tables.readCached(s, b).parquet(s"$meta/snapshots")
+      |rows.write.parquet(root.resolve("pos").toString)""".stripMargin).isEmpty)
+  }
+
+  test("no file outside graft/sources/lake writes a lake metadata table") {
+    val lake = root.resolve("graft/sources/lake")
+    val offenders = scalaFiles(root).filterNot(_.startsWith(lake)).flatMap(p =>
+      metaTableWrites(Files.readString(p)).map(a => s"${root.relativize(p)}: .parquet($a)"))
+    assert(offenders.isEmpty, offenders.mkString("; "))
   }
 
   test("no source file exceeds 2,500 lines, and the older long ones do not grow") {

@@ -1,6 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, Column}
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.AeChunker
@@ -105,5 +106,29 @@ class CdcSegmentedSpec extends AnyFunSuite with graft.SharedSpark {
 
   test("cdc_segmented_chunks rejects a non-binary payload at analysis") {
     assert(analysisError("s, 'ae', 8192, 0, 4").contains("payload must be BINARY"))
+  }
+
+  // each CDC generator builds its chunker while the frame is analysed, so
+  // the chunker's own bound (ae needs expected_size > 256) fails the frame
+  // build instead of a task
+  private def aeBoundError(gen: Column): String = {
+    import spark.implicits._
+    val df = Seq((Array[Byte](1, 2, 3), 0)).toDF("payload", "part")
+    intercept[AnalysisException](df.select(gen)).getMessage
+  }
+
+  test("cdc_chunks rejects an ae expected_size of 256 when the frame is built") {
+    assert(aeBoundError(Native.cdcChunks(col("payload"), "ae", 256, 0L))
+      .contains("AE repo-variant needs expectedSize > 256"))
+  }
+
+  test("cdc_segmented_chunks rejects an ae expected_size of 256 when the frame is built") {
+    assert(aeBoundError(Native.cdcSegmentedChunks(col("payload"), "ae", 256, 0L, 4))
+      .contains("AE repo-variant needs expectedSize > 256"))
+  }
+
+  test("cdc_slice_chunks rejects an ae expected_size of 256 when the frame is built") {
+    assert(aeBoundError(Native.cdcSliceChunks(col("payload"), "ae", 256, 0L, col("part"), 2))
+      .contains("AE repo-variant needs expectedSize > 256"))
   }
 }

@@ -61,8 +61,8 @@ class NativeSpec extends AnyFunSuite with graft.SharedSpark {
     val pairs = Seq(
       Native.cdcChunks($"b", "fastcdc", 64, 42L) ->
         call_function("cdc_chunks", $"b", lit("fastcdc"), lit(64), lit(42L)),
-      Native.cdcSegmentedChunks($"b", "ae", 64, 0L, 4) ->
-        call_function("cdc_segmented_chunks", $"b", lit("ae"), lit(64), lit(0L), lit(4)),
+      Native.cdcSegmentedChunks($"b", "ae", 512, 0L, 4) ->
+        call_function("cdc_segmented_chunks", $"b", lit("ae"), lit(512), lit(0L), lit(4)),
       Native.cdcSliceChunks($"b", "rabin", 64, 7L, $"p", 4) ->
         call_function("cdc_slice_chunks", $"b", lit("rabin"), lit(64), lit(7L), $"p", lit(4)),
       Native.vecDot($"v", $"v").as("d") -> call_function("vec_dot", $"v", $"v").as("d"),

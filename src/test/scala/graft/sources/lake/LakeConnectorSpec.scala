@@ -164,6 +164,29 @@ class LakeConnectorSpec extends AnyFunSuite with graft.SharedSpark {
       "seq 3 delete must NOT apply to newer data")
   }
 
+  test("a manifest listing a deleted data file fails at planning, naming the file") {
+    import spark.implicits._
+    val root = graft.Fixtures.tempDir("graft_lakegone")
+    val dataDir = root.resolve("data").toString
+    (1L to 4L).map(k => (k, k * 10)).toDF("l_orderkey", "v").repartition(2)
+      .write.mode("overwrite").parquet(dataDir)
+    val files = spark.read.parquet(dataDir).inputFiles.map(LakeIndex.normPath).sorted
+    assert(files.length == 2)
+    Seq((0L, "data", files(0), dataDir, 0L, ""), (0L, "data", files(1), dataDir, 0L, ""))
+      .toDF("snap_id", "content", "file", "base", "seq", "key_col")
+      .coalesce(1).write.parquet(root.resolve("manifests").toString)
+    Seq((0L, "w", -1L)).toDF("snap_id", "op", "parent_id").coalesce(1)
+      .write.parquet(root.resolve("snapshots").toString)
+    val df = spark.read.format("graft-lake").option("metaRoot", root.toString).load()
+    java.nio.file.Files.delete(java.nio.file.Paths.get(files(1)))
+    // a join asks the scan for its size while the physical plan is chosen
+    val e = intercept[Exception](df.join(Seq(1L).toDF("l_orderkey"), "l_orderkey")
+      .queryExecution.executedPlan)
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toList
+    assert(msgs.exists(m => m != null && m.contains(files(1))), msgs.mkString(" | "))
+  }
+
   test("column-ID serve leaves old footers byte-identical (rename/widen " +
       "are read-time indirections)") {
     import spark.implicits._
